@@ -395,6 +395,14 @@ case class CosineSq8Asym(left: Expression, right: Expression,
   * NearestCentroidKernel discipline), so serialization strategy can
   * never drift the arithmetic. */
 private[functions] object PqKernel {
+  /** The codebook contract every PQ expression checks at plan build:
+    * at least one non-empty subspace, and ksub ≤ 256 so a code fits one
+    * byte (a 257th centroid would silently wrap to code 0). */
+  def requireBooks(ksubs: Seq[Int]): Unit = {
+    require(ksubs.nonEmpty && ksubs.forall(_ > 0))
+    require(ksubs.forall(_ <= 256), "ksub must fit one byte")
+  }
+
   def encode(a: ArrayData, books: Array[Array[Array[Double]]],
              dsub: Int): Array[Byte] = {
     val nDims = a.numElements()
@@ -478,8 +486,7 @@ private[functions] object PqKernel {
 case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty))
-  require(codebooks.forall(_.length <= 256), "ksub must fit one byte")
+  PqKernel.requireBooks(codebooks.map(_.length))
   override def dataType: DataType = org.apache.spark.sql.types.BinaryType
   override def prettyName: String = "graft_pq_encode"
 
@@ -505,6 +512,7 @@ case class PqEncodeBcast(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with CodegenFallback {
+  PqKernel.requireBooks(bc.value.map(_.length).toSeq)
   override def dataType: DataType = org.apache.spark.sql.types.BinaryType
   override def prettyName: String = "graft_pq_encode_bcast"
 
@@ -552,6 +560,7 @@ case class CosinePqAsym(left: Expression, right: Expression,
 case class CosinePqAsymBcast(left: Expression, right: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])
     extends BinaryExpression with CodegenFallback {
+  PqKernel.requireBooks(bc.value.map(_.length).toSeq)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine_pq_bcast"
 

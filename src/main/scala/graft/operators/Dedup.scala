@@ -361,30 +361,22 @@ object Dedup {
     * entry is dropped (the ContextCleaner reclaims the blocks once the
     * DataFrame becomes unreachable). Entries are bounded by the distinct
     * (input, params) tuples a session touches — a handful in practice —
-    * with [[labelCacheMaxEntries]] as a hard cap against parameter
-    * sweeps, and [[clearLabelCache]] as the explicit epoch boundary
-    * (Bench clears before each timed `dd_clusters` run so the reported
-    * number is the real clustering cost, not a cached-scan replay). */
-  private val labelCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, String, Int, Long, Double, String), DataFrame]
-
-  private val labelCacheMaxEntries = 32
+    * with a cap of 32 entries against parameter sweeps, and
+    * [[clearLabelCache]] as the explicit epoch boundary (Bench clears
+    * before each timed `dd_clusters` run so the reported number is the
+    * real clustering cost, not a cached-scan replay). */
+  private val labelCache =
+    new graft.Artifacts.Memo[(String, Int, Long, Double, String), DataFrame](cap = 32)
 
   /** Drop all cached cluster labels (and with them the references
     * pinning their checkpointed RDDs). Next `nearDupClusters` /
     * `survivors` call recomputes from pairs. */
-  def clearLabelCache(): Unit = labelCache.clear()
+  def clearLabelCache(): Unit = labelCache.forget()
 
   private def clusterLabels(s: SparkSession, dir: String, k: Int,
                             maxId: Long, threshold: Double,
                             algorithm: String): DataFrame = {
-    val key = (s.sparkContext, dir, k, maxId, threshold, algorithm)
-    // cap check only on a MISS: clearing on a hit would turn a full
-    // cache into guaranteed recompute thrash for exactly the parameter
-    // sweeps the cap exists to bound
-    if (labelCache.size >= labelCacheMaxEntries && !labelCache.containsKey(key))
-      labelCache.clear()
-    labelCache.computeIfAbsent(key, _ => {
+    labelCache(s, (dir, k, maxId, threshold, algorithm)) {
       import s.implicits._
       val pairs = ngramJaccard(s, dir, k, maxId, threshold).select($"id1", $"id2")
       val vertices = Tables.documents(s, dir).filter($"doc_id" < maxId)
@@ -395,7 +387,7 @@ object Dedup {
       // second materialization there would only copy it.
       val labels = componentLabels(s, vertices, pairs, algorithm)
       if (algorithm == "star") labels.localCheckpoint() else labels
-    })
+    }
   }
 
   /** Scoped shuffle sizing for the iterative graph loops: the frames

@@ -279,10 +279,10 @@ object Multimodal {
     * storage — so [[filesMeta]]'s timed runs measure the binaryFile
     * scan + decode, not the one-time fixture write ([[graft.streaming.StreamingOps.preStage]]
     * discipline; Bench pre-stages this dir in warm-up). */
-  private val mediaLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mediaLakeDirs = new graft.Artifacts.Dirs[String]("graft-media-lake")
 
   def mediaLakeDir(s: SparkSession, dir: String): String =
-    mediaLakeDirs.computeIfAbsent(dir, d => {
+    mediaLakeDirs.stage(s, dir) { out =>
       // staging writes executor-side into a DRIVER-created temp dir —
       // sound only when they share a filesystem. Guard loudly: on a
       // real cluster this helper has no business existing (the lake's
@@ -291,8 +291,7 @@ object Multimodal {
       require(s.sparkContext.isLocal,
         "mediaLakeDir stages fixture files and requires a local master; " +
           "production media lakes are read directly via mediaFromFiles")
-      val out = java.nio.file.Files.createTempDirectory("graft-media-lake").toString
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
+      Tables.documents(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)](org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.STRING))
         .foreachPartition { (it: Iterator[(Long, String)]) =>
@@ -304,8 +303,7 @@ object Multimodal {
               java.nio.file.Paths.get(out, s"$id.${MediaCodec.sniff(payload)}"), payload)
           }
         }
-      out
-    })
+    }
 
   /** `mm_media_meta` over the FILE lake (`mm_files_meta`): the same
     * decode contract, but ingested through Spark's binaryFile source
@@ -688,15 +686,14 @@ object Multimodal {
     * files — the [[mediaLakeDir]] discipline (executor-side writes,
     * local-master guard, one-time scaffolding a production lake
     * already has). */
-  private val jpegLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val jpegLakeDirs = new graft.Artifacts.Dirs[String]("graft-jpeg-lake")
 
   def jpegLakeDir(s: SparkSession, dir: String): String =
-    jpegLakeDirs.computeIfAbsent(dir, d => {
+    jpegLakeDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "jpegLakeDir stages fixture files and requires a local master; " +
           "production media lakes are read directly via mediaFromFiles")
-      val out = java.nio.file.Files.createTempDirectory("graft-jpeg-lake").toString
-      Tables.documents(s, d).select(col("doc_id"), col("text"))
+      Tables.documents(s, dir).select(col("doc_id"), col("text"))
         .as[(Long, String)](org.apache.spark.sql.Encoders.tuple(
           org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.STRING))
         .foreachPartition { (it: Iterator[(Long, String)]) =>
@@ -705,8 +702,7 @@ object Multimodal {
               java.nio.file.Paths.get(out, s"$id.jpg"), genJpegPayload(id, text))
           }
         }
-      out
-    })
+    }
 
   /** `mm_jpeg_meta` over a binaryFile JPEG lake (`mm_jpeg_files`):
     * real `.jpg` files through Spark's binaryFile source, then the

@@ -498,8 +498,7 @@ object Similarity {
     * every subsequent [[ivfServeTopK]] call reads the artifact with
     * ZERO training or corpus-assignment work in its plan (PlanSpec
     * pins exactly one embeddings scan — the probe side). */
-  private val ivfIndexDirs = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), String]()
+  private val ivfIndexDirs = new graft.Artifacts.Dirs[(String, Int, Int)]("graft-ivf-index")
 
   /** Train on `corpus` and write the index layout into `out` — the
     * ONE builder both artifact paths share ([[ivfIndexDir]] trains on
@@ -529,14 +528,12 @@ object Similarity {
 
   def ivfIndexDir(s: SparkSession, dir: String, nLists: Int = 16,
                   iters: Int = 5): String =
-    ivfIndexDirs.computeIfAbsent((dir, nLists, iters), _ => {
+    ivfIndexDirs.stage(s, (dir, nLists, iters)) { out =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-ivf-index").toString
       buildIndexInto(s, out, Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding")),
         nLists, iters)
-      out
-    })
+    }
 
   /** Read a persisted index's ≤ nLists centroid rows back (a bounded
     * driver pull; parquet round-trips doubles bit-exactly). */
@@ -616,14 +613,12 @@ object Similarity {
     * partition-pruned scan. Serving after append must equal an
     * in-session IVF over the combined corpus under the same frozen
     * centroids (parity-gated). */
-  private val ivfAppendDirs = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long), String]()
+  private val ivfAppendDirs = new graft.Artifacts.Dirs[(String, Int, Int, Long)]("graft-ivf-append")
 
   def ivfAppendIndexDir(s: SparkSession, dir: String, nLists: Int = 16,
                         iters: Int = 5, historyBuckets: Long = 3277): String =
-    ivfAppendDirs.computeIfAbsent((dir, nLists, iters, historyBuckets), _ => {
+    ivfAppendDirs.stage(s, (dir, nLists, iters, historyBuckets)) { out =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-ivf-append").toString
       val hb = Sampling.hashBucket($"vec_id")
       val emb = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"), hb.as("hb"))
@@ -639,8 +634,7 @@ object Similarity {
         .select($"vec_id", $"embedding",
           nearest2($"embedding", 1).getItem(0).as("cid"))
         .write.mode("append").partitionBy("cid").parquet(out + "/lists")
-      out
-    })
+    }
 
   /** Serve from the append-grown index — same plan as
     * [[ivfServeTopK]], different artifact. */
@@ -666,14 +660,12 @@ object Similarity {
     * dequantize-on-the-fly codes) through the same partition-pruned
     * plan as the float artifact — parity-gated bit-for-bit against
     * the in-session [[ivfSq8TopK]]. */
-  private val ivfSq8Dirs = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), String]()
+  private val ivfSq8Dirs = new graft.Artifacts.Dirs[(String, Int, Int)]("graft-ivf-sq8")
 
   def ivfSq8IndexDir(s: SparkSession, dir: String, nLists: Int = 16,
                      iters: Int = 5): String =
-    ivfSq8Dirs.computeIfAbsent((dir, nLists, iters), _ => {
+    ivfSq8Dirs.stage(s, (dir, nLists, iters)) { out =>
       import s.implicits._
-      val out = java.nio.file.Files.createTempDirectory("graft-ivf-sq8").toString
       val emb = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
       val (los, his) = sq8Bounds(emb)
@@ -685,8 +677,7 @@ object Similarity {
       // argument
       buildIndexInto(s, out, emb, nLists, iters, payload = "code",
         encode = e => VectorFunctions.quantizeSq8(e, los, his))
-      out
-    })
+    }
 
   /** Serve from the persisted SQ8 artifact: bounds read back (a 1-row
     * driver pull), codes scored with [[graft.functions.CosineSq8Asym]]
@@ -736,8 +727,8 @@ object Similarity {
     * training state) and, past threshold, retrains on the combined
     * corpus into `v2` and commits the pointer. Phases are exposed
     * separately so RecallSpec can inventory v1's files between them. */
-  private val ivfVersionedDirs = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long, Long), String]()
+  private val ivfVersionedDirs =
+    new graft.Artifacts.Dirs[(String, Int, Int, Long, Long)]("graft-ivf-versioned")
 
   /** Manifest commit = APPENDING a one-row version record; readers
     * resolve the MAX committed version. Append lands as a brand-new
@@ -802,8 +793,7 @@ object Similarity {
   def ivfVersionedDir(s: SparkSession, dir: String, nLists: Int = 16,
                       iters: Int = 5, historyBuckets: Long = 3277,
                       driftThresholdPpm: Long = 50000L): String =
-    ivfVersionedDirs.computeIfAbsent((dir, nLists, iters, historyBuckets, driftThresholdPpm), _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft-ivf-versioned").toString
+    ivfVersionedDirs.stage(s, (dir, nLists, iters, historyBuckets, driftThresholdPpm)) { root =>
       // ONE checkpointed drifted frame shared by both phases — each
       // phase calling driftedTagged itself would materialize (and
       // leak, checkpoint blocks being non-recomputable) the corpus
@@ -812,8 +802,7 @@ object Similarity {
       val tagged = Some(driftedTagged(s, dir, historyBuckets))
       versionedBuildV1(s, root, dir, nLists, iters, historyBuckets, tagged)
       versionedRetrainIfDrifted(s, root, dir, nLists, iters, historyBuckets, driftThresholdPpm, tagged)
-      root
-    })
+    }
 
   /** Serve THROUGH the manifest (`pipe_ivf_reserve`): resolve the
     * pointer (1-row pull), then the shared [[serveFromIndex]] plan
@@ -884,8 +873,7 @@ object Similarity {
     retired
   }
 
-  private val ivfGcDirs = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Long, Long), String]()
+  private val ivfGcDirs = new graft.Artifacts.Dirs[(String, Int, Int, Long, Long)]("graft-ivf-gc")
 
   /** Full lifecycle WITH the GC verb (`pipe_ivf_gc`): v1 on history,
     * drift-triggered retrain to v2 + manifest swing, retention GC at
@@ -899,14 +887,12 @@ object Similarity {
                      numQueries: Int = 10, topK: Int = 5,
                      historyBuckets: Long = 3277,
                      driftThresholdPpm: Long = 50000L): DataFrame = {
-    val root = ivfGcDirs.computeIfAbsent((dir, nLists, iters, historyBuckets, driftThresholdPpm), _ => {
-      val r = java.nio.file.Files.createTempDirectory("graft-ivf-gc").toString
+    val root = ivfGcDirs.stage(s, (dir, nLists, iters, historyBuckets, driftThresholdPpm)) { r =>
       val tagged = Some(driftedTagged(s, dir, historyBuckets))
       versionedBuildV1(s, r, dir, nLists, iters, historyBuckets, tagged)
       versionedRetrainIfDrifted(s, r, dir, nLists, iters, historyBuckets, driftThresholdPpm, tagged)
       gcVersions(s, r, keep = 0)
-      r
-    })
+    }
     serveThroughManifest(s, dir, root, nProbe, numQueries, topK, historyBuckets)
   }
 
@@ -954,13 +940,8 @@ object Similarity {
     // the table, so re-running `iters` Lloyd's jobs per query would
     // misstate the deployment cost. The canonicalized plan captures
     // the source dir; corpus dirs are immutable for the session (lake
-    // snapshots; per-run temp fixtures). Cap-on-miss eviction, the
-    // centroidBcastCache rule.
-    val key = (emb.queryExecution.analyzed.canonicalized.toString, k, iters)
-    if (kmeansCache.size >= trainCacheMaxEntries &&
-        !kmeansCache.containsKey(key))
-      kmeansCache.clear()
-    kmeansCache.computeIfAbsent(key, _ => {
+    // snapshots; per-run temp fixtures).
+    kmeansCache(s, (emb.queryExecution.analyzed.canonicalized.toString, k, iters)) {
       // seeds = the first k corpus vectors in vec_id order; cluster ids
       // are LIST POSITIONS 0..n-1, independent of the (possibly sparse,
       // possibly non-zero-based) vec_id domain, so a corpus with ids
@@ -987,14 +968,13 @@ object Similarity {
         }
       }
       (cids, cvecs)
-    })
+    }
   }
 
-  private val kmeansCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), (Seq[Long], Seq[Seq[Double]])]
-  private val pqCodebookCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int, Int, Int), Seq[Seq[Seq[Double]]]]
-  private val trainCacheMaxEntries = 8
+  private val kmeansCache =
+    new graft.Artifacts.Memo[(String, Int, Int), (Seq[Long], Seq[Seq[Double]])](cap = 8)
+  private val pqCodebookCache =
+    new graft.Artifacts.Memo[(String, Int, Int, Int, Int), Seq[Seq[Seq[Double]]]](cap = 8)
 
   /** Above this many lists the centroid table rides a TorrentBroadcast
     * ([[graft.functions.NearestCentroidsBcast]]) instead of plan
@@ -1011,12 +991,9 @@ object Similarity {
     * fresh multi-megabyte broadcast per call — blocks are reclaimed by
     * the ContextCleaner only once the Broadcast object is unreachable,
     * so an un-memoized sweep accumulates them for the session's
-    * lifetime. Cap-on-miss eviction like Dedup.labelCache. */
-  private val centroidBcastCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, Seq[Long], Seq[Seq[Double]]),
-    org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])]]
-
-  private val centroidBcastMaxEntries = 8
+    * lifetime. Eviction unpersists (see [[graft.Artifacts]]). */
+  private[graft] val centroidBcastCache = graft.Artifacts.broadcasts[
+    (Seq[Long], Seq[Seq[Double]]), (Array[Long], Array[Array[Double]])](cap = 8)
 
   /** PQ codebook broadcasts memoized per (context, codebooks) — the
     * centroidBcastCache rule applied to the PQ kernels: the m16×k256
@@ -1026,10 +1003,9 @@ object Similarity {
     * ann_pq_topk at wall 1.01 s / job-sum 0.41 s (r22): ~0.6 s of pure
     * per-repetition plan-build gap. Broadcast blocks ship once per
     * executor and the expression carries only the broadcast handle.
-    * Cap-on-miss eviction like centroidBcastCache. */
-  private val pqBooksBcastCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.SparkContext, Seq[Seq[Seq[Double]]]),
-    org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]]]
+    * Evicted like centroidBcastCache. */
+  private[graft] val pqBooksBcastCache =
+    graft.Artifacts.broadcasts[Seq[Seq[Seq[Double]]], Array[Array[Array[Double]]]](cap = 8)
 
   /** PQ kernel selection shared by the PQ-scoring paths — the
     * [[centroidAssigner]] twin: below the size threshold the codebooks
@@ -1042,11 +1018,7 @@ object Similarity {
   private def pqScorers(s: SparkSession, books: Seq[Seq[Seq[Double]]])
       : (Column => Column, (Column, Column) => Column) =
     if (books.length * books.head.length >= bcastCentroidThreshold) {
-      val key = (s.sparkContext, books)
-      if (pqBooksBcastCache.size >= centroidBcastMaxEntries &&
-          !pqBooksBcastCache.containsKey(key))
-        pqBooksBcastCache.clear()
-      val bc = pqBooksBcastCache.computeIfAbsent(key, _ =>
+      val bc = pqBooksBcastCache(s, books)(
         s.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray))
       (v => VectorFunctions.pqEncodeBcast(v, bc),
         (q, code) => VectorFunctions.cosinePqAsymBcast(q, code, bc))
@@ -1063,11 +1035,7 @@ object Similarity {
                                cvecs: Seq[Seq[Double]],
                                bcastThreshold: Int): (Column, Int) => Column =
     if (cids.length >= bcastThreshold) {
-      val key = (s.sparkContext, cids, cvecs)
-      if (centroidBcastCache.size >= centroidBcastMaxEntries &&
-          !centroidBcastCache.containsKey(key))
-        centroidBcastCache.clear()
-      val bc = centroidBcastCache.computeIfAbsent(key, _ =>
+      val bc = centroidBcastCache(s, (cids, cvecs))(
         s.sparkContext.broadcast((cids.toArray, cvecs.map(_.toArray).toArray)))
       (v, k) => VectorFunctions.nearestCentroidsBcast(v, bc, k)
     } else {
@@ -1212,10 +1180,7 @@ object Similarity {
     // artifact; pqTopK and ivfPqTopK train on the identical sample
     val key = (emb.queryExecution.analyzed.canonicalized.toString,
       m, ksub, sampleN, iters)
-    if (pqCodebookCache.size >= trainCacheMaxEntries &&
-        !pqCodebookCache.containsKey(key))
-      pqCodebookCache.clear()
-    pqCodebookCache.computeIfAbsent(key, _ => {
+    pqCodebookCache(s, key) {
       val sample = emb.orderBy($"vec_id").limit(sampleN)
         .select($"embedding").collect().map(_.getSeq[Double](0).toArray)
       require(sample.nonEmpty, "pqTrain: empty embedding corpus")
@@ -1227,7 +1192,7 @@ object Similarity {
           java.util.Arrays.copyOfRange(v, mi * dsub, (mi + 1) * dsub))
         kmeansLloydLocal(sub, ksub, iters).map(_.toSeq).toSeq
       }
-    })
+    }
   }
 
   /** PQ codebooks trained on IVF RESIDUALS (x − centroid(x)) — the

@@ -49,7 +49,8 @@ object Spread {
     import org.apache.spark.sql.catalyst.plans.logical._
     df.queryExecution.analyzed.foreach {
       case p @ (_: Aggregate | _: Join | _: Window | _: Sort |
-                _: RepartitionOperation | _: GlobalLimit | _: Distinct) =>
+                _: RepartitionOperation | _: GlobalLimit | _: Distinct |
+                _: Deduplicate) =>
         throw new IllegalArgumentException(
           s"Spread requires a scan-rooted frame (no exchange upstream); " +
             s"found ${p.nodeName} — spreading here would finalize the " +

@@ -689,19 +689,13 @@ object TextAnalysis {
     * so rebuilding it per query would misstate the deployment cost.
     * Assumes corpus dirs are immutable for the session (true of a
     * lake snapshot and of every test fixture — temp dirs are unique
-    * per run). Cap-on-miss eviction, the centroidBcastCache rule. */
-  private val llrTableCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Long, Double), Seq[Double]]
-  private val llrTableMaxEntries = 8
+    * per run). */
+  private val llrTableCache = new graft.Artifacts.Memo[(String, Long, Double), Seq[Double]](cap = 8)
 
   private[graft] def dsirLlrTable(s: SparkSession, dir: String,
                                   targetFrom: Long = 3891,
                                   alpha: Double = 0.5): Seq[Double] = {
-    val key = (dir, targetFrom, alpha)
-    if (llrTableCache.size >= llrTableMaxEntries &&
-        !llrTableCache.containsKey(key))
-      llrTableCache.clear()
-    llrTableCache.computeIfAbsent(key, _ => {
+    llrTableCache(s, (dir, targetFrom, alpha)) {
       val (lm, tgtTot, srcTot) = dsirLm(s, dir, targetFrom)
       val denomT = tgtTot + alpha * dsirBuckets
       val denomS = srcTot + alpha * dsirBuckets
@@ -713,7 +707,7 @@ object TextAnalysis {
                    ((r.getLong(2).toDouble + alpha) / denomS))
       }
       table.toSeq
-    })
+    }
   }
 
   def dsir(s: SparkSession, dir: String, targetFrom: Long = 3891,

@@ -514,10 +514,6 @@ object Robots {
     // host-proportional rules are never held twice.
     complianceOn(docs, rules.localCheckpoint(), userAgent)
 
-  /** [[compliance]] over an ALREADY-MATERIALIZED directive table —
-    * `all` must be cheap to read from multiple plan positions (a
-    * localCheckpoint or equivalent), or group selection re-executes
-    * its whole lineage three times. */
   /** The APPLICABLE path rules of every host for one user agent —
     * group selection (§2.2.1, product-token matched, exact-else-star,
     * delay-only exact groups still select) applied, empty rules
@@ -548,6 +544,10 @@ object Robots {
         ruleLikePatternCol($"vnorm").as("pattern"))
   }
 
+  /** [[compliance]] over an ALREADY-MATERIALIZED directive table —
+    * `all` must be cheap to read from multiple plan positions (a
+    * localCheckpoint or equivalent), or group selection re-executes
+    * its whole lineage three times. */
   private[sources] def complianceOn(docs: DataFrame, all: DataFrame,
                                     userAgent: String): DataFrame = {
     val s = docs.sparkSession
@@ -953,7 +953,7 @@ object Robots {
     head + arms
   }
 
-  private val robotsLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val robotsLakeDirs = new graft.Artifacts.Dirs[String]("graft-robots-lake")
 
   /** Staged robots lake: one `.warc.gz` shard holding the 16 hosts'
     * robots captures as `response` records (text/plain envelopes,
@@ -982,10 +982,9 @@ object Robots {
     * like every other staged lake; 41 records need no Spark job to
     * write. */
   def robotsLakeDir(s: SparkSession, dir: String): String =
-    robotsLakeDirs.computeIfAbsent(dir, _ => {
+    robotsLakeDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "robotsLakeDir stages fixture files and requires a local master")
-      val out = java.nio.file.Files.createTempDirectory("graft-robots-lake")
       def capture(uri: String, status: Int, reason: String, body: Array[Byte],
                   date: String = "2026-01-01T00:00:00Z") = {
         val http = (s"HTTP/1.1 $status $reason\r\nContent-Type: text/plain; charset=utf-8\r\n" +
@@ -1145,9 +1144,8 @@ object Robots {
         1 -> capture("https://h9.example.org/sitemap.xml", 200, "OK", urlset(
           ("https://h9.example.org/page/999", "2026-01-01")).getBytes("UTF-8")))
       (records ++ redirectArms ++ sitemapArms).groupBy(_._1).foreach { case (shard, recs) =>
-        java.nio.file.Files.write(out.resolve(f"robots-$shard%05d.warc.gz"),
+        java.nio.file.Files.write(java.nio.file.Paths.get(out, f"robots-$shard%05d.warc.gz"),
           Warc.gzipPerRecord(Warc.encodeRecords(recs.map(_._2))))
       }
-      out.toString
-    })
+    }
 }

@@ -56,10 +56,6 @@ object Sources {
   def readOrc(s: SparkSession, path: String): DataFrame =
     s.read.orc(path)
 
-  /** Line-oriented text (one row per line, column `value`). */
-  def readText(s: SparkSession, paths: String*): DataFrame =
-    s.read.text(paths: _*)
-
   def write(df: DataFrame, path: String, format: String,
             partitionByCols: Seq[String] = Nil,
             mode: SaveMode = SaveMode.Overwrite): Unit = {
@@ -138,11 +134,6 @@ object Sources {
       .drop("_graft_z")
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
-
-  /** The reference's sink: tab-separated `key\tvalue` text files
-    * (`mr-out-N`). */
-  def writeTsv(df: DataFrame, path: String, partitions: Int = 1): Unit =
-    graft.operators.WordCount.writeTsv(df, path, partitions)
 
   /** Bucketed managed table: rows are hash-partitioned into
     * `numBuckets` files per partition by `bucketCols` and sorted

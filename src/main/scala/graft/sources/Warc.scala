@@ -479,14 +479,13 @@ object Warc {
     * already sits in object storage. Cache key includes `nShards`
     * so two callers asking for different layouts never share a
     * lake. */
-  private val wetLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val wetLakeDirs = new graft.Artifacts.Dirs[String]("graft-wet-lake")
 
   def wetLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    wetLakeDirs.computeIfAbsent(s"$dir#$nShards", _ => {
+    wetLakeDirs.stage(s, s"$dir#$nShards") { out =>
       require(s.sparkContext.isLocal,
         "wetLakeDir stages fixture files and requires a local master; " +
           "production crawls are read directly via srcWarcDocs on their own paths")
-      val out = java.nio.file.Files.createTempDirectory("graft-wet-lake").toString
       // the staged lake ALSO plants a `metadata` record for docs
       // ≡ 4 (mod 9) (r18, the raw lake's non-200/truncated/request
       // rule applied to WET): real WET files interleave warcinfo /
@@ -509,8 +508,7 @@ object Warc {
               "Content-Type" -> "application/warc-fields") ->
               s"fetchTimeMs: ${10 + id % 90}\r\ncharset-detected: utf-8\r\n".getBytes("US-ASCII")
           })
-      out
-    })
+    }
 
   /** The fixture URI rule — mirrored closed-form by the oracle. */
   def docUri(id: Long): String = s"https://example.org/doc/$id"
@@ -627,17 +625,15 @@ object Warc {
     * the content differs from the staged fixture lake, the sink
     * cannot pass by accidentally reading `src_warc`'s files. */
   def snkWetRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = wetLakeDirs.computeIfAbsent(s"$dir#snk", _ => {
+    val out = wetLakeDirs.stage(s, s"$dir#snk") { o =>
       require(s.sparkContext.isLocal,
         "snkWetRoundtrip stages fixture files and requires a local master")
-      val o = java.nio.file.Files.createTempDirectory("graft-wet-sink").toString
       writeWetLake(
         graft.Tables.documents(s, dir)
           .filter(col("doc_id") % 2 === 0)
           .select(col("doc_id"), concat(col("text"), lit("\n-- sunk")).as("text")),
         o, 4)
-      o
-    })
+    }
     docsFromWarcFiles(s, out)
   }
 
@@ -1212,16 +1208,15 @@ object Warc {
         "transfer_encoding", "content_encoding", "n_headers", "entity_chars")
   }
 
-  private val rawLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val rawLakeDirs = new graft.Artifacts.Dirs[String]("graft-raw-lake")
 
   /** Raw-crawl staging twin of [[wetLakeDir]]: `response`-record
     * `.warc.gz` shards under the same local-master guard. Cache key
     * includes `nShards` (the wetLakeDir rule). */
   def rawLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    rawLakeDirs.computeIfAbsent(s"$dir#$nShards", _ => {
+    rawLakeDirs.stage(s, s"$dir#$nShards") { out =>
       require(s.sparkContext.isLocal,
         "rawLakeDir stages fixture files and requires a local master")
-      val out = java.nio.file.Files.createTempDirectory("graft-raw-lake").toString
       writeCrawlLake(graft.Tables.documents(s, dir).select(col("doc_id"), col("text")),
         out, nShards, "crawl",
         // the staged lake applies the two-paragraph page transform
@@ -1233,8 +1228,7 @@ object Warc {
           // non-200 captures ride in the same shards (r18): counted by
           // WAT, excluded by the 2xx document filter — both closed-form
           non200Records(docs))
-      out
-    })
+    }
 
   // ------------------------------------------------- revisit records
 
@@ -1247,13 +1241,12 @@ object Warc {
     * shard by hash(doc_id), a revisit and its original usually land
     * in DIFFERENT shards — resolution is a genuine cross-shard
     * join, the crawl-real shape. */
-  private val revisitLakeDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val revisitLakeDirs = new graft.Artifacts.Dirs[String]("graft-revisit-lake")
 
   def revisitLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    revisitLakeDirs.computeIfAbsent(s"$dir#$nShards", _ => {
+    revisitLakeDirs.stage(s, s"$dir#$nShards") { out =>
       require(s.sparkContext.isLocal,
         "revisitLakeDir stages fixture files and requires a local master")
-      val out = java.nio.file.Files.createTempDirectory("graft-revisit-lake").toString
       writeCrawlLake(graft.Tables.documents(s, dir).select(col("doc_id"), col("text")),
         out, nShards, "crawl",
         docs => docs.iterator.map { case (id, text) =>
@@ -1273,8 +1266,7 @@ object Warc {
               "WARC-Payload-Digest" -> payloadDigest(text.getBytes("UTF-8")),
               "Content-Type" -> "text/plain") -> text.getBytes("UTF-8")
         })
-      out
-    })
+    }
 
   /** `src_warc_revisit`: revisit-record RESOLUTION — the crawl's
     * dedup reference chain made whole. `conversion` records carry
@@ -1452,13 +1444,12 @@ object Warc {
     * rebuilding it per fetch would BE the corpus re-scan the index
     * exists to avoid. Test scaffolding under the local-master guard —
     * a real crawl's cdx already sits next to its shards. */
-  private val cdxIndexDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cdxIndexDirs = new graft.Artifacts.Dirs[String]("graft-cdx-index")
 
   def cdxIndexDir(s: SparkSession, dir: String): String =
-    cdxIndexDirs.computeIfAbsent(dir, _ => {
+    cdxIndexDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "cdxIndexDir stages a fixture artifact and requires a local master")
-      val out = java.nio.file.Files.createTempDirectory("graft-cdx-index").toString
       // range-partitioned AND sorted on doc_id (r17 verdict note #2):
       // parquet row-group MIN/MAX pruning of a served doc_id range is
       // a CONTRACT of this artifact, not an accident of write order —
@@ -1470,8 +1461,7 @@ object Warc {
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** `src_warc_serve`: the point lookup at its PRODUCTION shape — the
     * cdx read back from its persisted parquet artifact (built once by

@@ -416,11 +416,10 @@ object StreamingOps {
   /** Staged ingest dirs, one per source sf dir: staging is a test-fixture
     * step (production events would already land in a directory), so it is
     * paid once per session, not per query run. */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val stagedDirs = new graft.Artifacts.Dirs[String]("graft-stream-events")
 
   private def stagedDir(s: SparkSession, dir: String): String =
-    stagedDirs.computeIfAbsent(dir, d => stageEventsDir(s, d,
-      java.nio.file.Files.createTempDirectory("graft-stream").toString + "/events"))
+    stagedDirs.stage(s, dir)(out => stageEventsDir(s, dir, out))
 
   /** Stage the streaming fixtures for `dir` without running any
     * stream. Bench calls this in warm-up so timed `ev_stream_*` runs
@@ -439,16 +438,14 @@ object StreamingOps {
     if (probes) probesStagedDir(s, dir)
   }
 
-  private val docsStagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val docsStagedDirs = new graft.Artifacts.Dirs[String]("graft-stream-documents")
 
   private def docsStagedDir(s: SparkSession, dir: String): String =
-    docsStagedDirs.computeIfAbsent(dir, d => {
-      val out = java.nio.file.Files.createTempDirectory("graft-stream").toString + "/documents"
+    docsStagedDirs.stage(s, dir) { out =>
       // four files so a maxFilesPerTrigger=2 reader (the streaming
       // compliance verdicts) arrives in REAL multiple micro-batches
-      graft.Tables.documents(s, d).repartition(4).write.mode("overwrite").parquet(out)
-      out
-    })
+      graft.Tables.documents(s, dir).repartition(4).write.mode("overwrite").parquet(out)
+    }
 
   /** Incremental corpus ingestion monitor (`tx_stream_quality`): a
     * REAL `readStream` over the documents table — the landing-zone
@@ -517,12 +514,12 @@ object StreamingOps {
       .orderBy(col("kind"), col("format"))
   }
 
-  private val wetExportDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val wetExportDirs = new graft.Artifacts.Dirs[String]("graft-stream-wet")
 
   /** Bench epoch boundary (the dd_clusters clearLabelCache rule): a
     * timed snk_stream_wet repetition must pay the stream + shard
     * write, not a cached read-back of the first repetition's lake. */
-  def clearWetExportCache(): Unit = wetExportDirs.clear()
+  def clearWetExportCache(): Unit = wetExportDirs.forget()
 
   /** Streaming WET export (`snk_stream_wet`) — the crawl container's
     * write side deployed INCREMENTALLY: documents arrive as a
@@ -538,8 +535,7 @@ object StreamingOps {
     * encode → gzip → write → scan → parse must reproduce
     * `documents` exactly). */
   def wetExportViaStream(s: SparkSession, dir: String): DataFrame = {
-    val out = wetExportDirs.computeIfAbsent(dir, _ => {
-      val o = java.nio.file.Files.createTempDirectory("graft-stream-wet").toString
+    val out = wetExportDirs.stage(s, dir) { o =>
       val staged = docsStagedDir(s, dir)
       val q = s.readStream
         .schema(graft.Tables.documents(s, dir).schema)
@@ -554,8 +550,7 @@ object StreamingOps {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-      o
-    })
+    }
     graft.sources.Warc.docsFromWarcFiles(s, out)
   }
 
@@ -697,27 +692,25 @@ object StreamingOps {
       .orderBy($"doc_id")
   }
 
-  private val fetchReqDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val fetchStreamDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val fetchReqDirs = new graft.Artifacts.Dirs[String]("graft-stream-req")
+  private val fetchStreamDirs = new graft.Artifacts.Dirs[String]("graft-stream-fetch")
 
   /** Bench epoch boundary (the snk_stream_wet rule): a timed
     * src_stream_fetch repetition must pay the request stream + range
     * reads, not a cached read-back of the first repetition's output. */
-  def clearFetchStreamCache(): Unit = fetchStreamDirs.clear()
+  def clearFetchStreamCache(): Unit = fetchStreamDirs.forget()
 
   /** The staged request stream: doc_id point-lookup requests (the
     * fixture predicate `doc_id % 13 == 0`) written as FOUR parquet
     * files so `maxFilesPerTrigger=2` forces real multi-batch arrival.
     * Test scaffolding — production requests arrive from a queue. */
   private[graft] def fetchRequestsDir(s: SparkSession, dir: String): String =
-    fetchReqDirs.computeIfAbsent(dir, d => {
-      val out = java.nio.file.Files.createTempDirectory("graft-stream-req").toString + "/requests"
-      graft.Tables.documents(s, d).select(col("doc_id"))
+    fetchReqDirs.stage(s, dir) { out =>
+      graft.Tables.documents(s, dir).select(col("doc_id"))
         .filter(col("doc_id") % 13 === 0)
         .repartition(4)
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Streaming cdx-served fetch (`src_stream_fetch`) — the crawl's
     * ONLINE point-lookup loop closed: doc_id requests arrive as a
@@ -736,7 +729,7 @@ object StreamingOps {
     * batch, the lake contributes only Σ length(hits) bytes, and no
     * state grows with the stream. */
   def fetchViaStream(s: SparkSession, dir: String): DataFrame = {
-    val outDir = fetchStreamDirs.computeIfAbsent(dir, _ => runFetchStream(s, dir))
+    val outDir = fetchStreamDirs.stage(s, dir)(runFetchStream(s, dir, _))
     s.read.parquet(outDir)
       .select(col("doc_id"), col("uri"), col("n_chars"), col("text"))
       .orderBy(col("doc_id"))
@@ -746,17 +739,16 @@ object StreamingOps {
     * and its retention twin `src_stream_fetch_gc` (each under its own
     * session cache, so the gc verb never mutates the directory the
     * plain query serves): drains the staged request stream through
-    * per-batch cdx-pruned range reads into a fresh batch-dir layout
-    * and returns its root. The gc twin narrows the trigger to one
+    * per-batch cdx-pruned range reads into a batch-dir layout under
+    * the empty root `out`. The gc twin narrows the trigger to one
     * file per micro-batch so the staged four-file request stream
     * leaves MULTIPLE below-floor batch directories — a fold that
     * moves real data, not a vacuous one. */
-  private def runFetchStream(s: SparkSession, dir: String,
-                             filesPerTrigger: Int = 2): String = {
+  private def runFetchStream(s: SparkSession, dir: String, out: String,
+                             filesPerTrigger: Int = 2): Unit = {
     val lake = graft.sources.Warc.wetLakeDir(s, dir)
     val idxDir = graft.sources.Warc.cdxIndexDir(s, dir)
     val staged = fetchRequestsDir(s, dir)
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-fetch").toString
     val q = s.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
@@ -778,7 +770,6 @@ object StreamingOps {
       q.processAllAvailable()
       lastNumBatches = q.recentProgress.count(_.numInputRows > 0)
     } finally q.stop()
-    out
   }
 
   /** Retention COMPACTION over a [[batchIdempotentWriter]]-shaped
@@ -868,12 +859,12 @@ object StreamingOps {
     }
   }
 
-  private[graft] val fetchGcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] val fetchGcDirs = new graft.Artifacts.Dirs[String]("graft-stream-fetch-gc")
 
   /** Bench epoch boundary (the src_stream_fetch rule): each timed
     * repetition pays the stream AND the fold, never a cached
     * read-back. */
-  def clearFetchGcCache(): Unit = fetchGcDirs.clear()
+  def clearFetchGcCache(): Unit = fetchGcDirs.forget()
 
   /** `src_stream_fetch_gc`: the online point-lookup loop WITH its
     * retention verb — the stream runs exactly as `src_stream_fetch`
@@ -882,11 +873,10 @@ object StreamingOps {
     * serving reads the compacted layout. Shares the batch fetch's
     * closed-form oracle: the fold must be row-invisible. */
   def fetchStreamGc(s: SparkSession, dir: String): DataFrame = {
-    val outDir = fetchGcDirs.computeIfAbsent(dir, _ => {
-      val out = runFetchStream(s, dir, filesPerTrigger = 1)
+    val outDir = fetchGcDirs.stage(s, dir) { out =>
+      runFetchStream(s, dir, out, filesPerTrigger = 1)
       compactBatchDirs(s, out, keepLast = 1)
-      out
-    })
+    }
     s.read.parquet(outDir)
       .select(col("doc_id"), col("uri"), col("n_chars"), col("text"))
       .orderBy(col("doc_id"))
@@ -1158,21 +1148,19 @@ object StreamingOps {
   /** Staged ANN probe-traffic dir: the embeddings table's bounded id
     * prefix written once per source dir — the ingest directory an
     * online query stream would land in. */
-  private val probesStagedDirs = new java.util.concurrent.ConcurrentHashMap[(String, Int), String]()
+  private val probesStagedDirs = new graft.Artifacts.Dirs[(String, Int)]("graft-stream-probes")
 
   private def probesStagedDir(s: SparkSession, dir: String,
                               numQueries: Int = 10): String =
     // keyed by (dir, numQueries): a cache keyed on dir alone would
     // silently serve the FIRST call's staged traffic to a later call
     // with a different probe count (review r14)
-    probesStagedDirs.computeIfAbsent((dir, numQueries), { case (d, nq) =>
-      val out = java.nio.file.Files.createTempDirectory("graft-stream").toString + "/probes"
-      graft.Tables.embeddings(s, d).filter(col("vec_id") < nq)
+    probesStagedDirs.stage(s, (dir, numQueries)) { out =>
+      graft.Tables.embeddings(s, dir).filter(col("vec_id") < numQueries)
         .select(col("vec_id").as("query_id"),
           col("embedding").cast("array<double>").as("q"))
         .write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Streaming ANN serving from the persisted IVF index
     * (`ann_stream_serve`) — the 14th real streaming execution: probe
@@ -1208,15 +1196,13 @@ object StreamingOps {
   }
 
   /** Staged dirs where every event appears TWICE — the dedup fixture. */
-  private val dupStagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dupStagedDirs = new graft.Artifacts.Dirs[String]("graft-dup-events")
 
   private def dupStagedDir(s: SparkSession, dir: String): String =
-    dupStagedDirs.computeIfAbsent(dir, d => {
-      val out = java.nio.file.Files.createTempDirectory("graft-dup").toString + "/events"
-      val ev = graft.Tables.events(s, d)
+    dupStagedDirs.stage(s, dir) { out =>
+      val ev = graft.Tables.events(s, dir)
       ev.union(ev).write.mode("overwrite").parquet(out)
-      out
-    })
+    }
 
   /** Driver-visible streaming dedup (`ev_stream_dedup`): every event is
     * planted twice in the ingest dir; `dropDuplicatesWithinWatermark`

@@ -89,7 +89,7 @@ class BpeSpec extends SparkSpec {
   test("vocab artifact round-trips: saved merges reload in rank order and count identically") {
     val dict = Seq("hello" -> 100L, "world" -> 90L, "held" -> 20L, "the" -> 300L)
     val merges = BpeTokenizer.train(dict, 25)
-    val path = java.nio.file.Files.createTempDirectory("bpe-vocab").toString + "/vocab"
+    val path = tempDir("bpe-vocab") + "/vocab"
     BpeTokenizer.saveVocab(spark, merges, path)
     val reloaded = BpeTokenizer.loadVocab(spark, path)
     assert(reloaded == merges, "rank order must reconstruct the exact tokenizer")

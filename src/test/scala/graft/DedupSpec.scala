@@ -35,7 +35,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashLsh surfaces planted near-duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh").toString
+    val dir = tempDir("lsh")
     val base = "spark catalyst optimizer rewrites logical plans into physical plans with codegen"
     val rows = (0L until 40L).map(i => (i, s"unrelated document number $i about topic ${i * 31}")) ++
       Seq((100L, base), (101L, base + " stage"), (102L, base))
@@ -60,7 +60,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashNearDup finds planted pair via 16-bit banding") {
-    val dir = java.nio.file.Files.createTempDirectory("sh").toString
+    val dir = tempDir("sh")
     val base = "streaming watermarks bound state growth for event time aggregation in spark"
     val rows = (0L until 30L).map(i =>
       (i, s"document $i with words ${i * 7} ${i * 13} ${i * 17} about other things")) ++
@@ -73,7 +73,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("nearDupClusters: transitive chain a~b~c collapses to one component") {
-    val dir = java.nio.file.Files.createTempDirectory("cc").toString
+    val dir = tempDir("cc")
     // a~b and b~c are similar (> 0.3 trigram jaccard) but a~c less so:
     // only transitive closure puts all three in one cluster
     val a = "one two three four five six"
@@ -108,7 +108,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("star contraction ≡ label propagation on the document pair graph") {
-    val dir = java.nio.file.Files.createTempDirectory("ccstar").toString
+    val dir = tempDir("ccstar")
     val a = "one two three four five six"
     val b = "three four five six seven eight"
     val c = "five six seven eight nine ten"
@@ -129,7 +129,7 @@ class DedupSpec extends SparkSpec {
     // planted fixture (RecallSpec shape): 40 unrelated hex-word docs +
     // 20 planted near-dup pairs — the LSH pair list is the spec's input,
     // the clustering must equal its exact connected components
-    val dir = java.nio.file.Files.createTempDirectory("lsh-cc").toString
+    val dir = tempDir("lsh-cc")
     def words(seed: Long, n: Int): String =
       (0 until n).map(j => ((seed * 31 + j + 1) * 2654435761L).toHexString).mkString(" ")
     val fillers = (0L until 40L).map(i => (i, s"bg ${words(i, 10)}"))
@@ -205,7 +205,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("duplicatedSpans: shared passages merge to maximal spans; intra-doc repeats don't count") {
-    val dir = java.nio.file.Files.createTempDirectory("spans").toString
+    val dir = tempDir("spans")
     // passages shared across docs; every other token globally unique
     val pA = (1 to 10).map(i => s"pa$i").mkString(" ")   // 10 tokens
     val pB = (1 to 8).map(i => s"pb$i").mkString(" ")    // 8 tokens
@@ -270,7 +270,7 @@ class DedupSpec extends SparkSpec {
     assert(hist.size == 2 && batch.size == 3)
     val pA = (1 to 10).map(i => s"pa$i").mkString(" ")
     val pB = (1 to 8).map(i => s"pb$i").mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("inc-spans").toString
+    val dir = tempDir("inc-spans")
     Seq(
       (hist(0), s"h1 h2 $pA h3"),            // history carries pA
       (hist(1), "hx hy hz entirely unrelated"),
@@ -340,7 +340,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("lshContainment surfaces a planted near-superset the Jaccard threshold would drop") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh-cont").toString
+    val dir = tempDir("lsh-cont")
     // short doc = prefix of the long one: containment 1.0 by
     // construction, Jaccard ≈ r (the length ratio). Banding on
     // Jaccard-minhash is geometry-limited for small r, so the planted
@@ -360,7 +360,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("low-ratio containment: banding misses it (documented), the index arm finds it") {
-    val dir = java.nio.file.Files.createTempDirectory("idx-cont").toString
+    val dir = tempDir("idx-cont")
     // short doc = the first 8 tokens of an 80-token long doc: containment
     // 1.0, length ratio ~0.1, Jaccard ~0.1 — the regime where
     // Jaccard-biased band collision probability ≈ (r/(2-r))^rowsPerBand
@@ -411,7 +411,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngram jaccard: identical=1.0, disjoint filtered out") {
-    val dir = java.nio.file.Files.createTempDirectory("ng").toString
+    val dir = tempDir("ng")
     Seq((0L, "abcdefghij"), (1L, "abcdefghij"), (2L, "zzzzyyyyxxxx"))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
@@ -455,7 +455,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("incremental dedup bloom admits no false drops on planted cross-batch dups") {
-    val dir = java.nio.file.Files.createTempDirectory("incr").toString
+    val dir = tempDir("incr")
     // doc_ids chosen freely: the md5-bucket rule partitions them into
     // history (hb<3277) and batch; plant exact dups across the split
     // and inside the batch, plus unique batch docs
@@ -484,7 +484,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzy incremental dedup: cross-boundary and in-batch planted near-copies flag") {
-    val dir = java.nio.file.Files.createTempDirectory("inc-fuzzy").toString
+    val dir = tempDir("inc-fuzzy")
     def hb(id: Long) = {
       val m = java.security.MessageDigest.getInstance("MD5")
         .digest(id.toString.getBytes("UTF-8")).map("%02x".format(_)).mkString
@@ -588,7 +588,7 @@ class DedupSpec extends SparkSpec {
     assert(common.size >= 2,
       s"shared passage at different offsets must share interior chunks, got ${common.size}")
     // end-to-end: the registry query flags both docs, not clean ones
-    val dir = java.nio.file.Files.createTempDirectory("cdc").toString
+    val dir = tempDir("cdc")
     Seq((0L, docA), (1L, docB), (2L, prose(60)), (3L, prose(45)))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")

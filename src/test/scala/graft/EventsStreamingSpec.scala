@@ -12,7 +12,7 @@ class EventsStreamingSpec extends SparkSpec {
 
   private lazy val streamDir: String = StreamingOps.stageEventsDir(
     spark, sfDir,
-    java.nio.file.Files.createTempDirectory("events-stream").toString + "/events")
+    tempDir("events-stream") + "/events")
 
   test("streaming tumbling counts == batch tumbling counts") {
     val streamed = StreamingOps.runToMemory(
@@ -48,7 +48,7 @@ class EventsStreamingSpec extends SparkSpec {
     // query mid-stream, restart from the checkpoint, and the file sink
     // must hold every event exactly once (no loss from the killed run,
     // no duplicates from reprocessing).
-    val base = java.nio.file.Files.createTempDirectory("restart").toString
+    val base = tempDir("restart")
     val (ckpt, sink) = (s"$base/ckpt", s"$base/out")
     // 12 input files at 1 file per trigger => 12 micro-batches, so the
     // kill below genuinely lands mid-stream with work left to recover
@@ -130,7 +130,7 @@ class EventsStreamingSpec extends SparkSpec {
       .groupBy($"user_id")
       .agg(count(lit(1)).as("n_events"), sum($"value").as("total_value"))
       .as[UserRunning]
-    val tailDir = java.nio.file.Files.createTempDirectory("warm-tail").toString + "/events"
+    val tailDir = tempDir("warm-tail") + "/events"
     all.filter($"ts" > cutoff).write.parquet(tailDir)
     val stream = StreamingOps.eventsStream(spark, tailDir)
       .select($"user_id", $"ts", $"value").as[UserEvent]
@@ -219,7 +219,7 @@ class EventsStreamingSpec extends SparkSpec {
     // r11 advisory: the strict variant_get threw on a PRESENT but
     // uncastable value ({"k":"abc"}), so only two of the three dirty-row
     // classes actually honored the documented null-not-error contract.
-    val dir = java.nio.file.Files.createTempDirectory("variant-dirty").toString
+    val dir = tempDir("variant-dirty")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     Seq(
       (1L, ts(0), 1L, "view", 1.0, """{"k": 7}"""),        // clean
@@ -248,7 +248,7 @@ class EventsStreamingSpec extends SparkSpec {
     // getLong NPE'd — and a day range past cteRecursionLevelLimit
     // failed deep inside the recursion at execution instead of at
     // build. Both paths are now explicit.
-    val dir = java.nio.file.Files.createTempDirectory("gapfill-empty").toString
+    val dir = tempDir("gapfill-empty")
     Seq.empty[(Long, java.sql.Timestamp, Long, String, Double, String)]
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -256,7 +256,7 @@ class EventsStreamingSpec extends SparkSpec {
     assert(empty.count() == 0)
     assert(empty.columns.toSeq == Seq("event_type", "day", "n"))
 
-    val wide = java.nio.file.Files.createTempDirectory("gapfill-wide").toString
+    val wide = tempDir("gapfill-wide")
     def ts(day: Long) = new java.sql.Timestamp(day * 86400L * 1000L)
     Seq((1L, ts(0), 1L, "view", 1.0, "{}"), (2L, ts(500), 1L, "view", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -274,7 +274,7 @@ class EventsStreamingSpec extends SparkSpec {
     // here: if a Spark upgrade changes the level accounting, this
     // test fails at the boundary instead of a user's job failing with
     // the raw recursion error past the friendly check.
-    val edge = java.nio.file.Files.createTempDirectory("gapfill-edge").toString
+    val edge = tempDir("gapfill-edge")
     Seq((1L, ts(100), 1L, "view", 1.0, "{}"), (2L, ts(104), 1L, "buy", 1.0, "{}"))
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .write.mode("overwrite").parquet(s"$edge/events.parquet")
@@ -419,8 +419,8 @@ class EventsStreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch sink: complete delivery, and batch replay is idempotent") {
-    val out = java.nio.file.Files.createTempDirectory("fb-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("fb-ckpt").toString
+    val out = tempDir("fb-out")
+    val ckpt = tempDir("fb-ckpt")
     val stream = StreamingOps.eventsStream(spark, streamDir)
       .select($"event_id", $"event_type", $"value")
     StreamingOps.runForeachBatch(stream, out, ckpt)
@@ -449,7 +449,7 @@ class EventsStreamingSpec extends SparkSpec {
 
   test("streaming dedup drops exact duplicate events within the watermark") {
     // stage a dir containing the events twice (simulated re-delivery)
-    val dup = java.nio.file.Files.createTempDirectory("events-dup").toString + "/events"
+    val dup = tempDir("events-dup") + "/events"
     val ev = Tables.events(spark, sfDir)
     ev.union(ev).write.mode("overwrite").parquet(dup)
     val deduped = StreamingOps.runToMemory(

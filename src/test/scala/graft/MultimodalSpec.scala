@@ -1056,7 +1056,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("phash dedup flags planted content dups across containers, not clean media") {
-    val dir = java.nio.file.Files.createTempDirectory("phash").toString
+    val dir = tempDir("phash")
     // ids 0, 57, 114 are all 8x8 IMAGES (w = 8 + id%57, h = 8 + (id*7)%57
     // both collapse to 8 when id ≡ 0 mod 57·... — 57 | id and 57 | 7id),
     // and the r13 container rotation places one in EACH container:
@@ -1126,7 +1126,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("binaryFile ingest round-trips payload bytes and feeds the real codec chain") {
-    val dir = java.nio.file.Files.createTempDirectory("media-lake")
+    val dir = java.nio.file.Paths.get(tempDir("media-lake"))
     val rgb = Array.tabulate[Byte](3 * 6 * 4)(i => (i * 3).toByte)
     val wavBytes = MediaCodec.encodeWav(16000, Array.tabulate(500)(i => (i * 11).toShort))
     val y4mBytes = MediaCodec.encodeY4m(5, 4,

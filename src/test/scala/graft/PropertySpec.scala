@@ -284,7 +284,7 @@ class PropertySpec extends SparkSpec {
 
   test("contamination: planted benchmark n-gram overlap is found, clean docs aren't") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("contam").toString
+    val dir = tempDir("contam")
     // Pick real bucket ids so the md5 split rule lands one doc in the
     // benchmark split (hb >= 3891), contaminated + clean docs in train
     // (hb < 3686)
@@ -330,7 +330,7 @@ class PropertySpec extends SparkSpec {
       targetIds.map(i => (i, targetVocab, "t")) ++
       candIds.take(4).map(i => (i, targetVocab, "c")) ++        // target-like
       candIds.drop(4).map(i => (i, otherVocab, "c"))            // unrelated
-    val dir = java.nio.file.Files.createTempDirectory("dsir").toString
+    val dir = tempDir("dsir")
     rows.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val got = TextAnalysis.dsir(spark, dir).collect()
@@ -394,7 +394,7 @@ class PropertySpec extends SparkSpec {
     val rows = targetIds.map(i => (i, vocabT, "t")) ++
       candIds.take(3).map(i => (i, vocabT, "c")) ++
       candIds.drop(3).map(i => (i, vocabO, "c"))
-    val dir = java.nio.file.Files.createTempDirectory("dsir-utf8").toString
+    val dir = tempDir("dsir-utf8")
     rows.toDF("doc_id", "text", "source").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val batch = TextAnalysis.dsir(spark, dir).collect()
@@ -446,7 +446,7 @@ class PropertySpec extends SparkSpec {
 
   test("round-5 operators degrade to empty results on an empty corpus (no NPEs)") {
     import graft.operators.{Dedup, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("empty").toString
+    val dir = tempDir("empty")
     Seq.empty[(Long, String, String)].toDF("doc_id", "text", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // each builds AND executes without unboxing nulls or dividing by 0
@@ -495,7 +495,7 @@ class PropertySpec extends SparkSpec {
 
   test("transitions: session gap excludes pairs, ppm is exact long division") {
     import graft.operators.Events
-    val dir = java.nio.file.Files.createTempDirectory("trans").toString
+    val dir = tempDir("trans")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     Seq(
       (1L, ts(100), 1L, "a", 0.0, "{}"),
@@ -526,7 +526,7 @@ class PropertySpec extends SparkSpec {
 
   test("scd2: runs collapse, versions chain half-open, ties break on event_id") {
     import graft.operators.Pipeline
-    val dir = java.nio.file.Files.createTempDirectory("scd2").toString
+    val dir = tempDir("scd2")
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     // user 1: free free pro pro free → three versions (runs collapse);
     // user 2: one event → a single open current version;
@@ -627,7 +627,7 @@ class PropertySpec extends SparkSpec {
 
   test("pii scrub: planted email/url/ip/number fixtures redact by category, cascade order holds") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("pii").toString
+    val dir = tempDir("pii")
     // (text, expected scrubbed form, n_email, n_url, n_ip, n_num)
     val cases = Seq(
       ("contact john.doe+spam@example.org or admin@sub.example.co.uk today",
@@ -701,7 +701,7 @@ class PropertySpec extends SparkSpec {
     // rule fixtures through the full query path: a clean 60-word doc
     // keeps; a bullet list, a symbol-heavy doc, and a stopword-free
     // doc are each rejected by exactly the intended rule
-    val dir = java.nio.file.Files.createTempDirectory("gopher").toString
+    val dir = tempDir("gopher")
     val clean = ("the data pipeline reads parquet files and writes curated " +
       "output with careful attention to every quality rule that matters " +
       "because scale makes manual review impossible so the filters have " +
@@ -788,7 +788,7 @@ class PropertySpec extends SparkSpec {
 
   test("lm score: corpus-typical text scores lower nll than anomalous text") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("lm").toString
+    val dir = tempDir("lm")
     // docs 0-7 repeat the same phrasing (high-count bigrams); doc 8
     // is one-off word salad (every bigram count 1 → smoothing floor)
     val common = (0L until 8L).map(i => (i, "the quick brown fox jumps high"))
@@ -811,7 +811,7 @@ class PropertySpec extends SparkSpec {
 
   test("repetition: planted boilerplate flags, distinct-bigram text does not") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("rep").toString
+    val dir = tempDir("rep")
     Seq(
       (0L, "spam spam spam spam spam spam spam spam spam"), // 8 bigrams, 1 distinct
       (1L, "one two three four five six seven eight nine"), // all distinct
@@ -832,7 +832,7 @@ class PropertySpec extends SparkSpec {
 
   test("tfidf: doc-unique terms outrank corpus-wide terms; ties break by term") {
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("tfidf").toString
+    val dir = tempDir("tfidf")
     // "common" appears in every doc (idf → ln(4/4)=0 ⇒ tfidf 0);
     // each doc also has a unique term that must rank first
     Seq(

@@ -66,7 +66,7 @@ class RecallSpec extends SparkSpec {
     // indices share almost no 5-gram shingles — the planted pairs (one
     // appended word on a ~100-char doc, true Jaccard ≈ 0.9) are the
     // ONLY true near-dups.
-    val dir = java.nio.file.Files.createTempDirectory("recall-lsh").toString
+    val dir = tempDir("recall-lsh")
     def words(seed: Long, n: Int): String =
       (0 until n).map(j => ((seed * 31 + j + 1) * 2654435761L).toHexString).mkString(" ")
     val fillers = (0L until 40L).map(i => (i, s"bg ${words(i, 10)}"))
@@ -512,7 +512,7 @@ class RecallSpec extends SparkSpec {
     // inventoried BETWEEN build and retrain: the commit must create
     // only a new v2/ directory and append one manifest record.
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-ver-spec").toString
+    val root = tempDir("graft-ivf-ver-spec")
     Similarity.versionedBuildV1(spark, root, sfDir, 16, 5, 3277L)
     assert(Similarity.manifestVersion(spark, root) == 1L, "build must commit manifest -> v1")
     def inventory(dir: String): Map[String, String] = {
@@ -560,7 +560,7 @@ class RecallSpec extends SparkSpec {
     // untouched), and the served frame must be row-identical across
     // the GC.
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Files.createTempDirectory("graft-ivf-gc-spec").toString
+    val root = tempDir("graft-ivf-gc-spec")
     Similarity.versionedBuildV1(spark, root, sfDir, 16, 5, 3277L)
     assert(Similarity.versionedRetrainIfDrifted(spark, root, sfDir, 16, 5, 3277L, 50000L),
       "the drifted fixture must trigger the retrain")

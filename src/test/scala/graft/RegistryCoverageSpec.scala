@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Structural guard against registered-but-untested queries.
   *
@@ -209,5 +210,22 @@ class RegistryCoverageSpec extends AnyFunSuite {
       assert(m.group(1) == m.group(2),
         s"non-green run figure in RESULTS.md current claims: ${m.matched}")
     }
+  }
+
+  test("memos and temp dirs go through Artifacts (lifetime-owner guard)") {
+    // 26 hand-rolled ConcurrentHashMap memos and 20 never-deleted temp
+    // dirs once lived across seven files; Artifacts now owns both, and
+    // a new hand-rolled one must not creep back. Probe is dev-only.
+    val owners = Set("Artifacts.scala", "Probe.scala")
+    val banned = """createTempDir|new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val offenders = try walk.iterator().asScala.toList
+      .filter(p => p.toString.endsWith(".scala") && !owners(p.getFileName.toString))
+      .flatMap { p =>
+        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        banned.findAllMatchIn(text).map(m => s"$p: ${m.matched}")
+      }
+    finally walk.close()
+    assert(offenders.isEmpty, s"memo or temp dir outside graft.Artifacts: $offenders")
   }
 }

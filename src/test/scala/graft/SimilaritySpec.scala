@@ -188,6 +188,29 @@ class SimilaritySpec extends SparkSpec {
       s"bcast plan ${bcPlan.length} chars vs literal ${litPlan.length}")
   }
 
+  test("broadcast-wired PQ kernels enforce the literal kernel's codebook contract (ksub = 257 fails loudly)") {
+    // a 257th centroid's index does not fit the code byte: the literal
+    // PqEncode has always refused it, and the broadcast twins must too,
+    // or the nearest-centroid index 256 silently wraps to code 0
+    val books = Seq.fill(2)(Seq.tabulate(257)(j => Seq(j.toDouble, 1.0)))
+    val bc = spark.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray)
+    val v = Seq(Tuple1(Seq(256.0, 1.0, 256.0, 1.0))).toDF("v")
+    import graft.functions.VectorFunctions
+    val enc = intercept[IllegalArgumentException](
+      v.select(VectorFunctions.pqEncodeBcast($"v", bc)).collect())
+    assert(enc.getMessage.contains("ksub must fit one byte"), enc.getMessage)
+    val sim = intercept[IllegalArgumentException](
+      v.select(VectorFunctions.cosinePqAsymBcast($"v", typedLit(Array[Byte](0, 0)), bc)).collect())
+    assert(sim.getMessage.contains("ksub must fit one byte"), sim.getMessage)
+    intercept[IllegalArgumentException](VectorFunctions.pqEncode($"v", books))
+    val empty = spark.sparkContext.broadcast(Array.empty[Array[Array[Double]]])
+    intercept[IllegalArgumentException](VectorFunctions.pqEncodeBcast($"v", empty))
+    intercept[IllegalArgumentException](
+      VectorFunctions.cosinePqAsymBcast($"v", typedLit(Array[Byte](0, 0)), empty))
+    bc.destroy()
+    empty.destroy()
+  }
+
   test("registry PQ queries ride the broadcast-wired kernels (no codebook plan literals)") {
     // the registry defaults (m16×k256 = 4096 centroids) sit far above
     // the broadcast threshold, so ann_pq_topk / ann_ivf_pq must plan

@@ -39,6 +39,12 @@ class SkewSpec extends SparkSpec {
     } finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  test("Spread rejects a dropDuplicates frame: Deduplicate is shuffle-derived") {
+    val df = spark.range(100).selectExpr("id % 7 AS k", "id").dropDuplicates("k")
+    val e = intercept[IllegalArgumentException](graft.operators.Spread(df, col("k")))
+    assert(e.getMessage.contains("Deduplicate"), e.getMessage)
+  }
+
   test("salted aggregation equals plain aggregation (hot-key safe)") {
     val salted = operators.Skew.saltedWordCount(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap

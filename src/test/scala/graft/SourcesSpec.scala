@@ -20,7 +20,7 @@ class SourcesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("sources").toString
+    tempDir("sources")
 
   private lazy val nation = Tables.nation(spark, sfDir)
 
@@ -367,7 +367,7 @@ class SourcesSpec extends SparkSpec {
       s"one metadata member per doc = 4 (mod 9), got $planted")
     // totality: a lake with one good and one corrupt shard yields the
     // good shard's rows, no exception — the landing-zone contract
-    val mixed = java.nio.file.Files.createTempDirectory("graft-wet-mixed").toString
+    val mixed = tempDir("graft-wet-mixed")
     val good = Warc.gzipPerRecord(Warc.encodeWet(Seq((7L, Warc.docUri(7), "good text"))))
     java.nio.file.Files.write(java.nio.file.Paths.get(mixed, "wet-00000.warc.gz"), good)
     java.nio.file.Files.write(java.nio.file.Paths.get(mixed, "wet-00001.warc.gz"),
@@ -574,7 +574,7 @@ class SourcesSpec extends SparkSpec {
         "fetchTimeMs: 7\r\n".getBytes("US-ASCII"),
       conv(2L, "cut sho", extra = Seq("WARC-Truncated" -> "length")),
       conv(3L, "third")))
-    val wetDir = java.nio.file.Files.createTempDirectory("graft-warc-mixed-types").toString
+    val wetDir = tempDir("graft-warc-mixed-types")
     java.nio.file.Files.write(java.nio.file.Paths.get(wetDir, "wet-00000.warc.gz"),
       Warc.gzipPerRecord(mixed))
     val rows = Warc.docsFromWarcFiles(spark, wetDir).collect()
@@ -601,7 +601,7 @@ class SourcesSpec extends SparkSpec {
         "Content-Type" -> "application/http; msgtype=response") ->
         "HTTP/1.1 200 OK\r\nContent-Type: text/html".getBytes("US-ASCII")), // no blank line
       resp(6L, "200 OK", Warc.htmlWrap("second good").getBytes("UTF-8"))))
-    val rawDir = java.nio.file.Files.createTempDirectory("graft-raw-mixed").toString
+    val rawDir = tempDir("graft-raw-mixed")
     java.nio.file.Files.write(java.nio.file.Paths.get(rawDir, "crawl-00000.warc.gz"),
       Warc.gzipPerRecord(raw))
     java.nio.file.Files.write(java.nio.file.Paths.get(rawDir, "crawl-00001.warc.gz"),
@@ -614,7 +614,7 @@ class SourcesSpec extends SparkSpec {
 
   test("snk_wet_roundtrip: the WET sink writes per-record-gzip shards that round-trip arbitrary content") {
     import graft.sources.Warc
-    val out = java.nio.file.Files.createTempDirectory("graft-snk-spec").toString
+    val out = tempDir("graft-snk-spec")
     val df = Seq((10L, "alpha"), (11L, "beta"), (12L, "gamma & <delta>"))
       .toDF("doc_id", "text")
     Warc.writeWetLake(df, out, 2)
@@ -628,7 +628,7 @@ class SourcesSpec extends SparkSpec {
     // the per-member STREAMING encode (r17) is byte-identical to the
     // one-shot whole-shard form: per-record gzip members are
     // independent by construction, so nothing may change on disk
-    val one = java.nio.file.Files.createTempDirectory("graft-snk-one").toString
+    val one = tempDir("graft-snk-one")
     Warc.writeWetLake(df, one, 1)
     val shardBytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(one, "wet-00000.warc.gz"))
@@ -658,7 +658,7 @@ class SourcesSpec extends SparkSpec {
     // UnsupportedFileSystemException before creating any file
     spark.sparkContext.hadoopConfiguration
       .set("fs.grafttest.impl", classOf[GraftTestFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft-conf-carry").toString
+    val local = tempDir("graft-conf-carry")
     val df = Seq((1L, "carried"), (2L, "conf")).toDF("doc_id", "text")
     Warc.writeWetLake(df, "grafttest://" + local, 2)
     val back = Warc.docsFromWarcFiles(spark, local).collect()
@@ -699,7 +699,7 @@ class SourcesSpec extends SparkSpec {
       resp(1L, "ISO-8859-1", Warc.htmlWrap(latin).getBytes("ISO-8859-1")),
       resp(2L, "windows-1252", Warc.htmlWrap(w1252).getBytes("windows-1252")),
       resp(3L, "utf-8", Warc.htmlWrap(utf8).getBytes("UTF-8"))))
-    val dir = java.nio.file.Files.createTempDirectory("graft-charset").toString
+    val dir = tempDir("graft-charset")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "crawl-00000.warc.gz"),
       Warc.gzipPerRecord(shard))
     val got = Warc.htmlDocsFromWarcFiles(spark, dir).collect()
@@ -755,7 +755,7 @@ class SourcesSpec extends SparkSpec {
       Seq("WARC-Type" -> "conversion", "WARC-Target-URI" -> Warc.docUri(7),
         "WARC-Payload-Digest" -> Warc.payloadDigest("what was captured".getBytes("UTF-8")),
         "Content-Type" -> "text/plain") -> "what rotted on disk".getBytes("UTF-8")
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-revisit-dangling").toString
+    val dir2 = tempDir("graft-revisit-dangling")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir2, "crawl-00000.warc.gz"),
       Warc.gzipPerRecord(Warc.encodeRecords(Seq(conv(1L, "one"), rev(2L, 99L), rev(5L, 1L),
         rotted))))
@@ -777,7 +777,7 @@ class SourcesSpec extends SparkSpec {
     // whole-shard read (gunzip walk, full parse) cannot survive the
     // junk — the bytes-read discipline EXECUTED, not asserted
     val docs = (0L to 9L).map(id => (id, Warc.docUri(id), s"doc $id body " * 12))
-    val lake = java.nio.file.Files.createTempDirectory("graft-fetch-lake").toString
+    val lake = tempDir("graft-fetch-lake")
     java.nio.file.Files.write(java.nio.file.Paths.get(lake, "wet-00000.warc.gz"),
       Warc.gzipPerRecord(Warc.encodeWet(docs.take(5))))
     java.nio.file.Files.write(java.nio.file.Paths.get(lake, "wet-00001.warc.gz"),
@@ -786,7 +786,7 @@ class SourcesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(2), r.getLong(3), r.getLong(4)))
     assert(idx.length == 10, "every conversion record must index")
     val selected = idx.filter(_._1 % 3 == 0) // ids 0,3,6,9 — both shards hit
-    val junkLake = java.nio.file.Files.createTempDirectory("graft-fetch-junk").toString
+    val junkLake = tempDir("graft-fetch-junk")
     Seq("wet-00000.warc.gz", "wet-00001.warc.gz").foreach { shard =>
       val bytes = java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(lake, shard)).clone()
@@ -1697,7 +1697,7 @@ class SourcesSpec extends SparkSpec {
 
   test("compactBatchDirs: folds below the floor row-identically; no-op when nothing moves; idempotent") {
     import graft.streaming.StreamingOps
-    val out = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val out = tempDir("graft-compact")
     (0 to 3).foreach { b =>
       spark.range(b * 10L, b * 10L + 10L).selectExpr("id AS doc_id")
         .repartition(2).write.parquet(s"$out/batch_id=$b")
@@ -1737,7 +1737,7 @@ class SourcesSpec extends SparkSpec {
       go(new java.io.File(p))
     }
     def stage(): String = {
-      val out = java.nio.file.Files.createTempDirectory("graft-compact-crash").toString
+      val out = tempDir("graft-compact-crash")
       (0 to 3).foreach { b =>
         spark.range(b * 10L, b * 10L + 10L).selectExpr("id AS doc_id")
           .write.parquet(s"$out/batch_id=$b")
@@ -1790,7 +1790,7 @@ class SourcesSpec extends SparkSpec {
     // several below-floor directories existed and the fold moved data
     assert(StreamingOps.lastNumBatches >= 3,
       s"expected >= 3 micro-batches for a real fold, got ${StreamingOps.lastNumBatches}")
-    val outDir = StreamingOps.fetchGcDirs.get(sfDir)
+    val outDir = StreamingOps.fetchGcDirs.get(spark, sfDir).get
     val dirs = new java.io.File(outDir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("batch_id=")).map(_.getName).sorted
     assert(dirs.length == 2, s"fold must leave compacted + newest, got ${dirs.mkString(",")}")
@@ -1827,7 +1827,7 @@ class SourcesSpec extends SparkSpec {
     // (fs.create(path, overwrite=true)) — plant a garbage file on
     // the exact shard name the task will claim
     import graft.sources.Warc
-    val out = java.nio.file.Files.createTempDirectory("graft-snk-retry").toString
+    val out = tempDir("graft-snk-retry")
     java.nio.file.Files.write(java.nio.file.Paths.get(out, "wet-00000.warc.gz"),
       Array.tabulate[Byte](100)(i => (i * 7).toByte))
     val df = Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text")
@@ -1861,7 +1861,7 @@ class SourcesSpec extends SparkSpec {
       Seq("WARC-Type" -> "conversion", "WARC-Target-URI" -> Warc.docUri(id),
         "WARC-Payload-Digest" -> digest,
         "Content-Type" -> "text/plain") -> text.getBytes("UTF-8")
-    val dir = java.nio.file.Files.createTempDirectory("graft-digest").toString
+    val dir = tempDir("graft-digest")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "wet-00000.warc.gz"),
       Warc.gzipPerRecord(Warc.encodeRecords(Seq(
         conv(1L, "good", Warc.payloadDigest("good".getBytes("UTF-8"))),
@@ -1913,7 +1913,7 @@ class SourcesSpec extends SparkSpec {
     }
     // a shard with a broken member chain indexes as ZERO rows (an
     // index with holes is worse than no index)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-cdx-broken").toString
+    val dir2 = tempDir("graft-cdx-broken")
     val good = Warc.gzipPerRecord(Warc.encodeWet(Seq((7L, Warc.docUri(7), "ok"))))
     java.nio.file.Files.write(java.nio.file.Paths.get(dir2, "wet-00000.warc.gz"), good)
     java.nio.file.Files.write(java.nio.file.Paths.get(dir2, "wet-00001.warc.gz"),

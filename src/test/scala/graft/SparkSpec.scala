@@ -8,6 +8,12 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
 
+  /** A fresh dir for one test's files, under the session's artifact
+    * root — deleted with it when the JVM exits, like every staged
+    * engine dir. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(Artifacts.root(spark), prefix).toString
+
   /** Every node of a physical plan, descending into AQE wrappers.
     * `AdaptiveSparkPlanExec` (and post-execution `QueryStageExec`) are
     * LeafExecNodes, so a plain `plan.collect` stops at the wrapper and

@@ -6,7 +6,7 @@ class WordCountMainSpec extends SparkSpec {
   import spark.implicits._
 
   test("bucketed TSV output routes words exactly like the reference ihash") {
-    val in = java.nio.file.Files.createTempDirectory("wcmain").toString
+    val in = tempDir("wcmain")
     val out = s"$in/out"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$in/input.txt"),

@@ -57,7 +57,7 @@ class WordCountSpec extends SparkSpec {
   }
 
   test("tsv sink writes key<TAB>value like mr-out-*") {
-    val dir = java.nio.file.Files.createTempDirectory("wc-tsv").toString
+    val dir = tempDir("wc-tsv")
     val df = Seq("hello world hello").toDF("text")
     WordCount.writeTsv(WordCount.wordCount(df), dir)
     val lines = spark.read.text(dir).as[String].collect().sorted
