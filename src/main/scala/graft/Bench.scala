@@ -1,134 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Sampled BEFORE the session spins up: once the bench's own 32
+    val cpus = GraftSession.threads
+    // Local-profiling knobs (the driver sets neither): a subset of
+    // queries (SPARK_GRAFT_ONLY; an unknown name fails the run), or
+    // more repetitions with per-run times on stderr (SPARK_GRAFT_RUNS).
+    val selected = SparkEntry.selection()
+    // Sampled BEFORE the session spins up: once the bench's own
     // threads run, loadavg measures the bench, not the ambient noise
     // the number exists to expose.
     def loadavg(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString.trim.split(" ").take(3).mkString(" ")
       catch { case _: Throwable => "unavailable" }
     val loadBefore = loadavg()
-    // local-profiling knob (the driver never sets it): decouple the
-    // post-shuffle partition count from the thread count, so the
-    // shuffle-partition sweep the r19 verdict asked for on the LSH
-    // band join is a one-env measurement, not a code edit
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus).toInt
-    val spark = GraftSession.build(s"local[$cpus]", shuffle, "graft-bench")
+    val spark = GraftSession.build(s"local[$cpus]", cpus, "graft-bench")
     // Warm up the JVM/codegen/shuffle machinery so the first timed
-    // query doesn't absorb session initialization (~4 s otherwise).
-    SparkEntry.queries.get("q1_pricing")
-      .foreach(fn => fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-    // Local-profiling knobs (the driver sets neither): run a subset of
-    // queries, or more repetitions with per-run times on stderr.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // queries don't absorb session initialization (~4 s otherwise) or
+    // JIT warm-up: after a single q1 run the first three timed queries
+    // still read ~0.2 s slower in their min-of-3 (sf0.1, 4 cores);
+    // after ten they do not.
+    SparkEntry.queries.get("q1_pricing").foreach(fn =>
+      (1 to 10).foreach(_ => fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
     // Default 3 repetitions (was 2): the r10 and r11 driver artifact
     // runs were both load-polluted, and the judge's idle re-bench
     // showed min-of-3 absorbs ambient-load spikes that min-of-2 let
     // through. Min over runs is already the reported statistic; one
     // more repetition buys artifact honesty for ~80 s of wall.
+    // Fixtures (lakes, indexes, stream inputs) are staged on a query's
+    // first build and kept for the session, so only repetition 1 pays
+    // the staging and the min discards it — with SPARK_GRAFT_RUNS=1 a
+    // fixture's first use is timed with its staging.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    // Sorted execution order: Map iteration order is hash-arbitrary,
-    // which made per-query numbers depend on which queries ran before
-    // them (JIT, page cache, the documented dd_clusters→dd_survivors
-    // label reuse). Sorted order is stable across rounds and runs
-    // dd_clusters before dd_survivors by construction.
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Pre-stage the streaming ingest fixtures (plain + dedup dirs) in
-    // warm-up: staging is test scaffolding (production events already
-    // land in a directory), so timed ev_stream_* runs should measure
-    // pure stream execution, not a one-time fixture write.
-    val docsStreamers = Set("tx_stream_quality", "mm_stream_meta", "snk_stream_wet",
-      "pipe_stream_robots_filter")
-    if (selected.exists(p => p._1.startsWith("ev_stream") || docsStreamers(p._1) ||
-        p._1 == "ann_stream_serve"))
-      streaming.StreamingOps.preStage(spark, sfDir,
-        plain = selected.exists(p =>
-          p._1.startsWith("ev_stream") && p._1 != "ev_stream_dedup"),
-        dedup = selected.exists(_._1 == "ev_stream_dedup"),
-        docs = selected.exists(p => docsStreamers(p._1)),
-        probes = selected.exists(_._1 == "ann_stream_serve"))
-    // Same discipline for the file-lake fixture: production media
-    // objects already sit in storage, so mm_files_meta's timed runs
-    // measure the binaryFile scan + decode, not the one-time staging.
-    if (selected.exists(_._1 == "mm_files_meta"))
-      operators.Multimodal.mediaLakeDir(spark, sfDir)
-    // the WET fixture lake: a production crawl already sits in object
-    // storage, so src_warc-family timed runs (and the streaming ingest
-    // twin) measure scan + parse, not the one-time staging write
-    if (selected.exists(p => p._1 == "src_warc" || p._1 == "src_warc_cdx" ||
-        p._1 == "src_warc_fetch" || p._1 == "src_stream_warc" ||
-        p._1 == "src_warc_serve" || p._1 == "src_stream_fetch_gc"))
-      graft.sources.Warc.wetLakeDir(spark, sfDir)
-    // same rule for the RAW crawl lake consumed by the html/WAT
-    // extraction verbs and the crawl-rooted pipeline (r17 ADVICE #2:
-    // src_warc_wat/src_warc_html paid the one-time raw staging write
-    // in their first timed repetition)
-    if (selected.exists(p => p._1 == "src_warc_html" || p._1 == "src_warc_wat" ||
-        p._1 == "pipe_crawl_e2e" || p._1 == "src_stream_wat"))
-      graft.sources.Warc.rawLakeDir(spark, sfDir)
-    // the robots lake (r18; r19 widened to every consumer): same
-    // staging discipline
-    if (selected.exists(p => p._1 == "src_warc_robots" || p._1 == "pipe_robots_filter" ||
-        p._1 == "pipe_fetch_schedule" || p._1 == "pipe_fetch_schedule_sharded" ||
-        p._1 == "src_robots_sitemaps" || p._1 == "src_stream_robots" ||
-        p._1 == "pipe_robots_audit" || p._1 == "pipe_stream_robots_filter" ||
-        p._1 == "src_sitemap_urls" || p._1 == "pipe_sitemap_schedule"))
-      graft.sources.Robots.robotsLakeDir(spark, sfDir)
-    // the persisted cdx artifact: src_warc_serve measures SERVING
-    // (pushed-filter artifact read + range reads), so the one-time
-    // index build is warm-up — the ivfIndexDir discipline
-    if (selected.exists(p => p._1 == "src_warc_serve" || p._1 == "src_stream_fetch" ||
-        p._1 == "src_stream_fetch_gc"))
-      graft.sources.Warc.cdxIndexDir(spark, sfDir)
-    // the staged request stream is scaffolding too (production
-    // requests arrive from a queue) — timed reps pay the stream +
-    // range reads, never the one-time request write
-    if (selected.exists(p => p._1 == "src_stream_fetch" || p._1 == "src_stream_fetch_gc"))
-      streaming.StreamingOps.fetchRequestsDir(spark, sfDir)
-    if (selected.exists(_._1 == "mm_jpeg_files"))
-      operators.Multimodal.jpegLakeDir(spark, sfDir)
-    // And the persisted IVF index: pipe_ivf_serve measures SERVING
-    // (the artifact-read plan), so the one-time train+write build is
-    // warm-up — the decoupling is the point of the query.
-    if (selected.exists(p => p._1 == "pipe_ivf_serve" || p._1 == "ann_stream_serve"))
-      operators.Similarity.ivfIndexDir(spark, sfDir)
-    // the versioned lifecycle's build (v1 + drift detect + v2 +
-    // manifest) is warm-up for the same reason: pipe_ivf_reserve's
-    // timed number is manifest-resolved SERVING
-    if (selected.exists(_._1 == "pipe_ivf_reserve"))
-      operators.Similarity.ivfVersionedDir(spark, sfDir)
-    if (selected.exists(_._1 == "pipe_ivf_append"))
-      operators.Similarity.ivfAppendIndexDir(spark, sfDir)
-    if (selected.exists(_._1 == "pipe_ivf_sq8_serve"))
-      operators.Similarity.ivfSq8IndexDir(spark, sfDir)
-    // Honest-accounting hooks, run before EVERY timed repetition:
-    // dd_clusters must pay pair generation + propagation each run (the
-    // session-scoped labelCache would otherwise make min-of-N report a
-    // cached checkpoint scan). dd_survivors deliberately has NO hook —
-    // its reported number includes the documented within-session reuse
-    // of the dd_clusters labels (RESULTS.md).
-    val preRun: Map[String, () => Unit] = Map(
-      "dd_clusters" -> (() => operators.Dedup.clearLabelCache()),
-      // each repetition must pay the stream + shard write, not a
-      // cached read-back of the first run's export lake
-      "snk_stream_wet" -> (() => streaming.StreamingOps.clearWetExportCache()),
-      // same rule for the streamed point lookups: pay the request
-      // stream + range reads every repetition
-      "src_stream_fetch" -> (() => streaming.StreamingOps.clearFetchStreamCache()),
-      // and for the retention twin: pay the stream AND the fold
-      "src_stream_fetch_gc" -> (() => streaming.StreamingOps.clearFetchGcCache()))
-    // The noop write builds a FRESH QueryExecution, re-optimizing under
-    // the session conf — q24's bloom-filter injection needs its scoped
-    // planning confs live around the timed action, or the reported
-    // number measures an ordinary join with no runtime filter.
-    val aroundRun: Map[String, (() => Unit) => Unit] = Map(
-      "q24_bloom_prune" ->
-        (body => operators.Relational.withBloomPruneConfs(spark)(body())))
-    def timeQuery(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    def timeQuery(name: String): Double = {
       // noop sink: evaluates every output column and row (count() would
       // let Catalyst prune computed columns and measure a cheaper plan).
       // min over runs: later runs reuse compiled codegen, so the
@@ -139,17 +43,14 @@ object Bench {
       // would even silently REPLACE a real first-phase measurement
       // (review r13). All-runs-failed surfaces as -1 in the artifact.
       val times = (1 to runs).map { _ =>
-        preRun.get(name).foreach(_.apply())
-        var failed = false
         val t0 = System.nanoTime()
-        val run = () =>
-          try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            failed = true
-            System.err.println(s"[bench] $name: ${e.getMessage}")
-          }
-        aroundRun.getOrElse(name, (b: () => Unit) => b())(run)
-        if (failed) Double.PositiveInfinity else (System.nanoTime() - t0) / 1e9
+        try {
+          SparkEntry.run(spark, name, sfDir)(_.write.format("noop").mode("overwrite").save())
+          (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name: ${e.getMessage}")
+          Double.PositiveInfinity
+        }
       }
       if (runs > 2) System.err.println(
         s"[bench] $name runs: ${times.map(t => f"$t%.3f").mkString(" ")}")
@@ -163,9 +64,9 @@ object Bench {
     // self-identifies — reviewers read which queries ran under load
     // without re-benching. (The sample includes the bench's own decay
     // from previous queries' threads; the signal is the TREND.)
-    val mainPhase = selected.map { case (name, fn) =>
+    val mainPhase = selected.map { name =>
       val la = loadavg().split(" ").head
-      (name, timeQuery(name, fn), la)
+      (name, timeQuery(name), la)
     }
     // Second chance for the slowest tail: re-run the N worst queries
     // after the sweep (different machine moment — sustained load that
@@ -174,10 +75,9 @@ object Bench {
     // what the re-run corrected.
     val rerunWorst = sys.env.getOrElse("SPARK_GRAFT_RERUN_WORST", "8").toInt
     val worstNames = mainPhase.sortBy(-_._2).take(rerunWorst).map(_._1).toSet
-    val byName = SparkEntry.queries
     val rerun = mainPhase.filter(p => worstNames(p._1)).map { case (name, first, _) =>
       val la = loadavg().split(" ").head
-      (name, first, timeQuery(name, byName(name)), la)
+      (name, first, timeQuery(name), la)
     }
     val rerunMin = rerun.map { case (n, _, second, _) => n -> second }.toMap
     val results = mainPhase.map { case (name, t, _) =>

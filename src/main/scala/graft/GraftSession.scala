@@ -73,6 +73,11 @@ object GraftSession {
     }
   }
 
+  /** Local thread count of the engine's mains: `SPARK_GRAFT_CPUS` if
+    * set, else the JVM's available processors. */
+  def threads: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
   def build(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
     var b = SparkSession.builder().master(withLocalRetries(master)).appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -6,30 +6,10 @@ import org.apache.spark.sql.functions._
 /** Dev-only plan/skew probe (not part of the driver contract). */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.build("local[8]", 8, "graft-probe")
+    val cpus = GraftSession.threads
+    val spark = GraftSession.build(s"local[$cpus]", cpus, "graft-probe")
     import spark.implicits._
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    if (args.lift(1).contains("streaming")) {
-      val staged = streaming.StreamingOps.stageEventsDir(spark, dir,
-        java.nio.file.Files.createTempDirectory("probe-stream").toString + "/events")
-      val out = streaming.StreamingOps.runToMemory(
-        streaming.StreamingOps.tumblingCounts(
-          streaming.StreamingOps.eventsStream(spark, staged)),
-        "probe_tumbling",
-        org.apache.spark.sql.streaming.OutputMode.Complete)
-      println(s"streaming_windows=${out.count()}")
-      out.orderBy($"win_start", $"event_type").show(5)
-      val dup = java.nio.file.Files.createTempDirectory("probe-dup").toString + "/events"
-      val ev = Tables.events(spark, dir)
-      ev.union(ev).write.mode("overwrite").parquet(dup)
-      val deduped = streaming.StreamingOps.runToMemory(
-        streaming.StreamingOps.streamingDedup(
-          streaming.StreamingOps.eventsStream(spark, dup), Seq("event_id"), "10 days"),
-        "probe_dedup")
-      println(s"dedup: in=${ev.count() * 2} out=${deduped.count()}")
-      spark.stop()
-      return
-    }
     if (args.lift(1).contains("jobs")) {
       // Per-JOB wall-clock decomposition of one registry query (dev
       // probe for the r21 optimization pass): run the query three
@@ -41,7 +21,6 @@ object Probe {
       // a single explain() cannot show.
       val name = args.lift(2).getOrElse(
         sys.error("usage: Probe <dir> jobs <query>"))
-      val fn = SparkEntry.queries(name)
       val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, Int)]
       val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]
       val listener = new org.apache.spark.scheduler.SparkListener {
@@ -56,11 +35,10 @@ object Probe {
         }
       }
       (1 to 3).foreach { rep =>
-        graft.operators.Dedup.clearLabelCache()
         jobs.clear(); starts.clear()
         spark.sparkContext.addSparkListener(listener)
         val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        SparkEntry.run(spark, name, dir)(_.write.format("noop").mode("overwrite").save())
         val wall = (System.nanoTime() - t0) / 1e9
         // listener bus is async: drain BEFORE removing the listener —
         // events queued at run end are never delivered to a removed
@@ -645,15 +623,6 @@ object Probe {
         functions.VectorFunctions.cosinePqAsym(typedLit(q0),
           functions.VectorFunctions.pqEncode($"embedding", books),
           books).as("s")), embT)
-      spark.stop()
-      return
-    }
-    if (args.lift(1).contains("sql")) {
-      GraftExtensions.register(spark)
-      Tables.documents(spark, dir).createOrReplaceTempView("docs")
-      spark.sql(
-        """SELECT graft_fnv1a32(text) AS h, graft_simhash64(text) AS sh,
-          |  graft_minhash(text)[0] AS mh0 FROM docs LIMIT 3""".stripMargin).show()
       spark.stop()
       return
     }

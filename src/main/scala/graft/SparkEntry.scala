@@ -613,6 +613,43 @@ object SparkEntry {
       ((s, dir) => graft.streaming.StreamingOps.incrDedupViaStream(s, dir)),
   )
 
+  /** Resets [[run]] applies before a query's build (snk_stream_wet
+    * streams at build time): each forgets a session memo, so every run
+    * pays the query's real cost, not a read-back of an earlier run's
+    * result. dd_survivors has none on purpose: it reuses dd_clusters'
+    * labels within a session (RESULTS.md). */
+  val resetsBeforeRun: Map[String, () => Unit] = Map(
+    "dd_clusters" -> (() => Dedup.clearLabelCache()),
+    "snk_stream_wet" -> (() => graft.streaming.StreamingOps.clearWetExportCache()),
+    "src_stream_fetch" -> (() => graft.streaming.StreamingOps.clearFetchStreamCache()),
+    "src_stream_fetch_gc" -> (() => graft.streaming.StreamingOps.clearFetchGcCache()))
+
+  /** Queries whose build and action [[run]] wraps in
+    * [[Relational.withBloomPruneConfs]]: a DataFrameWriter action
+    * re-optimizes under the session conf, which would drop q24's
+    * runtime bloom filter. */
+  val bloomScoped: Set[String] = Set("q24_bloom_prune")
+
+  /** One run of a registry query: build it and hand it to `act` under
+    * the query's per-run policy. Bench, Verify and Probe all run
+    * queries through here. */
+  def run[T](s: SparkSession, name: String, dir: String)(act: DataFrame => T): T = {
+    resetsBeforeRun.get(name).foreach(_())
+    def body = act(queries(name)(s, dir))
+    if (bloomScoped(name)) Relational.withBloomPruneConfs(s)(body) else body
+  }
+
+  /** The queries a run covers, in name order: every one, or the
+    * comma-separated names in `only`, which must all be registered.
+    * Name order is stable across runs and runs dd_clusters before
+    * dd_survivors, which reuses its labels. */
+  def selection(only: Option[String] = sys.env.get("SPARK_GRAFT_ONLY")): Seq[String] = {
+    val names = only.fold(queries.keySet)(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val unknown = names -- queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
+    names.toSeq.sorted
+  }
+
   /** DuckDB-equivalent SQL per query (same tables as parquet views).
     * Omitted: dd_minhash_lsh / dd_lsh_clusters / dd_simhash /
     * ann_lsh_topk / ann_near_dup / dd_semantic / ann_sq8_topk /

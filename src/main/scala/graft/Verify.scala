@@ -1,19 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * `SPARK_GRAFT_ONLY=<name>[,<name>…]` dumps only those queries and
+  * their oracle SQL — the dev loop for one operator; unknown names fail
+  * the run. `scripts/selfcheck.py <sfDir> <outDir>` reads either dump. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.build(s"local[$cpus]", cpus.toInt, "graft-verify")
+    val names = SparkEntry.selection()
+    val cpus = GraftSession.threads
+    val spark = GraftSession.build(s"local[$cpus]", cpus, "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // sorted like Bench: deterministic log order, and dd_clusters fills
-    // the label cache before dd_survivors reads it
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    names.foreach { name =>
+      try SparkEntry.run(spark, name, sfDir)(
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
@@ -30,7 +32,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => names.contains(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -27,7 +27,7 @@ object WordCountMain {
     val preexisting = SparkSession.getActiveSession
       .orElse(SparkSession.getDefaultSession).isDefined
     val spark = GraftSession.build(
-      sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]"),
+      sys.env.getOrElse("SPARK_MASTER", s"local[${GraftSession.threads}]"),
       math.max(nReduce, 8), "graft-wordcount")
     val wc = WordCount.wordCountText(spark.read.text(inputs: _*))
       .withColumn("bucket", HashFunctions.referencePartition(col("word"), nReduce))

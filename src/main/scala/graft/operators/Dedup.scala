@@ -362,9 +362,10 @@ object Dedup {
     * DataFrame becomes unreachable). Entries are bounded by the distinct
     * (input, params) tuples a session touches — a handful in practice —
     * with a cap of 32 entries against parameter sweeps, and
-    * [[clearLabelCache]] as the explicit epoch boundary (Bench clears
-    * before each timed `dd_clusters` run so the reported number is the
-    * real clustering cost, not a cached-scan replay). */
+    * [[clearLabelCache]] as the explicit epoch boundary
+    * ([[graft.SparkEntry.run]] clears it before each `dd_clusters` run
+    * so a timed run pays the real clustering cost, not a cached-scan
+    * replay). */
   private val labelCache =
     new graft.Artifacts.Memo[(String, Int, Long, Double, String), DataFrame](cap = 32)
 
@@ -586,8 +587,8 @@ object Dedup {
     * the edge set all derive from it, and without the checkpoint each
     * branch re-runs the signature+bucket join.
     *
-    * Deliberately NOT cached: each call pays its real cost (no Bench
-    * epoch hook needed) and `survivors` stays on the oracle-checked
+    * Deliberately NOT cached: each call pays its real cost (no per-run
+    * reset needed) and `survivors` stays on the oracle-checked
     * path. Spec-gated in DedupSpec against a driver-side union-find
     * over the same pair list — xxhash64 banding isn't
     * ANSI-expressible, so there is no SQL oracle. */

@@ -278,7 +278,7 @@ object Multimodal {
     * scaffolding: a production lake's objects already sit in object
     * storage — so [[filesMeta]]'s timed runs measure the binaryFile
     * scan + decode, not the one-time fixture write ([[graft.streaming.StreamingOps.preStage]]
-    * discipline; Bench pre-stages this dir in warm-up). */
+    * discipline; only a query's first build pays the staging). */
   private val mediaLakeDirs = new graft.Artifacts.Dirs[String]("graft-media-lake")
 
   def mediaLakeDir(s: SparkSession, dir: String): String =

@@ -381,7 +381,8 @@ object Relational {
     * or Verify's parquet write — re-optimize under the session conf
     * and would silently drop the injected filter; callers that time or
     * inspect the write path must wrap the action in this scope
-    * (Bench does, so BENCH q24 numbers measure the filtered join). */
+    * ([[graft.SparkEntry.run]] does, so Bench's q24 numbers measure
+    * the filtered join). */
   def withBloomPruneConfs[T](s: SparkSession)(body: => T): T = {
     val scoped = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -419,7 +420,7 @@ object Relational {
       // after the conf is restored. Caveat: DataFrameWriter actions
       // build a fresh QueryExecution and re-optimize under the
       // restored conf — write-path callers must re-enter
-      // withBloomPruneConfs around the action (Bench does). (AQE may
+      // withBloomPruneConfs around the action (SparkEntry.run does). (AQE may
       // still broadcast at runtime if the build side proves small —
       // the same call a real cluster would make.)
       joined.queryExecution.executedPlan

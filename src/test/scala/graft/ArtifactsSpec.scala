@@ -47,6 +47,14 @@ class ArtifactsSpec extends SparkSpec {
     val root = Artifacts.root(spark)
     assert(Paths.get(d1).startsWith(root) && Paths.get(d2).startsWith(root))
     assert(Files.isDirectory(Paths.get(d1)), "eviction must not delete a dir a lazy plan may still scan")
+    // every run through SparkEntry.run streams afresh, with no explicit clear
+    val viaRun = (1 to 2).map { _ =>
+      val rows = SparkEntry.run(spark, "snk_stream_wet", sfDir)(sorted)
+      (rows, StreamingOps.wetExportDirs.get(spark, sfDir).get)
+    }
+    assert(viaRun.map(_._2).distinct.size == 2 && !viaRun.map(_._2).contains(d2),
+      s"each SparkEntry.run must stream into its own dir: ${viaRun.map(_._2)}")
+    assert(viaRun.forall(_._1 == first))
   }
 
   test("stopping a context deletes its artifact root; JVM exit deletes a running context's") {

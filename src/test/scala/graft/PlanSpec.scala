@@ -256,6 +256,42 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q24: a write through SparkEntry.run executes the bloom filter and restores the conf") {
+    // a DataFrameWriter action re-optimizes under the session conf, so
+    // only run's scope keeps the filter on the write path
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.catalyst.plans.logical.V2WriteCommand
+    import org.apache.spark.sql.execution.{FilterExec, QueryExecution}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.isInstanceOf[V2WriteCommand]) writes.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def bloomFiltersExecuted(write: => Unit): Int = {
+      writes.clear()
+      write
+      val qe = writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      assert(qe != null, "the noop write reported no execution")
+      flattenPlan(qe.executedPlan).count {
+        case f: FilterExec => f.condition.exists(_.isInstanceOf[BloomFilterMightContain])
+        case _ => false
+      }
+    }
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    spark.listenerManager.register(listener)
+    try {
+      val before = spark.conf.getAll
+      assert(bloomFiltersExecuted(SparkEntry.run(spark, "q24_bloom_prune", sfDir)(noop)) > 0,
+        "SparkEntry.run's write of q24 ran without its runtime bloom filter")
+      assert(spark.conf.getAll == before, "SparkEntry.run must restore the session conf")
+      assert(bloomFiltersExecuted(noop(SparkEntry.queries("q24_bloom_prune")(spark, sfDir))) == 0,
+        "a write outside the scope keeps the filter, so the scope is no longer needed")
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("pipe_e2e: one scan, zero joins, each text kernel evaluated once") {
     // the composed pipeline's three pitfalls, each hit and fixed during
     // construction: a quality self-join (second scan), groupBy+join-back

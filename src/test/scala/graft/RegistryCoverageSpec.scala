@@ -139,6 +139,21 @@ class RegistryCoverageSpec extends AnyFunSuite {
     }
   }
 
+  test("the per-run policy names only registered queries (stale-name guard)") {
+    val policy = SparkEntry.resetsBeforeRun.keySet ++ SparkEntry.bloomScoped
+    val stale = policy -- SparkEntry.queries.keySet
+    assert(stale.isEmpty, s"SparkEntry.run policy names unregistered queries: $stale")
+  }
+
+  test("a query selection rejects unknown names and lists them") {
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.selection(Some("q1_pricing,no_such_query,dd_clusterz")))
+    assert(e.getMessage.contains("dd_clusterz,no_such_query"), e.getMessage)
+    assert(SparkEntry.selection(Some("q24_bloom_prune,dd_clusters")) ==
+      Seq("dd_clusters", "q24_bloom_prune"))
+    assert(SparkEntry.selection(None) == SparkEntry.queries.keys.toSeq.sorted)
+  }
+
   test("oracle entries never name queries missing from the registry") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracleSql without a queries entry: $orphans")
