@@ -48,6 +48,10 @@ object GraftExtensions {
     "graft_token_bigrams" -> ((info("graft_token_bigrams",
       "token_bigrams(str) - array of space-joined consecutive whitespace-token pairs"),
       (es: Seq[Expression]) => TokenBigrams(es.head))),
+    "graft_word_tokens" -> ((info("graft_word_tokens",
+      "word_tokens(str) - whitespace tokens cutset-trimmed and lowercased (the word-count " +
+        "tokenizer; tokens that trim to nothing are empty strings)"),
+      (es: Seq[Expression]) => WordTokens(es.head))),
     "graft_token_count" -> ((info("graft_token_count",
       "token_count(str) - whitespace-token count (strings.Fields semantics)"),
       (es: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions.GetArrayItem(

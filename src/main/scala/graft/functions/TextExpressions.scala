@@ -2,7 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Lower, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
@@ -37,6 +38,12 @@ object TextFunctions {
     * documents with fewer than two tokens. */
   def tokenNgrams(c: Column, n: Int): Column =
     ColumnBridge.column(TokenNgrams(ColumnBridge.expression(c), n))
+
+  /** `array(string)`: every whitespace token, cutset-trimmed and
+    * lowercased, in order — the word-count tokenizer in one pass (see
+    * [[WordTokens]]). Tokens that trim to nothing stay as `""`. */
+  def wordTokens(c: Column): Column =
+    ColumnBridge.column(WordTokens(ColumnBridge.expression(c)))
 
   def tokenBigrams(c: Column): Column =
     ColumnBridge.column(TokenBigrams(ColumnBridge.expression(c)))
@@ -103,9 +110,10 @@ object TextFunctions {
     ColumnBridge.column(CdcChunks(ColumnBridge.expression(c), window, mask, minLen, maxLen))
 }
 
-private[functions] object Tokenize {
-  @inline def isSpace(b: Byte): Boolean =
-    b == ' ' || (b >= 9 && b <= 13) // \t \n \x0B \f \r
+private[graft] object Tokenize {
+  /** Java regex `\s`; takes a UTF-8 byte or a UTF-16 char. */
+  @inline def isSpace(c: Int): Boolean =
+    c == ' ' || (c >= 9 && c <= 13) // \t \n \x0B \f \r
 
   /** Calls f(start, end) for each maximal non-space byte run. */
   @inline def foreachToken(bytes: Array[Byte])(f: (Int, Int) => Unit): Unit = {
@@ -152,6 +160,76 @@ case class TokenSetCounts(child: Expression, sets: Seq[Seq[String]])
   }
   override protected def withNewChildInternal(c: Expression): TokenSetCounts =
     copy(child = c)
+}
+
+/** See [[TextFunctions.wordTokens]]. One byte scan replaces the chain
+  * `explode(split(t, "\\s+"))` → `regexp_replace(_, TrimPattern, "")`
+  * → `lower`, with the same output token for token (bar the empty
+  * tokens `split` makes of leading and trailing whitespace, which the
+  * word-count filter drops either way):
+  *  - an all-ASCII token is byte-trimmed of the cutset and A–Z folded;
+  *    on ASCII the regex is exactly a trim of both ends (its only
+  *    line terminators, `\n` and `\r`, split tokens) and `lower` only
+  *    maps A–Z;
+  *  - a token with any byte ≥ 0x80 takes the chain itself: the Java
+  *    regex on the decoded token, then Spark's own `Lower`. That keeps
+  *    the corners a byte rule would miss — `$` matching before a final
+  *    U+0085/U+2028/U+2029, ICU case mapping (final sigma, `İ`),
+  *    U+FFFD for invalid UTF-8 (the decode stops at the ASCII
+  *    whitespace around a token, so per-token decoding equals the
+  *    chain's whole-text decode). */
+case class WordTokens(child: Expression)
+    extends UnaryExpression with CodegenFallback {
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "graft_word_tokens"
+
+  @transient private lazy val trim = java.util.regex.Pattern.compile(WordTokens.TrimPattern)
+  @transient private lazy val lower = Lower(BoundReference(0, StringType, nullable = false))
+
+  override protected def nullSafeEval(v: Any): Any = {
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    val out = new scala.collection.mutable.ArrayBuffer[Any]
+    Tokenize.foreachToken(bytes) { (start, end) =>
+      var i = start
+      while (i < end && bytes(i) >= 0) i += 1
+      out += (if (i == end) WordTokens.trimFoldAscii(bytes, start, end) else {
+        val t = trim.matcher(UTF8String.fromBytes(bytes, start, end - start).toString)
+          .replaceAll("")
+        lower.eval(InternalRow(UTF8String.fromString(t))).asInstanceOf[UTF8String]
+      })
+    }
+    new GenericArrayData(out.toArray)
+  }
+  override protected def withNewChildInternal(c: Expression): WordTokens =
+    copy(child = c)
+}
+
+object WordTokens {
+  /** Java-regex equivalent of Go `strings.Trim(w, ".,!?\"':;()")` —
+    * strips leading+trailing runs of the cutset (one `regexp_replace`
+    * removes every match, so one pattern handles both ends). The
+    * kernel's non-ASCII path, and the oracle its specs compare against. */
+  val TrimPattern = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
+
+  /** The cutset `.,!?"':;()`; takes a UTF-8 byte or a UTF-16 char. */
+  @inline def isCut(c: Int): Boolean =
+    c == '.' || c == ',' || c == '!' || c == '?' || c == '"' ||
+      c == '\'' || c == ':' || c == ';' || c == '(' || c == ')'
+
+  private def trimFoldAscii(bytes: Array[Byte], start: Int, end: Int): UTF8String = {
+    var s = start
+    var e = end
+    while (s < e && isCut(bytes(s))) s += 1
+    while (e > s && isCut(bytes(e - 1))) e -= 1
+    val buf = new Array[Byte](e - s)
+    var i = 0
+    while (i < buf.length) {
+      val b = bytes(s + i)
+      buf(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+      i += 1
+    }
+    UTF8String.fromBytes(buf)
+  }
 }
 
 /** See [[TextFunctions.textStatsCounts]]. Character counts are derived

@@ -1,5 +1,7 @@
 package graft.mr
 
+import graft.functions.Tokenize.isSpace
+import graft.functions.WordTokens.isCut
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 
@@ -37,14 +39,40 @@ trait Reducer[B] extends Serializable {
 
 /** The reference's built-in app, reimplemented on the typed surface.
   * Tokenization semantics pinned by `wordcount.go:15`
-  * (fields + trim runs of `.,!?"':;()` + lowercase + drop empty). */
+  * (fields + trim runs of `.,!?"':;()` + lowercase + drop empty), as
+  * one index scan over the document: tokens split on Java `\s`
+  * (`[ \t\n\x0B\f\r]`), trim is per char, and lowercasing uses
+  * `Locale.ROOT` — the JVM default locale would turn `I` into `ı`
+  * under `tr`, unlike the SQL path and Go's `strings.ToLower`. */
 object WordCountMapper extends Mapper {
-  private val cutset = ".,!?\"':;()".toSet
   def map(name: String, contents: String): Iterator[(String, String)] =
-    contents.split("\\s+").iterator
-      .map(w => w.dropWhile(cutset).reverse.dropWhile(cutset).reverse.toLowerCase)
-      .filter(_.nonEmpty)
-      .map(w => (w, "1"))
+    new Iterator[(String, String)] {
+      private var i = 0
+      private var word = advance()
+
+      /** The next non-empty trimmed, lowercased token, or null. */
+      private def advance(): String = {
+        val n = contents.length
+        while (i < n) {
+          while (i < n && isSpace(contents.charAt(i))) i += 1
+          var s = i
+          while (i < n && !isSpace(contents.charAt(i))) i += 1
+          var e = i
+          while (s < e && isCut(contents.charAt(s))) s += 1
+          while (e > s && isCut(contents.charAt(e - 1))) e -= 1
+          if (e > s) return contents.substring(s, e).toLowerCase(java.util.Locale.ROOT)
+        }
+        null
+      }
+
+      def hasNext: Boolean = word != null
+      def next(): (String, String) = {
+        if (word == null) throw new NoSuchElementException
+        val w = word
+        word = advance()
+        (w, "1")
+      }
+    }
 }
 
 /** Counting reducer: values are ignored, the count is emitted —

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.functions.TextFunctions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Word-count parity pipeline — the reference's single application,
@@ -13,6 +14,11 @@ import org.apache.spark.sql.functions._
   *   4. drop empty tokens
   *   5. count per word (`wordcount.go:26-32`)
   *
+  * Steps 1-3 are one kernel pass ([[graft.functions.WordTokens]]). It
+  * keeps two Java-regex departures from Go on purpose (SURVEY.md §7.5):
+  * U+0085/U+00A0/U+2028/… do not split tokens, and a cutset run before
+  * a token-final U+0085/U+2028/U+2029 is stripped.
+  *
   * This single pipeline covers reference operators O1-O10 (SURVEY.md §2.1):
   * scan, flatMap (explode), project, filter, hash shuffle (groupBy),
   * group, per-key count, sort, sink. The shuffle is preceded by a
@@ -24,36 +30,27 @@ import org.apache.spark.sql.functions._
   */
 object WordCount {
 
-  /** Java-regex equivalent of Go `strings.Trim(w, ".,!?\"':;()")` —
-    * strips leading+trailing runs of the cutset. regexp_replace removes
-    * every match, so one pattern handles both ends. */
-  val TrimPattern = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
-
   /** Tokenize a text column with exact reference semantics; yields one
-    * row per non-empty token. */
+    * row per non-empty token. Split, trim and lowercase are one kernel
+    * pass ([[graft.functions.WordTokens]]); the filter is the
+    * reference's "drop empty" step. */
   def tokenize(df: DataFrame, textCol: String): DataFrame =
-    df.select(explode(split(col(textCol), "\\s+")).as("raw"))
-      .select(lower(regexp_replace(col("raw"), TrimPattern, "")).as("word"))
+    df.select(explode(TextFunctions.wordTokens(col(textCol))).as("word"))
       .filter(col("word") =!= "")
 
   /** The flagship query: word frequencies over `documents.text`,
     * deterministically ordered. */
   def wordCount(docs: DataFrame): DataFrame =
-    tokenize(docs, "text")
-      .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+    wordCountCol(docs, "text")
 
   /** Word count over raw text files (the Gutenberg corpus path) —
     * `spark.read.text` replaces worker.go:126's whole-file read; one
     * input split per HDFS block at scale, not one task per file. */
   def wordCountText(lines: DataFrame): DataFrame =
-    wordCountCol(lines, col("value"))
+    wordCountCol(lines, "value")
 
-  private def wordCountCol(df: DataFrame, text: Column): DataFrame =
-    df.select(explode(split(text, "\\s+")).as("raw"))
-      .select(lower(regexp_replace(col("raw"), TrimPattern, "")).as("word"))
-      .filter(col("word") =!= "")
+  private def wordCountCol(df: DataFrame, textCol: String): DataFrame =
+    tokenize(df, textCol)
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")

@@ -1264,6 +1264,11 @@ object StreamingOps {
     * plan-shape assertions, test-only by convention. */
   @volatile private[graft] var lastStreamPlan: String = ""
 
+  /** The same micro-batch's plan as a tree, for specs that must read
+    * node fields the printed plan truncates (a scan's root paths). */
+  @volatile private[graft] var lastStreamExecutedPlan
+      : Option[org.apache.spark.sql.execution.SparkPlan] = None
+
   /** Number of data-carrying micro-batches in the most recent
     * [[runToMemory]] run — written for specs that pin INCREMENTAL
     * arrival (the stream really processed the source in several
@@ -1292,11 +1297,12 @@ object StreamingOps {
         q.processAllAvailable()
         // capture the last micro-batch's executed plan for plan-shape
         // specs: streaming frames have no queryExecution.executedPlan,
-        // and the StreamExecution handle is private[sql] in 4.1 — the
-        // public explain() printer is the supported surface
+        // so the text comes from the public explain() printer and the
+        // tree through StreamBridge (StreamExecution is private[sql])
         val buf = new java.io.ByteArrayOutputStream()
         Console.withOut(buf)(q.explain())
         lastStreamPlan = buf.toString("UTF-8")
+        lastStreamExecutedPlan = org.apache.spark.sql.graft.StreamBridge.lastExecutedPlan(q)
         lastNumBatches = q.recentProgress.count(_.numInputRows > 0)
       } finally q.stop()
     } finally {

@@ -554,9 +554,14 @@ class EventsStreamingSpec extends SparkSpec {
     // an unbounded probe stream accumulates no state
     assert(!p.contains("StateStore"), "serving must carry no streaming state")
     // and the corpus side is the persisted index, not an embeddings
-    // re-read
-    assert(p.contains("graft-ivf-index"),
-      s"the static side must scan the persisted lists artifact:\n$p")
+    // re-read — read off the scan's root paths, which the printed plan
+    // truncates under a long temp dir
+    val lists = new java.io.File(graft.operators.Similarity.ivfIndexDir(spark, sfDir), "lists")
+    val roots = StreamingOps.lastStreamExecutedPlan.toSeq.flatMap(flattenPlan)
+      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec => f }
+      .flatMap(_.relation.location.rootPaths.map(_.toUri.getPath))
+    assert(roots.contains(lists.getAbsolutePath),
+      s"the static side must scan the persisted lists artifact: $roots")
   }
 
   test("streaming incremental dedup: empty history passes everything through") {

@@ -13,6 +13,32 @@ class MapReduceSpec extends SparkSpec {
     assert(out == Seq("the" -> "1", "quick" -> "1", "brown" -> "1", "fox" -> "1"))
   }
 
+  test("index-scan WordCountMapper ≡ the split/dropWhile formula on adversarial docs") {
+    val cutset = ".,!?\"':;()".toSet
+    def formula(contents: String): Seq[(String, String)] =
+      contents.split("\\s+").toSeq
+        .map(w => w.dropWhile(cutset).reverse.dropWhile(cutset).reverse
+          .toLowerCase(java.util.Locale.ROOT))
+        .filter(_.nonEmpty)
+        .map(w => (w, "1"))
+    val alphabet = Seq("a", "Word", "QUIT", ".", ",", "!", "?", "\"", "'", ":", ";", "(", ")",
+      " ", "\t", "\n", "\u000B", "\f", "\r", "\u0085", "\u00A0", "\u2028", "\u3000",
+      "\u0130", "\u03A3", "\u00DF", "\u212A", "\uD83D\uDE00")
+    val rnd = new scala.util.Random(7)
+    val docs = Seq("", " ", "...", "  lead", "trail  ") ++
+      (1 to 500).map(_ => Seq.fill(rnd.nextInt(40))(alphabet(rnd.nextInt(alphabet.size))).mkString)
+    docs.foreach(d => assert(WordCountMapper.map("f", d).toSeq == formula(d), d))
+  }
+
+  test("WordCountMapper lowercases the same under a Turkish default locale") {
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+      assert(WordCountMapper.map("f", "TITLE Istanbul").toSeq ==
+        Seq("title" -> "1", "istanbul" -> "1"))
+    } finally java.util.Locale.setDefault(saved)
+  }
+
   test("WordCountReducer empty-group contract returns \"0\" (wordcount.go:27-29)") {
     assert(WordCountReducer.finish(WordCountReducer.zero) == "0")
   }

@@ -32,6 +32,26 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("partial_count"), p)
   }
 
+  test("word count tokenizes in one kernel pass; drop-empty Filter and partial_count stay") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, StringSplit}
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
+    val df = WordCount.wordCount(Tables.documents(spark, sfDir))
+    val nodes = flattenPlan(df.queryExecution.executedPlan)
+    val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(!exprs.exists(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[StringSplit]),
+      df.queryExecution.executedPlan.toString)
+    val gens = nodes.collect { case g: GenerateExec => g }
+    assert(gens.size == 1 && gens.head.generator.children.head.isInstanceOf[graft.functions.WordTokens],
+      df.queryExecution.executedPlan.toString)
+    // the kernel runs once per row: no inferred Filter re-evaluates it
+    assert(exprs.count(_.isInstanceOf[graft.functions.WordTokens]) == 1)
+    assert(nodes.exists {
+      case f: FilterExec => f.condition.references.exists(_.name == "word")
+      case _ => false
+    }, "the drop-empty filter on word must stay in the plan")
+    assert(df.queryExecution.executedPlan.toString.contains("partial_count"))
+  }
+
   test("global top-k compiles to TakeOrderedAndProject (no full sort)") {
     val p = plan(Relational.q15TopK(spark, sfDir))
     assert(p.contains("TakeOrderedAndProject"), p)

@@ -47,6 +47,47 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("word-token kernel + drop-empty ≡ the split/regexp_replace/lower chain (incl. invalid UTF-8)") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.{TextFunctions, WordTokens}
+    // the cutset, every Java `\s` byte, the non-ASCII line terminators
+    // and spaces Java `\s` does not split on, the ICU case-mapping
+    // corners (dotted I, final sigma, sharp s, Kelvin sign) and an emoji
+    val chunk = Gen.oneOf(Gen.oneOf(".,!?\"':;()".map(_.toString)),
+      Gen.oneOf(" ", "\t", "\n", "\u000B", "\f", "\r"),
+      Gen.oneOf("\u0085", "\u2028", "\u2029", "\u00A0", "\u2000", "\u3000"),
+      Gen.oneOf("\u0130", "\u03A3", "\u00DF", "\u212A", "\uD83D\uDE00"),
+      Gen.oneOf("a", "Z", "Word", "\u00C9t\u00C9", "\u039F\u03A3"))
+    val texts = samples(Gen.choose(0, 40).flatMap(n => Gen.listOfN(n, chunk).map(_.mkString)), 2000) ++
+      Seq("", " ", "word.\u0085", "..\u2028", "\u03A3\u039F\u03A3.", "'\u0130'")
+    // raw byte rows, cast binary → string: truncated, overlong, surrogate
+    // and stray continuation sequences next to whitespace and cutset bytes
+    val byteGen = Gen.oneOf[Int](0x20, 0x09, 0x0b, 0x2e, 0x29, 0x41, 0x61, 0x80, 0xbf, 0xc0,
+      0xc3, 0xa9, 0xce, 0xa3, 0xe2, 0x82, 0xac, 0xed, 0xa0, 0xe0, 0xf0, 0x9f, 0x98, 0xf4, 0xff)
+    val raw = samples(Gen.choose(0, 30).flatMap(n => Gen.listOfN(n, byteGen)), 500)
+      .map(_.map(_.toByte).toArray)
+    val utf8 = java.nio.charset.StandardCharsets.UTF_8
+    assert(raw.count(b => !java.util.Arrays.equals(new String(b, utf8).getBytes(utf8), b)) > 100)
+    val bin = raw.zipWithIndex.map { case (b, i) => (texts.size.toLong + i, b) }.toDF("id", "b")
+    // the cast keeps the bytes as they are: invalid UTF-8 reaches the text column
+    assert(bin.filter($"b".cast("string").cast("binary") =!= $"b").isEmpty)
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .union(bin.select($"id", $"b".cast("string").as("text")))
+
+    def perDoc(rows: Array[Row]): Map[Long, Seq[String]] =
+      rows.toSeq.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) }
+    val kernel = perDoc(df.select($"id", explode(TextFunctions.wordTokens($"text")).as("word"))
+      .filter($"word" =!= "").collect())
+    val chain = perDoc(df.select($"id", explode(split($"text", "\\s+")).as("raw"))
+      .select($"id", lower(regexp_replace($"raw", WordTokens.TrimPattern, "")).as("word"))
+      .filter($"word" =!= "").collect())
+    assert(kernel.keySet == chain.keySet)
+    chain.foreach { case (id, ws) => assert(kernel(id) == ws, s"doc $id") }
+    // both corners of the chain actually occur in the corpus
+    assert(chain.values.flatten.exists(_.contains('\uFFFD')))
+    assert(chain.values.flatten.exists(_.endsWith("\u0085")))
+  }
+
   test("fnv1a64 is a left fold: hashing a concatenation continues the state") {
     samples(Gen.zip(wordGen, wordGen), 20).foreach { case (a, b) =>
       val ab = (a + b).getBytes("UTF-8")

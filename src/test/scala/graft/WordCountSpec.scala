@@ -23,6 +23,16 @@ class WordCountSpec extends SparkSpec {
     assert(toks.toSeq == Seq("hello", "world", "it's", "quoted", "x"))
   }
 
+  test("planted tokenizer corners: $ before a final NEL, cutset-only tokens, leading whitespace") {
+    def toks(text: String): Seq[String] =
+      WordCount.tokenize(Seq(text).toDF("text"), "text").as[String].collect().toSeq
+    // Java's `$` matches before a final line terminator, so the trailing
+    // cutset run in front of U+0085 is stripped (Go's Trim keeps it)
+    assert(toks("word.\u0085") == Seq("word\u0085"))
+    assert(toks("hi ?!.() there ''") == Seq("hi", "there"))
+    assert(toks(" \t\u000BLeading (Space) ") == Seq("leading", "space"))
+  }
+
   test("inline e2e corpus golden: hello=3 world=2 test=2") {
     val df = Seq("hello world\nthis is a test\nhello test\nworld hello\n").toDF("text")
     val counts = WordCount.wordCount(df).collect()
