@@ -1,4 +1,7 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,29 +35,38 @@ object Bench {
     // the staging and the min discards it — with SPARK_GRAFT_RUNS=1 a
     // fixture's first use is timed with its staging.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "3").toInt
-    def timeQuery(name: String): Double = {
+    // Classes Janino compiled so far in this JVM (driver and local
+    // executor threads share the counter).
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    /** The min-of-runs time of a query, with the classes compiled on
+      * the repetition whose time was kept. */
+    def timeQuery(name: String): (Double, Long) = {
       // noop sink: evaluates every output column and row (count() would
       // let Catalyst prune computed columns and measure a cheaper plan).
-      // min over runs: later runs reuse compiled codegen, so the
-      // reported number is steady-state query time, not janino time.
+      // min over runs: a generated class is compiled once per JVM (the
+      // codegen cache is sized to the registry in GraftSession), so the
+      // kept run reuses repetition 1's classes; `compiles` reports how
+      // many that run still compiled.
       // A FAILED repetition times as +Infinity, never as its wall
       // time: a swallowed exception measures ~0.01 s, and min() would
       // adopt that as a legitimate number — in the rerun phase it
       // would even silently REPLACE a real first-phase measurement
       // (review r13). All-runs-failed surfaces as -1 in the artifact.
       val times = (1 to runs).map { _ =>
+        val c0 = compiled()
         val t0 = System.nanoTime()
-        try {
+        val t = try {
           SparkEntry.run(spark, name, sfDir)(_.write.format("noop").mode("overwrite").save())
           (System.nanoTime() - t0) / 1e9
         } catch { case e: Throwable =>
           System.err.println(s"[bench] $name: ${e.getMessage}")
           Double.PositiveInfinity
         }
+        (t, compiled() - c0)
       }
       if (runs > 2) System.err.println(
-        s"[bench] $name runs: ${times.map(t => f"$t%.3f").mkString(" ")}")
-      times.min
+        s"[bench] $name runs: ${times.map(t => f"${t._1}%.3f").mkString(" ")}")
+      times.minBy(_._1)
     }
     // Per-query 1-minute loadavg, sampled just before each query's
     // repetitions: min-of-N absorbs spikes but not SUSTAINED ambient
@@ -74,14 +86,15 @@ object Bench {
     // phases, and record the first-pass value so the artifact shows
     // what the re-run corrected.
     val rerunWorst = sys.env.getOrElse("SPARK_GRAFT_RERUN_WORST", "8").toInt
-    val worstNames = mainPhase.sortBy(-_._2).take(rerunWorst).map(_._1).toSet
+    val worstNames = mainPhase.sortBy(-_._2._1).take(rerunWorst).map(_._1).toSet
     val rerun = mainPhase.filter(p => worstNames(p._1)).map { case (name, first, _) =>
       val la = loadavg().split(" ").head
       (name, first, timeQuery(name), la)
     }
     val rerunMin = rerun.map { case (n, _, second, _) => n -> second }.toMap
-    val results = mainPhase.map { case (name, t, _) =>
-      name -> math.min(t, rerunMin.getOrElse(name, t)) }
+    val kept = mainPhase.map { case (name, t, _) =>
+      name -> Seq(t, rerunMin.getOrElse(name, t)).minBy(_._1) }
+    val results = kept.map { case (name, (t, _)) => name -> t }
     // Infinity is not JSON: an all-runs-failed query serializes as -1
     // (an impossible duration — unmistakably a failure marker, where
     // the old ~0.01 s ghost looked like a fast query) and is excluded
@@ -92,7 +105,9 @@ object Bench {
     val loads = mainPhase.map { case (k, _, la) => s"\"" + k + "\":\"" + la + "\"" }
       .mkString("{", ",", "}")
     val rr = rerun.map { case (k, first, second, la) =>
-      s"\"" + k + "\":{\"first\":" + jnum(first) + ",\"rerun\":" + jnum(second) + ",\"loadavg\":\"" + la + "\"}" }
+      s"\"" + k + "\":{\"first\":" + jnum(first._1) + ",\"rerun\":" + jnum(second._1) + ",\"loadavg\":\"" + la + "\"}" }
+      .mkString("{", ",", "}")
+    val compiles = kept.map { case (k, (_, c)) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filterNot(_.isInfinite).sum
     // Ambient machine load, recorded INTO the artifact so reviewers can
@@ -100,7 +115,7 @@ object Bench {
     // needed a judge re-run to establish the numbers were load noise).
     // loadavg_before is the honest ambient signal; the 1-minute figure
     // should be near 0 on a clean run.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"loadavg_before":"$loadBefore","loadavg_per_query":$loads,"rerun_worst":$rr}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","runs":$runs,"loadavg_before":"$loadBefore","loadavg_per_query":$loads,"rerun_worst":$rr,"compiles":$compiles}""")
     // Truncation-proof summary LAST (r13 verdict): the driver captures
     // only the TAIL of stdout, and the full JSON leads with per-query
     // times — so a truncated capture kept loadavg but lost the total.

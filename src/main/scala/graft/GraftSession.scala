@@ -43,7 +43,23 @@ object GraftSession {
     "spark.sql.session.timeZone"                 -> "UTC",
     "spark.sql.legacy.parquet.nanosAsLong"       -> "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false",
-    "spark.ui.enabled"                           -> "false"
+    "spark.ui.enabled"                           -> "false",
+    // Compile each generated class once per JVM. Spark's CodeGenerator
+    // caches compiled classes in one JVM-wide Guava LRU cache (4
+    // segments), sized once from this static conf when the class first
+    // loads and keyed by (context classloader, full source text), so a
+    // whole-stage class takes a driver entry and an executor entry. At
+    // the default 100 the registry never fits: one full 171-query pass
+    // compiles ~2,000-2,100 distinct classes (sf0.001, 4 threads), and
+    // every later pass recompiled ~3,000; at 4096, 2× that working set,
+    // a later pass compiles ~25. Entries hold generated code only, no
+    // data, so no result is reused across runs.
+    "spark.sql.codegen.cache.maxEntries"         -> "4096",
+    // Each streaming query runs in a cloned session; with artifact
+    // isolation on, its tasks run under that clone's own executor
+    // classloader, so every stream missed the cache above and
+    // recompiled on every run. The engine adds no session artifacts.
+    "spark.sql.artifact.isolation.enabled"       -> "false"
     // NOT set (measured no-go, r21): AQE byte-size partition
     // coalescing (`coalescePartitions.parallelismFirst=false` +
     // 64m advisory) — the guide-§2.2 "fewer, larger reduce

@@ -150,13 +150,15 @@ object TextAnalysis {
     // trick from [[tfidf]]/dd_spans keeping both consumers' subtrees
     // canonical so the corpus scans and shuffles exactly once). The
     // trailing limit is a semantic no-op (df has at most one row per
-    // query term) that makes the broadcast's bound structural.
+    // query term) that makes the broadcast's bound structural; sorted,
+    // it plans as TakeOrderedAndProject, which generates no code (see
+    // [[dsirLm]]).
     val dfreq = tf.groupBy($"term")
       .agg(count(lit(1)).cast("double").as("df"),
         max($"tf").as("_mt"), max($"dl").as("_md"), max($"doc_id").as("_mi"))
       .filter($"_mt" >= 0.0 && $"_md" >= 0.0 && $"_mi" >= Long.MinValue)
       .select($"term", $"df")
-      .limit(qtermSet.size)
+      .orderBy($"term").limit(qtermSet.size)
     val perTerm = tf
       .join(broadcast(dfreq), Seq("term"))
       .join(broadcast(qterms), Seq("term"))
@@ -672,8 +674,11 @@ object TextAnalysis {
     // with — the guard would otherwise pass this side vacuously (and
     // now treats LogicalRDD leaves as unproven). A second limit over
     // the ≤4096-row RDD is a runtime no-op that keeps the cap
-    // structural.
-    (lm.limit(dsirBuckets), tot.getDouble(0), tot.getDouble(1))
+    // structural. Sorted, it plans as TakeOrderedAndProject: a bare
+    // limit's generated code names its row counter from a JVM-wide id
+    // (`_limit_counter_<n>`), so its stage had new source, and
+    // recompiled, on every run.
+    (lm.orderBy($"bucket").limit(dsirBuckets), tot.getDouble(0), tot.getDouble(1))
   }
 
   /** The LMs collapsed into the dense per-bucket log-ratio table the

@@ -59,16 +59,7 @@ class ArtifactsSpec extends SparkSpec {
 
   test("stopping a context deletes its artifact root; JVM exit deletes a running context's") {
     val tmp = tempDir("artifacts-child")
-    def child(mode: String): Map[String, String] = {
-      val java = Paths.get(sys.props("java.home"), "bin", "java").toString
-      val opts = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray().toSeq
-      val cmd = Seq(java) ++ opts ++ Seq("-Xmx512m", s"-Djava.io.tmpdir=$tmp",
-        "-cp", sys.props("java.class.path"), "graft.ArtifactsChild", mode)
-      scala.sys.process.Process(cmd).!!(scala.sys.process.ProcessLogger(_ => ()))
-        .linesIterator.filter(_.startsWith("ARTIFACTS ")).map { l =>
-          val Array(k, v) = l.stripPrefix("ARTIFACTS ").split("=", 2); k -> v
-        }.toMap
-    }
+    def child(mode: String) = childJvm("graft.ArtifactsChild", "ARTIFACTS", tmp, mode)
     val stopped = child("stop")
     assert(stopped("staged") == "true" && stopped("afterStop") == "false", stopped)
     val exited = child("exit")

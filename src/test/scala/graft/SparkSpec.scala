@@ -14,6 +14,21 @@ trait SparkSpec extends AnyFunSuite {
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(Artifacts.root(spark), prefix).toString
 
+  /** Runs `main` in a child JVM on this JVM's classpath, with its temp
+    * dir at `tmp`, and returns its `<tag> key=value` stdout lines as a
+    * map: for checks of JVM-wide state that one shared test JVM cannot
+    * reset. */
+  def childJvm(main: String, tag: String, tmp: String, args: String*): Map[String, String] = {
+    val bin = java.nio.file.Paths.get(sys.props("java.home"), "bin", "java").toString
+    val opts = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptionArray().toSeq
+    val cmd = Seq(bin) ++ opts ++ Seq("-Xmx512m", s"-Djava.io.tmpdir=$tmp",
+      "-cp", sys.props("java.class.path"), main) ++ args
+    scala.sys.process.Process(cmd).!!(scala.sys.process.ProcessLogger(_ => ()))
+      .linesIterator.filter(_.startsWith(s"$tag ")).map { l =>
+        val Array(k, v) = l.stripPrefix(s"$tag ").split("=", 2); k -> v
+      }.toMap
+  }
+
   /** Every node of a physical plan, descending into AQE wrappers.
     * `AdaptiveSparkPlanExec` (and post-execution `QueryStageExec`) are
     * LeafExecNodes, so a plain `plan.collect` stops at the wrapper and
