@@ -94,6 +94,25 @@ object GraftSession {
   def threads: Int =
     sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors)(_.toInt)
 
+  /** Run `body` with `confs` set on the session, then restore every
+    * key, also when `body` throws. `conf.get(k)` resolves SQLConf
+    * defaults, so restoring through it would leave a previously-unset
+    * key explicitly set; `conf.getAll` holds only explicit settings,
+    * and a key absent from it is restored by unset. The scope mutates
+    * the SESSION conf, so it assumes queries run one at a time on the
+    * session, as Verify, Bench and the specs do. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val explicit = s.conf.getAll
+    val prev = confs.map { case (k, _) => k -> explicit.get(k) }
+    try {
+      confs.foreach { case (k, v) => s.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None)    => s.conf.unset(k)
+    }
+  }
+
   def build(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
     var b = SparkSession.builder().master(withLocalRetries(master)).appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.{SketchFunctions, TextFunctions}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -415,7 +415,7 @@ object Dedup {
     // each round as ONE job. On a real cluster the same reasoning
     // holds: the loop's frames are the near-dup subgraph, orders of
     // magnitude below the corpus scale AQE is tuned for.
-    val keys = Seq("spark.sql.shuffle.partitions" ->
+    GraftSession.withConfs(s, "spark.sql.shuffle.partitions" ->
       math.max(1L, rowScale / 1000000L + 1).toString,
       "spark.sql.adaptive.enabled" -> "false",
       // whole-stage codegen scoped OFF with the sizing (r21): each
@@ -425,17 +425,7 @@ object Dedup {
       // execution of a few thousand rows is free by comparison. On a
       // genuinely large graph the loop's per-round data cost dominates
       // either way; the conf is scoped and restored like the others.
-      "spark.sql.codegen.wholeStage" -> "false")
-    // conf.get(key) resolves the SQLConf default, so restoring through
-    // it would turn a previously-unset key into an explicitly-set one;
-    // getAll holds only explicit settings — None restores by unset
-    // (same scoped-conf contract as runToMemory and q24BloomPrune).
-    val prev = keys.map { case (k, _) => k -> s.conf.getAll.get(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    try body finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
+      "spark.sql.codegen.wholeStage" -> "false")(body)
   }
 
   /** Iterative min-label propagation: rounds = graph diameter — the

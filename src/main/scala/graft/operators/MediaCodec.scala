@@ -604,11 +604,11 @@ object MediaCodec extends Serializable {
   /** Multi-frame FLAC writer (the `blockSize > 0` arm of
     * [[encodeFlac]]): fixed blocking, verbatim subframes, frames of
     * `blockSize` samples with a possibly-short final frame — the
-    * fixture source for [[decodeFlacParallel]]'s segment machinery
-    * and for multi-frame decode gates. The single-frame default stays
-    * the oracle path (its byte count is the closed form the DuckDB
-    * oracles predict); here frame-header sizes vary with the coded
-    * frame number's UTF-8 length, so no closed form is claimed. */
+    * fixture source for multi-frame decode gates. The single-frame
+    * default stays the oracle path (its byte count is the closed form
+    * the DuckDB oracles predict); here frame-header sizes vary with
+    * the coded frame number's UTF-8 length, so no closed form is
+    * claimed. */
   private def encodeFlacFrames(sampleRate: Int, samples: Array[Short],
                                blockSize: Int): Array[Byte] = {
     require(blockSize >= 16 && blockSize <= 65535, s"block size $blockSize outside 16..65535")
@@ -1561,7 +1561,6 @@ object MediaCodec extends Serializable {
       q
     }
     def align(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-    def aligned: Boolean = bit == 0
   }
 
   /** Parsed STREAMINFO + where the frame stream begins. */
@@ -1574,10 +1573,9 @@ object MediaCodec extends Serializable {
     * anything else returns null (→ honest [[UnknownMedia]]). */
   private def flacParseInfo(b: Array[Byte]): FlacInfo = {
     if (b.length < 42 + 10) return null
-    // the magic is re-checked here (not only in sniff) because the
-    // parallel entry reaches this parser WITHOUT the sniff gate
-    // (review r15 — decodeJpegParallel's header parse checks SOI the
-    // same way)
+    // the magic is re-checked here (not only in sniff) so the parser
+    // stays safe on its own for a caller that skips the sniff gate
+    // (parseJpegHeader checks SOI the same way)
     if (b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') return null
     var pos = 4
     var last = false
@@ -1627,8 +1625,7 @@ object MediaCodec extends Serializable {
     * output bounds) are [[flacAssemble]]'s. Null on malformed;
     * truncation throws [[IndexOutOfBoundsException]] like every
     * parser here. Frames are SELF-CONTAINED — nothing but `info` and
-    * the bytes at `fp` goes in, which is exactly the property
-    * [[decodeFlacParallel]] exploits. */
+    * the bytes at `fp` goes in (SCALING.md's frame-split argument). */
   private def flacDecodeFrame(b: Array[Byte], fp: Int, info: FlacInfo): FlacFrame = {
     if (fp + 5 > b.length) return null
     if ((b(fp) & 0xff) != 0xff || (b(fp + 1) & 0xfe) != 0xf8) return null
@@ -1809,17 +1806,12 @@ object MediaCodec extends Serializable {
     new FlacFrame(blocking, coded, blockSize, br.pos + 2, out)
   }
 
-  /** The chain walk shared by the sequential and parallel entries:
-    * frames must TILE the byte stream from [[FlacInfo.framesAt]] with
-    * one blocking strategy, sequential coded numbers, the
-    * fixed-blocking block-size regularity rule, and a bounded output
-    * — then the stream-global total-samples and MD5 gates close it.
-    * `frameAt` supplies the frame starting at a position (decode on
-    * demand sequentially; a pre-decoded candidate table in
-    * parallel) — both must produce the same verdict by construction,
-    * since the walk itself is identical. */
-  private def flacAssemble(b: Array[Byte], info: FlacInfo,
-                           frameAt: Int => FlacFrame): Media = {
+  /** The chain walk: frames must TILE the byte stream from
+    * [[FlacInfo.framesAt]] with one blocking strategy, sequential
+    * coded numbers, the fixed-blocking block-size regularity rule,
+    * and a bounded output — then the stream-global total-samples and
+    * MD5 gates close it. */
+  private def flacAssemble(b: Array[Byte], info: FlacInfo): Media = {
     val out = new scala.collection.mutable.ArrayBuilder.ofShort
     if (info.totalSamples > 0 && info.totalSamples <= (1 << 26))
       out.sizeHint(info.totalSamples.toInt)
@@ -1828,7 +1820,7 @@ object MediaCodec extends Serializable {
     var sampleIndex = 0L
     var strategy = -1
     while (pos < b.length) {
-      val fr = frameAt(pos)
+      val fr = flacDecodeFrame(b, pos, info)
       if (fr == null) return UnknownMedia(b.length)
       if (strategy == -1) strategy = fr.blocking
       else if (strategy != fr.blocking) return UnknownMedia(b.length) // one strategy per stream
@@ -1886,78 +1878,7 @@ object MediaCodec extends Serializable {
   private[operators] def decodeFlac(b: Array[Byte]): Media = {
     val info = flacParseInfo(b)
     if (info == null) return UnknownMedia(b.length)
-    flacAssemble(b, info, fp => flacDecodeFrame(b, fp, info))
-  }
-
-  /** Segment-parallel FLAC decode — the audio twin of
-    * [[decodeJpegParallel]]'s splitter property, and the reason a
-    * multi-gigabyte FLAC object need not decode on one thread: every
-    * frame is SELF-CONTAINED ([[flacDecodeFrame]] — own header, CRCs
-    * and warm-up; no state crosses frame boundaries), so frames can
-    * entropy-decode CONCURRENTLY from byte-scanned offsets and stitch
-    * back bit-identically. Unlike JPEG, FLAC does not byte-stuff its
-    * entropy layer, so a bare sync pattern CAN occur inside frame
-    * data: the scan over-collects CANDIDATES (sync shape at any
-    * offset), every candidate decodes one frame concurrently — a
-    * false candidate fails its header/CRC checks or simply goes
-    * unused — and the sequential CHAIN WALK keeps exactly the frames
-    * that tile the stream, so the result is the sequential decode's
-    * by construction (the stream-global sample-count and MD5 gates
-    * still apply). A crafted candidate FLOOD (overlapping valid tiny
-    * frames at ~every offset) would make pre-decoding unbounded, so
-    * past a linear-in-payload candidate budget the strictly-bounded
-    * sequential path does the work instead — same verdict, no
-    * speedup, no blowup. `order` (specs) forces a deterministic
-    * candidate-decode order: parallel, reversed and shuffled must be
-    * bit-identical to sequential. */
-  private[graft] def decodeFlacParallel(b: Array[Byte],
-                                        order: Option[Seq[Int]] = None): Media = {
-    val info = flacParseInfo(b)
-    if (info == null) return UnknownMedia(b.length)
-    val cands = scala.collection.mutable.ArrayBuffer[Int]()
-    var p = info.framesAt
-    while (p + 1 < b.length) {
-      if ((b(p) & 0xff) == 0xff && (b(p + 1) & 0xfe) == 0xf8) cands += p
-      p += 1
-    }
-    // flood guards (review r15): the COUNT bound catches ~every-offset
-    // candidate floods, and the SIZE bound catches sparse-but-fat ones
-    // — valid overlapping CONSTANT frames retain up to maxBlock
-    // samples EACH in `results` before the chain walk can discard
-    // them, so pre-decode is allowed only when the worst-case
-    // retained total (candidates × maxBlock) stays near the output
-    // ceiling a legitimate stream can reach. Beyond either bound the
-    // strictly-bounded sequential path does the work — same verdict,
-    // no speedup, no blowup. The fallback gets the parallel arm's
-    // exception net: its on-demand frame decode throws on truncation
-    // where the pre-decoded path caught per candidate.
-    if (cands.length > (b.length >> 4) + 64 ||
-        cands.length.toLong * info.maxBlock > (1L << 27))
-      return try flacAssemble(b, info, fp => flacDecodeFrame(b, fp, info)) catch {
-        case _: IndexOutOfBoundsException | _: NegativeArraySizeException =>
-          UnknownMedia(b.length)
-      }
-    val results = new Array[FlacFrame](cands.length)
-    def one(i: Int): Unit =
-      results(i) = try flacDecodeFrame(b, cands(i), info) catch {
-        case _: IndexOutOfBoundsException | _: NegativeArraySizeException => null
-      }
-    order match {
-      case Some(ord) =>
-        if (ord.sorted != (0 until cands.length)) return UnknownMedia(b.length)
-        ord.foreach(one)
-      case None =>
-        // common pool like decodeJpegParallel; the terminal forEach
-        // joins, so the results array is safely published
-        java.util.stream.IntStream.range(0, cands.length).parallel().forEach(one(_))
-    }
-    val byPos = new java.util.HashMap[Int, Int]()
-    var i = cands.length - 1
-    while (i >= 0) { byPos.put(cands(i), i); i -= 1 }
-    flacAssemble(b, info, fp => {
-      val idx = byPos.getOrDefault(fp, -1)
-      if (idx < 0) null else results(idx) // non-candidate = no sync shape = malformed
-    })
+    flacAssemble(b, info)
   }
 
   /** Y4M parser: space-separated header tags (W/H required, C444
@@ -2805,8 +2726,8 @@ object MediaCodec extends Serializable {
   }
 
   /** Parsed JPEG header state: everything the marker walk up to the
-    * first SOS establishes — the shared input of the sequential, the
-    * segment-parallel and the progressive entropy decoders. For a
+    * first SOS establishes — the shared input of the sequential and
+    * the progressive entropy decoders. For a
     * progressive frame (SOF2) `sosAt` is the OFFSET OF THE FIRST SOS
     * MARKER itself and the table bindings (`compDc`/`compAc`) are
     * placeholders — every scan carries its own. */
@@ -2841,9 +2762,8 @@ object MediaCodec extends Serializable {
     def niBh(c: Int): Int = (compHpx(c) + 7) / 8
   }
 
-  /** Padded component planes one decode fills. Per-MCU writes land in
-    * DISJOINT plane regions, which is what makes restart-segment
-    * decode safely parallel over shared planes. */
+  /** Padded component planes one decode fills; per-MCU writes land in
+    * disjoint plane regions. */
   private final class JpegPlanes(hdr: JpegHeader) {
     val y = new Array[Int](hdr.yW * hdr.yH)
     val cb: Array[Int] = if (hdr.nComp == 3) new Array[Int](hdr.cW * hdr.cH) else null
@@ -3673,99 +3593,6 @@ object MediaCodec extends Serializable {
       }
       c += 1
     }
-    ImageMedia(hdr.w, hdr.h, "jpg", assembleJpegRgb(hdr, planes))
-  }
-
-  /** Byte offset of every restart segment's entropy data — segment 0
-    * at SOS, segment i > 0 right after its RSTn marker, found by BYTE
-    * SCAN: inside entropy data every 0xFF is stuffed (FF00), so a
-    * bare FF D0–D7 is unambiguously a restart marker. The modulo-8
-    * numbering is validated during the scan. Null when the count or
-    * sequence is wrong. */
-  private def jpegSegmentOffsets(b: Array[Byte], hdr: JpegHeader, nSeg: Int): Array[Int] = {
-    val offs = new Array[Int](nSeg)
-    offs(0) = hdr.sosAt
-    var found = 1
-    var p = hdr.sosAt
-    while (found < nSeg && p + 1 < b.length) {
-      if ((b(p) & 0xff) == 0xff) {
-        val n = b(p + 1) & 0xff
-        if (n >= 0xd0 && n <= 0xd7) {
-          if (n != 0xd0 + ((found - 1) % 8)) return null
-          offs(found) = p + 2
-          found += 1
-          p += 2
-        } else if (n == 0xff) p += 1 // a FILL byte — the next byte may
-        // itself open the marker (B.1.1.2); consuming two would skip
-        // a restart hiding right behind the padding
-        else p += 2 // stuffed 00 or a stray marker — both 2 bytes
-      } else p += 1
-    }
-    if (found == nSeg) offs else null
-  }
-
-  /** Restart-segment-PARALLEL decode: every interval entropy-decodes
-    * independently — its own bit reader at its own byte offset, fresh
-    * DC predictors (T.81 F.2.1.3.1 resets both at every RSTn) — into
-    * disjoint regions of shared planes, so the intervals run in ANY
-    * order or concurrently (here: the JDK common pool). This is the
-    * 100 TB splitter property made executable: one multi-gigabyte
-    * object's restart intervals can fan out across threads — or,
-    * given byte-range reads, across executors — instead of forcing a
-    * single sequential scan. Extra strictness the sequential path
-    * gets by construction is checked explicitly here: each interior
-    * segment must END exactly at the next RSTn (no slack bytes), and
-    * the last at EOI. MultimodalSpec gates the result bit-identical
-    * to [[decodeJpeg]], including under reversed and shuffled
-    * explicit orders. */
-  private[graft] def decodeJpegParallel(b: Array[Byte],
-                                        order: Option[Seq[Int]] = None): Media = {
-    val hdr = parseJpegHeader(b)
-    if (hdr == null) return UnknownMedia(b.length)
-    // a progressive frame's split axis is per-scan (its restart
-    // intervals reset state within each scan too) — routed whole for
-    // now; the baseline splitter below is the byte-range story
-    if (hdr.progressive) return decodeJpegProgressive(b, hdr)
-    val ri = hdr.restartInterval
-    // no restart structure to split on — reuse the already-parsed
-    // header rather than re-walking the markers (review r14)
-    if (ri <= 0) return decodeJpegSequential(b, hdr)
-    val nSeg = (hdr.totalMcus + ri - 1) / ri
-    val offs = jpegSegmentOffsets(b, hdr, nSeg)
-    if (offs == null) return UnknownMedia(b.length)
-    val planes = new JpegPlanes(hdr)
-    val ends = new Array[Int](nSeg)
-    def one(i: Int): Unit = {
-      val start = i * ri
-      val end = math.min(start + ri, hdr.totalMcus)
-      ends(i) = decodeJpegSegment(b, hdr, planes, start, end, offs(i))
-    }
-    try {
-      order match {
-        case Some(ord) =>
-          if (ord.sorted != (0 until nSeg)) return UnknownMedia(b.length)
-          ord.foreach(one)
-        case None =>
-          val err = new java.util.concurrent.atomic.AtomicBoolean(false)
-          java.util.stream.IntStream.range(0, nSeg).parallel().forEach { i =>
-            try one(i)
-            catch { case _: IndexOutOfBoundsException => err.set(true) }
-          }
-          if (err.get) return UnknownMedia(b.length)
-      }
-    } catch {
-      case _: IndexOutOfBoundsException => return UnknownMedia(b.length)
-    }
-    var i = 0
-    while (i < nSeg - 1) {
-      // each interior segment must END exactly at the next RSTn —
-      // modulo any legal fill bytes before the marker (B.1.1.2)
-      if (jpegSkipFill(b, ends(i)) + 2 != offs(i + 1)) return UnknownMedia(b.length)
-      i += 1
-    }
-    val tail = jpegSkipFill(b, ends(nSeg - 1))
-    if (tail + 2 != b.length || (b(tail) & 0xff) != 0xff ||
-        (b(tail + 1) & 0xff) != 0xd9) return UnknownMedia(b.length)
     ImageMedia(hdr.w, hdr.h, "jpg", assembleJpegRgb(hdr, planes))
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -383,23 +383,10 @@ object Relational {
     * inspect the write path must wrap the action in this scope
     * ([[graft.SparkEntry.run]] does, so Bench's q24 numbers measure
     * the filtered join). */
-  def withBloomPruneConfs[T](s: SparkSession)(body: => T): T = {
-    val scoped = Seq(
+  def withBloomPruneConfs[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConfs(s,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")
-    // conf.get(k) resolves SQLConf defaults, so restoring through it
-    // would leave an unset key explicitly set; getAll holds only
-    // explicit settings — None restores by unset
-    val explicit = s.conf.getAll
-    val prev = scoped.map { case (k, _) => k -> explicit.get(k) }
-    try {
-      scoped.foreach { case (k, v) => s.conf.set(k, v) }
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")(body)
 
   def q24BloomPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

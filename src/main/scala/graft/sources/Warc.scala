@@ -19,12 +19,9 @@ import org.apache.spark.sql.functions._
   * shuffle. The `.warc.gz` convention compresses EVERY RECORD AS
   * ITS OWN GZIP MEMBER (Common Crawl's layout — the reason a cdx
   * index entry's (offset, length) can be range-read and inflated
-  * without touching the rest of the file). [[parseWarcGzParallel]]
-  * makes that splittability executed code, the JPEG-restart /
-  * FLAC-frame pattern applied to the crawl container: member
-  * candidates are located by a byte scan, inflated CONCURRENTLY,
-  * and a chain walk keeps exactly the members that tile the file —
-  * gated bit-identical to the sequential path. */
+  * without touching the rest of the file). [[srcWarcCdx]] records
+  * each member's (offset, length) and [[fetchByCdx]] range-reads and
+  * inflates single members from it. */
 /** The session's Hadoop `Configuration`, carried to executors.
   * `Configuration` is not `Serializable`, so task closures that open
   * a `FileSystem` (the crawl sink, the cdx range-read fetch) would
@@ -265,85 +262,14 @@ object Warc {
     out.toByteArray
   }
 
-  /** Segment-parallel `.warc.gz` decode — the cdx-splittability
-    * claim as executed code (the JPEG-restart / FLAC-frame pattern):
-    * scan for gzip member magics (1f 8b 08), inflate every candidate
-    * CONCURRENTLY as a single member (an Inflater stops at its
-    * member's end, reporting how many input bytes it consumed), then
-    * chain-walk from offset 0 keeping exactly the members that tile
-    * the file. False candidates (magic bytes inside compressed data)
-    * inflate to garbage or fail — either way the chain never visits
-    * them, because member ends are authoritative. Falls back to the
-    * strict sequential walk when the bytes are not a clean member
-    * chain, when a magic spray floods the candidate scan, or when
-    * cumulative RETAINED inflated bytes across in-flight candidates
-    * pass `retainedBudget` (the decodeFlacParallel size-bound
-    * precedent — without it, overlapping high-ratio candidates could
-    * hold cands × 1 GiB before the chain walk prunes them). */
-  def parseWarcGzParallel(b: Array[Byte], retainedBudget: Long = 1L << 31): Vector[WarcRecord] = {
-    val cands = scala.collection.mutable.ArrayBuffer[Int]()
-    var p = 0
-    while (p + 2 < b.length) {
-      if ((b(p) & 0xff) == 0x1f && (b(p + 1) & 0xff) == 0x8b && (b(p + 2) & 0xff) == 0x08)
-        cands += p
-      p += 1
-    }
-    // flood guard (the FLAC precedent): a crafted every-offset magic
-    // spray routes to the sequential path rather than N² inflates
-    if (cands.isEmpty || cands.length > (b.length >> 6) + 64) return parseWarcGz(b)
-    // (inflated bytes, input bytes consumed) per candidate; null = failed
-    val results = new Array[(Array[Byte], Int)](cands.length)
-    // retained-size budget: successful candidates keep their inflated
-    // bytes until the chain walk; failures refund their count. A
-    // budget trip aborts every remaining inflate and defers to the
-    // sequential walk (whose own 2³⁰ ceiling is authoritative).
-    val retained = new java.util.concurrent.atomic.AtomicLong(0)
-    val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-    def one(i: Int): Unit =
-      results(i) =
-        if (aborted.get) null
-        else inflateMember(b, cands(i), retained, retainedBudget, aborted)
-    val idx = new java.util.concurrent.atomic.AtomicInteger(0)
-    val nThreads = math.min(Runtime.getRuntime.availableProcessors(), cands.length)
-    val threads = Array.tabulate(nThreads) { _ =>
-      new Thread(() => {
-        var i = idx.getAndIncrement()
-        while (i < cands.length) { one(i); i = idx.getAndIncrement() }
-      })
-    }
-    threads.foreach(_.start()); threads.foreach(_.join())
-    if (aborted.get) return parseWarcGz(b)
-    // chain walk: members must tile [0, length) exactly
-    val byOffset = cands.zipWithIndex.toMap
-    val out = new java.io.ByteArrayOutputStream(
-      math.min(b.length.toLong * 2, 1 << 30).toInt) // clamped hint: *2 overflows Int past 1 GiB
-    var pos = 0
-    while (pos < b.length) {
-      val i = byOffset.getOrElse(pos, -1)
-      if (i < 0 || results(i) == null) return parseWarcGz(b) // not a clean chain
-      out.write(results(i)._1, 0, results(i)._1.length)
-      if (out.size() > (1 << 30)) return parseWarcGz(b) // ceiling: defer to the strict path
-      pos += results(i)._2
-    }
-    parseWarc(out.toByteArray)
-  }
-
   /** Inflate exactly ONE gzip member starting at `off`: returns
     * (inflated bytes, total input bytes consumed including the
     * 10-byte header and 8-byte trailer), or null if the bytes do not
     * form a complete valid member. Hand-walks the member header
     * (java.util.zip has no single-member cursor API), then raw
     * deflate via Inflater(nowrap), then CRC32+ISIZE trailer
-    * verification — a member that lies about either is rejected.
-    * Inflated bytes are charged against the caller's shared
-    * `retained` budget as they materialize; a failed candidate
-    * refunds its charge, a budget trip sets `aborted` for every
-    * sibling. */
-  private def inflateMember(b: Array[Byte], off: Int,
-      retained: java.util.concurrent.atomic.AtomicLong, retainedBudget: Long,
-      aborted: java.util.concurrent.atomic.AtomicBoolean): (Array[Byte], Int) = {
-    var charged = 0L
-    def refund(): Null = { retained.addAndGet(-charged); null }
+    * verification — a member that lies about either is rejected. */
+  private def inflateMember(b: Array[Byte], off: Int): (Array[Byte], Int) =
     try {
       if (off + 10 > b.length) return null
       if ((b(off) & 0xff) != 0x1f || (b(off + 1) & 0xff) != 0x8b ||
@@ -360,36 +286,31 @@ object Warc {
       if ((flg & 0x10) != 0) { while (p < b.length && b(p) != 0) p += 1; p += 1 } // FCOMMENT
       if ((flg & 0x02) != 0) p += 2 // FHCRC
       if (p >= b.length) return null
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, p, b.length - p)
       val out = new java.io.ByteArrayOutputStream(1 << 12)
       val buf = new Array[Byte](1 << 14)
-      while (!inf.finished()) {
-        if (aborted.get) { inf.end(); return refund() }
-        val n = inf.inflate(buf)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) { inf.end(); return refund() }
-        out.write(buf, 0, n)
-        charged += n
-        if (retained.addAndGet(n) > retainedBudget) {
-          aborted.set(true); inf.end(); return refund()
+      val inf = new java.util.zip.Inflater(true)
+      val consumed = try {
+        inf.setInput(b, p, b.length - p)
+        while (!inf.finished()) {
+          val n = inf.inflate(buf)
+          if (n == 0 && (inf.needsInput() || inf.needsDictionary())) return null
+          out.write(buf, 0, n)
+          if (out.size() > (1 << 30)) return null
         }
-        if (out.size() > (1 << 30)) { inf.end(); return refund() }
-      }
-      val consumed = p + (b.length - p - inf.getRemaining)
-      inf.end()
+        p + (b.length - p - inf.getRemaining)
+      } finally inf.end()
       val data = out.toByteArray
-      if (consumed + 8 > b.length) return refund()
+      if (consumed + 8 > b.length) return null
       val crc = new java.util.zip.CRC32()
       crc.update(data)
       def u32(q: Int): Long = (b(q) & 0xffL) | ((b(q + 1) & 0xffL) << 8) |
         ((b(q + 2) & 0xffL) << 16) | ((b(q + 3) & 0xffL) << 24)
-      if (u32(consumed) != crc.getValue) return refund()
-      if (u32(consumed + 4) != (data.length.toLong & 0xffffffffL)) return refund()
+      if (u32(consumed) != crc.getValue) return null
+      if (u32(consumed + 4) != (data.length.toLong & 0xffffffffL)) return null
       (data, consumed + 8 - off)
     } catch {
-      case _: Exception => refund()
+      case _: Exception => null
     }
-  }
 
   // ------------------------------------------------------------ query
 
@@ -1348,20 +1269,13 @@ object Warc {
       .orderBy($"doc_id")
   }
 
-  /** Inflate the single gzip member at `off` with no shared-budget
-    * bookkeeping — the sequential member-walk entry ([[srcWarcCdx]]).
-    * Returns (inflated bytes, input bytes consumed) or null. */
-  private def inflateMemberAt(b: Array[Byte], off: Int): (Array[Byte], Int) =
-    inflateMember(b, off, new java.util.concurrent.atomic.AtomicLong(0), Long.MaxValue,
-      new java.util.concurrent.atomic.AtomicBoolean(false))
-
   /** `src_warc_cdx`: build the crawl's RANGE-READ INDEX — the cdx
     * convention: for every conversion record, which shard holds it,
     * at what byte offset its gzip member starts, how many compressed
     * bytes it spans, and its payload digest. This index is what
     * makes `(offset, length)` range requests possible at all — the
-    * property `parseWarcGzParallel` consumes is the property this
-    * query PRODUCES. The walk is inherently sequential per shard (a
+    * property [[fetchByCdx]] consumes is the property this query
+    * PRODUCES. The walk is inherently sequential per shard (a
     * member's start IS the previous member's end — offsets are a
     * chain fact), but still one task per shard, map-side, and the
     * chain is verified as it is measured (CRC32+ISIZE per member).
@@ -1399,7 +1313,7 @@ object Warc {
           val out = Vector.newBuilder[(Long, String, String, Long, Long, String)]
           var pos = 0
           while (pos < bytes.length) {
-            val m = inflateMemberAt(bytes, pos)
+            val m = inflateMember(bytes, pos)
             require(m != null, s"broken member chain at $pos")
             val recs = parseWarc(m._1)
             require(recs.length == 1, "a member must hold exactly one record")
@@ -1519,7 +1433,7 @@ object Warc {
                 val buf = new Array[Byte](len.toInt)
                 in.seek(off)
                 in.readFully(buf)
-                val m = inflateMemberAt(buf, 0)
+                val m = inflateMember(buf, 0)
                 require(m != null && m._2 == len, s"member at $off does not span $len bytes")
                 val recs = parseWarc(m._1)
                 require(recs.length == 1, "a member must hold exactly one record")

@@ -1280,15 +1280,9 @@ object StreamingOps {
                   statePartitions: Option[Int] = None,
                   extraConfs: Map[String, String] = Map.empty): DataFrame = {
     val spark = df.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // conf.get(k) resolves SQLConf defaults, so restoring with it would
-    // turn a previously-UNSET key into an explicitly-set one; getAll
-    // holds only explicit settings — None means restore-by-unset
-    val explicitConfs = spark.conf.getAll
-    val prevExtra = extraConfs.keys.map(k => k -> explicitConfs.get(k)).toMap
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n.toString))
-    extraConfs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    val confs = statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq ++
+      extraConfs
+    graft.GraftSession.withConfs(spark, confs: _*) {
       val q = df.writeStream
         .format("memory").queryName(name)
         .outputMode(outputMode)
@@ -1305,12 +1299,6 @@ object StreamingOps {
         lastStreamExecutedPlan = org.apache.spark.sql.graft.StreamBridge.lastExecutedPlan(q)
         lastNumBatches = q.recentProgress.count(_.numInputRows > 0)
       } finally q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevExtra.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
     spark.table(name)
   }

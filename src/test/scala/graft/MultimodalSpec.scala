@@ -1787,71 +1787,49 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("baseline JPEG: restart intervals decode independently — parallel/reversed/shuffled ≡ sequential") {
-    // The 100 TB splitter property, executed: T.81 resets DC
-    // prediction and bit alignment at every RSTn, so each restart
-    // interval needs NOTHING from the intervals before it —
-    // decodeJpegParallel entropy-decodes every interval from its own
-    // byte offset (found by scan: stuffing makes a bare FF D0-D7
-    // unambiguous) with fresh state into disjoint plane regions.
-    // Gate: bit-identical to the sequential decoder under the JDK
-    // common pool AND under explicit reversed/shuffled segment
-    // orders — order-independence is the property that lets a
-    // splitter fan one huge object's intervals across executors.
+  test("baseline JPEG: restart-interval fixtures decode to their no-restart twin's raster; slack before RSTn rejects") {
+    // T.81 resets DC prediction and bit alignment at every RSTn, so a
+    // restart interval changes the entropy bytes but not the quantized
+    // coefficients: each fixture must decode bit-identical to the same
+    // pixels encoded with restartInterval = 0.
     val rnd = new scala.util.Random(19)
     val fixtures = Seq(
-      ("gray blocky", MediaCodec.encodeJpeg(32, 16,
+      ("gray blocky", 32, 16,
         Array.tabulate[Byte](3 * 32 * 16)(i => ((((i / 3) % 32) / 8 * 40) + 30).toByte),
-        "gray", 2)),                 // 8 MCUs -> 4 segments
-      ("420 blocky", MediaCodec.encodeJpeg(48, 32,
+        "gray", 2),                  // 8 MCUs -> 4 segments
+      ("420 blocky", 48, 32,
         Array.tabulate[Byte](3 * 48 * 32)(i => (((i / 3) / 48 / 8 * 2 + ((i / 3) % 48) / 8) * 13 + 20).toByte),
-        "420", 2)),                  // 6 MCUs -> 3 segments
-      ("444 textured", MediaCodec.encodeJpeg(24, 24,
+        "420", 2),                   // 6 MCUs -> 3 segments
+      ("444 textured", 24, 24,
         Array.fill[Byte](3 * 24 * 24)(rnd.nextInt(256).toByte),
-        "444", 3)))                  // 9 MCUs -> 3 segments
-    fixtures.foreach { case (name, bytes) =>
-      val seq = MediaCodec.decode(bytes) match {
-        case ImageMedia(_, _, _, rgb) => rgb
-        case other                    => fail(s"$name: sequential decode $other")
+        "444", 3))                   // 9 MCUs -> 3 segments
+    fixtures.foreach { case (name, w, h, rgb, profile, ri) =>
+      def rgbOf(m: MediaCodec.Media, what: String): Array[Byte] = m match {
+        case ImageMedia(`w`, `h`, _, px) => px
+        case other                       => fail(s"$name $what decoded to $other")
       }
-      def rgbOf(m: MediaCodec.Media): Array[Byte] = m match {
-        case ImageMedia(_, _, _, rgb) => rgb
-        case other                    => fail(s"$name: parallel decode $other")
-      }
-      assert(java.util.Arrays.equals(rgbOf(MediaCodec.decodeJpegParallel(bytes)), seq),
-        s"$name: common-pool parallel decode must be bit-identical")
-      val nSeg = Seq("gray blocky" -> 4, "420 blocky" -> 3, "444 textured" -> 3).toMap.apply(name)
-      assert(java.util.Arrays.equals(
-        rgbOf(MediaCodec.decodeJpegParallel(bytes, Some((nSeg - 1) to 0 by -1))), seq),
-        s"$name: REVERSED segment order must be bit-identical")
-      assert(java.util.Arrays.equals(
-        rgbOf(MediaCodec.decodeJpegParallel(bytes, Some(rnd.shuffle((0 until nSeg).toList)))), seq),
-        s"$name: shuffled segment order must be bit-identical")
+      val withRst = MediaCodec.encodeJpeg(w, h, rgb, profile, ri)
+      val noRst = MediaCodec.encodeJpeg(w, h, rgb, profile)
+      assert(java.util.Arrays.equals(rgbOf(MediaCodec.decode(withRst), s"ri=$ri"),
+        rgbOf(MediaCodec.decode(noRst), "ri=0")),
+        s"$name: restart intervals must not change the decoded raster")
     }
-    // strictness carries over: slack bytes between intervals, a bad
-    // RSTn sequence, or a missing segment reject in the parallel path
-    val base = fixtures.head._2
+    // the interval must END exactly at its RSTn: a slack byte before
+    // the first restart marker rejects
+    val (_, w0, h0, rgb0, profile0, ri0) = fixtures.head
+    val base = MediaCodec.encodeJpeg(w0, h0, rgb0, profile0, ri0)
     var p = 2
     while (!((base(p) & 0xff) == 0xff && (base(p + 1) & 0xff) == 0xd0)) p += 1
     val slack = base.take(p) ++ Array(0.toByte) ++ base.drop(p)
-    assert(MediaCodec.decodeJpegParallel(slack).isInstanceOf[UnknownMedia],
+    assert(MediaCodec.decode(slack).isInstanceOf[UnknownMedia],
       "slack bytes before a restart marker must reject")
-    // a non-restart fixture falls back to the sequential path whole
-    def rgbOf2(m: MediaCodec.Media): Array[Byte] = m match {
-      case ImageMedia(_, _, _, rgb) => rgb
-      case other                    => fail(s"no-restart fixture decoded to $other")
-    }
-    val noRi = MediaCodec.encodeJpeg(16, 16, Array.fill[Byte](768)(90.toByte), "gray")
-    assert(java.util.Arrays.equals(
-      rgbOf2(MediaCodec.decodeJpegParallel(noRi)), rgbOf2(MediaCodec.decode(noRi))))
   }
 
   test("JPEG fill bytes before markers decode; ZRL overrun and undefined run/size reject (r14 advisories)") {
     // T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
     // marker. A conforming foreign writer that pads before RSTn/EOI
-    // must decode — bit-identical to the unpadded twin, in BOTH the
-    // sequential and the segment-parallel paths (the r14 conformance
-    // nit, closed).
+    // must decode — bit-identical to the unpadded twin (the r14
+    // conformance nit, closed).
     val rgb = Array.tabulate[Byte](3 * 32 * 16)(i => ((((i / 3) % 32) / 8 * 40) + 30).toByte)
     val plain = MediaCodec.encodeJpeg(32, 16, rgb, "gray", 2) // 4 restart segments
     def padBeforeMarkers(b: Array[Byte], nFill: Int): Array[Byte] = {
@@ -1877,11 +1855,8 @@ class MultimodalSpec extends SparkSpec {
       case other                     => fail(s"$what decoded to $other")
     }
     val want = rgbOf(MediaCodec.decode(plain), "unpadded")
-    assert(java.util.Arrays.equals(rgbOf(MediaCodec.decode(padded), "padded sequential"), want),
-      "fill-byte-padded file must decode bit-identical (sequential)")
-    assert(java.util.Arrays.equals(
-      rgbOf(MediaCodec.decodeJpegParallel(padded), "padded parallel"), want),
-      "fill-byte-padded file must decode bit-identical (parallel splitter)")
+    assert(java.util.Arrays.equals(rgbOf(MediaCodec.decode(padded), "padded"), want),
+      "fill-byte-padded file must decode bit-identical")
     // a non-fill byte in the same position is still slack → reject
     val slack = padBeforeMarkers(plain, 1).clone()
     var sp = 2
@@ -2093,8 +2068,8 @@ class MultimodalSpec extends SparkSpec {
     * writer and hand-assembled frames exercising decode paths the
     * fixture encoder never emits (constant, fixed predictors, LPC,
     * Rice partitions + escapes, wasted bits, both blocking
-    * strategies, multi-frame streams) plus the adversarial shapes
-    * the parallel entry must survive. Residuals are computed from
+    * strategies, multi-frame streams) plus adversarial shapes the
+    * decoder must reject. Residuals are computed from
     * the DESIRED samples; lossless means decode must invert
     * exactly. */
   private object FlacBuild {
@@ -2373,11 +2348,6 @@ class MultimodalSpec extends SparkSpec {
         Array.emptyShortArray, frames1, totalOverride = 0L, zeroMd5 = true)
       assert(MediaCodec.decode(hostile).isInstanceOf[UnknownMedia],
         "an unknown-total stream must stop at the output ceiling, not OOM")
-      // the parallel entry inherits the bound: either the flood guard
-      // routes it to the bounded sequential path or the shared chain
-      // walk stops at the same ceiling
-      assert(MediaCodec.decodeFlacParallel(hostile).isInstanceOf[UnknownMedia],
-        "the parallel entry must carry the same output ceiling")
     }
     locally { // a coded header rate that contradicts STREAMINFO
       // rebuild the fixture frame with rate code 0100 (8 kHz) against
@@ -2405,75 +2375,46 @@ class MultimodalSpec extends SparkSpec {
     }
   }
 
-  test("FLAC segment-parallel decode: frames decode independently — parallel/reversed/shuffled ≡ sequential") {
+  test("FLAC multi-frame decode: planted sync bytes round-trip; corrupt, trailing, wrong-magic and fat-frame-bomb streams reject") {
     import FlacBuild._
-    // decodeJpegParallel's splitter property, ported to the audio
-    // container: FLAC frames are self-contained, so a byte-scanned
-    // candidate set decoded CONCURRENTLY and chain-walked must be
-    // bit-identical to the sequential decode. FLAC does not
-    // byte-stuff, so the fixtures deliberately PLANT the sync shape
-    // (FF F8/F9) inside entropy bytes — false candidates must be
-    // collected, decoded (or rejected) and DISCARDED by the chain,
-    // never corrupt the stitch.
-    val rnd = new scala.util.Random(77)
+    // FLAC does not byte-stuff, so the fixtures deliberately PLANT the
+    // sync shape (FF F8/F9) inside entropy bytes: the decoder must walk
+    // frame ends, never resynchronize on a sync pattern.
     def expectSamples(m: MediaCodec.Media): Array[Short] = m match {
       case AudioMedia(_, s) => s
       case other            => fail(s"expected audio, got $other")
     }
     for ((ns, bs) <- Seq((10000, 256), (5000, 192), (999, 65), (64, 64), (4096, 4096))) {
       // -8 encodes as FF F8 (a bare in-entropy sync); 0x7ff8/0x58ff
-      // plant misaligned FF-F8 byte pairs across sample boundaries —
-      // sparse enough that the candidate count stays below the flood
-      // guard, so the PARALLEL machinery (not its fallback) runs
+      // plant misaligned FF-F8 byte pairs across sample boundaries
       val samples = Array.tabulate[Short](ns)(i =>
         if (i % 97 == 0) -8 else if (i % 131 == 0) 0x7ff8.toShort
         else if (i % 173 == 0) 0x58ff.toShort else ((i * 37 + 11) % 4096 - 2048).toShort)
       val enc = MediaCodec.encodeFlac(11000, samples, blockSize = bs)
-      val seq = expectSamples(MediaCodec.decode(enc))
-      assert(java.util.Arrays.equals(seq, samples), s"sequential multi-frame roundtrip ns=$ns bs=$bs")
-      assert(java.util.Arrays.equals(expectSamples(MediaCodec.decodeFlacParallel(enc)), samples),
-        s"parallel decode ns=$ns bs=$bs")
-      // candidate-order independence: the public parallel entry and
-      // two adversarial deterministic orders must agree bit-for-bit
-      for (ord <- Seq(
-        (0 until frameCandCount(enc)).reverse,
-        rnd.shuffle((0 until frameCandCount(enc)).toList).toSeq)) {
-        assert(java.util.Arrays.equals(
-          expectSamples(MediaCodec.decodeFlacParallel(enc, Some(ord))), samples),
-          s"order-forced parallel decode ns=$ns bs=$bs")
-      }
-      // a non-permutation order must reject — which also PROVES the
-      // parallel path handled this fixture (the flood-guard fallback
-      // ignores the order parameter entirely)
-      if (frameCandCount(enc) > 1)
-        assert(MediaCodec.decodeFlacParallel(enc, Some(Seq(0))).isInstanceOf[UnknownMedia],
-          s"a partial candidate order must reject (parallel path active) ns=$ns bs=$bs")
+      assert(java.util.Arrays.equals(expectSamples(MediaCodec.decode(enc)), samples),
+        s"multi-frame roundtrip ns=$ns bs=$bs")
     }
-    // corruption anywhere must reject identically from both entries
+    // a flipped byte anywhere in the frames rejects: CRC-16 covers
+    // every one of these offsets
     locally {
       val samples = Array.tabulate[Short](3000)(i => (i % 100 - 50).toShort)
       val enc = MediaCodec.encodeFlac(9000, samples, blockSize = 192)
       for (off <- Seq(50, 200, enc.length / 2, enc.length - 3)) {
         val m = enc.clone(); m(off) = (m(off) ^ 1).toByte
-        assert(MediaCodec.decode(m).getClass == MediaCodec.decodeFlacParallel(m).getClass,
-          s"seq and parallel must agree on corrupt byte $off")
+        assert(MediaCodec.decode(m).isInstanceOf[UnknownMedia], s"corrupt byte $off must reject")
       }
     }
-    // trailing garbage rejects through the parallel entry too
+    // trailing garbage and a wrong magic reject
     locally {
       val base = MediaCodec.encodeFlac(8000, Array.fill[Short](300)(0))
-      assert(MediaCodec.decodeFlacParallel(base ++ Array[Byte](0)).isInstanceOf[UnknownMedia])
-      // the parallel entry must not bypass container identification
-      // (review r15): a wrong magic rejects without the sniff gate
+      assert(MediaCodec.decode(base ++ Array[Byte](0)).isInstanceOf[UnknownMedia])
       val noMagic = base.clone(); noMagic(0) = 'X'
-      assert(MediaCodec.decodeFlacParallel(noMagic).isInstanceOf[UnknownMedia],
-        "the parallel entry must reject a wrong magic itself")
+      assert(MediaCodec.decode(noMagic).isInstanceOf[UnknownMedia],
+        "a wrong magic must reject")
     }
-    // sparse-but-fat candidate bomb (review r15): valid overlapping
-    // CONSTANT frames spaced out enough to duck the COUNT guard would
-    // retain candidates x maxBlock samples in the pre-decode — the
-    // SIZE guard must route them to the bounded sequential path,
-    // which rejects (duplicate frame numbers) without an OOM
+    // sparse fat-frame bomb (review r15): valid CONSTANT frames, each
+    // claiming a FAT blockSize and all numbered 0, spaced by filler —
+    // the decoder must reject without an OOM
     locally {
       // hand-build a tiny constant frame claiming a FAT blockSize,
       // then repeat it under a stream() shell whose STREAMINFO
@@ -2496,41 +2437,24 @@ class MultimodalSpec extends SparkSpec {
       val filler = Array.fill[Byte](20)(0)
       val bomb = stream(8000, 16, 65535, Array.emptyShortArray,
         Seq.fill(2200)(tiny ++ filler), totalOverride = 0L, zeroMd5 = true)
-      assert(MediaCodec.decodeFlacParallel(bomb).isInstanceOf[UnknownMedia],
-        "a sparse fat-frame candidate bomb must reject via the size guard, not OOM")
-      assert(MediaCodec.decode(bomb).isInstanceOf[UnknownMedia])
+      assert(MediaCodec.decode(bomb).isInstanceOf[UnknownMedia],
+        "a sparse fat-frame bomb must reject, not OOM")
     }
-    // the count-guard fallback keeps the exception net: a dense sync
-    // flood ending in a truncated frame must return UnknownMedia from
-    // the parallel entry, never throw (review r15)
+    // a dense sync flood ending in a truncated frame rejects, never
+    // throws (review r15)
     locally {
       val syncs = Array.fill[Byte](4096)(0)
       var i = 0
       while (i + 1 < syncs.length) { syncs(i) = 0xff.toByte; syncs(i + 1) = 0xf8.toByte; i += 2 }
       val flood = stream(8000, 16, 65535, Array.emptyShortArray,
         Seq(syncs), totalOverride = 0L, zeroMd5 = true)
-      assert(MediaCodec.decodeFlacParallel(flood).isInstanceOf[UnknownMedia],
-        "a dense sync flood must reject through the fallback, not escape an exception")
+      assert(MediaCodec.decode(flood).isInstanceOf[UnknownMedia],
+        "a dense sync flood must reject, not escape an exception")
     }
     // the multi-frame encoder fails loudly past its coded-number range
     intercept[IllegalArgumentException] {
       MediaCodec.encodeFlac(8000, new Array[Short](16 * 65536 + 1), blockSize = 16)
     }
-  }
-
-  /** Candidate count exactly as [[MediaCodec.decodeFlacParallel]]'s
-    * scan sees it (from the first frame byte) — the order parameter
-    * must be a permutation of THIS range. */
-  private def frameCandCount(enc: Array[Byte]): Int = {
-    // frames begin after the fLaC magic + the single STREAMINFO block
-    val start = 4 + 4 + 34
-    var c = 0
-    var p = start
-    while (p + 1 < enc.length) {
-      if ((enc(p) & 0xff) == 0xff && (enc(p + 1) & 0xfe) == 0xf8) c += 1
-      p += 1
-    }
-    c
   }
 
   /** Spec-local GIF machinery: a REAL LZW compressor (the codec's
@@ -3229,11 +3153,6 @@ class MultimodalSpec extends SparkSpec {
             s"$profile ${w}x$h ri=$ri: progressive decode must equal baseline bit-for-bit")
         case other => fail(s"progressive $profile ${w}x$h ri=$ri decoded to $other")
       }
-      // the parallel entry routes progressive frames whole
-      MediaCodec.decodeJpegParallel(prog) match {
-        case ImageMedia(`w`, `h`, _, px) => assert(java.util.Arrays.equals(px, want))
-        case other                       => fail(s"parallel route $other")
-      }
       // the profile walk reports sampling + the progressive suffix
       val wantProfile = (if (profile == "gray") "gray" else profile) + "p"
       assert(MediaCodec.jpegProfile(prog) == wantProfile,
@@ -3512,19 +3431,6 @@ class MultimodalSpec extends SparkSpec {
         }
         try { MediaCodec.aHash64(media); MediaCodec.contentUnits(media) } catch {
           case e: Throwable => fail(s"hash/units threw ${e.getClass.getSimpleName} on mutation $i: ${e.getMessage}")
-        }
-        // the segment-parallel JPEG entry point has its own parsing
-        // code (offset byte scan, stitch/EOI checks) — it must be as
-        // total as decode(); non-JPEG mutations exercise its header
-        // rejection, JPEG-seed mutations its segment machinery
-        // (review r14)
-        try MediaCodec.decodeJpegParallel(mutated) catch {
-          case e: Throwable => fail(s"decodeJpegParallel threw ${e.getClass.getSimpleName} on mutation $i: ${e.getMessage}")
-        }
-        // likewise the segment-parallel FLAC entry (candidate scan,
-        // concurrent frame decode, chain walk — r15)
-        try MediaCodec.decodeFlacParallel(mutated) catch {
-          case e: Throwable => fail(s"decodeFlacParallel threw ${e.getClass.getSimpleName} on mutation $i: ${e.getMessage}")
         }
         if (!media.isInstanceOf[UnknownMedia]) decodedOk += 1
       }

@@ -234,13 +234,22 @@ class RegistryCoverageSpec extends AnyFunSuite {
     val owners = Set("Artifacts.scala", "Probe.scala")
     val banned = """createTempDir|new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
-    val offenders = try walk.iterator().asScala.toList
-      .filter(p => p.toString.endsWith(".scala") && !owners(p.getFileName.toString))
-      .flatMap { p =>
-        val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-        banned.findAllMatchIn(text).map(m => s"$p: ${m.matched}")
-      }
+    val sources = try walk.iterator().asScala.toList
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
     finally walk.close()
+    val offenders = sources
+      .filter { case (p, _) => !owners(p.getFileName.toString) }
+      .flatMap { case (p, text) => banned.findAllMatchIn(text).map(m => s"$p: ${m.matched}") }
     assert(offenders.isEmpty, s"memo or temp dir outside graft.Artifacts: $offenders")
+    // Spark tasks own parallelism (one task per split): no main code
+    // starts its own threads or pools inside a task.
+    val threads = """\.parallel\(\)|new\s+Thread\(|Executors\.|ForkJoinPool""".r
+    val spawners = sources.flatMap { case (p, text) =>
+      text.linesIterator.zipWithIndex.flatMap { case (l, i) =>
+        threads.findAllMatchIn(l).map(m => s"$p:${i + 1}: ${m.matched}")
+      }
+    }
+    assert(spawners.isEmpty, s"thread or pool started outside Spark's task model: $spawners")
   }
 }

@@ -59,4 +59,22 @@ class SessionSpec extends SparkSpec {
     val after = spark.conf.getAll.filter(_._1.startsWith("spark.sql.legacy"))
     assert(before == after)
   }
+
+  test("withConfs restores set and unset keys, also when the body throws") {
+    val unsetKey = "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
+    val setKey = "spark.sql.shuffle.partitions"
+    assert(!spark.conf.getAll.contains(unsetKey))
+    val before = spark.conf.getAll
+    val inside = GraftSession.withConfs(spark, unsetKey -> "0", setKey -> "3") {
+      (spark.conf.get(unsetKey), spark.conf.get(setKey))
+    }
+    assert(inside == ("0", "3"))
+    assert(spark.conf.getAll == before, "a previously unset key must be unset again")
+    intercept[IllegalStateException] {
+      GraftSession.withConfs(spark, unsetKey -> "0", setKey -> "3") {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(spark.conf.getAll == before, "confs must be restored when the body throws")
+  }
 }

@@ -313,15 +313,8 @@ class SourcesSpec extends SparkSpec {
         "a member slice must inflate to exactly its own record")
     }
 
-    // ---- the segment-parallel entry is bit-equivalent to the
-    // sequential walk on real member chains, and falls back cleanly
-    // on non-chain bytes ----
-    val par = Warc.parseWarcGzParallel(gz)
-    assert(par.map(r => new String(r.body, "UTF-8")) ==
-      recs.map(r => new String(r.body, "UTF-8")), "parallel ≡ sequential")
-    intercept[Exception] { // a magic spray is not a member chain: the
-      // flood guard routes to the strict path, which rejects
-      Warc.parseWarcGzParallel(Array.fill[Byte](4096)(0x1f).zipWithIndex.map {
+    intercept[Exception] { // a magic spray is not a member chain
+      Warc.parseWarcGz(Array.fill[Byte](4096)(0x1f).zipWithIndex.map {
         case (_, i) => (Seq(0x1f, 0x8b, 0x08)(i % 3)).toByte })
     }
 
@@ -544,16 +537,6 @@ class SourcesSpec extends SparkSpec {
         Warc.decodeHttpResponse(resp(deflate("truncated!", true).dropRight(3)))
       }
     }
-    // retained-size budget (ADVICE r15): a tiny budget aborts the
-    // parallel member inflation and defers to the sequential walk,
-    // with identical results — the decodeFlacParallel size-bound
-    // precedent applied to the crawl container
-    val wet = Warc.encodeWet(Seq((1L, Warc.docUri(1), "z" * 5000)))
-    val gz = Warc.gzipPerRecord(wet)
-    val seqRecs = Warc.parseWarcGz(gz)
-    val small = Warc.parseWarcGzParallel(gz, retainedBudget = 64)
-    assert(small.map(r => new String(r.body, "UTF-8")) ==
-      seqRecs.map(r => new String(r.body, "UTF-8")), "budget trip must fall back, not fail")
   }
 
   test("WARC record-type breadth: request/revisit/metadata filter; WARC-Truncated and non-200 skip record-level; corrupt shards quarantine") {
