@@ -59,7 +59,13 @@ object GraftSession {
     // isolation on, its tasks run under that clone's own executor
     // classloader, so every stream missed the cache above and
     // recompiled on every run. The engine adds no session artifacts.
-    "spark.sql.artifact.isolation.enabled"       -> "false"
+    "spark.sql.artifact.isolation.enabled"       -> "false",
+    // Memory and foreachBatch streams without a checkpointLocation get
+    // a `<java.io.tmpdir>/temporary-<uuid>` checkpoint. Spark deletes
+    // it when such a query stops cleanly but keeps it after a failure,
+    // until JVM exit. A fixed location is no fix: a query's second run
+    // would resume from it and emit nothing.
+    "spark.sql.streaming.forceDeleteTempCheckpointLocation" -> "true"
     // NOT set (measured no-go, r21): AQE byte-size partition
     // coalescing (`coalescePartitions.parallelismFirst=false` +
     // 64m advisory) — the guide-§2.2 "fewer, larger reduce

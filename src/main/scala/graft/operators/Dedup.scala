@@ -310,27 +310,17 @@ object Dedup {
     * Scale: each round is one equi-join + one min-aggregate on (vertex,
     * label) longs — both hash-partitioned by vertex id, no wide rows.
     * Rounds needed = graph diameter (near-dup components are shallow —
-    * chains longer than a few hops are rare); for adversarial diameters
-    * the same loop accepts the alternating large-star/small-star
-    * optimization without changing the surface. Pairs here come from
+    * chains longer than a few hops are rare); deep pair graphs take
+    * [[lshClusters]]'s large-star/small-star contraction instead. Each
+    * algorithm is the faster one on its own query (measured at sf0.1,
+    * ROADMAP's measured no-gos), so both stay. Pairs here come from
     * the exact n-gram verifier over its bounded domain so the DuckDB
     * oracle (recursive CTE over the identical pair set) can hash-check
     * the clustering; the 100 TB pipeline feeds [[minhashLsh]] pairs in
     * instead. */
   def nearDupClusters(s: SparkSession, dir: String, k: Int = 3,
-                      maxId: Long = 50, threshold: Double = 0.3,
-                      algorithm: String = "label-prop"): DataFrame =
-    clusterFrame(clusterLabels(s, dir, k, maxId, threshold, algorithm))
-
-  /** Algorithm dispatch shared by the oracle-checked and LSH paths. */
-  private def componentLabels(s: SparkSession, vertices: DataFrame,
-                              pairs: DataFrame, algorithm: String): DataFrame =
-    algorithm match {
-      case "label-prop" => labelPropagation(s, vertices, pairs)
-      case "star"       => starContraction(s, vertices, pairs)._1
-      case other => throw new IllegalArgumentException(
-        s"unknown clustering algorithm '$other' (label-prop | star)")
-    }
+                      maxId: Long = 50, threshold: Double = 0.3): DataFrame =
+    clusterFrame(clusterLabels(s, dir, k, maxId, threshold))
 
   /** (v, label) → the cluster output contract: (doc_id, cluster_id,
     * cluster_size), deterministic order. Cluster size is a groupBy
@@ -367,7 +357,7 @@ object Dedup {
     * so a timed run pays the real clustering cost, not a cached-scan
     * replay). */
   private val labelCache =
-    new graft.Artifacts.Memo[(String, Int, Long, Double, String), DataFrame](cap = 32)
+    new graft.Artifacts.Memo[(String, Int, Long, Double), DataFrame](cap = 32)
 
   /** Drop all cached cluster labels (and with them the references
     * pinning their checkpointed RDDs). Next `nearDupClusters` /
@@ -375,19 +365,13 @@ object Dedup {
   def clearLabelCache(): Unit = labelCache.forget()
 
   private def clusterLabels(s: SparkSession, dir: String, k: Int,
-                            maxId: Long, threshold: Double,
-                            algorithm: String): DataFrame = {
-    labelCache(s, (dir, k, maxId, threshold, algorithm)) {
+                            maxId: Long, threshold: Double): DataFrame = {
+    labelCache(s, (dir, k, maxId, threshold)) {
       import s.implicits._
       val pairs = ngramJaccard(s, dir, k, maxId, threshold).select($"id1", $"id2")
       val vertices = Tables.documents(s, dir).filter($"doc_id" < maxId)
         .select($"doc_id".as("v"))
-      // star's result is a LAZY vertices⋈roots join that would re-scan
-      // documents on every cache "hit" — checkpoint it before caching.
-      // label-prop's loop already returns a checkpointed frame; a
-      // second materialization there would only copy it.
-      val labels = componentLabels(s, vertices, pairs, algorithm)
-      if (algorithm == "star") labels.localCheckpoint() else labels
+      labelPropagation(s, vertices, pairs)
     }
   }
 
@@ -433,8 +417,8 @@ object Dedup {
     * job per round: the labelSum action computes the convergence scalar
     * AND materializes the lazy localCheckpoint (the eager form issued
     * two jobs — checkpoint + sum). */
-  private def labelPropagation(s: SparkSession, vertices: DataFrame,
-                               pairs: DataFrame): DataFrame = {
+  private[graft] def labelPropagation(s: SparkSession, vertices: DataFrame,
+                                      pairs: DataFrame): DataFrame = {
     import s.implicits._
     val p = pairs.toDF("a", "b")
     val edges = p.union(p.select($"b", $"a"))
@@ -560,13 +544,12 @@ object Dedup {
     * exact verifier's bounded pair set. Here the pairs come from
     * [[minhashLsh]]'s bucketed equi-join (never all-pairs) and
     * components form by large-star/small-star contraction. Star, not
-    * label propagation, is the right DEFAULT here — measured on the
+    * label propagation, is the right algorithm here — measured on the
     * sf0.1 corpus, the LSH pair graph is 2,246 pairs over 1,934 docs
     * with component diameters around 20 (near-dups chain: each mutation
     * of a document pairs with its neighbors, not the whole family), so
     * label propagation needs 21 diameter-bound rounds where star
-    * contraction converges in O(log n). `algorithm = "label-prop"`
-    * remains available for graphs known to be shallow.
+    * contraction converges in O(log n).
     *
     * The vertex frame is the PAIR-GRAPH MEMBERS, not the corpus: a
     * document with no candidate pair is a singleton by definition and
@@ -584,8 +567,7 @@ object Dedup {
     * ANSI-expressible, so there is no SQL oracle. */
   def lshClusters(s: SparkSession, dir: String, k: Int = 5,
                   numHashes: Int = 16, bands: Int = 4,
-                  threshold: Double = 0.5,
-                  algorithm: String = "star"): DataFrame = {
+                  threshold: Double = 0.5): DataFrame = {
     import s.implicits._
     val pairs = minhashPairs(s, dir, k, numHashes, bands, threshold)
       .select($"id1", $"id2").localCheckpoint()
@@ -597,8 +579,7 @@ object Dedup {
     // contraction's output is otherwise un-materialized on this
     // uncached path, and the two consumers' exchanges don't
     // canonicalize to one (partial agg below one of them)
-    clusterFrame(componentLabels(s, members, pairs, algorithm)
-      .localCheckpoint(false))
+    clusterFrame(starContraction(s, members, pairs)._1.localCheckpoint(false))
   }
 
   /** Survivor selection — the final dedup step: one winner per

@@ -247,7 +247,7 @@ object Multimodal {
     * join the DuckDB oracle on it; any other filename falls back to
     * the path hash — deterministic across runs either way, no
     * driver-side numbering. Everything downstream ([[decodeAll]],
-    * [[extractFeatures]], [[phashDedup]]'s hash) is source-agnostic,
+    * [[embedMedia]], [[phashDedup]]'s hash) is source-agnostic,
     * so the synthetic table and a real file lake share every
     * operator; foreign formats (jpeg/mp3/…) decode to UnknownMedia
     * totality-style until their parser lands in [[MediaCodec]]. */
@@ -386,28 +386,6 @@ object Multimodal {
       .select($"media_id", $"kind", $"format", $"n_bytes", $"width", $"height",
         $"n_frames", $"sample_rate", $"n_samples", $"data_sum", $"data_wsum")
       .orderBy($"media_id")
-  }
-
-  final case class MediaFeatures(media_id: Long, kind: String,
-                                 features: Array[Double])
-
-  /** Feature extraction over DECODED content units (pixels / samples
-    * / plane bytes — never container bytes): a `bins`-bin histogram,
-    * unit-normalized. A real pipeline swaps in an image/audio encoder
-    * producing an embedding — identical signature, identical plan
-    * (map-side, fixed output width, ready for the ANN operators
-    * downstream). */
-  def extractFeatures(media: Dataset[MediaRow], bins: Int = 16): Dataset[MediaFeatures] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { r =>
-        val units = MediaCodec.contentUnits(MediaCodec.decode(r.payload))
-        val hist = new Array[Double](bins)
-        units.foreach(b => hist((b & 0xff) * bins / 256) += 1.0)
-        val n = math.max(units.length, 1).toDouble
-        MediaFeatures(r.media_id, r.kind, hist.map(_ / n))
-      }
-    }
   }
 
   /** Content encoder: decoded data units → unit-normalized `dim`-cell

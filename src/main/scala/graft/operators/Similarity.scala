@@ -136,21 +136,9 @@ object Similarity {
     (bounds.map(_.getDouble(1)).toSeq, bounds.map(_.getDouble(2)).toSeq)
   }
 
-  /** Sign-LSH bucket id for one table: computed by the
-    * [[graft.functions.SignLshBuckets]] kernel (precomputed planes,
-    * tight loop). The equivalent Column-expression tree (bits × dim
-    * literal terms, ×4 tables ≈ 4096 nodes) spent its time in codegen
-    * compilation — the kernel is the same math in one pass. */
-  def lshBucket(v: Column, dim: Int, bits: Int, table: Int = 0): Column =
-    element_at(VectorFunctions.signLsh(v, dim, bits, table + 1), table + 1)
-
-  /** Bucket ids for `tables` independent hash tables (standard
-    * multi-table LSH: candidate recall 1-(1-p^bits)^tables). */
-  private def lshBuckets(v: Column, dim: Int, bits: Int, tables: Int): Column =
-    VectorFunctions.signLsh(v, dim, bits, tables)
-
-  /** Multi-table LSH approximate top-k: candidates are corpus vectors
-    * sharing ANY of `tables` bucket ids with the query (recall
+  /** Multi-table sign-LSH approximate top-k (bucket ids from the
+    * [[graft.functions.SignLshBuckets]] kernel): candidates are corpus
+    * vectors sharing ANY of `tables` bucket ids with the query (recall
     * 1-(1-p^bits)^tables vs single-table p^bits), deduped before the
     * exact rescore. Cost: corpus stored `tables`× (constant factor),
     * comparisons still confined to bucket collisions. */
@@ -160,7 +148,7 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val banded = emb.select($"vec_id", $"embedding",
-      posexplode(lshBuckets($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
+      posexplode(VectorFunctions.signLsh($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
     val queries = banded.filter($"vec_id" < numQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"), $"tbl", $"bucket")
     // score BEFORE dedup: a table-collision duplicate recomputes a
@@ -1397,7 +1385,7 @@ object Similarity {
     val banded = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
       .select($"vec_id", $"embedding",
-        posexplode(lshBuckets($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
+        posexplode(VectorFunctions.signLsh($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
     val a = banded.select($"tbl", $"bucket", $"vec_id".as("id1"), $"embedding".as("e1"))
     val b = banded.select($"tbl", $"bucket", $"vec_id".as("id2"), $"embedding".as("e2"))
     // score + threshold-filter inside the bucket join, dedup the

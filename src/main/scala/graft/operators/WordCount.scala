@@ -54,12 +54,4 @@ object WordCount {
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .orderBy("word")
-
-  /** O9: tab-separated sink (`worker.go:224-239` writes `key\tvalue`).
-    * One file per partition, exactly like `mr-out-<reduceID>`. */
-  def writeTsv(df: DataFrame, path: String, partitions: Int = 1): Unit =
-    df.repartition(partitions)
-      .write.mode("overwrite")
-      .option("sep", "\t")
-      .csv(path)
 }

@@ -115,10 +115,19 @@ class DedupSpec extends SparkSpec {
     Seq((0L, a), (1L, b), (2L, c), (10L, "qqqq"), (11L, "zzzz"))
       .toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    val prop = Dedup.nearDupClusters(spark, dir).collect().map(
-      r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val star = Dedup.nearDupClusters(spark, dir, algorithm = "star").collect().map(
-      r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    // both algorithms over the same pair frame and vertex set that
+    // nearDupClusters feeds label propagation
+    val pairs = Dedup.ngramJaccard(spark, dir).select($"id1", $"id2")
+    val vertices = spark.read.parquet(s"$dir/documents.parquet")
+      .filter($"doc_id" < 50L).select($"doc_id".as("v"))
+    // (doc_id, cluster_id, cluster_size), doc_id order
+    def clusters(labels: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] = {
+      val vl = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val size = vl.groupBy(_._2).map { case (l, m) => l -> m.size.toLong }
+      vl.map { case (v, l) => (v, l, size(l)) }.sortBy(_._1)
+    }
+    val prop = clusters(Dedup.labelPropagation(spark, vertices, pairs))
+    val star = clusters(Dedup.starContraction(spark, vertices, pairs)._1)
     assert(star == prop)
     // isolated multi-node components AND singletons both labeled right
     assert(star == Seq((0L, 0L, 3L), (1L, 0L, 3L), (2L, 0L, 3L),

@@ -833,19 +833,6 @@ class MultimodalSpec extends SparkSpec {
     assert(again == decoded)
   }
 
-  test("feature extraction yields unit-normalized fixed-width vectors over decoded content") {
-    val media = Multimodal.mediaTable(spark, sfDir)
-    val feats = Multimodal.extractFeatures(media, bins = 16).collect()
-    assert(feats.length == 500)
-    feats.foreach { f =>
-      assert(f.features.length == 16)
-      assert(math.abs(f.features.sum - 1.0) < 1e-9, f.media_id)
-      assert(f.features.forall(_ >= 0.0))
-    }
-    val again = Multimodal.extractFeatures(media, bins = 16).collect()
-    assert(feats.map(_.features.toSeq).toSeq == again.map(_.features.toSeq).toSeq)
-  }
-
   test("resize is pixel-exact against an independent NN reference") {
     val media = Multimodal.mediaTable(spark, sfDir)
     val orig = media.collect().map(m => m.media_id -> m).toMap

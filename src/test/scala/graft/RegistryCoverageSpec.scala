@@ -252,4 +252,17 @@ class RegistryCoverageSpec extends AnyFunSuite {
     }
     assert(spawners.isEmpty, s"thread or pool started outside Spark's task model: $spawners")
   }
+
+  test("Probe runs registry queries and engine functions, never its own plan") {
+    // Probe once timed ~30 inline copies of registry plans that drifted
+    // from the code the registry runs. A table read or a Column-DSL
+    // import in Probe is where such a copy starts.
+    val path = java.nio.file.Paths.get("src/main/scala/graft/Probe.scala")
+    val banned = """Tables\.|org\.apache\.spark\.sql\.functions""".r
+    val lines = java.nio.file.Files.readAllLines(path).asScala
+    val offenders = lines.zipWithIndex.flatMap { case (l, i) =>
+      banned.findAllMatchIn(l).map(m => s"$path:${i + 1}: ${m.matched}")
+    }
+    assert(offenders.isEmpty, s"Probe builds its own plan: $offenders")
+  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Pins the reference's fault-tolerance envelope as Spark config
   * (SURVEY.md §5's promised smoke test).
   *
@@ -76,5 +78,47 @@ class SessionSpec extends SparkSpec {
       }
     }
     assert(spark.conf.getAll == before, "confs must be restored when the body throws")
+  }
+
+  test("a failed stream leaves no temporary checkpoint dir behind") {
+    // child JVM with its own java.io.tmpdir: the shared test JVM's
+    // tmpdir holds other specs' streams
+    val r = childJvm("graft.FailedStreamChild", "STREAM", tempDir("stream-child"))
+    assert(r("failed") == "true", r)
+    assert(r("during").toInt >= 1, s"the stream must checkpoint under java.io.tmpdir: $r")
+    assert(r("left") == "0", s"temporary checkpoint dirs left after stop(): $r")
+  }
+}
+
+/** Child JVM for the failed-stream spec: runs a foreachBatch stream
+  * whose batch throws, then stops the session and reports how many
+  * `temporary-*` checkpoint dirs java.io.tmpdir holds during the batch
+  * and after `stop()`. */
+object FailedStreamChild {
+  def main(args: Array[String]): Unit = {
+    val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
+    def checkpoints(): Int = {
+      val ls = java.nio.file.Files.list(tmp)
+      try ls.iterator().asScala.count(_.getFileName.toString.startsWith("temporary-"))
+      finally ls.close()
+    }
+    val spark = GraftSession.build("local[1]", 1, "graft-stream-child")
+    val in = tmp.resolve("in").toString
+    spark.range(3).write.parquet(in)
+    @volatile var during = -1
+    val q = spark.readStream.schema(spark.read.parquet(in).schema).parquet(in)
+      .writeStream.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+        during = checkpoints()
+        throw new IllegalStateException("planted batch failure")
+      }.start()
+    val failed = try { q.awaitTermination(); false } catch {
+      case _: org.apache.spark.sql.streaming.StreamingQueryException => true
+    }
+    spark.stop()
+    println(s"STREAM failed=$failed")
+    println(s"STREAM during=$during")
+    println(s"STREAM left=${checkpoints()}")
+    System.out.flush()
+    sys.exit(0)
   }
 }

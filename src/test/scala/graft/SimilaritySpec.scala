@@ -1,7 +1,8 @@
 package graft
 
+import graft.functions.VectorFunctions
 import graft.operators.Similarity
-import org.apache.spark.sql.functions.typedLit
+import org.apache.spark.sql.functions.{element_at, typedLit}
 
 class SimilaritySpec extends SparkSpec {
   import spark.implicits._
@@ -35,12 +36,10 @@ class SimilaritySpec extends SparkSpec {
   test("lsh bucket ids are deterministic and bounded") {
     val df = Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
-    val buckets = df.select(
-      Similarity.lshBucket($"embedding", 64, 4).as("b"))
-      .collect().map(_.getLong(0))
+    val bucket = element_at(VectorFunctions.signLsh($"embedding", 64, 4, tables = 1), 1)
+    val buckets = df.select(bucket.as("b")).collect().map(_.getLong(0))
     assert(buckets.forall(b => b >= 0 && b < 16))
-    val again = df.select(Similarity.lshBucket($"embedding", 64, 4).as("b"))
-      .collect().map(_.getLong(0))
+    val again = df.select(bucket.as("b")).collect().map(_.getLong(0))
     assert(buckets.toSeq == again.toSeq)
   }
 

@@ -260,7 +260,7 @@ class SourcesSpec extends SparkSpec {
     assert(joined.collect().map(r => r.getLong(1)).toSeq == Seq(expected))
   }
 
-  test("WARC/WET: encode→parse round-trips; per-record gzip members range-read independently; parallel ≡ sequential") {
+  test("WARC/WET: encode→parse round-trips; per-record gzip members range-read independently") {
     import graft.sources.Warc
     val docs = Seq[(Long, String, String)](
       (3L, Warc.docUri(3), "the quick brown fox\njumps over\r\nCRLF inside a body stays body"),
@@ -466,7 +466,7 @@ class SourcesSpec extends SparkSpec {
     assert(extractText("<article><header/><p>kept</p></article>") == "kept")
   }
 
-  test("HTTP envelope decode is strict: chunked framing, trailers, malformation rejections, budgeted parallel fallback") {
+  test("HTTP envelope decode is strict: chunked framing, trailers, malformation rejections") {
     import graft.sources.Warc
     // hand-built chunked body: extension on the first chunk, a trailer
     // field after the last — both legal, both ignored

@@ -68,9 +68,11 @@ class WordCountSpec extends SparkSpec {
 
   test("tsv sink writes key<TAB>value like mr-out-*") {
     val dir = tempDir("wc-tsv")
-    val df = Seq("hello world hello").toDF("text")
-    WordCount.writeTsv(WordCount.wordCount(df), dir)
-    val lines = spark.read.text(dir).as[String].collect().sorted
+    val out = s"$dir/out"
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/input.txt"), "hello world hello")
+    WordCountMain.main(Array(s"$dir/input.txt", out, "1"))
+    val lines = spark.read.text(s"$out/bucket=0").as[String].collect().sorted
     assert(lines.toSeq == Seq("hello\t2", "world\t1"))
   }
 }
