@@ -48,21 +48,22 @@ object Probe {
     * localCheckpoint materializations, eager scalar actions) that a
     * single explain() cannot show. */
   private def jobs(spark: SparkSession, dir: String, name: String): Unit = {
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int, Int)]
-    val starts = new java.util.concurrent.ConcurrentHashMap[Int, Long]
+    // job id -> (start, ms, stages, tasks); the listener bus writes it
+    val jobs = scala.collection.mutable.Map.empty[Int, (Long, Long, Int, Int)]
     val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        starts.put(js.jobId, js.time)
-        jobs.put(js.jobId, (0L, js.stageInfos.size, js.stageInfos.map(_.numTasks).sum))
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val st = Option(starts.get(je.jobId)).getOrElse(je.time)
-        val prev = Option(jobs.get(je.jobId)).getOrElse((0L, 0, 0))
-        jobs.put(je.jobId, (je.time - st, prev._2, prev._3))
-      }
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized {
+          jobs(js.jobId) = (js.time, 0L, js.stageInfos.size, js.stageInfos.map(_.numTasks).sum)
+        }
+      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        jobs.synchronized {
+          jobs.get(je.jobId).foreach { case (st, _, nst, ntk) =>
+            jobs(je.jobId) = (st, je.time - st, nst, ntk)
+          }
+        }
     }
     (1 to 3).foreach { rep =>
-      jobs.clear(); starts.clear()
+      jobs.synchronized(jobs.clear())
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()
       SparkEntry.run(spark, name, dir)(_.write.format("noop").mode("overwrite").save())
@@ -72,41 +73,39 @@ object Probe {
       // listener (tail jobs would report 0 ms)
       Thread.sleep(300)
       spark.sparkContext.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val js = jobs.asScala.toSeq.sortBy(_._1)
-      val sum = js.map(_._2._1).sum / 1e3
+      val js = jobs.synchronized(jobs.toSeq).sortBy(_._1)
+      val sum = js.map(_._2._2).sum / 1e3
       println(f"== $name rep $rep: wall $wall%.3f s, ${js.size} jobs, job-sum $sum%.3f s")
-      if (rep == 3) js.foreach { case (id, (ms, nst, ntk)) =>
+      if (rep == 3) js.foreach { case (id, (_, ms, nst, ntk)) =>
         println(f"  job $id%3d  ${ms / 1e3}%7.3f s  $nst%3d stages $ntk%5d tasks")
       }
     }
   }
 
   /** Per-micro-batch duration breakdown for the stream-stream join: run
-    * purchaseClickJoin through the same memory-sink drain the registry
-    * query uses and print every batch's StreamingQueryProgress JSON —
-    * the durationMs / stateOperators fields say whether the seconds go
-    * to state commits, offset-log I/O, or planning. */
+    * purchaseClickJoin over the events dir the ev_stream_* queries stage
+    * (owned by `graft.Artifacts`) through a memory-sink drain and print
+    * every batch's StreamingQueryProgress JSON — the durationMs /
+    * stateOperators fields say whether the seconds go to state commits,
+    * offset-log I/O, or planning. */
   private def streamProfile(spark: SparkSession, dir: String, parts: String,
                             provider: Option[String]): Unit = {
-    val staged = streaming.StreamingOps.stageEventsDir(spark, dir,
-      java.nio.file.Files.createTempDirectory("probe-sjoin").toString + "/events")
-    provider.foreach(p => spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass", p))
+    val staged = streaming.StreamingOps.stagedDir(spark, dir)
+    val confs = Seq("spark.sql.shuffle.partitions" -> parts) ++
+      provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
     (1 to 3).foreach { rep =>
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      val t0 = System.nanoTime()
-      val q = streaming.StreamingOps.purchaseClickJoin(
-          streaming.StreamingOps.eventsStream(spark, staged))
-        .writeStream.format("memory").queryName(s"probe_sjoin_$rep")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally {
-        val wall = (System.nanoTime() - t0) / 1e9
-        println(f"== streamprofile rep $rep wall $wall%.3f s")
-        q.recentProgress.foreach(p => println(p.json))
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+      GraftSession.withConfs(spark, confs: _*) {
+        val t0 = System.nanoTime()
+        val q = streaming.StreamingOps.purchaseClickJoin(
+            streaming.StreamingOps.eventsStream(spark, staged))
+          .writeStream.format("memory").queryName(s"probe_sjoin_$rep")
+          .outputMode("append").start()
+        try q.processAllAvailable() finally {
+          val wall = (System.nanoTime() - t0) / 1e9
+          println(f"== streamprofile rep $rep wall $wall%.3f s")
+          q.recentProgress.foreach(p => println(p.json))
+          q.stop()
+        }
       }
     }
   }

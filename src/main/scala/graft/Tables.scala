@@ -10,10 +10,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * via Catalyst pushdown — verified in specs via `.explain` PushedFilters.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

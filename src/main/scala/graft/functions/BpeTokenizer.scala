@@ -61,27 +61,6 @@ object BpeTokenizer {
     merges.result()
   }
 
-  /** Persist a trained merge table as a parquet artifact
-    * `(rank, left, right)` — the shipped-vocab shape: train once on a
-    * corpus sample, reuse across every corpus run (and every engine
-    * that can read parquet). Rank IS the merge order, so a reload
-    * reconstructs the exact tokenizer. */
-  def saveVocab(s: org.apache.spark.sql.SparkSession,
-                merges: Seq[(String, String)], path: String): Unit = {
-    import s.implicits._
-    merges.zipWithIndex
-      .map { case ((a, b), r) => (r, a, b) }
-      .toDF("rank", "left", "right")
-      .repartition(1) // vocab-sized artifact: one file, like any shipped tokenizer
-      .write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a merge table saved by [[saveVocab]], in rank order. */
-  def loadVocab(s: org.apache.spark.sql.SparkSession,
-                path: String): Seq[(String, String)] =
-    s.read.parquet(path).orderBy("rank").collect()
-      .map(r => (r.getString(1), r.getString(2))).toSeq
-
   /** Replace every adjacent occurrence of `pair` in `ps` (left to
     * right, non-overlapping) with the merged symbol. */
   def mergePair(ps: Vector[String], pair: (String, String)): Vector[String] = {

@@ -14,8 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * 32 (`/root/reference/distributed/worker.go:170-174`:
   * `fnv.New32a()` then `& 0x7fffffff % nReduce`). [[Fnv1a32]] is the
   * bit-exact Spark twin (so a user can reproduce the reference's
-  * partition assignment), and [[Fnv1a64]] is the 64-bit variant used
-  * as shingle hash by the dedup kernels. Both implement `doGenCode`,
+  * partition assignment), and [[Fnv1a64]] is the 64-bit variant
+  * (SQL `graft_fnv1a64`; the dedup kernels hash shingles with the same
+  * [[HashFunctions.fnv1a64Bytes]]). Both implement `doGenCode`,
   * so they stay inside whole-stage codegen — no UDF boxing in the
   * scan→project hot path.
   */
@@ -53,7 +54,6 @@ object HashFunctions {
     z ^ (z >>> 31)
   }
 
-  def fnv1a64(c: Column): Column = ColumnBridge.column(Fnv1a64(ColumnBridge.expression(c)))
   def fnv1a32(c: Column): Column = ColumnBridge.column(Fnv1a32(ColumnBridge.expression(c)))
 
   /** The reference's partition routing: fnv1a32(key) & 0x7fffffff % n

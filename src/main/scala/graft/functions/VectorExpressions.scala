@@ -22,10 +22,6 @@ object VectorFunctions {
     ColumnBridge.column(CosineSim(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def dotProduct(a: Column, b: Column): Column =
-    ColumnBridge.column(DotProduct(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   def signLsh(v: Column, dim: Int, bits: Int, tables: Int): Column =
     ColumnBridge.column(SignLshBuckets(ColumnBridge.expression(v), dim, bits, tables))
 

@@ -1,14 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Morton (Z-order) interleaving — the multi-column generalization of
-  * the range-sorted layout (`Sources.writeRangeSorted`): sorting by the
-  * interleaved bits of two columns clusters rows so that a range filter
+/** Morton (Z-order) interleaving behind the `graft_zvalue` SQL function
+  * — the multi-column generalization of a range-sorted layout: sorting
+  * by the interleaved bits of two columns clusters rows so that a range filter
   * on EITHER column maps to a bounded set of Z ranges, and parquet
   * footer min/max stats skip the rest. One clustered layout serves two
   * filter dimensions, where a plain sort serves one.
@@ -17,9 +15,9 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * (Stanford Bit Twiddling Hacks). [[ZValue]] interleaves the low 32
   * bits of each input (left column on even bits, right on odd);
   * callers that want equal weight per dimension should first scale
-  * both inputs to a common bucket range — `Sources.writeZOrdered`
-  * does min/max scaling to 16-bit buckets, so the Z value fits in 32
-  * bits and both columns contribute alternating significant bits.
+  * both inputs to a common bucket range — min/max scaling to 16-bit
+  * buckets keeps the Z value in 32 bits, with both columns contributing
+  * alternating significant bits.
   */
 object ZOrder {
 
@@ -37,13 +35,10 @@ object ZOrder {
   /** Morton code of (a, b): a's bits on even positions, b's on odd.
     * The full 64-bit code orders correctly only as UNSIGNED — b ≥ 2³¹
     * sets the sign bit. Layouts that sort the code with Spark's signed
-    * long comparison must keep inputs below 2³¹ (writeZOrdered scales
-    * to 16-bit buckets, so its codes stay in 32 bits). */
+    * long comparison must keep inputs below 2³¹ (16-bit buckets keep
+    * codes in 32 bits). */
   def interleave(a: Long, b: Long): Long =
     spread(a) | (spread(b) << 1)
-
-  def zvalue(a: Column, b: Column): Column =
-    ColumnBridge.column(ZValue(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 }
 
 /** Children must be LongType (callers cast — `AbstractDataType` is

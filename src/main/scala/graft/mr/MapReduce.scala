@@ -129,21 +129,6 @@ object MapReduce {
       .orderBy("key")
   }
 
-  /** Typed cogroup: per-key combination of two datasets' value streams
-    * — the two-input generalization of the reference's single-relation
-    * reduce (its jobs can't express this at all, §2.2 "no joins").
-    * Both sides shuffle once on the key; the user function sees both
-    * iterators without materializing either side as a table. */
-  def cogroup[B](spark: SparkSession,
-                 left: Dataset[(String, String)], right: Dataset[(String, String)])(
-                 f: (String, Iterator[String], Iterator[String]) => Iterator[(String, B)])(
-                 implicit enc: Encoder[(String, B)]): Dataset[(String, B)] = {
-    import spark.implicits._
-    left.groupByKey(_._1).cogroup(right.groupByKey(_._1)) {
-      (key, ls, rs) => f(key, ls.map(_._2), rs.map(_._2))
-    }
-  }
-
   /** Text-file front door matching the reference CLI (`main.go:25,130`):
     * each file becomes one (path, contents) document, then map/reduce.
     * At scale prefer line-oriented `spark.read.text` — wholeTextFiles is

@@ -28,9 +28,6 @@ object Dedup {
     * fuzzy-dedup ops hash. */
   def normText(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
 
-  /** 64-bit content fingerprint of the normalized text. */
-  def normHash(c: Column): Column = xxhash64(normText(c))
-
   /** Exact dedup by content digest: keep the smallest doc_id per sha256
     * group, report group size. Deterministic survivor choice. */
   def exactDedup(s: SparkSession, dir: String): DataFrame = {
@@ -273,27 +270,6 @@ object Dedup {
     Tables.documents(s, dir)
       .select($"doc_id", SketchFunctions.simhash64(normText($"text")).as("simhash64"))
       .orderBy($"doc_id")
-  }
-
-  /** SimHash near-dup candidates: band the 64-bit signature into four
-    * 16-bit chunks; Hamming distance ≤ 3 guarantees at least one equal
-    * chunk (pigeonhole), so the bucket join finds all such pairs
-    * without an all-pairs product. */
-  def simhashNearDup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
-    import s.implicits._
-    val sig = Tables.documents(s, dir)
-      .select($"doc_id", SketchFunctions.simhash64(normText($"text")).as("sh"))
-    val banded = sig.select($"doc_id", $"sh",
-      posexplode(array((0 until 4).map(b =>
-        shiftright($"sh", b * 16).bitwiseAND(0xffffL)): _*)).as(Seq("band", "chunk")))
-    val cand = banded.as("x").join(banded.as("y"), Seq("band", "chunk"))
-      .where($"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("id1"), $"y.doc_id".as("id2"),
-        $"x.sh".as("sh1"), $"y.sh".as("sh2"))
-      .distinct()
-    cand.select($"id1", $"id2", bit_count($"sh1".bitwiseXOR($"sh2")).cast("long").as("hamming"))
-      .filter($"hamming" <= maxHamming)
-      .orderBy($"id1", $"id2")
   }
 
   /** Near-duplicate CLUSTER formation — the step after pair generation

@@ -1565,8 +1565,8 @@ object MediaCodec extends Serializable {
 
   /** Parsed STREAMINFO + where the frame stream begins. */
   private final class FlacInfo(val rate: Int, val totalSamples: Long,
-                               val md5: Array[Byte], val minBlock: Int,
-                               val maxBlock: Int, val framesAt: Int)
+                               val md5: Array[Byte], val maxBlock: Int,
+                               val framesAt: Int)
 
   /** Metadata walk: STREAMINFO must lead and appear once; other
     * blocks are skipped; mono/16-bit is the pipeline's audio model —
@@ -1607,7 +1607,7 @@ object MediaCodec extends Serializable {
       pos += 4 + len
     }
     if (first) return null
-    new FlacInfo(rate, totalSamples, md5, minBlock, maxBlock, pos)
+    new FlacInfo(rate, totalSamples, md5, maxBlock, pos)
   }
 
   /** One decoded frame: its blocking bit, coded frame/sample number,

@@ -49,10 +49,8 @@ object Multimodal {
     * wrapping ramp) so palette decode bugs — transposed PLTE layout,
     * single-channel reads, truncated tables — shift the plain or
     * position-weighted content sums the oracle rebuilds. */
-  private[graft] val palettePlte: Array[Byte] = Array.tabulate(768) { j =>
-    val e = j / 3
-    (j % 3 match { case 0 => e; case 1 => 255 - e; case _ => (3 * e) % 256 }).toByte
-  }
+  private[graft] val palettePlte: Array[Byte] =
+    Array.tabulate(768)(j => paletteChan(j / 3, j % 3).toByte)
 
   /** Palette channel map as plain Ints — the spec recomputes and the
     * oracle SQL mirror this exact rule. */

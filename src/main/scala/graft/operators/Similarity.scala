@@ -27,11 +27,9 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
-  /** Σ aᵢ·bᵢ and cos(a,b) — fused kernels; accumulation order matches
-    * a left fold, so results are bit-equal with the HOF formulation
-    * they replaced. */
-  def dot(a: Column, b: Column): Column = VectorFunctions.dotProduct(a, b)
-
+  /** cos(a,b) — a fused kernel; accumulation order matches a left
+    * fold, so results are bit-equal with the HOF formulation it
+    * replaced. */
   def cosine(a: Column, b: Column): Column = VectorFunctions.cosineSim(a, b)
 
   /** Exact cosine top-k: `numQueries` probe vectors against the whole

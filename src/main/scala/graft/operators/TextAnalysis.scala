@@ -1263,9 +1263,7 @@ object TextAnalysis {
   }
 
   /** Document fingerprinting: full-content hashes (md5/sha2 built-ins,
-    * codegen'd) — the exact-dedup join keys. A 64-bit xxhash64 over
-    * whitespace-normalized text (not ANSI-expressible, used by Dedup)
-    * lives in [[Dedup.normHash]]. */
+    * codegen'd) — the exact-dedup join keys. */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)

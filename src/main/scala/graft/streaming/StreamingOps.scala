@@ -253,124 +253,6 @@ object StreamingOps {
         TimeMode.None(), OutputMode.Update())
   }
 
-  /** [[RunningTotalsProcessor]] warm-started from a batch snapshot —
-    * StatefulProcessorWithInitialState is the migration path from a
-    * batch pipeline to a streaming one: state computed by a one-off
-    * batch job over history seeds the stream's state store, and the
-    * stream continues from there instead of reprocessing 100 TB of
-    * history through the stream. handleInitialState runs once per
-    * snapshot key before any input row. */
-  final class RunningTotalsWithSnapshot
-      extends org.apache.spark.sql.streaming.StatefulProcessorWithInitialState[
-        Long, UserEvent, UserRunning, UserRunning] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var state: ValueState[UserRunning] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[UserRunning]("running",
-        org.apache.spark.sql.Encoders.product[UserRunning], TTLConfig.NONE)
-
-    override def handleInitialState(userId: Long, initial: UserRunning,
-                                    timerValues: TimerValues): Unit =
-      state.update(initial)
-
-    override def handleInputRows(userId: Long, rows: Iterator[UserEvent],
-                                 timerValues: TimerValues): Iterator[UserRunning] = {
-      val prev = if (state.exists()) state.get() else UserRunning(userId, 0L, 0.0)
-      var n = prev.n_events
-      var tot = prev.total_value
-      rows.foreach { e => n += 1; tot += e.value }
-      val next = UserRunning(userId, n, tot)
-      state.update(next)
-      Iterator.single(next)
-    }
-  }
-
-  def runningTotalsWarmStart(spark: SparkSession, events: Dataset[UserEvent],
-                             snapshot: Dataset[UserRunning]): Dataset[UserRunning] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningTotalsWithSnapshot,
-        TimeMode.None(), OutputMode.Update(), snapshot.groupByKey(_.user_id))
-  }
-
-  final case class OpenSession(start_s: Long, last_s: Long, n: Long)
-  final case class ClosedSession(user_id: Long, session_start_s: Long,
-                                 session_end_s: Long, n_events: Long)
-
-  /** Event-time-TIMER sessionization on transformWithState — the one
-    * stateful primitive the other six streaming queries don't
-    * exercise: a session with no successor event never closes by data
-    * alone, so the processor registers a timer at lastEvent + gap + 1 s
-    * and [[org.apache.spark.sql.streaming.StatefulProcessor.handleExpiredTimer]]
-    * emits the session when the WATERMARK (not a new row) passes it.
-    * That watermark-driven close is what bounds open-session state at
-    * 100 TB/day: without timers, a user who walks away pins state
-    * forever. Gap rule mirrors the batch `Events.sessionize` exactly:
-    * merge iff second-diff <= gap (strictly-greater starts a new
-    * session), session end = last event's second. */
-  final class SessionTimerProcessor(gapSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserEvent, ClosedSession] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var open: ValueState[OpenSession] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      open = getHandle.getValueState[OpenSession]("open",
-        org.apache.spark.sql.Encoders.product[OpenSession], TTLConfig.NONE)
-
-    override def handleInputRows(userId: Long, rows: Iterator[UserEvent],
-                                 timerValues: TimerValues): Iterator[ClosedSession] = {
-      val sorted = rows.toArray.sortBy(_.ts.getTime)
-      var closed = List.empty[ClosedSession]
-      var cur = if (open.exists()) Option(open.get()) else None
-      sorted.foreach { e =>
-        val ts = Math.floorDiv(e.ts.getTime, 1000L)
-        cur = cur match {
-          case Some(s) if ts - s.last_s <= gapSec =>
-            Some(s.copy(last_s = ts, n = s.n + 1))
-          case Some(s) =>
-            closed ::= ClosedSession(userId, s.start_s, s.last_s, s.n)
-            Some(OpenSession(ts, ts, 1))
-          case None => Some(OpenSession(ts, ts, 1))
-        }
-      }
-      cur.foreach { s =>
-        open.update(s)
-        // one live timer per key: re-arm at the new tail expiry
-        getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-        getHandle.registerTimer((s.last_s + gapSec + 1) * 1000L)
-      }
-      closed.reverseIterator
-    }
-
-    override def handleExpiredTimer(userId: Long,
-        timerValues: TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[ClosedSession] = {
-      if (!open.exists()) Iterator.empty
-      else {
-        val s = open.get()
-        open.clear()
-        Iterator.single(ClosedSession(userId, s.start_s, s.last_s, s.n))
-      }
-    }
-  }
-
-  /** The timer machine over the events stream: watermarked event time,
-    * append output (sessions emit exactly once, on close). */
-  def sessionTimers(spark: SparkSession, events: DataFrame,
-                    gapSec: Long = 1800L): Dataset[ClosedSession] = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    events
-      .withWatermark("ts", "0 seconds")
-      .select($"user_id", $"ts", $"value").as[UserEvent]
-      .groupByKey(_.user_id)
-      .transformWithState(new SessionTimerProcessor(gapSec),
-        TimeMode.EventTime(), OutputMode.Append())
-  }
-
   /** Stream-stream join: purchases joined to the same user's clicks
     * within the preceding hour. Both sides are watermarked so the join
     * state (buffered unmatched rows) is pruned once the watermark
@@ -418,7 +300,7 @@ object StreamingOps {
     * paid once per session, not per query run. */
   private val stagedDirs = new graft.Artifacts.Dirs[String]("graft-stream-events")
 
-  private def stagedDir(s: SparkSession, dir: String): String =
+  private[graft] def stagedDir(s: SparkSession, dir: String): String =
     stagedDirs.stage(s, dir)(out => stageEventsDir(s, dir, out))
 
   /** Stage the streaming fixtures for `dir` without running any
@@ -723,9 +605,8 @@ object StreamingOps {
     * members and range-reads ONLY those through the SAME
     * [[graft.sources.Warc.fetchByCdx]] body as the batch verbs, so
     * online and batch lookups cannot diverge. Stateless Append with
-    * per-batch-id overwrite directories (the batchIdempotentWriter
-    * idempotence shape — a replayed batch fully replaces its own
-    * output), so every request resolves exactly once whatever the
+    * per-batch-id overwrite directories (a replayed batch fully
+    * replaces its own output), so every request resolves exactly once whatever the
     * batching, and the accumulated result shares the batch fetch's
     * closed-form oracle: `documents` under the request predicate. At
     * 100 TB this is the serving loop: the artifact is pruned per
@@ -775,7 +656,7 @@ object StreamingOps {
     } finally q.stop()
   }
 
-  /** Retention COMPACTION over a [[batchIdempotentWriter]]-shaped
+  /** Retention COMPACTION over a per-batch-id (`batch_id=N`)
     * output root (r17 verdict #6 — the online loop's output side,
     * the pipe_ivf_gc precedent at the serving-output layer): a
     * foreachBatch sink accumulates one `batch_id=N` directory per
@@ -1223,28 +1104,6 @@ object StreamingOps {
     deduped.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total"))
       .orderBy($"event_type")
-  }
-
-  /** Batch-level sink logic via foreachBatch — the production shape
-    * for sinks Spark has no native connector for (upserts, multi-table
-    * fan-out, external services). Exactly-once comes from IDEMPOTENCE,
-    * not magic: the checkpoint replays an uncommitted batch with the
-    * SAME batchId after a crash, so the writer must make re-running a
-    * batch a no-op. Here: each batch overwrites its own
-    * `batch_id=N` directory — a partial write from a crashed attempt
-    * is simply overwritten whole on replay. The spec drives the writer
-    * twice with one batchId to pin the idempotence contract. */
-  def batchIdempotentWriter(outDir: String): (DataFrame, Long) => Unit =
-    (batch: DataFrame, batchId: Long) =>
-      batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-
-  /** Drain a stream through [[batchIdempotentWriter]] synchronously. */
-  def runForeachBatch(df: DataFrame, outDir: String, checkpointDir: String): Unit = {
-    val q = df.writeStream
-      .foreachBatch(batchIdempotentWriter(outDir))
-      .option("checkpointLocation", checkpointDir)
-      .start()
-    try q.processAllAvailable() finally q.stop()
   }
 
   /** Drain a streaming DataFrame through the in-memory sink and return

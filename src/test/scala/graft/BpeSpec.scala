@@ -86,22 +86,6 @@ class BpeSpec extends SparkSpec {
     assert(hhw == 3L)
   }
 
-  test("vocab artifact round-trips: saved merges reload in rank order and count identically") {
-    val dict = Seq("hello" -> 100L, "world" -> 90L, "held" -> 20L, "the" -> 300L)
-    val merges = BpeTokenizer.train(dict, 25)
-    val path = tempDir("bpe-vocab") + "/vocab"
-    BpeTokenizer.saveVocab(spark, merges, path)
-    val reloaded = BpeTokenizer.loadVocab(spark, path)
-    assert(reloaded == merges, "rank order must reconstruct the exact tokenizer")
-    // counting with the reloaded table ≡ counting with the trained one
-    val texts = Seq("hello world", "the held world says hello", "unseen zxqv")
-    val a = texts.toDF("s").select(BpeFunctions.bpeCount(col("s"), merges))
-      .collect().map(_.getLong(0)).toSeq
-    val b = texts.toDF("s").select(BpeFunctions.bpeCount(col("s"), reloaded))
-      .collect().map(_.getLong(0)).toSeq
-    assert(a == b)
-  }
-
   test("tx_bpe registry query: bounded below by ws_tokens, non-degenerate, deterministic") {
     // the registry's numMerges=48: a PARTIAL vocab over the fixture's
     // 31-word vocabulary — full training collapses every word to one

@@ -116,46 +116,6 @@ class EventsStreamingSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("initial-state warm start: batch snapshot + stream tail == full batch totals") {
-    // the batch→streaming migration: totals over the FIRST half of
-    // history come from a batch snapshot seeded via handleInitialState;
-    // the stream processes only the second half — final per-user totals
-    // must equal the full batch aggregate (for users the stream touches;
-    // snapshot-only users hold state but emit nothing without input).
-    import StreamingOps.{UserEvent, UserRunning}
-    val all = Tables.events(spark, sfDir)
-    val cutoff = all.agg(percentile_approx($"ts", lit(0.5), lit(1000)))
-      .head().getTimestamp(0)
-    val snapshot = all.filter($"ts" <= cutoff)
-      .groupBy($"user_id")
-      .agg(count(lit(1)).as("n_events"), sum($"value").as("total_value"))
-      .as[UserRunning]
-    val tailDir = tempDir("warm-tail") + "/events"
-    all.filter($"ts" > cutoff).write.parquet(tailDir)
-    val stream = StreamingOps.eventsStream(spark, tailDir)
-      .select($"user_id", $"ts", $"value").as[UserEvent]
-    val mem = StreamingOps.runToMemory(
-      StreamingOps.runningTotalsWarmStart(spark, stream, snapshot).toDF(),
-      "ev_warm_start_q", OutputMode.Update, statePartitions = Some(8),
-      extraConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"user_id").orderBy($"n_events".desc)
-    val got = mem.withColumn("rk", row_number().over(w)).filter($"rk" === 1)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-    val streamedUsers = all.filter($"ts" > cutoff)
-      .select($"user_id").distinct().collect().map(_.getLong(0)).toSet
-    val expected = all.groupBy($"user_id")
-      .agg(count(lit(1)).as("n"), sum($"value").as("t"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
-      .filter { case (u, _) => streamedUsers(u) }
-    assert(streamedUsers.nonEmpty && got.keySet == expected.keySet)
-    got.foreach { case (u, (n, t)) =>
-      assert(n == expected(u)._1, s"user $u count")
-      assert(math.abs(t - expected(u)._2) < 1e-6, s"user $u total")
-    }
-  }
-
   test("streaming retention: cells accumulate across micro-batches, no re-emission") {
     // MemoryStream gives deterministic batch boundaries — the property
     // worth pinning beyond the oracle-shared single-ingest run: new
@@ -389,64 +349,6 @@ class EventsStreamingSpec extends SparkSpec {
     assert(got == Seq("view>click>buy"), s"got: $got")
   }
 
-  test("event-time timers close sessions by watermark, matching the batch rule") {
-    // sessions with a successor event close inline; each user's OPEN
-    // tail closes only when the watermark passes lastEvent + gap — the
-    // deterministic expectation: tail emitted iff its expiry is within
-    // the final watermark (max event time, delay 0).
-    val stream = StreamingOps.eventsStream(spark, streamDir)
-    val mem = StreamingOps.runToMemory(
-      StreamingOps.sessionTimers(spark, stream).toDF(),
-      "ev_timer_session_q", OutputMode.Append, statePartitions = Some(8),
-      extraConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    val got = mem.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-    val sess = graft.operators.Events.sessionize(spark, sfDir)
-      .select($"user_id", $"session_id", $"session_start_s",
-        $"session_end_s", $"n_events").collect()
-    val lastSession = sess.groupBy(_.getLong(0))
-      .view.mapValues(_.map(_.getLong(1)).max).toMap
-    val wmMs = Tables.events(spark, sfDir)
-      .agg(max($"ts")).head().getTimestamp(0).getTime
-    val expected = sess.filter { r =>
-      val isTail = r.getLong(1) == lastSession(r.getLong(0))
-      !isTail || (r.getLong(3) + 1800L + 1L) * 1000L <= wmMs
-    }.map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(got == expected,
-      s"got=${got.size} expected=${expected.size}; " +
-        s"missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
-  }
-
-  test("foreachBatch sink: complete delivery, and batch replay is idempotent") {
-    val out = tempDir("fb-out")
-    val ckpt = tempDir("fb-ckpt")
-    val stream = StreamingOps.eventsStream(spark, streamDir)
-      .select($"event_id", $"event_type", $"value")
-    StreamingOps.runForeachBatch(stream, out, ckpt)
-    val written = spark.read.option("basePath", out).parquet(out)
-    val total = Tables.events(spark, sfDir).count()
-    assert(written.count() == total)
-    assert(written.select($"event_id").distinct().count() == total)
-    // the exactly-once contract: re-running a batch with the same id
-    // (what checkpoint recovery does after a crash mid-batch) must
-    // leave the sink unchanged — overwrite-by-batch_id makes it so
-    // partition-column inference types batch_id as int
-    val batchIds = written.select($"batch_id").distinct()
-      .collect().map(_.getAs[Number](0).longValue)
-    val replayId = batchIds.min
-    // materialize before replaying: parquet overwrite refuses a path
-    // that is simultaneously its own input
-    val batchPath = s"$out/batch_id=$replayId"
-    val materialized = spark.read.parquet(batchPath).collect().toSeq
-    val replayRows = spark.createDataFrame(
-      spark.sparkContext.parallelize(materialized),
-      spark.read.parquet(batchPath).schema)
-    StreamingOps.batchIdempotentWriter(out)(replayRows, replayId)
-    val after = spark.read.option("basePath", out).parquet(out)
-    assert(after.count() == total, "batch replay must not duplicate rows")
-  }
-
   test("streaming dedup drops exact duplicate events within the watermark") {
     // stage a dir containing the events twice (simulated re-delivery)
     val dup = tempDir("events-dup") + "/events"
@@ -588,15 +490,6 @@ class EventsStreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(streamed == batch)
     assert(batch.nonEmpty)
-  }
-
-  test("typed cogroup combines two corpora per key") {
-    val a = Seq(("w1", "1"), ("w1", "1"), ("w2", "1")).toDS()
-    val b = Seq(("w1", "1"), ("w3", "1")).toDS()
-    val diff = graft.mr.MapReduce.cogroup(spark, a, b) { (k, ls, rs) =>
-      Iterator.single(k -> (ls.size.toLong - rs.size.toLong))
-    }.collect().toMap
-    assert(diff == Map("w1" -> 1L, "w2" -> 1L, "w3" -> -1L))
   }
 
   test("batch sessionization: gaps within sessions ≤ 30min, between sessions > 30min") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.HashFunctions
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, expr}
 
 /** FNV-1a pinned against published test vectors (public-domain FNV
   * reference constants) — guarantees bit-parity with the reference's
@@ -36,11 +36,12 @@ class HashSpec extends SparkSpec {
   }
 
   test("fnv expressions agree with kernel through codegen") {
+    GraftExtensions.register(spark)
     val df = (vectors32.map(_._1) ++ Seq("hello", "Spark", "züricher"))
       .toDF("s")
     val rows = df.select(col("s"),
       HashFunctions.fnv1a32(col("s")).as("h32"),
-      HashFunctions.fnv1a64(col("s")).as("h64")).collect()
+      expr("graft_fnv1a64(s)").as("h64")).collect()
     rows.foreach { r =>
       val b = r.getString(0).getBytes("UTF-8")
       assert(r.getInt(1) == HashFunctions.fnv1a32Bytes(b, 0, b.length))
@@ -50,6 +51,7 @@ class HashSpec extends SparkSpec {
 
   test("zvalue matches morton goldens and the scala kernel through codegen") {
     import graft.functions.ZOrder
+    GraftExtensions.register(spark)
     // hand-computed morton vectors: a on even bits, b on odd
     assert(ZOrder.interleave(0L, 0L) == 0L)
     assert(ZOrder.interleave(1L, 0L) == 1L)
@@ -62,7 +64,7 @@ class HashSpec extends SparkSpec {
     // range filter map to bounded z ranges). SIGNED monotonicity holds
     // only below 2^31 (the kernel doc's contract — above that the
     // interleave sets the sign bit and only unsigned order survives;
-    // writeZOrdered's 16-bit buckets stay far inside the safe range)
+    // 16-bit bucket ids stay far inside the safe range)
     val samples = Seq(0L, 1L, 2L, 100L, 65535L, 65536L, 0x7fffffffL)
     samples.sliding(2).foreach { case Seq(x, y) =>
       assert(ZOrder.interleave(x, 7L) < ZOrder.interleave(y, 7L))
@@ -71,7 +73,7 @@ class HashSpec extends SparkSpec {
     val full = Seq(0L, 1L, 2L, 100L, 65535L, 65536L, 0xffffffffL)
     // codegen path agrees with the scala kernel (full 32-bit domain)
     val df = (for (a <- full; b <- full) yield (a, b)).toDF("a", "b")
-    df.select($"a", $"b", ZOrder.zvalue($"a", $"b").as("z")).collect().foreach { r =>
+    df.select($"a", $"b", expr("graft_zvalue(a, b)").as("z")).collect().foreach { r =>
       assert(r.getLong(2) == ZOrder.interleave(r.getLong(0), r.getLong(1)))
     }
   }
@@ -84,6 +86,7 @@ class HashSpec extends SparkSpec {
     // failed janino — silently dropping the plan out of whole-stage
     // codegen. fallback=false turns that silent degradation into a
     // test failure.
+    GraftExtensions.register(spark)
     val key = "spark.sql.codegen.fallback"
     val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, "false")
@@ -95,8 +98,8 @@ class HashSpec extends SparkSpec {
       val df = spark.range(2).select(
         (col("id") * 4L + 1L).as("a"), (col("id") + 2L).as("b"))
       val rows = df.select(
-        ZOrder.zvalue(col("a"), col("b")).as("z1"),
-        ZOrder.zvalue(col("b"), col("a")).as("z2")).collect()
+        expr("graft_zvalue(a, b)").as("z1"),
+        expr("graft_zvalue(b, a)").as("z2")).collect()
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ==
         Set((ZOrder.interleave(1L, 2L), ZOrder.interleave(2L, 1L)),
             (ZOrder.interleave(5L, 3L), ZOrder.interleave(3L, 5L))))
@@ -107,10 +110,11 @@ class HashSpec extends SparkSpec {
   }
 
   test("kernels propagate null inputs as null") {
+    GraftExtensions.register(spark)
     val df = Seq(Some("text"), None).toDF("s")
     val r = df.select(
       HashFunctions.fnv1a32(col("s")).as("a"),
-      HashFunctions.fnv1a64(col("s")).as("b"),
+      expr("graft_fnv1a64(s)").as("b"),
       graft.functions.SketchFunctions.simhash64(col("s")).as("c"),
       graft.functions.SketchFunctions.minhash(col("s"), 5, 4).as("d"))
       .collect()

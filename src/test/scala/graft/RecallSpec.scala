@@ -336,22 +336,6 @@ class RecallSpec extends SparkSpec {
     }
   }
 
-  test("SimHash banding finds all planted Hamming<=3 pairs (pigeonhole is exact)") {
-    // banding into four 16-bit chunks is mathematically complete for
-    // Hamming <= 3 — verify recall is exactly 1.0 against a brute-force
-    // Hamming scan of the corpus signatures
-    val sigs = Dedup.simhash(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1))
-    val truth = (for {
-      (i, a) <- sigs; (j, b) <- sigs
-      if i < j && java.lang.Long.bitCount(a ^ b) <= 3
-    } yield (i, j)).toSet
-    val got = Dedup.simhashNearDup(spark, sfDir)
-      .select("id1", "id2").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    info(s"simhash: ${truth.size} true pairs, ${got.size} found")
-    assert(got == truth)
-  }
-
   test("hybrid RRF with ANN dense arm: fused top-k overlap vs exact tx_rrf") {
     // tx_rrf_ann swaps only the dense arm (exact brute scan → MRL
     // prefix-shortlist funnel); lexical arm, fusion rule and rounding

@@ -18,7 +18,7 @@ import scala.jdk.CollectionConverters._
   *
   * Registering a new rows-only query without updating this map — or
   * pointing the map at a gate that doesn't exist — is a red suite, not
-  * a judge finding. Pure JVM spec: no SparkSession, runs in <1 s.
+  * a later surprise. Pure JVM spec: no SparkSession, runs in seconds.
   */
 class RegistryCoverageSpec extends AnyFunSuite {
 
@@ -48,8 +48,8 @@ class RegistryCoverageSpec extends AnyFunSuite {
     "pipe_ivf_gc" -> ("RecallSpec.scala", "ivfGcServeTopK"),
     "ann_stream_serve" -> ("RecallSpec.scala", "annServeViaStream"),
     "dd_minhash_lsh" -> ("RecallSpec.scala", "minhashLsh"),
-    "dd_simhash" -> ("RecallSpec.scala", "simhash"),
     "dd_semantic" -> ("RecallSpec.scala", "semanticDedup"),
+    "dd_simhash" -> ("DedupSpec.scala", "Dedup.simhash("),
     "dd_cdc" -> ("DedupSpec.scala", "CdcChunks"),
     "dd_incremental_fuzzy" -> ("DedupSpec.scala", "incrementalFuzzy"),
     "dd_lsh_clusters" -> ("DedupSpec.scala", "lshClusters"),
@@ -230,8 +230,8 @@ class RegistryCoverageSpec extends AnyFunSuite {
   test("memos and temp dirs go through Artifacts (lifetime-owner guard)") {
     // 26 hand-rolled ConcurrentHashMap memos and 20 never-deleted temp
     // dirs once lived across seven files; Artifacts now owns both, and
-    // a new hand-rolled one must not creep back. Probe is dev-only.
-    val owners = Set("Artifacts.scala", "Probe.scala")
+    // a new hand-rolled one must not creep back.
+    val owners = Set("Artifacts.scala")
     val banned = """createTempDir|new\s+(java\.util\.concurrent\.)?ConcurrentHashMap\b""".r
     val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
     val sources = try walk.iterator().asScala.toList
@@ -251,6 +251,55 @@ class RegistryCoverageSpec extends AnyFunSuite {
       }
     }
     assert(spawners.isEmpty, s"thread or pool started outside Spark's task model: $spawners")
+  }
+
+  // Where main is run from; each root with the reason it is one.
+  private val reachabilityRoots: Seq[(String, String, String)] = Seq(
+    ("graft/SparkEntry$", "queries", "the registry every runner reads"),
+    ("graft/SparkEntry$", "run", "the per-run policy Bench, Verify and Probe run queries through"),
+    ("graft/SparkEntry$", "selection", "SPARK_GRAFT_ONLY's query subset"),
+    ("graft/SparkEntry$", "oracleSql", "the DuckDB oracle SQL Verify dumps"),
+    ("graft/SparkEntry$", "entry", "the flagship query, the engine's published entry point"),
+    ("graft/Bench$", "main", "CLI"),
+    ("graft/Verify$", "main", "CLI"),
+    ("graft/WordCountMain$", "main", "CLI: the reference's word-count job"),
+    ("graft/Probe$", "main", "CLI: dev plan and timing probe"),
+    ("graft/mr/MapReduce$", "runOnFiles", "perfbench's mapreduce_highcard workload"),
+    ("graft/streaming/StreamingOps$", "preStage", "perfbench's registry set-up"),
+  )
+
+  // Classes Spark loads by name (spark.sql.extensions=graft.GraftExtensions).
+  private val reachabilityClassRoots = Seq("graft/GraftExtensions", "graft/GraftExtensions$")
+
+  // Public main methods only specs call, each with the reason it stays.
+  private val reachabilityAllowlist: Map[String, String] = Map(
+    "Artifacts.root" -> "spec seam: SparkSpec.tempDir stages test files under the context root",
+    "Artifacts.Memo.get" -> "spec seam: specs read a memo without building its entry",
+    "Robots.ruleMatches" -> "PropertySpec's reference oracle for the compiled rule matcher",
+    "Warc.encodeWet" -> "fixture encoder specs build WET inputs with",
+    "Warc.encodeRawWarc" -> "fixture encoder specs build raw WARC inputs with",
+  )
+
+  test("every public main method is reachable from a registry, CLI or extension root") {
+    val t0 = System.nanoTime()
+    val dir = java.nio.file.Paths.get(
+      SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val walk = new MainReachability(dir, getClass.getClassLoader)
+    assert(walk.classes.size >= 200,
+      s"walked ${walk.classes.size} classes under $dir; expected main's full build")
+    val unresolved = reachabilityRoots.filterNot { case (c, m, _) => walk.root(c, m) }.map {
+      case (c, m, why) => s"$c.$m ($why)"
+    } ++ reachabilityClassRoots.filterNot(walk.rootClass)
+    assert(unresolved.isEmpty, s"reachability roots that do not resolve: $unresolved")
+    walk.run()
+    val unreached = walk.unreached
+    info(f"walked ${walk.classes.size} classes, reached ${walk.reached.size} methods " +
+      f"in ${(System.nanoTime() - t0) / 1e9}%.1f s")
+    val offenders = unreached.filterNot(u => reachabilityAllowlist.contains(u.name))
+    if (offenders.nonEmpty) fail(s"${offenders.size} public main methods no root reaches " +
+      s"— delete them, or call them from a root:\n${offenders.mkString("\n")}")
+    val stale = reachabilityAllowlist.keySet -- unreached.map(_.name)
+    assert(stale.isEmpty, s"allowlist names methods that are reached or gone: $stale")
   }
 
   test("Probe runs registry queries and engine functions, never its own plan") {

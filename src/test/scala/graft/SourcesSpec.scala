@@ -1,6 +1,5 @@
 package graft
 
-import graft.sources.Sources
 import org.apache.spark.sql.functions._
 
 /** A local filesystem registered under a scheme that exists ONLY in
@@ -14,251 +13,10 @@ class GraftTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("grafttest:///")
 }
 
-/** Round-trips through every supported format preserve data exactly,
-  * and hive-style partitioning produces prunable directories. */
+/** The crawl sources: WARC/WET containers, their sinks and streams,
+  * robots.txt and sitemaps. */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
-
-  private def tmp(): String =
-    tempDir("sources")
-
-  private lazy val nation = Tables.nation(spark, sfDir)
-
-  test("csv round-trip with explicit schema") {
-    val dir = tmp() + "/n.csv"
-    Sources.write(nation, dir, "csv")
-    // csv loses header by default in our writer -> read back headerless
-    val back = Sources.readCsv(spark, dir, nation.schema, header = false)
-    assert(back.orderBy($"n_nationkey").collect().toSeq ==
-      nation.orderBy($"n_nationkey").collect().toSeq)
-  }
-
-  test("json-lines round-trip") {
-    val dir = tmp() + "/n.json"
-    Sources.write(nation, dir, "json")
-    val back = Sources.readJsonLines(spark, dir, nation.schema)
-    assert(back.orderBy($"n_nationkey").collect().toSeq ==
-      nation.orderBy($"n_nationkey").collect().toSeq)
-  }
-
-  test("orc round-trip") {
-    val dir = tmp() + "/n.orc"
-    Sources.write(nation, dir, "orc")
-    assert(Sources.readOrc(spark, dir).orderBy($"n_nationkey").collect().toSeq ==
-      nation.orderBy($"n_nationkey").collect().toSeq)
-  }
-
-  test("co-bucketed fact-fact join at sf0.1 plans with zero Exchange") {
-    // the full-size fact pair (~600k lineitem ⋈ 150k orders): bucketing
-    // both sides on the join key converts the runtime shuffle into a
-    // storage-time cost paid once — the 100 TB fact-fact join strategy
-    val sf01 = "/root/testdata/sf0.1"
-    val li = Tables.lineitem(spark, sf01).select($"l_orderkey", $"l_quantity")
-    val ord = Tables.orders(spark, sf01).select($"o_orderkey", $"o_totalprice")
-    // clear any orphaned warehouse locations from prior failed runs
-    Seq("b_lineitem", "b_orders").foreach { t =>
-      spark.sql(s"DROP TABLE IF EXISTS $t")
-      val loc = new java.io.File(
-        spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
-      if (loc.exists()) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm)
-          f.delete()
-        }
-        rm(loc)
-      }
-    }
-    Sources.writeBucketed(li, "b_lineitem", Seq("l_orderkey"), 4, Seq("l_orderkey"))
-    Sources.writeBucketed(ord, "b_orders", Seq("o_orderkey"), 4, Seq("o_orderkey"))
-    // disable auto-broadcast so the planner must consider the shuffle
-    // it would need — and then elide it because both sides are
-    // co-bucketed on the join key
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("b_lineitem")
-        .join(spark.table("b_orders"), $"l_orderkey" === $"o_orderkey")
-      joined.collect() // finalize AQE plan
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("SortMergeJoin"), p)
-      assert(!p.contains("Exchange"), p)     // bucketing removed the shuffle
-      assert(joined.count() == li.count())   // every lineitem has its order
-      // the bucket layout also serves aggregation on the bucket key:
-      // groupBy(l_orderkey) plans with no Exchange either
-      val agg = spark.table("b_lineitem")
-        .groupBy($"l_orderkey").agg(sum($"l_quantity").as("q"))
-      agg.collect()
-      val ap = agg.queryExecution.executedPlan.toString
-      assert(!ap.contains("Exchange"), ap)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      spark.sql("DROP TABLE IF EXISTS b_lineitem")
-      spark.sql("DROP TABLE IF EXISTS b_orders")
-    }
-  }
-
-  test("size-controlled write rolls files at the record cap, round-trips, compresses as asked") {
-    val dir = tmp() + "/sized"
-    val li = Tables.lineitem(spark, sfDir).select($"l_orderkey", $"l_quantity")
-    val n = li.count()
-    Sources.writeSized(li.coalesce(2), dir, maxRecordsPerFile = 1000)
-    val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
-    assert(files.length >= (n / 1000).toInt, s"expected >=${n / 1000} files, got ${files.length}")
-    assert(files.forall(_.getName.contains(".zstd.")), files.map(_.getName).mkString(","))
-    // every file under the cap, nothing lost
-    val back = Sources.readParquet(spark, dir)
-    assert(back.count() == n)
-    import org.apache.spark.sql.functions.count
-    val perFile = back.groupBy(org.apache.spark.sql.functions
-      .input_file_name()).agg(count("*").as("c"))
-      .collect().map(_.getLong(1))
-    assert(perFile.forall(_ <= 1000), perFile.max.toString)
-  }
-
-  test("range-sorted layout lets footer stats skip row groups under a filter") {
-    val sf01 = "/root/testdata/sf0.1"
-    val li = Tables.lineitem(spark, sf01)
-    val base = tmp()
-    // same rows, two layouts: value-clustered vs value-scattered
-    Sources.writeRangeSorted(li, s"$base/sorted", "l_orderkey", 8)
-    li.repartition(8).write.parquet(s"$base/scattered")
-    def scanRows(path: String): Long = {
-      val df = Sources.readParquet(spark, path)
-        .filter($"l_orderkey" >= 1000 && $"l_orderkey" < 2000)
-      df.collect() // execute to populate metrics
-      val scan = df.queryExecution.executedPlan.collectLeaves().head
-      scan.metrics("numOutputRows").value
-    }
-    val matches = li.filter($"l_orderkey" >= 1000 && $"l_orderkey" < 2000).count()
-    val sortedRead = scanRows(s"$base/sorted")
-    val scatteredRead = scanRows(s"$base/scattered")
-    info(s"rows out of scan: sorted=$sortedRead scattered=$scatteredRead matches=$matches")
-    // scattered layout: the narrow filter range intersects every row
-    // group, so (almost) nothing is skipped; sorted layout: only the
-    // one or two row groups covering the range survive
-    assert(sortedRead < scatteredRead / 4,
-      s"sorted=$sortedRead should read far less than scattered=$scatteredRead")
-    assert(sortedRead >= matches)
-  }
-
-  test("z-ordered layout skips row groups under filters on EITHER column") {
-    val sf01 = "/root/testdata/sf0.1"
-    val li = Tables.lineitem(spark, sf01)
-    val base = tmp()
-    Sources.writeZOrdered(li, s"$base/zorder", "l_partkey", "l_suppkey", 16)
-    li.repartition(16).write.parquet(s"$base/scattered")
-    def scanRows(path: String, filter: org.apache.spark.sql.Column): Long = {
-      val df = Sources.readParquet(spark, path).filter(filter)
-      df.collect()
-      val scan = df.queryExecution.executedPlan.collectLeaves().head
-      scan.metrics("numOutputRows").value
-    }
-    // the z layout must not lose or duplicate rows
-    assert(Sources.readParquet(spark, s"$base/zorder").count() == li.count())
-    // a narrow range on each dimension: the z-clustered layout confines
-    // each to a bounded set of z ranges, the scattered one to none
-    for (f <- Seq($"l_partkey" >= 1000 && $"l_partkey" < 2000,
-                  $"l_suppkey" >= 100 && $"l_suppkey" < 150)) {
-      val z = scanRows(s"$base/zorder", f)
-      val scattered = scanRows(s"$base/scattered", f)
-      info(s"filter $f: zorder=$z scattered=$scattered")
-      assert(z < scattered / 2,
-        s"z-order should skip under $f: z=$z scattered=$scattered")
-    }
-  }
-
-  test("z-ordered write of an empty frame produces a readable empty layout") {
-    // Regression: min/max over an empty frame are NULL; the unboxing
-    // used to NPE opaquely instead of writing an empty layout.
-    val dir = tmp() + "/zorder_empty"
-    val empty = Tables.lineitem(spark, sfDir).filter($"l_orderkey" < 0)
-    Sources.writeZOrdered(empty, dir, "l_partkey", "l_suppkey", 4)
-    val back = Sources.readParquet(spark, dir)
-    assert(back.count() == 0)
-    assert(back.columns.contains("l_partkey")) // schema preserved
-  }
-
-  test("schema evolution: mergeSchema reconciles old and new file generations") {
-    val dir = tmp() + "/evolve"
-    val gen1 = nation.select($"n_nationkey", $"n_name")
-    val gen2 = nation.select($"n_nationkey", $"n_name", $"n_regionkey",
-      lit("v2").as("ingest_tag"))
-    gen1.write.parquet(s"$dir/g1")
-    gen2.write.parquet(s"$dir/g2")
-    val merged = Sources.readParquetEvolving(spark, s"$dir/{g1,g2}")
-    assert(merged.columns.toSet ==
-      Set("n_nationkey", "n_name", "n_regionkey", "ingest_tag"))
-    assert(merged.count() == nation.count() * 2)
-    // old-generation rows surface nulls for the added columns
-    assert(merged.filter($"ingest_tag".isNull).count() == nation.count())
-    assert(merged.filter($"ingest_tag" === "v2" && $"n_regionkey".isNotNull).count()
-      == nation.count())
-  }
-
-  test("partitioned parquet write prunes directories on read") {
-    val dir = tmp() + "/part"
-    Sources.write(nation, dir, "parquet", partitionByCols = Seq("n_regionkey"))
-    val subdirs = new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(subdirs.count(_.startsWith("n_regionkey=")) == 5)
-    val one = Sources.readParquet(spark, dir).filter($"n_regionkey" === 2)
-    // partition pruning: only the matching directory is scanned
-    val scanned = one.queryExecution.executedPlan.toString
-    assert(one.count() == nation.filter($"n_regionkey" === 2).count())
-    assert(scanned.contains("PartitionFilters: [isnotnull(n_regionkey"), scanned)
-  }
-
-  test("tolerant json ingest quarantines corrupt lines instead of failing") {
-    val dir = tmp()
-    val good = """{"n_nationkey": 7, "n_name": "GERMANY"}"""
-    val bad = """{"n_nationkey": oops not json"""
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "part-0.json"),
-      java.util.Arrays.asList(good, bad, good))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_nationkey",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_name",
-        org.apache.spark.sql.types.StringType)))
-    // materialize once: Spark disallows queries that prune down to the
-    // corrupt column alone on a raw file read (QUERY_ONLY_CORRUPT_RECORD_COLUMN)
-    val rows = Sources.readJsonLinesTolerant(spark, dir, schema).collect()
-    assert(rows.length == 3, "corrupt rows must be kept, not dropped")
-    val (rejects, parsed) = rows.partition(r => !r.isNullAt(2))
-    assert(rejects.length == 1)
-    // the raw line is quarantined verbatim for rerouting/debugging
-    assert(rejects.head.getString(2) == bad)
-    assert(parsed.length == 2 && parsed.forall(_.getLong(0) == 7L))
-  }
-
-  test("dynamic partition pruning: a dim filter prunes fact partitions at runtime") {
-    // the partitioned-layout analog of q24's bloom filter: when the
-    // fact table is hive-partitioned on the join key and the dimension
-    // side carries a selective filter, Catalyst plants a
-    // dynamicpruningexpression in the fact scan's PartitionFilters —
-    // at 100 TB only the matching partition directories are listed and
-    // read, before any row is scanned. The pruning subquery reuses the
-    // dimension join's broadcast, so it costs nothing extra.
-    val dir = tmp() + "/orders_by_status"
-    Sources.write(Tables.orders(spark, sfDir), dir, "parquet",
-      partitionByCols = Seq("o_orderstatus"))
-    val fact = Sources.readParquet(spark, dir)
-    // the dim side must carry an actual selective Filter — that filter
-    // is what DPP propagates across the join onto the partition column.
-    // A literal in-memory dim won't do: ConvertToLocalRelation folds
-    // the filter away before PartitionPruning sees it, so the dim must
-    // be file-backed like any real dimension table.
-    val dimDir = tmp() + "/status_dim"
-    Sources.write(
-      Seq(("F", "finished"), ("O", "open"), ("P", "pending")).toDF("status", "label"),
-      dimDir, "parquet")
-    val dim = Sources.readParquet(spark, dimDir).filter($"label" === "finished")
-    val joined = fact.join(dim, $"o_orderstatus" === $"status")
-      .groupBy($"label").agg(count(lit(1)).as("n"))
-    val p = joined.queryExecution.executedPlan.toString
-    assert(p.contains("dynamicpruningexpression"), p)
-    val expected = Tables.orders(spark, sfDir)
-      .filter($"o_orderstatus" === "F").count()
-    assert(joined.collect().map(r => r.getLong(1)).toSeq == Seq(expected))
-  }
 
   test("WARC/WET: encode→parse round-trips; per-record gzip members range-read independently") {
     import graft.sources.Warc
