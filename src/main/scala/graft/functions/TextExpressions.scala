@@ -3,10 +3,10 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Lower, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Generator, GenericInternalRow, Lower, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass tokenization kernels.
@@ -44,6 +44,13 @@ object TextFunctions {
     * [[WordTokens]]). Tokens that trim to nothing stay as `""`. */
   def wordTokens(c: Column): Column =
     ColumnBridge.column(WordTokens(ColumnBridge.expression(c)))
+
+  /** Generator of `(word string, cnt long)` rows: each word's count
+    * over the rows a task read, counted inside the tokenizer (see
+    * [[WordCounts]]). A word may come out more than once per task, so
+    * sum `cnt` per word. Must be the only item of its select. */
+  def wordCounts(c: Column): Column =
+    ColumnBridge.column(WordCounts(ColumnBridge.expression(c)))
 
   def tokenBigrams(c: Column): Column =
     ColumnBridge.column(TokenBigrams(ColumnBridge.expression(c)))
@@ -166,29 +173,16 @@ case class TokenSetCounts(child: Expression, sets: Seq[Seq[String]])
   * `explode(split(t, "\\s+"))` → `regexp_replace(_, TrimPattern, "")`
   * → `lower`, with the same output token for token (bar the empty
   * tokens `split` makes of leading and trailing whitespace, which the
-  * word-count filter drops either way):
-  *  - an all-ASCII token is byte-trimmed of the cutset and A–Z folded;
-  *    on ASCII the regex is exactly a trim of both ends (its only
-  *    line terminators, `\n` and `\r`, split tokens) and `lower` only
-  *    maps A–Z;
-  *  - a token with any byte ≥ 0x80 takes the chain itself: the Java
-  *    regex on the decoded token, then Spark's own `Lower`. That keeps
-  *    the corners a byte rule would miss — `$` matching before a final
-  *    U+0085/U+2028/U+2029, ICU case mapping (final sigma, `İ`),
-  *    U+FFFD for invalid UTF-8 (the decode stops at the ASCII
-  *    whitespace around a token, so per-token decoding equals the
-  *    chain's whole-text decode).
+  * word-count filter drops either way). Each token goes through
+  * [[WordTokens.Rule]], the word-count token rule [[WordCounts]] shares.
   *
   * Not a `CodegenFallback`: generated code calls [[tokens]], the same
   * body interpreted `eval` runs, so the `Generate` that explodes it
-  * fuses into one whole-stage-codegen loop with the scan, the
-  * drop-empty `Filter` and the partial count. */
+  * fuses into one whole-stage-codegen loop with the scan and whatever
+  * consumes the tokens. */
 case class WordTokens(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "graft_word_tokens"
-
-  @transient private lazy val trim = java.util.regex.Pattern.compile(WordTokens.TrimPattern)
-  @transient private lazy val lower = Lower(BoundReference(0, StringType, nullable = false))
 
   override protected def nullSafeEval(v: Any): Any = tokens(v.asInstanceOf[UTF8String])
 
@@ -200,15 +194,11 @@ case class WordTokens(child: Expression) extends UnaryExpression {
   /** The kernel: every token of `text`, trimmed and lowercased. */
   def tokens(text: UTF8String): ArrayData = {
     val bytes = text.getBytes
+    val rule = new WordTokens.Rule
     val out = new scala.collection.mutable.ArrayBuffer[Any]
     Tokenize.foreachToken(bytes) { (start, end) =>
-      var i = start
-      while (i < end && bytes(i) >= 0) i += 1
-      out += (if (i == end) WordTokens.trimFoldAscii(bytes, start, end) else {
-        val t = trim.matcher(UTF8String.fromBytes(bytes, start, end - start).toString)
-          .replaceAll("")
-        lower.eval(InternalRow(UTF8String.fromString(t))).asInstanceOf[UTF8String]
-      })
+      val n = rule(bytes, start, end)
+      out += UTF8String.fromBytes(java.util.Arrays.copyOf(rule.word, n))
     }
     new GenericArrayData(out.toArray)
   }
@@ -220,27 +210,193 @@ object WordTokens {
   /** Java-regex equivalent of Go `strings.Trim(w, ".,!?\"':;()")` —
     * strips leading+trailing runs of the cutset (one `regexp_replace`
     * removes every match, so one pattern handles both ends). The
-    * kernel's non-ASCII path, and the oracle its specs compare against. */
+    * rule's non-ASCII path, and the oracle its specs compare against. */
   val TrimPattern = "^[.,!?\"':;()]+|[.,!?\"':;()]+$"
+
+  private val trim = java.util.regex.Pattern.compile(TrimPattern)
+  private val lower = Lower(BoundReference(0, StringType, nullable = false))
 
   /** The cutset `.,!?"':;()`; takes a UTF-8 byte or a UTF-16 char. */
   @inline def isCut(c: Int): Boolean =
     c == '.' || c == ',' || c == '!' || c == '?' || c == '"' ||
       c == '\'' || c == ':' || c == ';' || c == '(' || c == ')'
 
-  private def trimFoldAscii(bytes: Array[Byte], start: Int, end: Int): UTF8String = {
-    var s = start
-    var e = end
-    while (s < e && isCut(bytes(s))) s += 1
-    while (e > s && isCut(bytes(e - 1))) e -= 1
-    val buf = new Array[Byte](e - s)
-    var i = 0
-    while (i < buf.length) {
-      val b = bytes(s + i)
-      buf(i) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
-      i += 1
+  /** The word-count token rule, one whitespace token at a time:
+    *  - an all-ASCII token is byte-trimmed of the cutset and A–Z folded;
+    *    on ASCII the regex is exactly a trim of both ends (its only
+    *    line terminators, `\n` and `\r`, split tokens) and `lower` only
+    *    maps A–Z;
+    *  - a token with any byte ≥ 0x80 takes the chain itself: the Java
+    *    regex on the decoded token, then Spark's own `Lower`. That keeps
+    *    the corners a byte rule would miss — `$` matching before a final
+    *    U+0085/U+2028/U+2029, ICU case mapping (final sigma, `İ`),
+    *    U+FFFD for invalid UTF-8 (the decode stops at the ASCII
+    *    whitespace around a token, so per-token decoding equals the
+    *    chain's whole-text decode).
+    *
+    * The ASCII path writes into a buffer the rule reuses, so it
+    * allocates nothing per token; a rule is for one thread. */
+  final class Rule {
+    private var buf = new Array[Byte](64)
+
+    /** The last word's bytes are `word[0, n)`, `n` the last result;
+      * the next call overwrites them. */
+    var word: Array[Byte] = buf
+
+    /** Trims and lowercases the token `bytes[start, end)`; returns the
+      * word's length, 0 for a token of cutset bytes only. */
+    def apply(bytes: Array[Byte], start: Int, end: Int): Int = {
+      var s = start
+      while (s < end && isCut(bytes(s))) s += 1
+      if (end - s > buf.length) buf = new Array[Byte](math.max(end - s, buf.length * 2))
+      // copy and fold in one pass; the cutset and A-Z are ASCII, so a
+      // trailing trim of the folded copy trims the token
+      var n = 0
+      while (s + n < end && bytes(s + n) >= 0) {
+        val b = bytes(s + n)
+        buf(n) = if (b >= 'A' && b <= 'Z') (b + 32).toByte else b
+        n += 1
+      }
+      if (s + n == end) {
+        while (n > 0 && isCut(buf(n - 1))) n -= 1
+        word = buf
+        n
+      } else {
+        val t = trim.matcher(UTF8String.fromBytes(bytes, start, end - start).toString)
+          .replaceAll("")
+        word = lower.eval(InternalRow(UTF8String.fromString(t))).asInstanceOf[UTF8String].getBytes
+        word.length
+      }
     }
-    UTF8String.fromBytes(buf)
+  }
+}
+
+/** See [[TextFunctions.wordCounts]]: in-mapper combining (Lin & Dyer,
+  * *Data-Intensive Text Processing with MapReduce*, §3.1). A
+  * `Generator` with the Hive-UDTF lifecycle: `eval` adds a row's words
+  * to the task's table and emits nothing, `terminate` emits one
+  * `(word, cnt)` row per word the table holds. A table that reaches
+  * [[WordCounts.Cap]] words emits its rows from `eval` and starts over,
+  * so a task's memory is bounded for any vocabulary; the aggregate
+  * downstream merges a word emitted more than once.
+  *
+  * The table is open-addressed and keyed by the word's bytes: a word
+  * already in it costs a hash, a probe and an increment, with no
+  * allocation. Words follow [[WordTokens.Rule]]; empty words are
+  * dropped (the reference's drop-empty step).
+  *
+  * A `CodegenFallback`, so Spark runs its `Generate` interpreted,
+  * where `GenerateExec` calls `terminate` once per partition. Emitted
+  * rows carry no input column: `GenerateExec` would pair `terminate`'s
+  * rows with the last input row, so the kernel must be the only item of
+  * its select. */
+case class WordCounts(child: Expression)
+    extends UnaryExpression with Generator with CodegenFallback {
+  override def elementSchema: StructType = new StructType()
+    .add("word", StringType, nullable = false)
+    .add("cnt", LongType, nullable = false)
+  override def prettyName: String = "graft_word_counts"
+
+  @transient private lazy val rule = new WordTokens.Rule
+  @transient private var table: WordCounts.Table = _
+
+  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+    val v = child.eval(input)
+    if (v == null) return Nil
+    if (table == null) table = new WordCounts.Table
+    val bytes = v.asInstanceOf[UTF8String].getBytes
+    var flushed: Iterator[InternalRow] = Iterator.empty
+    Tokenize.foreachToken(bytes) { (start, end) =>
+      val n = rule(bytes, start, end)
+      if (n > 0 && table.add(rule.word, n) == WordCounts.Cap) {
+        val full = table
+        table = new WordCounts.Table
+        flushed ++= full.rows
+      }
+    }
+    flushed
+  }
+
+  override def terminate(): IterableOnce[InternalRow] = {
+    val t = table
+    table = null
+    if (t == null) Nil else t.rows
+  }
+
+  override protected def withNewChildInternal(c: Expression): WordCounts =
+    copy(child = c)
+}
+
+object WordCounts {
+  /** Words a table holds before it emits and starts over. */
+  val Cap: Int = 1 << 16
+
+  /** Open-addressed word → count table with linear probing. A slot
+    * holds a word's hash and its entry number; entries (word, count)
+    * sit in insertion order, so a probe reads one slot and the frequent
+    * words' entries stay close together. Slots are twice the entries
+    * (load ≤ 1/2), growing by doubling up to twice [[Cap]]. A task
+    * fills one table at a time and reads each filled one once. */
+  final class Table {
+    private var slots = new Array[Long](1024) // (hash << 32) | (entry + 1); 0 = empty
+    private var keys = new Array[Array[Byte]](512)
+    private var counts = new Array[Long](512)
+    private var size = 0
+
+    private def hash(w: Array[Byte], n: Int): Int = {
+      var h = 0x9747b28c
+      var i = 0
+      while (i < n) { h = (h ^ (w(i) & 0xff)) * 0x01000193; i += 1 }
+      h ^= h >>> 16; h *= 0x85ebca6b; h ^= h >>> 13
+      h
+    }
+
+    private def same(k: Array[Byte], w: Array[Byte], n: Int): Boolean = {
+      if (k.length != n) return false
+      var i = 0
+      while (i < n && k(i) == w(i)) i += 1
+      i == n
+    }
+
+    /** Counts one occurrence of the word `w[0, n)`; returns the number
+      * of distinct words held. */
+    def add(w: Array[Byte], n: Int): Int = {
+      val h = hash(w, n)
+      val mask = slots.length - 1
+      var i = h & mask
+      var slot = slots(i)
+      while (slot != 0) {
+        if ((slot >>> 32).toInt == h && same(keys(slot.toInt - 1), w, n)) {
+          counts(slot.toInt - 1) += 1
+          return size
+        }
+        i = (i + 1) & mask
+        slot = slots(i)
+      }
+      keys(size) = java.util.Arrays.copyOf(w, n)
+      counts(size) = 1
+      size += 1
+      slots(i) = (h.toLong << 32) | size
+      if (size == keys.length && size < Cap) grow()
+      size
+    }
+
+    private def grow(): Unit = {
+      val old = slots
+      slots = new Array[Long](old.length * 2)
+      val mask = slots.length - 1
+      for (slot <- old if slot != 0) {
+        var i = (slot >>> 32).toInt & mask
+        while (slots(i) != 0) i = (i + 1) & mask
+        slots(i) = slot
+      }
+      keys = java.util.Arrays.copyOf(keys, keys.length * 2)
+      counts = java.util.Arrays.copyOf(counts, counts.length * 2)
+    }
+
+    /** One `(word, cnt)` row per word held, made as it is read. */
+    def rows: Iterator[InternalRow] = Iterator.tabulate(size)(e =>
+      new GenericInternalRow(Array[Any](UTF8String.fromBytes(keys(e)), counts(e))))
   }
 }
 

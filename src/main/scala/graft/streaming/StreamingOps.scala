@@ -1106,18 +1106,6 @@ object StreamingOps {
       .orderBy($"event_type")
   }
 
-  /** Drain a streaming DataFrame through the in-memory sink and return
-    * the materialized table — the synchronous harness batch tests use.
-    *
-    * `statePartitions` sizes the stateful-operator parallelism for THIS
-    * query (it becomes the query's state-store count, fixed at first
-    * run): every state partition costs per-batch delta-file I/O across
-    * each operator's stores, so it should track expected state volume,
-    * not core count — measured on the stream-stream join at sf0.1:
-    * 32 partitions = 5.8 s, 8 partitions = 2.7 s for identical results.
-    * At 100 TB the same knob scales the other way (more partitions than
-    * cores). Scoped set/restore; Verify/Bench/tests run queries
-    * sequentially on the session. */
   /** Executed plan of the most recent [[runToMemory]] run (the last
     * micro-batch's physical plan) — written for EventsStreamingSpec's
     * plan-shape assertions, test-only by convention. */
@@ -1134,6 +1122,18 @@ object StreamingOps {
     * batches, not one). Test-only by convention. */
   @volatile private[graft] var lastNumBatches: Int = 0
 
+  /** Drain a streaming DataFrame through the in-memory sink and return
+    * the materialized table — the synchronous harness batch tests use.
+    *
+    * `statePartitions` sizes the stateful-operator parallelism for THIS
+    * query (it becomes the query's state-store count, fixed at first
+    * run): every state partition costs per-batch delta-file I/O across
+    * each operator's stores, so it should track expected state volume,
+    * not core count — measured on the stream-stream join at sf0.1:
+    * 32 partitions = 5.8 s, 8 partitions = 2.7 s for identical results.
+    * At 100 TB the same knob scales the other way (more partitions than
+    * cores). Scoped set/restore; Verify/Bench/tests run queries
+    * sequentially on the session. */
   def runToMemory(df: DataFrame, name: String,
                   outputMode: OutputMode = OutputMode.Append,
                   statePartitions: Option[Int] = None,

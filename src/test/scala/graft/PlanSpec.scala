@@ -27,29 +27,109 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
-  test("word count plans a map-side partial aggregate before the shuffle") {
-    val p = plan(WordCount.wordCount(Tables.documents(spark, sfDir)))
-    assert(p.contains("partial_count"), p)
+  test("word count counts in the tokenizer; a partial sum runs before the word shuffle") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Partial, Sum}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val df = WordCount.wordCount(Tables.documents(spark, sfDir))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    // the orderBy adds a range Exchange; the word grouping has one hash Exchange
+    val hashed = flattenPlan(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashed.size == 1 &&
+      hashed.head.outputPartitioning.asInstanceOf[HashPartitioning].expressions
+        .map(_.references.map(_.name).toSet) == Seq(Set("word")), p)
+    // beneath it: the partial sum, fed by the kernel's Generate
+    val mapSide = flattenPlan(hashed.head.child)
+    val partial = mapSide.collect {
+      case a: HashAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Partial && e.aggregateFunction.isInstanceOf[Sum]) => a
+    }
+    assert(partial.size == 1, p)
+    assert(flattenPlan(partial.head).exists {
+      case g: GenerateExec => g.generator.isInstanceOf[graft.functions.WordCounts]
+      case _ => false
+    }, s"the partial sum must read the kernel's rows: $p")
   }
 
-  test("word count tokenizes in one kernel pass; drop-empty Filter and partial_count stay") {
+  test("word count tokenizes and combines in one kernel: no regex, split or per-token rows") {
     import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, StringSplit}
     import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
     val df = WordCount.wordCount(Tables.documents(spark, sfDir))
     val nodes = flattenPlan(df.queryExecution.executedPlan)
     val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
-    assert(!exprs.exists(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[StringSplit]),
-      df.queryExecution.executedPlan.toString)
+    val p = df.queryExecution.executedPlan.toString
+    assert(!exprs.exists(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[StringSplit]), p)
+    // the kernel is the only tokenizer, and it runs once per row: no
+    // inferred Filter re-evaluates it
     val gens = nodes.collect { case g: GenerateExec => g }
-    assert(gens.size == 1 && gens.head.generator.children.head.isInstanceOf[graft.functions.WordTokens],
-      df.queryExecution.executedPlan.toString)
-    // the kernel runs once per row: no inferred Filter re-evaluates it
-    assert(exprs.count(_.isInstanceOf[graft.functions.WordTokens]) == 1)
-    assert(nodes.exists {
+    assert(gens.size == 1 && gens.head.generator.isInstanceOf[graft.functions.WordCounts], p)
+    assert(!exprs.exists(_.isInstanceOf[graft.functions.WordTokens]), p)
+    assert(exprs.count(_.isInstanceOf[graft.functions.WordCounts]) == 1, p)
+    // the Generate carries no input column (terminate's rows would pair
+    // with the last input row), and the kernel drops empty words itself
+    assert(gens.head.requiredChildOutput.isEmpty, p)
+    assert(!nodes.exists {
       case f: FilterExec => f.condition.references.exists(_.name == "word")
       case _ => false
-    }, "the drop-empty filter on word must stay in the plan")
-    assert(df.queryExecution.executedPlan.toString.contains("partial_count"))
+    }, s"no drop-empty Filter on word: $p")
+  }
+
+  test("WordCountMain plans one shuffle: one Exchange, by bucket id, the kernel before it") {
+    import org.apache.spark.sql.catalyst.expressions.{RegExpReplace, StringSplit}
+    import org.apache.spark.sql.catalyst.plans.physical.ShufflePartitionIdPassThrough
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SortExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommand
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val writes = new java.util.concurrent.LinkedBlockingQueue[QueryExecution]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.isInstanceOf[DataWritingCommand]) writes.put(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = tempDir("wcmain-plan")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/in.txt"),
+      "the quick brown fox\njumps over the lazy dog\n")
+    spark.listenerManager.register(listener)
+    val qe = try {
+      WordCountMain.main(Array(s"$dir/in.txt", s"$dir/out", "5"))
+      writes.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+    } finally spark.listenerManager.unregister(listener)
+    assert(qe != null, "WordCountMain's write reported no execution")
+    val nodes = flattenPlan(qe.executedPlan)
+    val p = qe.executedPlan.toString
+    assert(p.contains("isFinalPlan=true"), p)
+    val exprs = nodes.flatMap(_.expressions).flatMap(_.collect { case e => e })
+    assert(!exprs.exists(e => e.isInstanceOf[RegExpReplace] || e.isInstanceOf[StringSplit]), p)
+    assert(!exprs.exists(_.isInstanceOf[graft.functions.WordTokens]), p)
+    assert(exprs.count(_.isInstanceOf[graft.functions.WordCounts]) == 1, p)
+    val exchanges = nodes.collect { case e: Exchange => e }.distinct
+    assert(exchanges.size == 1, s"one shuffle, the reference's one barrier: $p")
+    exchanges.head.outputPartitioning match {
+      case ShufflePartitionIdPassThrough(id, n) =>
+        assert(n == 5 && id.references.map(_.name).toSet == Set("bucket"), p)
+      case other => fail(s"the Exchange must send bucket b to partition b, not $other: $p")
+    }
+    // map side: the kernel combines before the Exchange; reduce side:
+    // partial and final sums after it, with no second Exchange between
+    val mapSide = flattenPlan(exchanges.head.child)
+    assert(mapSide.exists {
+      case g: GenerateExec => g.generator.isInstanceOf[graft.functions.WordCounts]
+      case _ => false
+    }, p)
+    assert(!mapSide.exists(_.isInstanceOf[HashAggregateExec]), p)
+    assert(nodes.count(_.isInstanceOf[HashAggregateExec]) == 2, p)
+    // one per-partition sort, by (bucket, word): the write adds none
+    val sorts = nodes.collect { case s: SortExec => s }
+    assert(sorts.size == 1 && !sorts.head.global &&
+      sorts.head.sortOrder.map(_.child.references.map(_.name).toSet) == Seq(Set("bucket"), Set("word")), p)
   }
 
   test("global top-k compiles to TakeOrderedAndProject (no full sort)") {
@@ -602,30 +682,6 @@ class PlanSpec extends SparkSpec {
       assert(plan(df).contains("dynamicpruning"),
         s"$name: lists scan must carry a dynamic partition-pruning filter on cid")
     }
-  }
-
-  test("word count stays inside whole-stage codegen") {
-    // AQE finalizes the plan lazily; execute first, then inspect. The
-    // tokenizer's Generate, the drop-empty Filter and the partial count
-    // must run in ONE codegen stage: a CodegenFallback anywhere in the
-    // Generate keeps it out, behind an InputAdapter.
-    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
-    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
-    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-    val df = WordCount.wordCount(Tables.documents(spark, sfDir))
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("isFinalPlan=true"), p)
-    val stageOf = codegenStages(df.queryExecution.executedPlan)
-    def stages(pick: PartialFunction[SparkPlan, Boolean]): Set[Int] =
-      stageOf.collect { case (n, id) if pick.applyOrElse(n, (_: SparkPlan) => false) => id }.toSet
-    val gen = stages { case g: GenerateExec =>
-      g.generator.children.head.isInstanceOf[graft.functions.WordTokens] }
-    val filter = stages { case f: FilterExec => f.condition.references.exists(_.name == "word") }
-    val partial = stages { case a: HashAggregateExec => a.aggregateExpressions.exists(_.mode == Partial) }
-    assert(gen.size == 1, s"the tokenizer Generate must be fused: $p")
-    assert(filter == gen && partial == gen,
-      s"Generate in stage $gen, drop-empty Filter in $filter, partial count in $partial: $p")
   }
 
   test("WARC family: one binaryFile scan, map-side parse, the only Exchange is the contractual sort") {

@@ -47,9 +47,11 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("word-token kernel + drop-empty ≡ the split/regexp_replace/lower chain (incl. invalid UTF-8)") {
-    import org.apache.spark.sql.functions._
-    import graft.functions.{TextFunctions, WordTokens}
+  /** `(id, text)` rows that exercise every corner of the word-count
+    * token rule, as an RDD-backed frame: ConvertToLocalRelation would
+    * fold a Seq.toDF frame in the optimizer, and the kernels must run
+    * inside the plan. Ids from 0; one null text, id -1. */
+  private lazy val tokenFuzz: org.apache.spark.sql.DataFrame = {
     // the cutset, every Java `\s` byte, the non-ASCII line terminators
     // and spaces Java `\s` does not split on, the ICU case-mapping
     // corners (dotted I, final sigma, sharp s, Kelvin sign) and an emoji
@@ -68,17 +70,21 @@ class PropertySpec extends SparkSpec {
       .map(_.map(_.toByte).toArray)
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     assert(raw.count(b => !java.util.Arrays.equals(new String(b, utf8).getBytes(utf8), b)) > 100)
-    // RDD-backed frames: ConvertToLocalRelation would fold a Seq.toDF
-    // frame in the optimizer, and the kernel must run inside the plan
     val sc = spark.sparkContext
     val bin = sc.parallelize(raw.zipWithIndex.map { case (b, i) => (texts.size.toLong + i, b) }, 4)
       .toDF("id", "b")
     // the cast keeps the bytes as they are: invalid UTF-8 reaches the text column
     assert(bin.filter($"b".cast("string").cast("binary") =!= $"b").isEmpty)
-    val nullId = -1L
-    val df = sc.parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
-        (nullId -> (null: String)), 4).toDF("id", "text")
+    sc.parallelize(texts.zipWithIndex.map { case (t, i) => (i.toLong, t) } :+
+        (-1L -> (null: String)), 4).toDF("id", "text")
       .union(bin.select($"id", $"b".cast("string").as("text")))
+  }
+
+  test("word-token kernel + drop-empty ≡ the split/regexp_replace/lower chain (incl. invalid UTF-8)") {
+    import org.apache.spark.sql.functions._
+    import graft.functions.{TextFunctions, WordTokens}
+    val df = tokenFuzz
+    val nullId = -1L
 
     def perDoc(rows: Array[Row]): Map[Long, Seq[String]] =
       rows.toSeq.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) }
@@ -114,6 +120,37 @@ class PropertySpec extends SparkSpec {
     // both corners of the chain actually occur in the corpus
     assert(chain.values.flatten.exists(_.contains('\uFFFD')))
     assert(chain.values.flatten.exists(_.endsWith("\u0085")))
+  }
+
+  test("word-count kernel's rows, summed ≡ explode(word tokens) + drop-empty + count, also past its cap") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.{TextFunctions, WordCounts}
+    def summed(counts: DataFrame): Map[String, Long] =
+      counts.groupBy("word").agg(sum("cnt")).collect()
+        .map { case Row(w: String, c: Long) => w -> c }.toMap
+    def exploded(df: DataFrame): Map[String, Long] =
+      df.select(explode(TextFunctions.wordTokens($"text")).as("word"))
+        .filter($"word" =!= "").groupBy("word").count().collect()
+        .map { case Row(w: String, c: Long) => w -> c }.toMap
+    val fuzz = summed(WordCount.counts(tokenFuzz, "text"))
+    assert(fuzz == exploded(tokenFuzz))
+    // the corners occur: invalid UTF-8, a kept final NEL, and the empty
+    // words of cutset-only tokens never come out
+    assert(fuzz.keys.exists(_.contains('\uFFFD')) && fuzz.keys.exists(_.endsWith("\u0085")))
+    assert(!fuzz.contains(""))
+    // one task with more distinct words than the cap: the table emits
+    // mid-task and starts over, and words seen on both sides of the
+    // flush come out twice
+    val distinct = WordCounts.Cap + 5000
+    val words = (0 until distinct).map(i => s"(W$i.") ++ (0 until 100).map(i => s"w$i")
+    val big = spark.sparkContext.parallelize(words.grouped(1000).map(_.mkString(" ")).toSeq, 1)
+      .toDF("text")
+    val raw = WordCount.counts(big, "text").collect()
+    assert(raw.length == distinct + 100, "the kernel must flush once the table holds Cap words")
+    val expected = (0 until distinct).map(i => s"w$i" -> (if (i < 100) 2L else 1L)).toMap
+    assert(summed(WordCount.counts(big, "text")) == expected)
+    assert(exploded(big) == expected)
   }
 
   test("fnv1a64 is a left fold: hashing a concatenation continues the state") {

@@ -47,7 +47,7 @@ class WordCountSpec extends SparkSpec {
       "/root/reference/pg-being_ernest.txt",
       "/root/reference/pg-dorian_gray.txt",
       "/root/reference/pg-frankenstein.txt")
-    val wc = WordCount.wordCountText(lines).cache()
+    val wc = WordCount.wordCount(lines.withColumnRenamed("value", "text")).cache()
     val distinct = wc.count()
     val total = wc.agg(org.apache.spark.sql.functions.sum($"cnt")).as[Long].head()
     val counts = wc.filter($"word".isin("the", "and", "of", "to", "a")).collect()
