@@ -13,10 +13,9 @@ object Probe {
       |  streamprofile [partitions] [provider]
       |                                     per-batch progress of the stream-stream join
       |  plans <query>...                   formatted physical plans
-      |  plansmd                            regenerate PLANS.md
       |  ivfserve                           IVF artifact build vs serve times""".stripMargin
 
-  private val modes = Set("jobs", "streamprofile", "plans", "plansmd", "ivfserve")
+  private val modes = Set("jobs", "streamprofile", "plans", "ivfserve")
 
   def main(args: Array[String]): Unit = {
     if (args.length < 2 || !modes(args(1))) {
@@ -35,7 +34,6 @@ object Probe {
         println(s"===== $q =====")
         SparkEntry.queries(q)(spark, dir).explain("formatted")
       }
-      case "plansmd" => plansMd(spark, dir)
       case "ivfserve" => ivfServe(spark, dir)
     } finally spark.stop()
   }
@@ -132,78 +130,5 @@ object Probe {
         .write.format("noop").mode("overwrite").save())
       println(f"ivf_serve_$i%d_sec=$serveSec%.3f")
     }
-  }
-
-  /** Regenerate PLANS.md. ann_ivf_topk is excluded: its
-    * NearestCentroids kernel embeds the centroid vectors as literals,
-    * which the plan printer dumps in full (~MBs). Its zero-corpus-
-    * Exchange property is asserted in PlanSpec instead. dd_incremental
-    * (bloom-filter literal), dd_semantic (centroid literals) and the PQ
-    * pair ann_pq_topk/ann_ivf_pq (16×256 codebook literals) are
-    * excluded for the same reason; their shapes are asserted in
-    * PlanSpec/DedupSpec. */
-  private def plansMd(spark: SparkSession, dir: String): Unit = {
-    val queries = Seq("wc_wordcount", "q1_pricing", "q3_join_broadcast",
-      "q5_star_join", "q8_window_topk", "q23_window_features",
-      "q24_bloom_prune",
-      "dd_minhash_lsh", "dd_clusters", "ann_lsh_topk",
-      "tx_bigrams", "tx_pack", "tx_stratified", "ev_interval_join",
-      "pipe_e2e", "tx_tfidf", "tx_repetition", "tx_contamination",
-      "tx_lm_score", "dd_segments", "tx_mixture", "tx_compress",
-      "tx_gopher", "tx_pii", "pipe_datacard", "mm_phash_dup",
-      "dd_cdc", "dd_incremental_fuzzy", "tx_bm25",
-      "tx_gopher_rep", "tx_quality_lr", "tx_source_cap", "tx_dsir",
-      "pipe_select", "pipe_merge", "dd_spans", "tx_rrf",
-      "dd_source_overlap", "ev_retention", "dd_span_stats", "tx_ccnet",
-      "tx_rrf_ann", "dd_excise", "dd_source_overlap_mh", "ev_anomaly",
-      "ev_rfm", "ev_paths", "pipe_curriculum", "dd_containment",
-      "dd_lsh_containment", "q25_lateral", "ev_gapfill",
-      "dd_spans_incremental",
-      "ev_stickiness", "tx_lang_audit", "mm_resize", "dd_idx_containment",
-      "pipe_index", "ev_variant", "mm_media_meta", "mm_frame_sample",
-      // the binaryFile lake twin of mm_media_meta, and persisted-IVF
-      // serving + append-grown serving (centroid literals are ≤ 16
-      // cells here — safe for the printer, unlike ann_ivf_topk's corpus)
-      "mm_files_meta", "pipe_ivf_serve", "pipe_ivf_append",
-      "pipe_ivf_sq8_serve",
-      // serving THROUGH the version manifest, and the retention-GC
-      // lifecycle, which serves through the same manifest helper
-      "pipe_ivf_reserve", "pipe_ivf_gc",
-      // the crawl-container family — binaryFile scan, map-side
-      // parse/decode/extract, one Exchange (the contractual sort);
-      // revisit resolution adds the family's one real join
-      "src_warc", "src_warc_html", "snk_wet_roundtrip", "src_warc_revisit",
-      "src_warc_cdx", "src_warc_fetch", "src_warc_serve", "src_warc_wat",
-      "pipe_crawl_e2e",
-      // the compliance plane — directive parse + the corpus × rules
-      // longest-match join; the bucket-sharded frontier twin (its two
-      // bounded windows and the counts join-back must show, not a
-      // single-host sort); the governance rollup
-      "src_warc_robots", "pipe_robots_filter", "pipe_fetch_schedule",
-      "pipe_fetch_schedule_sharded", "pipe_robots_audit",
-      // the discovery walk and its freshness-ranked politeness
-      // composition
-      "src_sitemap_urls", "pipe_sitemap_schedule")
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of headline queries (sf0.001)\n\n")
-    sb.append("Generated by `sbt \"runMain graft.Probe <sfDir> plansmd\"`. What to\n")
-    sb.append("look for: `PushedFilters`/`ReadSchema` at every parquet scan,\n")
-    sb.append("`HashAggregate(partial_*)` before each `Exchange`, explicit\n")
-    sb.append("`BroadcastHashJoin BuildRight` on dimension joins,\n")
-    sb.append("`WindowGroupLimit` under ranking filters, and no\n")
-    sb.append("`BroadcastNestedLoopJoin`/`CartesianProduct` anywhere.\n")
-    sb.append("NOTE: these are STATIC plans — AQE exchange reuse (dd_spans,\n")
-    sb.append("dd_source_overlap, tx_tfidf, tx_bm25) materializes only at\n")
-    sb.append("runtime, so a shared subtree prints twice here; the\n")
-    sb.append("single-scan/ReusedExchange property is pinned on EXECUTED\n")
-    sb.append("plans in PlanSpec.\n")
-    queries.foreach { q =>
-      val df = SparkEntry.queries(q)(spark, dir)
-      val formatted = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      sb.append(s"\n## $q\n\n```\n$formatted```\n")
-    }
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${queries.size} plans)")
   }
 }

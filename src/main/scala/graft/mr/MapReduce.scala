@@ -117,12 +117,9 @@ object MapReduce {
     * reference's `mr-out-*` contract (`worker.go:216-239`). */
   def run[B: scala.reflect.ClassTag](
       spark: SparkSession, docs: Dataset[(String, String)],
-      mapper: Mapper, reducer: Reducer[B],
-      numPartitions: Option[Int] = None): DataFrame = {
+      mapper: Mapper, reducer: Reducer[B]): DataFrame = {
     import spark.implicits._
-    val pairs = docs.flatMap { case (name, contents) => mapper.map(name, contents) }
-    val shuffled = numPartitions.fold(pairs)(n => pairs.repartition(n, $"_1"))
-    shuffled
+    docs.flatMap { case (name, contents) => mapper.map(name, contents) }
       .groupByKey(_._1)
       .agg(toAggregator(reducer).toColumn.name("value"))
       .toDF("key", "value")

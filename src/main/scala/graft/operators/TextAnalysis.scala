@@ -587,11 +587,12 @@ object TextAnalysis {
     // explode_outer, not explode: InferFiltersFromGenerate only fires
     // for INNER explodes, and the null/size guards it infers duplicate
     // the TokenNgrams call into the pushed-down Filter — 3 kernel
-    // evals per row (PLANS.md r7 showed exactly that). The outer
-    // variant emits one null-gram row for empty/null gram arrays; the
-    // post-filter on the GENERATED attribute is a cheap null check
-    // that restores inner-explode semantics (real n-grams are never
-    // null), and the kernel runs once per row in the lower Project.
+    // evals per row (a round-7 plan dump showed exactly that; PlanSpec
+    // pins one eval per side). The outer variant emits one null-gram
+    // row for empty/null gram arrays; the post-filter on the GENERATED
+    // attribute is a cheap null check that restores inner-explode
+    // semantics (real n-grams are never null), and the kernel runs once
+    // per row in the lower Project.
     val bench = docs.filter($"hb" >= benchFrom)
       .select(explode_outer($"grams").as("gram"))
       .filter($"gram".isNotNull).distinct()

@@ -357,8 +357,7 @@ object StreamingOps {
       sum(col("n_tokens")).as("n_tokens"),
       round(avg(col("quality")), 4).as("mean_quality"),
       sum(col("gopher_keep")).as("n_keep"))
-    runToMemory(agg, "tx_stream_quality_q", OutputMode.Complete,
-      statePartitions = Some(8))
+    runToMemory(agg, "tx_stream_quality_q", OutputMode.Complete)
       .orderBy(col("source"))
   }
 
@@ -392,8 +391,7 @@ object StreamingOps {
       sum(col("n_bytes")).as("total_bytes"),
       sum(col("data_sum")).as("total_data_sum"),
       sum(col("data_wsum")).as("total_data_wsum"))
-    runToMemory(agg, "mm_stream_meta_q", OutputMode.Complete,
-      statePartitions = Some(8))
+    runToMemory(agg, "mm_stream_meta_q", OutputMode.Complete)
       .orderBy(col("kind"), col("format"))
   }
 
@@ -816,8 +814,7 @@ object StreamingOps {
         (floor(col("r.llr") * 10000.0) / 10000.0).as("dsir_weight"))
       .filter(col("n_tokens") > 0L)
       .withColumn("keep", when(col("dsir_weight") > 0.0, 1L).otherwise(0L))
-    runToMemory(scored, "tx_stream_dsir_q", OutputMode.Append,
-      statePartitions = Some(8))
+    runToMemory(scored, "tx_stream_dsir_q", OutputMode.Append)
       .orderBy(col("doc_id"))
   }
 
@@ -841,8 +838,7 @@ object StreamingOps {
           batch.filter(!might).unionByName(
             batch.filter(might).join(history, Seq("digest"), "left_anti"))
       }
-    runToMemory(survivors, "ev_stream_incr_dedup_q", OutputMode.Append,
-      statePartitions = Some(8))
+    runToMemory(survivors, "ev_stream_incr_dedup_q", OutputMode.Append)
       .orderBy(col("doc_id"))
   }
 
@@ -876,8 +872,7 @@ object StreamingOps {
       .filter(col("gram").isNotNull)
     val marked = batch.join(historyGrams, Seq("gram"))
       .select(col("doc_id"), col("n_grams"), col("pos"))
-    val mem = runToMemory(marked, "dd_stream_spans_q", OutputMode.Append,
-      statePartitions = Some(8))
+    val mem = runToMemory(marked, "dd_stream_spans_q", OutputMode.Append)
     val w = org.apache.spark.sql.expressions.Window
     val byPos = w.partitionBy(col("doc_id")).orderBy(col("pos"))
     mem
@@ -898,7 +893,7 @@ object StreamingOps {
   def tumblingViaStream(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedDir(s, dir)
     val mem = runToMemory(tumblingCounts(eventsStream(s, staged)),
-      "ev_stream_tumbling_q", OutputMode.Complete, statePartitions = Some(8))
+      "ev_stream_tumbling_q", OutputMode.Complete)
     mem.select(
         unix_timestamp(col("win_start")).as("win_start_s"),
         col("event_type"), col("n"), round(col("total"), 2).as("total"))
@@ -915,7 +910,7 @@ object StreamingOps {
   def sessionViaStream(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedDir(s, dir)
     val mem = runToMemory(sessionWindows(eventsStream(s, staged)),
-      "ev_stream_session_q", OutputMode.Complete, statePartitions = Some(8))
+      "ev_stream_session_q", OutputMode.Complete)
     mem.select(
         col("user_id"),
         unix_timestamp(col("session_start")).as("session_start_s"),
@@ -932,17 +927,15 @@ object StreamingOps {
     * yields the complete batch-equivalent result the oracle checks. */
   def joinViaStream(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedDir(s, dir)
-    // statePartitions 2, not the family's 8 (r22): the stream-stream
-    // join runs FOUR state stores per partition per side-pair
-    // (keyToNumValues / keyWithIndexToValue × left/right — 32 store
-    // instances at 8 partitions), so its per-batch fixed cost is 4×
-    // any single-operator stream's at the same partition count.
+    // The stream-stream join runs FOUR state stores per partition per
+    // side-pair (keyToNumValues / keyWithIndexToValue × left/right — 32
+    // store instances at 8 partitions), so its per-batch fixed cost is
+    // 4× any single-operator stream's at the same partition count.
     // Measured on this fixture (probe, steady-state wall): 32 → 8.1 s,
-    // 16 → 4.2, 8 → 3.6, 4 → 3.0, 2 → 2.7, 1 → 3.0. Same
-    // state-volume-not-core-count rule documented on runToMemory; at
-    // 100 TB the knob scales the other way.
+    // 16 → 4.2, 8 → 3.6, 4 → 3.0, 2 → 2.7, 1 → 3.0 — the evidence for
+    // runToMemory's floor of 2 state partitions.
     val mem = runToMemory(purchaseClickJoin(eventsStream(s, staged)),
-      "ev_stream_join_q", OutputMode.Append, statePartitions = Some(2))
+      "ev_stream_join_q", OutputMode.Append)
     mem.select(
         col("user_id"), col("purchase_id"), col("click_id"),
         unix_timestamp(col("p_ts")).as("p_ts_s"),
@@ -961,7 +954,7 @@ object StreamingOps {
     val stream = eventsStream(s, staged)
       .select($"user_id", $"ts", $"value").as[UserEvent]
     val mem = runToMemory(runningTotals(s, stream).toDF(),
-      "ev_stream_running_q", OutputMode.Update, statePartitions = Some(8))
+      "ev_stream_running_q", OutputMode.Update)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"user_id").orderBy($"n_events".desc)
     mem.withColumn("rk", row_number().over(w)).filter($"rk" === 1)
@@ -982,7 +975,7 @@ object StreamingOps {
     val stream = eventsStream(s, staged)
       .select($"user_id", $"ts", $"value").as[UserEvent]
     val mem = runToMemory(retentionCells(s, stream).toDF(),
-      "ev_stream_retention_q", OutputMode.Update, statePartitions = Some(8))
+      "ev_stream_retention_q", OutputMode.Update)
     mem.select($"cohort_day_s", $"offset_days", $"user_id").distinct()
       .groupBy($"cohort_day_s", $"offset_days")
       .agg(count(lit(1)).as("n_users"))
@@ -999,7 +992,7 @@ object StreamingOps {
     val stream = eventsStream(s, staged)
       .select($"user_id", $"event_id", $"ts", $"event_type").as[PathEvent]
     val mem = runToMemory(pathHits(s, stream).toDF(),
-      "ev_stream_paths_q", OutputMode.Update, statePartitions = Some(8))
+      "ev_stream_paths_q", OutputMode.Update)
     mem.groupBy($"path").agg(count(lit(1)).as("n"))
       .orderBy($"n".desc, $"path")
       .limit(10)
@@ -1018,7 +1011,7 @@ object StreamingOps {
     val stream = eventsStream(s, staged)
       .select($"user_id", $"ts", $"value").as[UserEvent]
     val mem = runToMemory(runningTotalsTws(s, stream).toDF(),
-      "ev_stream_tws_q", OutputMode.Update, statePartitions = Some(8),
+      "ev_stream_tws_q", OutputMode.Update,
       extraConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
     val w = org.apache.spark.sql.expressions.Window
@@ -1069,8 +1062,7 @@ object StreamingOps {
       .schema(s.read.parquet(staged).schema)
       .parquet(staged)
     val scored = graft.operators.Similarity.serveStreamScored(s, idx, probeStream, nProbe)
-    val mem = runToMemory(scored, "ann_stream_serve_q", OutputMode.Append,
-      statePartitions = Some(8))
+    val mem = runToMemory(scored, "ann_stream_serve_q", OutputMode.Append)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     mem.withColumn("rk", row_number().over(w).cast("long"))
@@ -1100,10 +1092,34 @@ object StreamingOps {
     val dupDir = dupStagedDir(s, dir)
     val deduped = runToMemory(
       streamingDedup(eventsStream(s, dupDir), Seq("event_id"), "10 days"),
-      "ev_stream_dedup_q", OutputMode.Append, statePartitions = Some(8))
+      "ev_stream_dedup_q", OutputMode.Append)
     deduped.groupBy($"event_type")
       .agg(count(lit(1)).as("n"), round(sum($"value"), 2).as("total"))
       .orderBy($"event_type")
+  }
+
+  /** A stream's shuffle (and so state) partitions: one per
+    * `advisoryBytes` of input, at least 2, at most `cap`. */
+  private[graft] def shufflePartitionsFor(inputBytes: Long, advisoryBytes: Long,
+                                          cap: Int): Int =
+    math.min(cap.toLong, math.max(2L, (inputBytes - 1) / advisoryBytes + 1)).toInt
+
+  /** Bytes of the files under a stream's file sources: every
+    * file-format `StreamingRelation` in its analyzed plan, its path
+    * globbed and summed recursively. Other sources count 0. */
+  private[graft] def fileSourceBytes(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.FileFormat
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val hadoopConf = df.sparkSession.sparkContext.hadoopConfiguration
+    df.queryExecution.analyzed.collect {
+      case StreamingRelation(ds, _, _) if classOf[FileFormat].isAssignableFrom(ds.providingClass) =>
+        // DataStreamReader.load(path) passes the path as an option
+        ds.options.get("path").fold(0L) { p =>
+          val path = new org.apache.hadoop.fs.Path(p)
+          val fs = path.getFileSystem(hadoopConf)
+          Option(fs.globStatus(path)).fold(0L)(_.map(st => fs.getContentSummary(st.getPath).getLength).sum)
+        }
+    }.sum
   }
 
   /** Executed plan of the most recent [[runToMemory]] run (the last
@@ -1125,22 +1141,29 @@ object StreamingOps {
   /** Drain a streaming DataFrame through the in-memory sink and return
     * the materialized table — the synchronous harness batch tests use.
     *
-    * `statePartitions` sizes the stateful-operator parallelism for THIS
-    * query (it becomes the query's state-store count, fixed at first
-    * run): every state partition costs per-batch delta-file I/O across
-    * each operator's stores, so it should track expected state volume,
-    * not core count — measured on the stream-stream join at sf0.1:
-    * 32 partitions = 5.8 s, 8 partitions = 2.7 s for identical results.
-    * At 100 TB the same knob scales the other way (more partitions than
-    * cores). Scoped set/restore; Verify/Bench/tests run queries
-    * sequentially on the session. */
+    * The query's `spark.sql.shuffle.partitions`, which becomes its
+    * state-store count at first run, is derived from its input:
+    * one partition per `spark.sql.adaptive.advisoryPartitionSizeInBytes`
+    * of files under its file sources, at least 2 and at most the
+    * session's shuffle partitions ([[shufflePartitionsFor]]). Every
+    * state partition costs per-batch delta-file I/O across each
+    * operator's stores, so the count tracks state volume, not core
+    * count — measured on the stream-stream join at sf0.1: 32
+    * partitions = 5.8 s, 8 partitions = 2.7 s for identical results.
+    * At fixture size every stream gets the floor; at 100 TB the count
+    * grows with the input up to the deployment's shuffle partitions.
+    * Scoped set/restore; Verify/Bench/tests run queries sequentially
+    * on the session. */
   def runToMemory(df: DataFrame, name: String,
                   outputMode: OutputMode = OutputMode.Append,
-                  statePartitions: Option[Int] = None,
                   extraConfs: Map[String, String] = Map.empty): DataFrame = {
+    import org.apache.spark.sql.internal.SQLConf
     val spark = df.sparkSession
-    val confs = statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq ++
-      extraConfs
+    val conf = spark.sessionState.conf
+    val partitions = shufflePartitionsFor(fileSourceBytes(df),
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.getConf(SQLConf.SHUFFLE_PARTITIONS))
+    val confs = ("spark.sql.shuffle.partitions" -> partitions.toString) +: extraConfs.toSeq
     graft.GraftSession.withConfs(spark, confs: _*) {
       val q = df.writeStream
         .format("memory").queryName(name)

@@ -55,14 +55,6 @@ class MapReduceSpec extends SparkSpec {
       m.keys.toSeq.sorted)
   }
 
-  test("explicit nReduce partitioning is honored") {
-    val docs = Seq(("a", "x y z x")).toDS()
-    val result = MapReduce.run(spark, docs, WordCountMapper, WordCountReducer,
-      numPartitions = Some(3))
-    val m = result.collect().map { case Row(k: String, v: String) => k -> v }.toMap
-    assert(m == Map("x" -> "2", "y" -> "1", "z" -> "1"))
-  }
-
   test("custom reducer plugs in (max-length value fold)") {
     object LongestValue extends Reducer[String] {
       def zero = ""

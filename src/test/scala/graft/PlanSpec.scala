@@ -447,8 +447,8 @@ class PlanSpec extends SparkSpec {
   }
 
   test("contamination: one TokenNgrams eval per side, bench side broadcasts") {
-    // r7 PLANS.md caught InferFiltersFromGenerate duplicating the
-    // tokenization kernel into the pushed-down Filter's null/size
+    // A round-7 plan dump caught InferFiltersFromGenerate duplicating
+    // the tokenization kernel into the pushed-down Filter's null/size
     // guards — 3 evals per corpus row. The explode_outer restructure
     // keeps one kernel call per scan side (2 total: corpus + bench).
     val p = plan(graft.operators.TextAnalysis.contamination(spark, sfDir))

@@ -302,6 +302,31 @@ class RegistryCoverageSpec extends AnyFunSuite {
     assert(stale.isEmpty, s"allowlist names methods that are reached or gone: $stale")
   }
 
+  test("streams size their state from the input: no per-query shuffle partitions in StreamingOps") {
+    // Fourteen streams once passed fixture-sized state-partition counts
+    // (right at sf0.1, inverted at 100 TB); runToMemory now derives the
+    // count, and it is the one place StreamingOps may set it.
+    val path = java.nio.file.Paths.get("src/main/scala/graft/streaming/StreamingOps.scala")
+    val lines = java.nio.file.Files.readAllLines(path).asScala.toIndexedSeq
+    val at = (i: Int) => s"$path:${i + 1}: ${lines(i).trim}"
+    val literals = lines.indices.filter(i => lines(i).contains("statePartitions")).map(at)
+    assert(literals.isEmpty, s"per-query state partitions in StreamingOps: $literals")
+    // runToMemory spans its scaladoc through the brace closing its body
+    val defLine = lines.indexWhere(_.contains("def runToMemory("))
+    assert(defLine >= 0, s"$path has no runToMemory")
+    val docStart = lines.lastIndexWhere(_.trim.startsWith("/**"), defLine)
+    val bodyStart = lines.indexWhere(_.contains("{"), defLine)
+    var depth = 0
+    val bodyEnd = (bodyStart until lines.size).find { i =>
+      depth += lines(i).count(_ == '{') - lines(i).count(_ == '}')
+      depth == 0
+    }.getOrElse(lines.size - 1)
+    val outside = lines.indices
+      .filter(i => (i < docStart || i > bodyEnd) && lines(i).contains("spark.sql.shuffle.partitions"))
+      .map(at)
+    assert(outside.isEmpty, s"shuffle partitions set outside runToMemory: $outside")
+  }
+
   test("Probe runs registry queries and engine functions, never its own plan") {
     // Probe once timed ~30 inline copies of registry plans that drifted
     // from the code the registry runs. A table read or a Column-DSL
