@@ -119,7 +119,7 @@ object GraftSession {
     }
   }
 
-  def build(master: String, shufflePartitions: Int, appName: String = "graft"): SparkSession = {
+  def build(master: String, shufflePartitions: Int, appName: String): SparkSession = {
     var b = SparkSession.builder().master(withLocalRetries(master)).appName(appName)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
     (sqlConf ++ faultToleranceConf).foreach { case (k, v) => b = b.config(k, v) }

@@ -10,8 +10,8 @@ object Probe {
   private val usage =
     """usage: Probe <sfDir> <mode> [args]
       |  jobs <query>                       per-job wall time of one registry query
-      |  streamprofile [partitions] [provider]
-      |                                     per-batch progress of the stream-stream join
+      |  streamprofile [provider]           per-batch progress of the stream-stream join,
+      |                                     at the state partitions the registry runs
       |  plans <query>...                   formatted physical plans
       |  ivfserve                           IVF artifact build vs serve times""".stripMargin
 
@@ -28,8 +28,7 @@ object Probe {
     try args(1) match {
       case "jobs" => jobs(spark, dir, args.lift(2).getOrElse(
         sys.error("usage: Probe <dir> jobs <query>")))
-      case "streamprofile" => streamProfile(spark, dir, args.lift(2).getOrElse("8"),
-        args.lift(3))
+      case "streamprofile" => streamProfile(spark, dir, args.lift(2))
       case "plans" => args.drop(2).foreach { q =>
         println(s"===== $q =====")
         SparkEntry.queries(q)(spark, dir).explain("formatted")
@@ -85,18 +84,19 @@ object Probe {
     * (owned by `graft.Artifacts`) through a memory-sink drain and print
     * every batch's StreamingQueryProgress JSON — the durationMs /
     * stateOperators fields say whether the seconds go to state commits,
-    * offset-log I/O, or planning. */
-  private def streamProfile(spark: SparkSession, dir: String, parts: String,
-                            provider: Option[String]): Unit = {
+    * offset-log I/O, or planning. The join runs the state partitions
+    * `runToMemory` would give it; `provider` swaps the state store. */
+  private def streamProfile(spark: SparkSession, dir: String, provider: Option[String]): Unit = {
     val staged = streaming.StreamingOps.stagedDir(spark, dir)
-    val confs = Seq("spark.sql.shuffle.partitions" -> parts) ++
-      provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
     (1 to 3).foreach { rep =>
+      val joined = streaming.StreamingOps.purchaseClickJoin(
+        streaming.StreamingOps.eventsStream(spark, staged))
+      val confs = Seq("spark.sql.shuffle.partitions" ->
+        streaming.StreamingOps.streamShufflePartitions(joined).toString) ++
+        provider.map("spark.sql.streaming.stateStore.providerClass" -> _)
       GraftSession.withConfs(spark, confs: _*) {
         val t0 = System.nanoTime()
-        val q = streaming.StreamingOps.purchaseClickJoin(
-            streaming.StreamingOps.eventsStream(spark, staged))
-          .writeStream.format("memory").queryName(s"probe_sjoin_$rep")
+        val q = joined.writeStream.format("memory").queryName(s"probe_sjoin_$rep")
           .outputMode("append").start()
         try q.processAllAvailable() finally {
           val wall = (System.nanoTime() - t0) / 1e9

@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators._
+import graft.operators.Sampling.{HeldOutFrom, HistoryBelow, TrainBelow}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -1637,7 +1638,7 @@ object SparkEntry {
       // benchmark = the md5-bucket test split; word 4-grams via the
       // same tokenization as tx_bigrams
       "tx_contamination" ->
-        """WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |s AS (SELECT doc_id, text,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
@@ -1649,9 +1650,9 @@ object SparkEntry {
           |g AS (SELECT doc_id, hb, unnest(list_transform(range(1, len(toks) - 2),
           |    i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS gram
           |  FROM t),
-          |bench AS (SELECT DISTINCT gram FROM g WHERE hb >= 3891)
+          |bench AS (SELECT DISTINCT gram FROM g WHERE hb >= $HeldOutFrom)
           |SELECT g.doc_id, count(DISTINCT g.gram) AS n_hits
-          |FROM g JOIN bench USING (gram) WHERE g.hb < 3686
+          |FROM g JOIN bench USING (gram) WHERE g.hb < $TrainBelow
           |GROUP BY g.doc_id ORDER BY g.doc_id""".stripMargin,
       // add-one bigram LM; ln() for natural log, nll floor-truncated
       "tx_lm_score" ->
@@ -1677,7 +1678,7 @@ object SparkEntry {
       // buckets, same strpos hex expansion as the hb split); ln() for
       // natural log, weight floor-truncated once at the end
       "tx_dsir" ->
-        """WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |s AS (SELECT doc_id, text,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
@@ -1690,14 +1691,14 @@ object SparkEntry {
           |  (strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) * 16 +
           |  (strpos('0123456789abcdef', substr(md5(tok), 3, 1)) - 1) AS bucket FROM t),
           |lm AS (SELECT bucket,
-          |  CAST(sum(CASE WHEN hb >= 3891 THEN 1 ELSE 0 END) AS BIGINT) AS tgt,
-          |  CAST(sum(CASE WHEN hb < 3891 THEN 1 ELSE 0 END) AS BIGINT) AS src
+          |  CAST(sum(CASE WHEN hb >= $HeldOutFrom THEN 1 ELSE 0 END) AS BIGINT) AS tgt,
+          |  CAST(sum(CASE WHEN hb < $HeldOutFrom THEN 1 ELSE 0 END) AS BIGINT) AS src
           |  FROM b GROUP BY bucket),
           |tot AS (SELECT CAST(sum(tgt) AS DOUBLE) AS tt, CAST(sum(src) AS DOUBLE) AS st FROM lm),
           |sc AS (SELECT b.doc_id,
           |    ln(((CAST(lm.tgt AS DOUBLE) + 0.5) / ((SELECT tt FROM tot) + 0.5 * 4096)) /
           |       ((CAST(lm.src AS DOUBLE) + 0.5) / ((SELECT st FROM tot) + 0.5 * 4096))) AS llr
-          |  FROM b JOIN lm USING (bucket) WHERE b.hb < 3891),
+          |  FROM b JOIN lm USING (bucket) WHERE b.hb < $HeldOutFrom),
           |w AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
           |    floor(sum(llr) * 10000.0) / 10000.0 AS dsir_weight
           |  FROM sc GROUP BY doc_id)
@@ -1893,14 +1894,14 @@ object SparkEntry {
           |SELECT doc_id, lang, hash_bucket FROM b
           |WHERE hash_bucket < 256 ORDER BY doc_id""".stripMargin,
       "tx_split" ->
-        """WITH h AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH h AS (SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |b AS (SELECT doc_id,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
           |  (strpos('0123456789abcdef', substr(m, 3, 1)) - 1) AS hb
           |  FROM h)
           |SELECT doc_id,
-          |  CASE WHEN hb < 3686 THEN 'train' WHEN hb < 3891 THEN 'val'
+          |  CASE WHEN hb < $TrainBelow THEN 'train' WHEN hb < $HeldOutFrom THEN 'val'
           |       ELSE 'test' END AS split
           |FROM b ORDER BY doc_id""".stripMargin,
       "tx_stratified" ->
@@ -1948,16 +1949,16 @@ object SparkEntry {
       // history/batch split = the md5-bucket rule (tx_sample's hex
       // arithmetic); the bloom pre-filter is invisible to semantics
       "dd_incremental" ->
-        """WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |s AS (SELECT doc_id, text,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
           |  (strpos('0123456789abcdef', substr(m, 3, 1)) - 1) AS hb
           |  FROM m),
-          |hist AS (SELECT sha256(text) AS digest FROM s WHERE hb < 3277),
+          |hist AS (SELECT sha256(text) AS digest FROM s WHERE hb < $HistoryBelow),
           |bk AS (SELECT sha256(text) AS digest, min(doc_id) AS keep_id,
           |    count(*) AS n_copies
-          |  FROM s WHERE hb >= 3277 GROUP BY sha256(text))
+          |  FROM s WHERE hb >= $HistoryBelow GROUP BY sha256(text))
           |SELECT keep_id, digest, n_copies FROM bk
           |WHERE digest NOT IN (SELECT digest FROM hist)
           |ORDER BY keep_id""".stripMargin,
@@ -1965,15 +1966,15 @@ object SparkEntry {
       // (that is ev_stream_dedup's stateful concern) — survivors are
       // exactly the batch rows whose digest is absent from history
       "ev_stream_incr_dedup" ->
-        """WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |s AS (SELECT doc_id, text,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
           |  (strpos('0123456789abcdef', substr(m, 3, 1)) - 1) AS hb
           |  FROM m),
-          |hist AS (SELECT sha256(text) AS digest FROM s WHERE hb < 3277)
+          |hist AS (SELECT sha256(text) AS digest FROM s WHERE hb < $HistoryBelow)
           |SELECT doc_id, sha256(text) AS digest FROM s
-          |WHERE hb >= 3277 AND sha256(text) NOT IN (SELECT digest FROM hist)
+          |WHERE hb >= $HistoryBelow AND sha256(text) NOT IN (SELECT digest FROM hist)
           |ORDER BY doc_id""".stripMargin,
       // dd_excise's span CTE chain feeding tx_tfidf's scorer CTEs over
       // the kept tokens (concat_ws-then-resplit round-trips the kept
@@ -2106,14 +2107,14 @@ object SparkEntry {
            |  (strpos('0123456789abcdef', substr(md5(tok), 2, 1)) - 1) * 16 +
            |  (strpos('0123456789abcdef', substr(md5(tok), 3, 1)) - 1) AS bucket FROM dt),
            |dlm AS (SELECT bucket,
-           |  CAST(sum(CASE WHEN hb >= 3891 THEN 1 ELSE 0 END) AS BIGINT) AS tgt,
-           |  CAST(sum(CASE WHEN hb < 3891 THEN 1 ELSE 0 END) AS BIGINT) AS src
+           |  CAST(sum(CASE WHEN hb >= $HeldOutFrom THEN 1 ELSE 0 END) AS BIGINT) AS tgt,
+           |  CAST(sum(CASE WHEN hb < $HeldOutFrom THEN 1 ELSE 0 END) AS BIGINT) AS src
            |  FROM db GROUP BY bucket),
            |dtot AS (SELECT CAST(sum(tgt) AS DOUBLE) AS tt, CAST(sum(src) AS DOUBLE) AS st FROM dlm),
            |dsc AS (SELECT db.doc_id,
            |    ln(((CAST(dlm.tgt AS DOUBLE) + 0.5) / ((SELECT tt FROM dtot) + 0.5 * 4096)) /
            |       ((CAST(dlm.src AS DOUBLE) + 0.5) / ((SELECT st FROM dtot) + 0.5 * 4096))) AS llr
-           |  FROM db JOIN dlm USING (bucket) WHERE db.hb < 3891),
+           |  FROM db JOIN dlm USING (bucket) WHERE db.hb < $HeldOutFrom),
            |dwt AS (SELECT doc_id, floor(sum(llr) * 10000.0) / 10000.0 AS dsir_weight
            |  FROM dsc GROUP BY doc_id),
            |cand AS (SELECT qq.doc_id, qq.source, qq.quality, dwt.dsir_weight,
@@ -2320,7 +2321,7 @@ object SparkEntry {
       // as dd_spans, marking by history membership instead of
       // min≠max, split by the shared md5-bucket rule
       "dd_spans_incremental" ->
-        """WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
+        raw"""WITH m AS (SELECT doc_id, text, md5(CAST(doc_id AS VARCHAR)) AS m FROM documents),
           |sp AS (SELECT doc_id, text,
           |  (strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 256 +
           |  (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 16 +
@@ -2334,9 +2335,9 @@ object SparkEntry {
           |    unnest(list_transform(range(1, len(toks) - 2),
           |      i -> toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] || ' ' || toks[i+3])) AS gram
           |  FROM t),
-          |hist AS (SELECT DISTINCT gram FROM g WHERE hb < 3277),
+          |hist AS (SELECT DISTINCT gram FROM g WHERE hb < $HistoryBelow),
           |d AS (SELECT doc_id, pos, n_toks FROM g
-          |  WHERE hb >= 3277 AND gram IN (SELECT gram FROM hist)),
+          |  WHERE hb >= $HistoryBelow AND gram IN (SELECT gram FROM hist)),
           |i AS (SELECT doc_id, pos, n_toks,
           |    CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 4
           |      THEN 0 ELSE 1 END AS brk
@@ -2560,7 +2561,7 @@ object SparkEntry {
       // md5 split is the dd_incremental bucket rule and ppm shares are
       // exact integer division in both engines
       "ann_ivf_incr" ->
-        """WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
+        raw"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb,
           |    (strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)) - 1) * 256 +
           |    (strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 2, 1)) - 1) * 16 +
           |    (strpos('0123456789abcdef', substr(md5(CAST(vec_id AS VARCHAR)), 3, 1)) - 1) AS hb
@@ -2573,11 +2574,11 @@ object SparkEntry {
           |asg AS (SELECT vec_id, hb, cid FROM (SELECT vec_id, hb, cid,
           |    row_number() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS r FROM sc)
           |  WHERE r = 1),
-          |t AS (SELECT CAST(sum(CASE WHEN hb < 3277 THEN 1 ELSE 0 END) AS BIGINT) AS th,
-          |    CAST(sum(CASE WHEN hb >= 3277 THEN 1 ELSE 0 END) AS BIGINT) AS tb FROM e),
+          |t AS (SELECT CAST(sum(CASE WHEN hb < $HistoryBelow THEN 1 ELSE 0 END) AS BIGINT) AS th,
+          |    CAST(sum(CASE WHEN hb >= $HistoryBelow THEN 1 ELSE 0 END) AS BIGINT) AS tb FROM e),
           |g AS (SELECT cid,
-          |    CAST(sum(CASE WHEN hb < 3277 THEN 1 ELSE 0 END) AS BIGINT) AS n_history,
-          |    CAST(sum(CASE WHEN hb >= 3277 THEN 1 ELSE 0 END) AS BIGINT) AS n_batch
+          |    CAST(sum(CASE WHEN hb < $HistoryBelow THEN 1 ELSE 0 END) AS BIGINT) AS n_history,
+          |    CAST(sum(CASE WHEN hb >= $HistoryBelow THEN 1 ELSE 0 END) AS BIGINT) AS n_batch
           |  FROM asg GROUP BY cid)
           |SELECT g.cid, g.n_history, g.n_batch,
           |  CAST(CASE WHEN t.th > 0 THEN g.n_history * 1000000 // t.th ELSE 0 END AS BIGINT) AS hist_ppm,

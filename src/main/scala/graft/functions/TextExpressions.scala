@@ -112,9 +112,8 @@ object TextFunctions {
 
   /** `array(long)` of FNV-1a 64 hashes of content-defined chunks —
     * see [[CdcChunks]]. */
-  def cdcChunks(c: Column, window: Int = 16, mask: Long = 0x3fL,
-                minLen: Int = 32, maxLen: Int = 256): Column =
-    ColumnBridge.column(CdcChunks(ColumnBridge.expression(c), window, mask, minLen, maxLen))
+  def cdcChunks(c: Column): Column =
+    ColumnBridge.column(CdcChunks(ColumnBridge.expression(c)))
 }
 
 private[graft] object Tokenize {

@@ -24,6 +24,28 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  /** The MinHash-LSH shape: `ShingleK`-character shingles, `NumHashes`
+    * hashes in `Bands` bands, and a candidate pair kept at an estimated
+    * Jaccard of at least `JaccardThreshold`. */
+  private[graft] final val ShingleK = 5
+  private[graft] final val NumHashes = 16
+  private[graft] final val Bands = 4
+  private[graft] final val JaccardThreshold = 0.5
+
+  /** The exact n-gram verifiers: `NgramK`-character shingles over the
+    * docs with doc_id below `MaxId`; a pair is similar above
+    * `NgramThreshold` Jaccard, or above `ContainmentThreshold`
+    * containment. */
+  private[graft] final val NgramK = 3
+  private[graft] final val MaxId = 50L
+  private[graft] final val NgramThreshold = 0.3
+  private[graft] final val ContainmentThreshold = 0.5
+
+  /** Token n-gram widths: `SpanN` for duplicated spans, `SourceN` for
+    * source overlap. */
+  private[graft] final val SpanN = 4
+  private[graft] final val SourceN = 3
+
   /** Whitespace-normalized lowercase text — the canonical form all
     * fuzzy-dedup ops hash. */
   def normText(c: Column): Column = lower(regexp_replace(c, "\\s+", " "))
@@ -43,9 +65,9 @@ object Dedup {
     * line appearing in many documents is boilerplate — headers,
     * cookie banners, license blurbs — and is stripped from every
     * document that carries it), adapted to this corpus's single-line
-    * documents by segmenting at tumbling `width`-token windows
+    * documents by segmenting at tumbling 8-token windows
     * ([[graft.functions.TokenSegments]], one pass, each token in
-    * exactly one segment). A segment found in ≥ `minDocs` DISTINCT
+    * exactly one segment). A segment found in ≥ 2 DISTINCT
     * documents is duplicated; the output reports per-document segment
     * counts and the reassembled text with duplicated segments removed
     * (NULL when nothing survives — the fully-boilerplate case).
@@ -55,20 +77,19 @@ object Dedup {
     * flag join carry 32-hex-char keys regardless of segment length
     * (xxhash64 would halve that again; md5 is kept because the DuckDB
     * oracle can compute it). Both the distinct-doc count and the flag
-    * join are plain equi-shuffles ∝ corpus tokens / width; the
-    * reassembly is a per-document sort of ~(tokens/width) elements
+    * join are plain equi-shuffles ∝ corpus tokens / 8; the
+    * reassembly is a per-document sort of ~(tokens/8) elements
     * inside a regular hash aggregation — never a window, never a
     * cross product. */
-  def segmentDedup(s: SparkSession, dir: String, width: Int = 8,
-                   minDocs: Int = 2): DataFrame = {
+  def segmentDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val segs = Tables.documents(s, dir)
       .select($"doc_id",
-        posexplode(TextFunctions.tokenSegments($"text", width))
+        posexplode(TextFunctions.tokenSegments($"text", 8))
           .as(Seq("seg_idx", "seg")))
     val dup = segs.groupBy(md5($"seg").as("k"))
       .agg(count_distinct($"doc_id").as("nd"))
-      .filter($"nd" >= minDocs)
+      .filter($"nd" >= 2)
       .select($"k", lit(1L).as("dup"))
     segs.withColumn("k", md5($"seg"))
       .join(dup, Seq("k"), "left")
@@ -110,20 +131,17 @@ object Dedup {
     * batch docs only. Rows-only in the driver contract (xxhash64
     * banding isn't ANSI); DedupSpec gates recall on planted
     * cross-boundary and in-batch near-copies. */
-  def incrementalFuzzyDedup(s: SparkSession, dir: String,
-                            historyBuckets: Long = 3277,
-                            k: Int = 5, numHashes: Int = 16, bands: Int = 4,
-                            threshold: Double = 0.5): DataFrame = {
+  def incrementalFuzzyDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"doc_id")
     val docs = Tables.documents(s, dir).select($"doc_id", $"text", hb.as("hb"))
     val historyIdx = bandedSignatures(
-      docs.filter($"hb" < historyBuckets), k, numHashes, bands)
+      docs.filter($"hb" < Sampling.HistoryBelow))
     val batchIdx = bandedSignatures(
-      docs.filter($"hb" >= historyBuckets), k, numHashes, bands)
+      docs.filter($"hb" >= Sampling.HistoryBelow))
     val vsHistory = batchIdx.as("b").join(historyIdx.as("h"), Seq("band", "bucket"))
       .select($"b.doc_id".as("doc_id"), $"b.sig".as("sig1"), $"h.sig".as("sig2"))
-      .filter(SketchFunctions.minhashAgree($"sig1", $"sig2") >= threshold)
+      .filter(SketchFunctions.minhashAgree($"sig1", $"sig2") >= JaccardThreshold)
       .select($"doc_id").distinct()
       .withColumn("dup_vs_history", lit(1L))
     val dominated = batchIdx.as("x").join(batchIdx.as("y"), Seq("band", "bucket"))
@@ -131,10 +149,10 @@ object Dedup {
       .select($"x.doc_id".as("id1"), $"y.doc_id".as("id2"),
         $"x.sig".as("sig1"), $"y.sig".as("sig2"))
       .dropDuplicates("id1", "id2")
-      .filter(SketchFunctions.minhashAgree($"sig1", $"sig2") >= threshold)
+      .filter(SketchFunctions.minhashAgree($"sig1", $"sig2") >= JaccardThreshold)
       .select($"id2".as("doc_id")).distinct()
       .withColumn("dup_in_batch", lit(1L))
-    docs.filter($"hb" >= historyBuckets).select($"doc_id")
+    docs.filter($"hb" >= Sampling.HistoryBelow).select($"doc_id")
       .join(vsHistory, Seq("doc_id"), "left")
       .join(dominated, Seq("doc_id"), "left")
       .select($"doc_id",
@@ -155,7 +173,7 @@ object Dedup {
     * chunks at ANY byte offset — the case tumbling segments
     * structurally miss (a passage offset by one token lands in
     * different segments and never matches; spec-pinned). A chunk
-    * hash appearing in ≥ `minDocs` distinct documents marks a
+    * hash appearing in ≥ 2 distinct documents marks a
     * duplicated span; emits per doc the chunk/dup-chunk counts and
     * duplicated fraction — the signal exact-substr dedup cuts on.
     * Plan shape is segmentDedup's: explode ∝ bytes/expected-chunk,
@@ -163,8 +181,7 @@ object Dedup {
     * driver contract (the cut rule rides a 2⁶⁴ rolling hash);
     * DedupSpec pins chunk partition/cut-rule properties,
     * offset-shift invariance, and the planted cross-doc passage. */
-  def cdcSpanDedup(s: SparkSession, dir: String,
-                   minDocs: Int = 2): DataFrame = {
+  def cdcSpanDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val chunks = Tables.documents(s, dir)
       .select($"doc_id",
@@ -172,7 +189,7 @@ object Dedup {
           .as("h"))
     val dup = chunks.groupBy($"h")
       .agg(count_distinct($"doc_id").as("nd"))
-      .filter($"nd" >= minDocs)
+      .filter($"nd" >= 2)
       .select($"h", lit(1L).as("dup"))
     chunks.join(dup, Seq("h"), "left")
       .groupBy($"doc_id")
@@ -207,26 +224,23 @@ object Dedup {
     * contract; [[lshClusters]] consumes [[minhashPairs]] directly —
     * sorting 100 TB of candidate pairs that feed straight into a
     * clustering shuffle would be pure waste. */
-  def minhashLsh(s: SparkSession, dir: String,
-                 k: Int = 5, numHashes: Int = 16, bands: Int = 4,
-                 threshold: Double = 0.5): DataFrame = {
+  def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    minhashPairs(s, dir, k, numHashes, bands, threshold)
+    minhashPairs(s, dir, JaccardThreshold)
       .orderBy($"id1", $"id2")
   }
 
   /** Band-bucket index over minhash signatures — (doc_id, sig, band,
     * bucket) rows. Band hashes are a static Scala loop → one array
-    * column of `bands` buckets, and the signature is CARRIED through
+    * column of `Bands` buckets, and the signature is CARRIED through
     * the band explode: signatures are computed once per doc and
     * candidates need no join-back (the join-back formulation scanned
     * documents 4× and recomputed every signature 3×). Shuffle cost:
     * bands × (16 longs + key) per doc. Shared by the all-pairs LSH
     * path and the incremental-fuzzy probe so band hashing cannot
     * diverge between them. */
-  private def bandedSignatures(df: DataFrame, k: Int, numHashes: Int,
-                               bands: Int): DataFrame = {
-    val rows = numHashes / bands
+  private def bandedSignatures(df: DataFrame): DataFrame = {
+    val rows = NumHashes / Bands
     // Spread + localCheckpoint around the MinHash kernel: the corpus
     // self-join below reads this frame from TWO plan positions, and
     // without the materialization each position re-runs the signature
@@ -236,9 +250,9 @@ object Dedup {
     // proportional metadata, exactly the "shuffle keys and metadata
     // instead of payloads" shape of guide §2.3.
     val signed = Spread(df, col("doc_id")).select(col("doc_id"),
-      minhashSig(normText(col("text")), k, numHashes).as("sig"))
+      minhashSig(normText(col("text")), ShingleK, NumHashes).as("sig"))
       .localCheckpoint()
-    val bandHashes = array((0 until bands).map(b =>
+    val bandHashes = array((0 until Bands).map(b =>
       xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows))): _*)
     signed.select(col("doc_id"), col("sig"),
       posexplode(bandHashes).as(Seq("band", "bucket")))
@@ -247,10 +261,9 @@ object Dedup {
   /** Unsorted LSH candidate pairs (id1, id2, est_jaccard) — the
     * pipeline-internal form. */
   def minhashPairs(s: SparkSession, dir: String,
-                   k: Int = 5, numHashes: Int = 16, bands: Int = 4,
-                   threshold: Double = 0.5): DataFrame = {
+                   threshold: Double): DataFrame = {
     import s.implicits._
-    val banded = bandedSignatures(Tables.documents(s, dir), k, numHashes, bands)
+    val banded = bandedSignatures(Tables.documents(s, dir))
     val cand = banded.as("x").join(banded.as("y"), Seq("band", "bucket"))
       .where($"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("id1"), $"y.doc_id".as("id2"),
@@ -294,9 +307,8 @@ object Dedup {
     * oracle (recursive CTE over the identical pair set) can hash-check
     * the clustering; the 100 TB pipeline feeds [[minhashLsh]] pairs in
     * instead. */
-  def nearDupClusters(s: SparkSession, dir: String, k: Int = 3,
-                      maxId: Long = 50, threshold: Double = 0.3): DataFrame =
-    clusterFrame(clusterLabels(s, dir, k, maxId, threshold))
+  def nearDupClusters(s: SparkSession, dir: String): DataFrame =
+    clusterFrame(clusterLabels(s, dir))
 
   /** (v, label) → the cluster output contract: (doc_id, cluster_id,
     * cluster_size), deterministic order. Cluster size is a groupBy
@@ -333,19 +345,18 @@ object Dedup {
     * so a timed run pays the real clustering cost, not a cached-scan
     * replay). */
   private val labelCache =
-    new graft.Artifacts.Memo[(String, Int, Long, Double), DataFrame](cap = 32)
+    new graft.Artifacts.Memo[String, DataFrame](cap = 32)
 
   /** Drop all cached cluster labels (and with them the references
     * pinning their checkpointed RDDs). Next `nearDupClusters` /
     * `survivors` call recomputes from pairs. */
   def clearLabelCache(): Unit = labelCache.forget()
 
-  private def clusterLabels(s: SparkSession, dir: String, k: Int,
-                            maxId: Long, threshold: Double): DataFrame = {
-    labelCache(s, (dir, k, maxId, threshold)) {
+  private def clusterLabels(s: SparkSession, dir: String): DataFrame = {
+    labelCache(s, dir) {
       import s.implicits._
-      val pairs = ngramJaccard(s, dir, k, maxId, threshold).select($"id1", $"id2")
-      val vertices = Tables.documents(s, dir).filter($"doc_id" < maxId)
+      val pairs = ngramJaccard(s, dir).select($"id1", $"id2")
+      val vertices = Tables.documents(s, dir).filter($"doc_id" < MaxId)
         .select($"doc_id".as("v"))
       labelPropagation(s, vertices, pairs)
     }
@@ -541,11 +552,9 @@ object Dedup {
     * path. Spec-gated in DedupSpec against a driver-side union-find
     * over the same pair list — xxhash64 banding isn't
     * ANSI-expressible, so there is no SQL oracle. */
-  def lshClusters(s: SparkSession, dir: String, k: Int = 5,
-                  numHashes: Int = 16, bands: Int = 4,
-                  threshold: Double = 0.5): DataFrame = {
+  def lshClusters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = minhashPairs(s, dir, k, numHashes, bands, threshold)
+    val pairs = minhashPairs(s, dir, JaccardThreshold)
       .select($"id1", $"id2").localCheckpoint()
     val members = pairs.select($"id1".as("v"))
       .union(pairs.select($"id2".as("v"))).distinct()
@@ -565,9 +574,8 @@ object Dedup {
     * [[nearDupClusters]]; [[survivorsFor]] applies the identical
     * selection to ANY cluster frame — e.g. [[lshClusters]] for the
     * 100 TB path. */
-  def survivors(s: SparkSession, dir: String, k: Int = 3,
-                maxId: Long = 50, threshold: Double = 0.3): DataFrame =
-    survivorsFor(s, dir, nearDupClusters(s, dir, k, maxId, threshold))
+  def survivors(s: SparkSession, dir: String): DataFrame =
+    survivorsFor(s, dir, nearDupClusters(s, dir))
 
   /** One quality-ranked winner per cluster of an arbitrary (doc_id,
     * cluster_id, cluster_size) frame. Per-cluster argmax by
@@ -596,8 +604,8 @@ object Dedup {
   /** n-gram Jaccard similarity over a bounded id range (the standalone
     * exact verifier; in the full pipeline it runs only on LSH candidate
     * pairs). Non-equi join stays tiny by construction. */
-  def ngramJaccard(s: SparkSession, dir: String, k: Int = 3, maxId: Long = 50,
-                   threshold: Double = 0.3): DataFrame = {
+  def ngramJaccard(s: SparkSession, dir: String, k: Int = NgramK, maxId: Long = MaxId,
+                   threshold: Double = NgramThreshold): DataFrame = {
     import s.implicits._
     val g = Tables.documents(s, dir).filter($"doc_id" < maxId)
       .select($"doc_id", shingleArray(normText($"text"), k).as("grams"))
@@ -621,18 +629,17 @@ object Dedup {
     * verifier: exact form on bounded ids / LSH candidates; at 100 TB
     * the candidates come from the banded paths and this is the
     * per-pair rescoring function. */
-  def ngramContainment(s: SparkSession, dir: String, k: Int = 3,
-                       maxId: Long = 50, threshold: Double = 0.5): DataFrame = {
+  def ngramContainment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val g = Tables.documents(s, dir).filter($"doc_id" < maxId)
-      .select($"doc_id", shingleArray(normText($"text"), k).as("grams"))
+    val g = Tables.documents(s, dir).filter($"doc_id" < MaxId)
+      .select($"doc_id", shingleArray(normText($"text"), NgramK).as("grams"))
     val a = g.select($"doc_id".as("id1"), $"grams".as("g1"))
     val b = g.select($"doc_id".as("id2"), $"grams".as("g2"))
     a.join(b, $"id1" < $"id2")
       .select($"id1", $"id2",
         round(size(array_intersect($"g1", $"g2")).cast("double") /
           least(size($"g1"), size($"g2")).cast("double"), 4).as("containment"))
-      .filter($"containment" > threshold)
+      .filter($"containment" > ContainmentThreshold)
       .orderBy($"id1", $"id2")
   }
 
@@ -661,11 +668,10 @@ object Dedup {
     * all-pairs anything. Rows-only (LSH banding isn't ANSI-SQL);
     * DedupSpec gates found pairs + values against a driver-side exact
     * recompute and a planted containment fixture. */
-  def lshContainment(s: SparkSession, dir: String, k: Int = 3,
-                     threshold: Double = 0.5): DataFrame = {
+  def lshContainment(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val cand = minhashPairs(s, dir, threshold = 0.0).select($"id1", $"id2")
-    rescoreContainment(s, dir, cand, k, threshold)
+    rescoreContainment(s, dir, cand, NgramK, ContainmentThreshold)
   }
 
   /** Exact containment rescoring of a bounded candidate-pair frame —
@@ -755,15 +761,15 @@ object Dedup {
     * approximate path here, by the DedupSpec gate against the exact
     * verifier. Rows-only in the driver contract (sketch probing is
     * not ANSI-SQL). */
-  def containmentIndexPairs(s: SparkSession, dir: String, k: Int = 3,
-                            probeK: Int = 8, dfCap: Int = 64,
-                            threshold: Double = 0.5): DataFrame = {
+  def containmentIndexPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val probeK = 8
+    val dfCap = 64
     // ONE materialized kernel pass ([[shingleHashFrame]]) feeds all
     // four gram positions — posting explode, probe slice, and both
     // rescore sides; the un-materialized form re-ran the shingle
     // kernel serially at each position
-    val g = shingleHashFrame(s, dir, k)
+    val g = shingleHashFrame(s, dir, NgramK)
     // explode_outer + null check on the GENERATED attribute, not
     // inner explode: InferFiltersFromGenerate would inline the shingle
     // kernel into the pushed-down Filter (the registry-wide guarded
@@ -794,7 +800,58 @@ object Dedup {
       .filter($"pid" =!= $"iid")
       .select(least($"pid", $"iid").as("id1"), greatest($"pid", $"iid").as("id2"))
       .distinct()
-    rescoreContainmentOn(cand, g, threshold)
+    rescoreContainmentOn(cand, g, ContainmentThreshold)
+  }
+
+  /** Above this serialized size the history bloom filter rides a
+    * TorrentBroadcast ([[graft.functions.BloomMightContainBcast]])
+    * instead of a plan literal: a literal is re-shipped inside every
+    * task's serialized plan (and dumped into every explain string),
+    * which is fine at the KB scale of a small history but not for the
+    * ~1.2 GB filter a 10⁹-digest history needs. Same crossover logic
+    * as [[Similarity.bcastCentroidThreshold]]. */
+  private[graft] val bloomLiteralMaxBytes = 1 << 16
+
+  /** The bloom might-contain column for `digest` against the `digest`
+    * column of `history` (steps 1–2 of [[incrementalDedup]]'s plan):
+    * builds the filter batch-side via `stat.bloomFilter` treeAggregate
+    * and returns the predicate — a foldable-literal
+    * BloomFilterMightContain while the serialized filter is small, a
+    * TorrentBroadcast kernel above [[bloomLiteralMaxBytes]]. None on
+    * an empty history (every digest is new by definition — and
+    * `stat.bloomFilter` NPEs on a zero-row frame, so the branch is
+    * correctness AND a crash guard). Shared by the batch operator and
+    * its streaming twin
+    * ([[graft.streaming.StreamingOps.incrDedupViaStream]]) so the two
+    * deployments cannot diverge. */
+  private[graft] def historyBloomMightHit(
+      s: SparkSession, history: DataFrame, digest: Column,
+      bloomLiteralMax: Int = bloomLiteralMaxBytes): Option[Column] = {
+    import s.implicits._
+    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
+    import org.apache.spark.sql.graft.ColumnBridge
+    // expectedNumItems sizes the filter's bit array; at scale this
+    // comes from table metadata (rowCount stats), not a count scan
+    val nHist = history.count()
+    if (nHist == 0L) return None
+    val bloom = history.select(xxhash64($"digest").as("h")).stat
+      .bloomFilter("h", nHist, 0.01)
+    val bloomBytes = {
+      val out = new java.io.ByteArrayOutputStream()
+      bloom.writeTo(out)
+      out.toByteArray
+    }
+    Some(
+      if (bloomBytes.length <= bloomLiteralMax)
+        // small filter: a foldable literal keeps the codegen'd
+        // BloomFilterMightContain kernel (same one InjectRuntimeFilter
+        // plants)
+        ColumnBridge.column(BloomFilterMightContain(
+          ColumnBridge.expression(lit(bloomBytes)),
+          ColumnBridge.expression(xxhash64(digest))))
+      else
+        SketchFunctions.bloomMightContainBcast(
+          xxhash64(digest), s.sparkContext.broadcast(bloomBytes)))
   }
 
   /** Incremental exact dedup — the production shape at 100 TB: a new
@@ -827,73 +884,19 @@ object Dedup {
     *
     * Batch-internal dup groups collapse first (survivor = min doc_id,
     * as [[exactDedup]]); output is the surviving batch rows. */
-  /** Above this serialized size the history bloom filter rides a
-    * TorrentBroadcast ([[graft.functions.BloomMightContainBcast]])
-    * instead of a plan literal: a literal is re-shipped inside every
-    * task's serialized plan (and dumped into every explain string),
-    * which is fine at the KB scale of a small history but not for the
-    * ~1.2 GB filter a 10⁹-digest history needs. Same crossover logic
-    * as [[Similarity.bcastCentroidThreshold]]. */
-  private[graft] val bloomLiteralMaxBytes = 1 << 16
-
-  /** The bloom might-contain column for `digest` against the `digest`
-    * column of `history` (steps 1–2 of [[incrementalDedup]]'s plan):
-    * builds the filter batch-side via `stat.bloomFilter` treeAggregate
-    * and returns the predicate — a foldable-literal
-    * BloomFilterMightContain while the serialized filter is small, a
-    * TorrentBroadcast kernel above [[bloomLiteralMaxBytes]]. None on
-    * an empty history (every digest is new by definition — and
-    * `stat.bloomFilter` NPEs on a zero-row frame, so the branch is
-    * correctness AND a crash guard). Shared by the batch operator and
-    * its streaming twin
-    * ([[graft.streaming.StreamingOps.incrDedupViaStream]]) so the two
-    * deployments cannot diverge. */
-  private[graft] def historyBloomMightHit(
-      s: SparkSession, history: DataFrame, digest: Column,
-      fpp: Double = 0.01,
-      bloomLiteralMax: Int = bloomLiteralMaxBytes): Option[Column] = {
-    import s.implicits._
-    import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-    import org.apache.spark.sql.graft.ColumnBridge
-    // expectedNumItems sizes the filter's bit array; at scale this
-    // comes from table metadata (rowCount stats), not a count scan
-    val nHist = history.count()
-    if (nHist == 0L) return None
-    val bloom = history.select(xxhash64($"digest").as("h")).stat
-      .bloomFilter("h", nHist, fpp)
-    val bloomBytes = {
-      val out = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(out)
-      out.toByteArray
-    }
-    Some(
-      if (bloomBytes.length <= bloomLiteralMax)
-        // small filter: a foldable literal keeps the codegen'd
-        // BloomFilterMightContain kernel (same one InjectRuntimeFilter
-        // plants)
-        ColumnBridge.column(BloomFilterMightContain(
-          ColumnBridge.expression(lit(bloomBytes)),
-          ColumnBridge.expression(xxhash64(digest))))
-      else
-        SketchFunctions.bloomMightContainBcast(
-          xxhash64(digest), s.sparkContext.broadcast(bloomBytes)))
-  }
-
   def incrementalDedup(s: SparkSession, dir: String,
-                       historyBuckets: Long = 3277,
-                       fpp: Double = 0.01,
                        bloomLiteralMax: Int = bloomLiteralMaxBytes): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"doc_id")
     val docs = Tables.documents(s, dir).select($"doc_id", $"text", hb.as("hb"))
-    val history = docs.filter($"hb" < historyBuckets)
+    val history = docs.filter($"hb" < Sampling.HistoryBelow)
       .select(sha2($"text", 256).as("digest"))
-    val batchKept = docs.filter($"hb" >= historyBuckets)
+    val batchKept = docs.filter($"hb" >= Sampling.HistoryBelow)
       .select($"doc_id", sha2($"text", 256).as("digest"))
       .groupBy($"digest")
       .agg(min($"doc_id").as("keep_id"), count(lit(1)).as("n_copies"))
     val mightHit =
-      historyBloomMightHit(s, history, $"digest", fpp, bloomLiteralMax) match {
+      historyBloomMightHit(s, history, $"digest", bloomLiteralMax) match {
         case None =>
           // empty history: every batch digest is new by definition
           return batchKept.select($"keep_id", $"digest", $"n_copies")
@@ -924,10 +927,10 @@ object Dedup {
     * The pair/total join inputs are |sources|²-bounded and broadcast.
     * At 100 TB the same surface runs on per-source MinHash signatures
     * instead of exact gram sets; the exact form is the oracle. */
-  def sourceOverlap(s: SparkSession, dir: String, n: Int = 3): DataFrame = {
+  def sourceOverlap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val sets = Spread(Tables.documents(s, dir), $"doc_id")
-      .select($"source", TextFunctions.tokenNgrams(lower($"text"), n).as("grams"))
+      .select($"source", TextFunctions.tokenNgrams(lower($"text"), SourceN).as("grams"))
       .select($"source", explode_outer($"grams").as("gram"))
       .filter($"gram".isNotNull)
       .groupBy($"gram").agg(sort_array(collect_set($"source")).as("srcs"))
@@ -971,11 +974,11 @@ object Dedup {
     * |sources|²-bounded (the dd_source_overlap argument verbatim).
     * Rows-only in the driver contract (64-bit hashing isn't
     * ANSI-SQL). */
-  def sourceOverlapMinhash(s: SparkSession, dir: String, n: Int = 3,
-                           numHashes: Int = 64): DataFrame = {
+  def sourceOverlapMinhash(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val numHashes = 64
     val grams = Tables.documents(s, dir)
-      .select($"source", TextFunctions.tokenNgrams(lower($"text"), n).as("grams"))
+      .select($"source", TextFunctions.tokenNgrams(lower($"text"), SourceN).as("grams"))
       .select($"source", explode_outer($"grams").as("gram"))
       .filter($"gram".isNotNull)
     // distinct-ness is free: min() over duplicate gram occurrences
@@ -1000,7 +1003,7 @@ object Dedup {
     * of "Deduplicating Training Data Makes Language Models Better"
     * (Lee et al. 2022): document-level dedup misses the boilerplate
     * case where distinct documents SHARE long verbatim passages
-    * (licenses, headers, quoted chunks). Every word `n`-gram window is
+    * (licenses, headers, quoted chunks). Every word `SpanN`-gram window is
     * emitted with its token position; a window duplicated across ≥ 2
     * distinct documents marks its positions, and per document the
     * marked positions are merged gaps-and-islands-style into MAXIMAL
@@ -1023,15 +1026,15 @@ object Dedup {
     * InferFiltersFromGenerate would inline the tokenizer kernel into
     * the pushed-down Filter (the tx_contamination 3-evals-per-row
     * class, guarded registry-wide). */
-  def duplicatedSpans(s: SparkSession, dir: String, n: Int = 4): DataFrame = {
+  def duplicatedSpans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    maximalSpans(s, dir, n)
+    maximalSpans(s, dir)
       .select($"doc_id", $"start_tok", $"end_tok", $"n_windows",
         // doc length rides the span pipeline (n_grams + n − 1 = token
         // count) — consumers judge span mass without a second scan,
         // and it keeps the probe column set identical across this
         // query and spanStats (see the plan-shaping note above)
-        ($"n_grams" + (n - 1)).cast("long").as("doc_tokens"))
+        ($"n_grams" + (SpanN - 1)).cast("long").as("doc_tokens"))
       .orderBy($"doc_id", $"start_tok")
   }
 
@@ -1062,11 +1065,11 @@ object Dedup {
     *    scan+tokenize; inner joins stay put.
     * So the corpus still shuffles exactly once, nothing re-scans, and
     * the one formerly unsplittable task became N splittable ones. */
-  private def maximalSpans(s: SparkSession, dir: String, n: Int): DataFrame = {
+  private def maximalSpans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val w = org.apache.spark.sql.expressions.Window
     val shuffled = Tables.documents(s, dir)
-      .select($"doc_id", TextFunctions.tokenNgrams(lower($"text"), n).as("grams"))
+      .select($"doc_id", TextFunctions.tokenNgrams(lower($"text"), SpanN).as("grams"))
       .select($"doc_id", size($"grams").cast("long").as("n_grams"),
         posexplode_outer($"grams").as(Seq("pos", "gram")))
       .filter($"gram".isNotNull)
@@ -1094,12 +1097,12 @@ object Dedup {
       // first position in a doc: lag is null → comparison null → new
       // island (the `otherwise` arm), identical to the SQL CASE
       .withColumn("brk",
-        when($"pos" - lag($"pos", 1).over(byPos) <= n, 0L).otherwise(1L))
+        when($"pos" - lag($"pos", 1).over(byPos) <= SpanN, 0L).otherwise(1L))
       .withColumn("island", sum($"brk").over(
         byPos.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .groupBy($"doc_id", $"island")
       .agg(min($"pos").cast("long").as("start_tok"),
-        (max($"pos") + (n - 1)).cast("long").as("end_tok"),
+        (max($"pos") + (SpanN - 1)).cast("long").as("end_tok"),
         count(lit(1)).as("n_windows"), first($"n_grams").as("n_grams"))
   }
 
@@ -1119,18 +1122,17 @@ object Dedup {
     * the batch). The batch/history split is the md5-bucket rule
     * shared with the incremental doc-dedup pair, so the partition is
     * deterministic and the whole query oracle-checks. */
-  def incrementalSpans(s: SparkSession, dir: String, n: Int = 4,
-                       historyBuckets: Long = 3277): DataFrame = {
+  def incrementalSpans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val w = org.apache.spark.sql.expressions.Window
     val hb = Sampling.hashBucket($"doc_id")
     val docs = Tables.documents(s, dir).select($"doc_id", $"text", hb.as("hb"))
-    val historyGrams = docs.filter($"hb" < historyBuckets)
-      .select(explode_outer(TextFunctions.tokenNgrams(lower($"text"), n)).as("gram"))
+    val historyGrams = docs.filter($"hb" < Sampling.HistoryBelow)
+      .select(explode_outer(TextFunctions.tokenNgrams(lower($"text"), SpanN)).as("gram"))
       .filter($"gram".isNotNull)
       .distinct()
-    val batch = docs.filter($"hb" >= historyBuckets)
-      .select($"doc_id", TextFunctions.tokenNgrams(lower($"text"), n).as("grams"))
+    val batch = docs.filter($"hb" >= Sampling.HistoryBelow)
+      .select($"doc_id", TextFunctions.tokenNgrams(lower($"text"), SpanN).as("grams"))
       .select($"doc_id", size($"grams").cast("long").as("n_grams"),
         posexplode_outer($"grams").as(Seq("pos", "gram")))
       .filter($"gram".isNotNull)
@@ -1138,14 +1140,14 @@ object Dedup {
     batch.join(historyGrams, Seq("gram"))
       .select($"doc_id", $"n_grams", $"pos")
       .withColumn("brk",
-        when($"pos" - lag($"pos", 1).over(byPos) <= n, 0L).otherwise(1L))
+        when($"pos" - lag($"pos", 1).over(byPos) <= SpanN, 0L).otherwise(1L))
       .withColumn("island", sum($"brk").over(
         byPos.rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .groupBy($"doc_id", $"island")
       .agg(min($"pos").cast("long").as("start_tok"),
-        (max($"pos") + (n - 1)).cast("long").as("end_tok"),
+        (max($"pos") + (SpanN - 1)).cast("long").as("end_tok"),
         count(lit(1)).as("n_windows"),
-        (first($"n_grams") + (n - 1)).cast("long").as("doc_tokens"))
+        (first($"n_grams") + (SpanN - 1)).cast("long").as("doc_tokens"))
       .select($"doc_id", $"start_tok", $"end_tok", $"n_windows", $"doc_tokens")
       .orderBy($"doc_id", $"start_tok")
   }
@@ -1160,15 +1162,14 @@ object Dedup {
     * surface with dup_frac 0 via one map-side scan of the doc list
     * left-joined against the span rollup (the rollup side is bounded
     * by docs-with-dups, far below the corpus). keep = dup_frac below
-    * `maxDupFrac`, the Lee-et-al-style excision threshold. */
-  def spanStats(s: SparkSession, dir: String, n: Int = 4,
-                maxDupFrac: Double = 0.5): DataFrame = {
+    * 0.5, the Lee-et-al-style excision threshold. */
+  def spanStats(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val perDoc = maximalSpans(s, dir, n)
+    val perDoc = maximalSpans(s, dir)
       .groupBy($"doc_id")
       .agg(count(lit(1)).as("n_spans"),
         sum($"end_tok" - $"start_tok" + 1L).as("dup_tokens"),
-        (first($"n_grams") + (n - 1)).as("n_tokens"))
+        (first($"n_grams") + (SpanN - 1)).as("n_tokens"))
     // explicit coalesce, not greatest-with-null: null-skipping in
     // greatest() differs across engines, coalesce doesn't
     val nt = coalesce($"n_tokens", lit(1L)).cast("double")
@@ -1179,7 +1180,7 @@ object Dedup {
         coalesce($"n_spans", lit(0L)).as("n_spans"),
         dup.as("dup_tokens"),
         (floor(dup.cast("double") / nt * 10000.0) / 10000.0).as("dup_frac"),
-        when(dup.cast("double") < nt * maxDupFrac, 1L).otherwise(0L).as("keep"))
+        when(dup.cast("double") < nt * 0.5, 1L).otherwise(0L).as("keep"))
       .orderBy($"doc_id")
   }
 
@@ -1205,9 +1206,9 @@ object Dedup {
     * needs no second array pass. PropertySpec pins kernel ≡ HOF on
     * adversarial span sets.) Output is one row per document at any
     * scale. */
-  def exciseSpans(s: SparkSession, dir: String, n: Int = 4): DataFrame = {
+  def exciseSpans(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val spans = maximalSpans(s, dir, n)
+    val spans = maximalSpans(s, dir)
       .groupBy($"doc_id")
       .agg(collect_list(struct($"start_tok", $"end_tok")).as("spans"))
     Tables.documents(s, dir)

@@ -18,6 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object Events {
 
+  /** The sessionization rule: consecutive events of a user belong to
+    * one session while each gap stays within `SessionGapS` seconds. */
+  private[graft] final val SessionGapS = 1800L
+
   /** Tumbling 10-minute event-time windows: count + sum per
     * (window, event_type). Partial aggregation makes the shuffle carry
     * one row per (window × type × partition). */
@@ -226,7 +230,7 @@ object Events {
     * the pair count is a map-side-partial aggregation onto a
     * |types|²-row frame, and the probability normalizer windows over
     * that bounded frame, not the event stream. */
-  def transitions(s: SparkSession, dir: String, gapS: Long = 1800L): DataFrame = {
+  def transitions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val pairs = Tables.events(s, dir)
@@ -234,7 +238,7 @@ object Events {
       .withColumn("from_type", lag($"event_type", 1).over(byUser))
       .withColumn("from_s", lag(unix_timestamp($"ts"), 1).over(byUser))
       .filter($"from_type".isNotNull &&
-        unix_timestamp($"ts") - $"from_s" <= gapS)
+        unix_timestamp($"ts") - $"from_s" <= SessionGapS)
     pairs.groupBy($"from_type", $"event_type".as("to_type"))
       .agg(count(lit(1)).as("n"))
       .withColumn("p_ppm", expr("n * 1000000L div " +
@@ -258,8 +262,9 @@ object Events {
     * bounded by |types| × hours regardless of event volume; moments
     * window over that bounded frame partitioned by type (never the
     * event stream); WindowGroupLimit prunes the rank. */
-  def anomaly(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
+  def anomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val topK = 3
     val byType = Window.partitionBy($"event_type")
     val epoch = unix_timestamp($"ts")
     val buckets = Tables.events(s, dir)
@@ -287,14 +292,14 @@ object Events {
     * multi-step structure; 3-grams are the standard funnel-discovery
     * granularity). Two lag windows over ONE user-keyed shuffle build
     * (prev2, prev1, cur) triples; both steps must close within
-    * `gapS` (the sessionization rule shared with [[transitions]]);
+    * `SessionGapS` (the sessionization rule shared with [[transitions]]);
     * the global top-`topK` resolves via orderBy+limit →
     * TakeOrderedAndProject (per-partition heaps, never a global
     * sort/window). Fully oracle-checkable: paths are exact strings,
     * counts exact longs, ties break on the path string. */
-  def paths(s: SparkSession, dir: String, gapS: Long = 1800L,
-            topK: Int = 10): DataFrame = {
+  def paths(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val topK = 10
     val byUser = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
     val sec = unix_timestamp($"ts")
     val steps = Tables.events(s, dir)
@@ -305,7 +310,7 @@ object Events {
       .withColumn("e2", lag($"event_type", 2).over(byUser))
       .withColumn("t2", lag(sec, 2).over(byUser))
       .filter($"e2".isNotNull &&
-        $"t1" - $"t2" <= gapS && $"t0" - $"t1" <= gapS)
+        $"t1" - $"t2" <= SessionGapS && $"t0" - $"t1" <= SessionGapS)
     steps
       .select(concat_ws(">", $"e2", $"e1", $"event_type").as("path"))
       .groupBy($"path").agg(count(lit(1)).as("n"))

@@ -2202,16 +2202,6 @@ object MediaCodec extends Serializable {
     while (k < 64) { zzOut(zzOff + k) = Math.round(coefD(jpegZigzag(k))).toInt; k += 1 }
   }
 
-  /** Baseline JPEG encoder. `profile`: "gray" (one component),
-    * "444" (3 components, no subsampling) or "420" (2×2-subsampled
-    * chroma; w and h must be even so the subsampled planes tile
-    * exactly). Quantizer is all-ones (the near-lossless end of the
-    * scale — fixture realism wants exact block-constant round-trips,
-    * not rate control); `restartInterval` > 0 emits DRI + RSTn
-    * markers every that-many MCUs. RGB→YCbCr uses integer 1/65536
-    * fixed point whose coefficient rows sum to exactly 65536 / 0 / 0,
-    * so an R=G=B input maps to (Y=v, Cb=Cr=128) EXACTLY — the
-    * grayscale-content invariant the oracle leans on. */
   /** Shared fixture-encoder preamble — validation, SOI, the all-ones
     * DQT, optional DRI, and the SOF segment whose MARKER selects the
     * coding process (0xc0 baseline, 0xc2 progressive). ONE copy for
@@ -2263,6 +2253,16 @@ object MediaCodec extends Serializable {
     jpegWriteSeg(out, 0xc4, p.toByteArray)
   }
 
+  /** Baseline JPEG encoder. `profile`: "gray" (one component),
+    * "444" (3 components, no subsampling) or "420" (2×2-subsampled
+    * chroma; w and h must be even so the subsampled planes tile
+    * exactly). Quantizer is all-ones (the near-lossless end of the
+    * scale — fixture realism wants exact block-constant round-trips,
+    * not rate control); `restartInterval` > 0 emits DRI + RSTn
+    * markers every that-many MCUs. RGB→YCbCr uses integer 1/65536
+    * fixed point whose coefficient rows sum to exactly 65536 / 0 / 0,
+    * so an R=G=B input maps to (Y=v, Cb=Cr=128) EXACTLY — the
+    * grayscale-content invariant the oracle leans on. */
   def encodeJpeg(w: Int, h: Int, rgb: Array[Byte], profile: String,
                  restartInterval: Int = 0): Array[Byte] = {
     val nComp = if (profile == "gray") 1 else 3
@@ -3697,6 +3697,15 @@ object MediaCodec extends Serializable {
     * net; max-effort review r13). Such a signal hashes raw instead. */
   private val maxCanonicalSamples = 1 << 26
 
+  /** The cap decision, extracted so its BOUNDARY is directly
+    * testable (a fixture exercising it in vivo would need a >2²⁶-
+    * sample array): cap iff the canonical form exceeds the bound AND
+    * would GROW the signal — downsampling (outLen ≤ n) never caps,
+    * whatever its length, because its allocation is bounded by the
+    * input that already exists. */
+  private[graft] def canonicalCapApplies(outLen: Long, n: Int): Boolean =
+    outLen > maxCanonicalSamples && outLen > n
+
   /** Canonical-rate view of an audio signal for perceptual hashing:
     * nearest-neighbor resample to [[canonicalRate]] via the integer-
     * floor index map j → j·rate/8000 (the 1-D twin of [[resizeRgbNN]]
@@ -3712,15 +3721,6 @@ object MediaCodec extends Serializable {
     * audio keeps its rate-invariant canonical hash (review r13 — an
     * unconditional cap silently broke invariance for ~2 h 44.1 kHz
     * signals where no allocation hazard exists). */
-  /** The cap decision, extracted so its BOUNDARY is directly
-    * testable (a fixture exercising it in vivo would need a >2²⁶-
-    * sample array): cap iff the canonical form exceeds the bound AND
-    * would GROW the signal — downsampling (outLen ≤ n) never caps,
-    * whatever its length, because its allocation is bounded by the
-    * input that already exists. */
-  private[graft] def canonicalCapApplies(outLen: Long, n: Int): Boolean =
-    outLen > maxCanonicalSamples && outLen > n
-
   private[operators] def canonicalSamples(rate: Int, samples: Array[Short]): Array[Short] = {
     if (rate == canonicalRate || rate <= 0) return samples
     val n = samples.length

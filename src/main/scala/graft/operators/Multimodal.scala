@@ -326,7 +326,7 @@ object Multimodal {
     * typed map hides the dead column from Spark's pruner (r12
     * max-effort review; the resizeSummary twin of this waste was
     * caught one pass earlier). */
-  private[graft] def describe(r: MediaRow, withSha: Boolean = true): DecodedRow = {
+  private[graft] def describe(r: MediaRow, withSha: Boolean): DecodedRow = {
     val media = MediaCodec.decode(r.payload)
     val units = MediaCodec.contentUnits(media)
     var s = 0L; var ws = 0L; var i = 0
@@ -392,7 +392,8 @@ object Multimodal {
     * non-degenerate; a real pipeline swaps in a CLIP-style encoder —
     * identical signature (map-side, fixed width, unit norm),
     * identical plan. Unknown/empty media embed as the zero vector. */
-  private[graft] def spanEmbed(content: Array[Byte], dim: Int = 64): Array[Double] = {
+  private[graft] def spanEmbed(content: Array[Byte]): Array[Double] = {
+    val dim = 64
     val n = content.length
     val cell = new Array[Double](dim)
     if (n == 0) return cell
@@ -416,10 +417,10 @@ object Multimodal {
     * — the bridge from the multimodal plumbing into the ANN family
     * (map-side, fixed width, the exact frame the Similarity operators
     * consume). */
-  def embedMedia(media: Dataset[MediaRow], dim: Int = 64): Dataset[MediaEmbedding] = {
+  def embedMedia(media: Dataset[MediaRow]): Dataset[MediaEmbedding] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(r => MediaEmbedding(r.media_id,
-      spanEmbed(MediaCodec.contentUnits(MediaCodec.decode(r.payload)), dim))))
+      spanEmbed(MediaCodec.contentUnits(MediaCodec.decode(r.payload))))))
   }
 
   /** Embedding-similarity search OVER MEDIA (`mm_embed_ann`) — the
@@ -436,10 +437,10 @@ object Multimodal {
     * products), so the oracle rebuilds the encoder in SQL and the
     * top-k hash-matches; MultimodalSpec's driver-side decode + encode
     * + cosine recompute stays as belt-and-braces. */
-  def embedAnnTopK(s: SparkSession, dir: String, dim: Int = 64,
-                   numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def embedAnnTopK(s: SparkSession, dir: String, numQueries: Int = Similarity.NumQueries,
+                   topK: Int = Similarity.TopK): DataFrame = {
     import s.implicits._
-    val emb = embedMedia(mediaTable(s, dir), dim).toDF()
+    val emb = embedMedia(mediaTable(s, dir)).toDF()
     // probes filter BELOW the generation map, on doc_id at the
     // documents scan: only probe payloads are encoded twice, the id
     // bound pushes down to the parquet scan itself — and that is also
@@ -448,8 +449,7 @@ object Multimodal {
     // lineage to the scan, so the guard would reject it — which it
     // did when this filter briefly sat on media_id above the map)
     val queries = embedMedia(
-        mediaFromDocs(Tables.documents(s, dir).filter(col("doc_id") < numQueries)),
-        dim).toDF()
+        mediaFromDocs(Tables.documents(s, dir).filter(col("doc_id") < numQueries))).toDF()
       .select($"media_id".as("query_id"), $"embedding".as("q"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy($"query_id").orderBy($"cos_sim".desc, $"media_id")
@@ -501,9 +501,9 @@ object Multimodal {
     * hash-verifies decode → resample → encode → decode as one chain
     * (NN index math included: DuckDB recomputes every resampled
     * pixel's source byte from `documents`). */
-  def resizeSummary(s: SparkSession, dir: String, targetWidth: Int = 24): DataFrame = {
+  def resizeSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    resize(mediaTable(s, dir), targetWidth)
+    resize(mediaTable(s, dir), 24)
       .map { r =>
         // ONE decode per row (self-review r12: the first cut ran
         // describe() + a second decode, parsing every container twice
@@ -531,7 +531,7 @@ object Multimodal {
     * pipelines batch by), an image is its own single frame. Keeps
     * every `stride`-th frame; emits parsed size + content checksum
     * per frame, which the oracle rebuilds per (media, frame). */
-  def frameSample(media: Dataset[MediaRow], stride: Int = 4): DataFrame = {
+  def frameSample(media: Dataset[MediaRow], stride: Int): DataFrame = {
     import media.sparkSession.implicits._
     media.flatMap { r =>
       def sumRange(a: Array[Byte], from: Int, until: Int): Long = {
@@ -567,9 +567,9 @@ object Multimodal {
   }
 
   /** Ordered oracle frame for `mm_frame_sample`. */
-  def frameSampleSummary(s: SparkSession, dir: String, stride: Int = 4): DataFrame = {
+  def frameSampleSummary(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    frameSample(mediaTable(s, dir), stride).orderBy($"media_id", $"frame_no")
+    frameSample(mediaTable(s, dir), 4).orderBy($"media_id", $"frame_no")
   }
 
   /** Deterministic baseline-JPEG fixture for a document row
@@ -700,7 +700,7 @@ object Multimodal {
     * 64-bit average-hash over DECODED content ([[MediaCodec.aHash64]]:
     * luma grid for images, sample-span means for audio, first-frame
     * luma for video — container-invariant, so the same pixels shipped
-    * as PPM and BMP collide at Hamming 0), then Hamming≤`maxHamming`
+    * as PPM and BMP collide at Hamming 0), then Hamming ≤ 3
     * partners via the SAME 16-bit pigeonhole banding as the text-side
     * `dd_simhash` (4 bands of 16 bits: any pair within Hamming 3
     * shares at least one intact band — candidate generation is a
@@ -715,20 +715,16 @@ object Multimodal {
     * MultimodalSpec additionally pins the hash against an
     * independent parser + recompute (lcm-based exact threshold) and
     * the banding against a spec-side brute-force scan. */
-  def phashDedup(s: SparkSession, dir: String, maxHamming: Int = 3): DataFrame =
-    phashDedupOver(mediaTable(s, dir), maxHamming)
+  def phashDedup(s: SparkSession, dir: String): DataFrame =
+    phashDedupOver(mediaTable(s, dir))
 
   /** [[phashDedup]] over an explicit media frame — the operator is
     * source-agnostic (synthetic table, binaryFile lake, or a
     * spec-planted mix of containers: the JPEG/PPM pixel-identical
     * collision gate drives this entry point directly). */
-  private[graft] def phashDedupOver(media: Dataset[MediaRow],
-                                    maxHamming: Int = 3): DataFrame = {
+  private[graft] def phashDedupOver(media: Dataset[MediaRow]): DataFrame = {
     val s = media.sparkSession
     import s.implicits._
-    // 4 bands of 16 bits are pigeonhole-complete ONLY for Hamming ≤ 3;
-    // a larger radius would silently lose pairs that differ in every band
-    require(maxHamming <= 3, s"4x16-bit banding is complete only for maxHamming <= 3, got $maxHamming")
     // localCheckpoint: `hashed` feeds THREE plan positions (both sides
     // of the band self-join and the final dup-flag join) — without the
     // materialization each position re-decodes every payload, tripling
@@ -747,7 +743,9 @@ object Multimodal {
       .select($"x.media_id".as("id1"), $"y.media_id".as("id2"),
         $"x.phash".as("h1"), $"y.phash".as("h2"))
       .distinct()
-      .filter(bit_count($"h1".bitwiseXOR($"h2")) <= maxHamming)
+      // 4 bands of 16 bits are pigeonhole-complete ONLY for Hamming ≤ 3;
+      // a larger radius would silently lose pairs that differ in every band
+      .filter(bit_count($"h1".bitwiseXOR($"h2")) <= 3)
       .select(explode(array($"id1", $"id2")).as("media_id")).distinct()
     hashed.join(dupIds.withColumn("dup", lit(1L)), Seq("media_id"), "left")
       .select($"media_id", $"phash", coalesce($"dup", lit(0L)).as("is_dup"))

@@ -29,9 +29,13 @@ import org.apache.spark.sql.functions._
   * values). */
 object Pipeline {
 
-  def prepPipeline(s: SparkSession, dir: String, minQuality: Double = 0.5,
-                   budget: Long = 512, shards: Int = 8): DataFrame =
-    prepPipelineOver(s, Tables.documents(s, dir), minQuality, budget, shards)
+  /** The pipelines' shared selection shape: docs scoring below
+    * `MinQuality` drop, and output sequences over `Shards` shards. */
+  private[graft] final val MinQuality = 0.5
+  private[graft] final val Shards = 8
+
+  def prepPipeline(s: SparkSession, dir: String): DataFrame =
+    prepPipelineOver(s, Tables.documents(s, dir))
 
   /** `pipe_crawl_e2e`: the SAME prep chain rooted at the RAW CRAWL
     * CONTAINER — shard parse → HTTP envelope decode → charset →
@@ -52,8 +56,7 @@ object Pipeline {
   /** The prep chain over ANY (doc_id, text) corpus frame — split
     * from [[prepPipeline]] so the crawl-rooted twin composes the
     * identical tail. */
-  def prepPipelineOver(s: SparkSession, docs: DataFrame, minQuality: Double = 0.5,
-                       budget: Long = 512, shards: Int = 8): DataFrame = {
+  def prepPipelineOver(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
     // ONE map-side projection computes everything derived from the
     // text — quality, token count (same byte-scan), content digest —
@@ -80,14 +83,14 @@ object Pipeline {
       .partitionBy($"digest").orderBy($"doc_id")
     val withTok = enriched
       .withColumn("rk", row_number().over(dw))
-      .filter($"rk" === 1 && $"quality" >= minQuality)
+      .filter($"rk" === 1 && $"quality" >= MinQuality)
       .select($"doc_id", $"quality", $"n_tokens")
       .observe("pipe_kept",
         count(lit(1)).as("docs_kept"),
         sum($"n_tokens").as("tokens_kept"))
     // the packing rule itself lives in TextAnalysis.assignPacks, shared
     // with sequencePack so the two oracle-pinned forms cannot diverge
-    TextAnalysis.assignPacks(withTok, budget, shards)
+    TextAnalysis.assignPacks(withTok, TextAnalysis.PackBudget, Shards)
       .select($"doc_id", $"shard", $"pack_id", $"n_tokens", $"quality")
       .orderBy($"doc_id")
   }
@@ -181,7 +184,7 @@ object Pipeline {
     * (measured at sf0.01: every candidate weight is negative), so a
     * fixed weight > 0 threshold is a DEAD RULE on in-distribution
     * data — the curation semantics are "quality floor, then each
-    * source's `cap` most target-like survivors", which also bounds
+    * source's 50 most target-like survivors", which also bounds
     * provenance skew the way [[TextAnalysis.sourceCap]] does.
     *
     * Dedup runs BEFORE the quality threshold, which is equivalent
@@ -192,13 +195,12 @@ object Pipeline {
     * excluded explicitly (the kernel's n_tokens field, filtered above
     * the window), matching the oracle's inner join against the
     * token-exploded weight CTE. */
-  def selectPipeline(s: SparkSession, dir: String, minQuality: Double = 0.5,
-                     cap: Int = 50, targetFrom: Long = 3891): DataFrame = {
+  def selectPipeline(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val table = TextAnalysis.dsirLlrTable(s, dir, targetFrom)
+    val table = TextAnalysis.dsirLlrTable(s, dir)
     val hb = Sampling.hashBucket($"doc_id")
     val enriched = TextAnalysis.withQualityScore(Tables.documents(s, dir))
-      .filter(hb < targetFrom)
+      .filter(hb < Sampling.HeldOutFrom)
       .withColumn("r", graft.functions.TextFunctions.dsirLlr(lower($"text"), table))
       .select($"doc_id", $"source", $"quality",
         $"r".getField("n_tokens").as("n_dsir_tokens"),
@@ -207,11 +209,11 @@ object Pipeline {
     val dw = org.apache.spark.sql.expressions.Window
       .partitionBy($"digest").orderBy($"doc_id")
     val kept = enriched.withColumn("dk", row_number().over(dw))
-      .filter($"dk" === 1 && $"quality" >= minQuality && $"n_dsir_tokens" > 0L)
+      .filter($"dk" === 1 && $"quality" >= MinQuality && $"n_dsir_tokens" > 0L)
     val cw = org.apache.spark.sql.expressions.Window
       .partitionBy($"source").orderBy($"dsir_weight".desc, $"quality".desc, $"doc_id")
     kept.withColumn("rk", row_number().over(cw).cast("long"))
-      .filter($"rk" <= cap)
+      .filter($"rk" <= 50)
       .select($"doc_id", $"source", $"quality", $"dsir_weight", $"rk")
       .orderBy($"doc_id")
   }
@@ -254,25 +256,6 @@ object Pipeline {
       .orderBy($"source")
   }
 
-  /** SCD Type 2 dimension-history build (Kimball): each user's event
-    * stream becomes versioned attribute rows with `[valid_from,
-    * valid_to)` validity, a per-user version number, and a current
-    * flag — the lakehouse pattern for tracking how a dimension
-    * attribute (here `event_type` as the user's "state") changed over
-    * time. Consecutive repeats collapse: a version row opens only
-    * when the attribute actually changes.
-    *
-    * Scale shape: change detection (lag ≠ current), version
-    * numbering (row_number) and validity chaining (lead) are all
-    * windows over the SAME (user_id)/(ts, event_id) partitioning —
-    * Spark plans ONE Exchange and sorts once; the post-filter windows
-    * reuse the child's hash partitioning (EnsureRequirements inserts
-    * no second shuffle). No join, no driver state; at 100 TB the cost
-    * is one user-keyed shuffle of 4 narrow columns.
-    *
-    * Ordering ties break on event_id (both engines see identical
-    * micros after the nanos truncation in [[graft.Tables.events]]),
-    * so version assignment is deterministic cross-engine. */
   /** Curriculum assembly — quality-annealed data ordering (the
     * mid-training "anneal onto your best data" schedule of modern
     * pretraining runs, e.g. MiniCPM/OLMo2 annealing phases): each doc
@@ -291,7 +274,7 @@ object Pipeline {
     * ~corpus/(3·shards). Fully oracle-checked (fixed thresholds on
     * the exact grid; integer phase/shard; rank ties broken by
     * doc_id). */
-  def curriculum(s: SparkSession, dir: String, shards: Int = 8): DataFrame = {
+  def curriculum(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     val logit = lit(-2.25) + $"len_score" * 1.5 + $"stop_ratio" * 3.0 -
@@ -301,7 +284,7 @@ object Pipeline {
       .select($"doc_id", (floor(logit * 10000.0) / 10000.0).as("logit"))
       .withColumn("phase",
         when($"logit" > 0.3, 2L).when($"logit" > 0.0, 1L).otherwise(0L))
-      .withColumn("shard", pmod($"doc_id", lit(shards)).cast("long"))
+      .withColumn("shard", pmod($"doc_id", lit(Shards)).cast("long"))
     val w = Window.partitionBy($"phase", $"shard")
       .orderBy($"logit".desc, $"doc_id")
     base.withColumn("seq", row_number().over(w).cast("long"))
@@ -338,13 +321,32 @@ object Pipeline {
   // EXECUTION, so the checkpoint only added its own materialization
   // stages and an extra pass over the RDD boundary. The duplicate
   // subtree is a planning artifact, not an execution cost; left inlined.
-  def cleanThenIndex(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
+  def cleanThenIndex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val clean = Dedup.exciseSpans(s, dir)
       .select($"doc_id", $"clean_text".as("text"))
-    TextAnalysis.tfidfOver(s, clean, Tables.documents(s, dir).count(), topK)
+    TextAnalysis.tfidfOver(s, clean, Tables.documents(s, dir).count(), TextAnalysis.TfidfTopK)
   }
 
+  /** SCD Type 2 dimension-history build (Kimball): each user's event
+    * stream becomes versioned attribute rows with `[valid_from,
+    * valid_to)` validity, a per-user version number, and a current
+    * flag — the lakehouse pattern for tracking how a dimension
+    * attribute (here `event_type` as the user's "state") changed over
+    * time. Consecutive repeats collapse: a version row opens only
+    * when the attribute actually changes.
+    *
+    * Scale shape: change detection (lag ≠ current), version
+    * numbering (row_number) and validity chaining (lead) are all
+    * windows over the SAME (user_id)/(ts, event_id) partitioning —
+    * Spark plans ONE Exchange and sorts once; the post-filter windows
+    * reuse the child's hash partitioning (EnsureRequirements inserts
+    * no second shuffle). No join, no driver state; at 100 TB the cost
+    * is one user-keyed shuffle of 4 narrow columns.
+    *
+    * Ordering ties break on event_id (both engines see identical
+    * micros after the nanos truncation in [[graft.Tables.events]]),
+    * so version assignment is deterministic cross-engine. */
   def scd2(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window

@@ -353,6 +353,21 @@ object Relational {
       .orderBy($"o_custkey", $"o_orderkey")
   }
 
+  /** The planning confs q24 needs live while its plan is optimized:
+    * broadcast off (a fact-scaled build side can never broadcast at
+    * 100 TB) and the bloom-filter scan threshold floored so the rule
+    * fires at test scale. Public because actions that build a FRESH
+    * QueryExecution — any DataFrameWriter path, e.g. Bench's noop sink
+    * or Verify's parquet write — re-optimize under the session conf
+    * and would silently drop the injected filter; callers that time or
+    * inspect the write path must wrap the action in this scope
+    * ([[graft.SparkEntry.run]] does, so Bench's q24 numbers measure
+    * the filtered join). */
+  def withBloomPruneConfs[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConfs(s,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")(body)
+
   /** Runtime Bloom-filter join pruning — the 100 TB fact-fact join
     * shape. A selective predicate on orders feeds Catalyst's
     * `InjectRuntimeFilter`: a `bloom_filter_agg` subquery over the
@@ -373,21 +388,6 @@ object Relational {
     * autoBroadcastJoinThreshold is scoped off because the rule only
     * fires for probably-shuffled joins — exactly the 100 TB planning
     * state, where a fact-scaled build side can never broadcast. */
-  /** The planning confs q24 needs live while its plan is optimized:
-    * broadcast off (a fact-scaled build side can never broadcast at
-    * 100 TB) and the bloom-filter scan threshold floored so the rule
-    * fires at test scale. Public because actions that build a FRESH
-    * QueryExecution — any DataFrameWriter path, e.g. Bench's noop sink
-    * or Verify's parquet write — re-optimize under the session conf
-    * and would silently drop the injected filter; callers that time or
-    * inspect the write path must wrap the action in this scope
-    * ([[graft.SparkEntry.run]] does, so Bench's q24 numbers measure
-    * the filtered join). */
-  def withBloomPruneConfs[T](s: SparkSession)(body: => T): T =
-    GraftSession.withConfs(s,
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0")(body)
-
   def q24BloomPrune(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     withBloomPruneConfs(s) {

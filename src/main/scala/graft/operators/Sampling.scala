@@ -32,6 +32,16 @@ object Sampling {
   private[graft] def hashBucket(idCol: org.apache.spark.sql.Column) =
     conv(substring(md5(idCol.cast("string")), 1, 3), 16, 10).cast("long")
 
+  /** The split points of the 4,096 hash buckets, read by every Scala
+    * operator and interpolated into every oracle: buckets below
+    * `HistoryBelow` are the history an incremental operator has already
+    * seen (the rest are the new batch); below `TrainBelow` is the train
+    * split; from `HeldOutFrom` up is held out (the test split, the DSIR
+    * target and the contamination benchmark). */
+  private[graft] final val HistoryBelow = 3277L
+  private[graft] final val TrainBelow = 3686L
+  private[graft] final val HeldOutFrom = 3891L
+
   /** Consistent ~1/16 sample: md5(doc_id) prefix below the threshold.
     * Changing the rate only grows/shrinks the same sample (nested
     * samples — a 1% sample is a subset of a 10% sample). */
@@ -52,7 +62,7 @@ object Sampling {
     val h = hashBucket($"doc_id")
     Tables.documents(s, dir)
       .select($"doc_id",
-        when(h < 3686, "train").when(h < 3891, "val").otherwise("test")
+        when(h < TrainBelow, "train").when(h < HeldOutFrom, "val").otherwise("test")
           .as("split"))
       .orderBy($"doc_id")
   }

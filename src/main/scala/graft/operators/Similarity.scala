@@ -27,14 +27,37 @@ import graft.functions.VectorFunctions
   */
 object Similarity {
 
+  /** The probe set every top-k search reports: the vectors with vec_id
+    * below `NumQueries`, each with its `TopK` nearest neighbours. */
+  private[graft] final val NumQueries = 10
+  private[graft] final val TopK = 5
+
+  /** The IVF shape: `NLists` inverted lists, whose centroids train with
+    * `Iters` k-means iterations, and `NProbe` lists probed per query. */
+  private[graft] final val NLists = 16
+  private[graft] final val Iters = 5
+  private[graft] final val NProbe = 4
+
+  /** The drift, in ppm of list share, past which a lifecycle retrains. */
+  private[graft] final val DriftThresholdPpm = 50000L
+
+  /** The sign-LSH shape over the 64-dim embeddings: `LshTables` tables
+    * of `LshBits`-bit bucket ids. */
+  private[graft] final val LshDim = 64
+  private[graft] final val LshBits = 4
+  private[graft] final val LshTables = 4
+
+  /** The product-quantizer shape: `PqM` subspaces of `PqKsub` centroids,
+    * each trained with `PqIters` Lloyd iterations. */
+  private[graft] final val PqM = 16
+  private[graft] final val PqKsub = 256
+  private[graft] final val PqIters = 10
+
   /** cos(a,b) — a fused kernel; accumulation order matches a left
     * fold, so results are bit-equal with the HOF formulation it
     * replaced. */
   def cosine(a: Column, b: Column): Column = VectorFunctions.cosineSim(a, b)
 
-  /** Exact cosine top-k: `numQueries` probe vectors against the whole
-    * corpus. Row-wise window head with full tie-break (score desc,
-    * vec_id) keeps output deterministic. */
   /** Metadata-filtered vector search: exact cosine top-k restricted to
     * corpus vectors whose `label` passes a predicate — the "filtered
     * ANN" shape every retrieval stack needs (tenant, language,
@@ -48,15 +71,13 @@ object Similarity {
     * loss); post-filtering an unfiltered index would need k/selectivity
     * candidates to match it. Probes broadcast exactly as in
     * [[bruteForceTopK]]. */
-  def filteredTopK(s: SparkSession, dir: String,
-                   numQueries: Int = 10, topK: Int = 5,
-                   labels: Seq[Int] = Seq(2, 5, 7)): DataFrame = {
+  def filteredTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val queries = emb.filter($"vec_id" < numQueries)
+    val queries = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"),
         $"embedding".cast("array<double>").as("q"))
-    val corpus = emb.filter($"label".isin(labels: _*))
+    val corpus = emb.filter($"label".isin(2, 5, 7))
       .select($"vec_id", $"label",
         $"embedding".cast("array<double>").as("embedding"))
     val scored = corpus.join(broadcast(queries), $"vec_id" =!= $"query_id")
@@ -64,13 +85,16 @@ object Similarity {
         round(cosine($"q", $"embedding"), 6).as("cos_sim"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"label", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
 
+  /** Exact cosine top-k: the `NumQueries` probe vectors against the
+    * whole corpus. Row-wise window head with full tie-break (score desc,
+    * vec_id) keeps output deterministic. */
   def bruteForceTopK(s: SparkSession, dir: String,
-                     numQueries: Int = 10, topK: Int = 5): DataFrame = {
+                     numQueries: Int = NumQueries, topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
@@ -100,15 +124,14 @@ object Similarity {
     * the brute-force scan so the recall gate isolates QUANTIZATION
     * loss from bucketing loss. Rows-only; RecallSpec gates top-k
     * overlap against the exact float path. */
-  def sq8TopK(s: SparkSession, dir: String,
-              numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def sq8TopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val (los, his) = sq8Bounds(emb)
     val coded = emb.select($"vec_id",
       VectorFunctions.quantizeSq8($"embedding", los, his).as("code"))
-    val queries = emb.filter($"vec_id" < numQueries)
+    val queries = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
     val scored = coded.join(broadcast(queries), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
@@ -116,7 +139,7 @@ object Similarity {
           .as("cos_sim"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     scored.withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
@@ -136,17 +159,18 @@ object Similarity {
 
   /** Multi-table sign-LSH approximate top-k (bucket ids from the
     * [[graft.functions.SignLshBuckets]] kernel): candidates are corpus
-    * vectors sharing ANY of `tables` bucket ids with the query (recall
+    * vectors sharing ANY of `LshTables` bucket ids with the query (recall
     * 1-(1-p^bits)^tables vs single-table p^bits), deduped before the
-    * exact rescore. Cost: corpus stored `tables`× (constant factor),
+    * exact rescore. Cost: corpus stored `LshTables`× (constant factor),
     * comparisons still confined to bucket collisions. */
-  def lshTopK(s: SparkSession, dir: String, dim: Int = 64, bits: Int = 4,
-              tables: Int = 4, numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def lshTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+              topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val banded = emb.select($"vec_id", $"embedding",
-      posexplode(VectorFunctions.signLsh($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
+      posexplode(VectorFunctions.signLsh($"embedding", LshDim, LshBits, LshTables))
+        .as(Seq("tbl", "bucket")))
     val queries = banded.filter($"vec_id" < numQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"), $"tbl", $"bucket")
     // score BEFORE dedup: a table-collision duplicate recomputes a
@@ -166,22 +190,22 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN — the data-adaptive scale path beside
-    * sign-LSH: vectors are assigned to their nearest of `nLists` seed
+    * sign-LSH: vectors are assigned to their nearest of `NLists` seed
     * centroids (argmax cosine, broadcast centroids, one map-side pass);
-    * a query probes only its `nProbe` nearest centroid lists. At 100 TB
+    * a query probes only its `NProbe` nearest centroid lists. At 100 TB
     * the corpus is hash-partitioned by list id, so a probe touches
-    * nProbe/nLists of the data. Centroids here are deterministic seed
-    * vectors (vec_id < nLists) — swap in trained k-means centroids
+    * NProbe/NLists of the data. Centroids here are deterministic seed
+    * vectors (vec_id < NLists) — swap in trained k-means centroids
     * without changing the plan. Recall is data-dependent (isotropic
     * test vectors give no clustering win); the *plumbing* — assign,
     * invert, probe, rescore — is the operator. */
-  def ivfTopK(s: SparkSession, dir: String, nLists: Int = 16, nProbe: Int = 4,
-              numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def ivfTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+              topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = seedCentroids(emb, nLists)
-    ivfWithCentroids(s, emb, cids, cvecs, nProbe, numQueries, topK)
+    val (cids, cvecs) = seedCentroids(emb, NLists)
+    ivfWithCentroids(s, emb, cids, cvecs, NProbe, numQueries, topK)
   }
 
   /** Frozen seed centroids: the first `nLists` corpus vectors,
@@ -233,14 +257,13 @@ object Similarity {
     * centroids to assign to), and an empty history or batch side
     * reports 0 ppm for that side instead of an ANSI divide-by-zero
     * (a share against an empty population carries no signal). */
-  def ivfIncremental(s: SparkSession, dir: String, nLists: Int = 16,
-                     historyBuckets: Long = 3277): DataFrame = {
+  def ivfIncremental(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"vec_id")
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"),
         hb.as("hb"))
-    val (cids, cvecs) = seedCentroids(emb, nLists)
+    val (cids, cvecs) = seedCentroids(emb, NLists)
     if (cids.isEmpty) {
       return Seq.empty[(Long, Long, Long, Long, Long, Long)]
         .toDF("cid", "n_history", "n_batch", "hist_ppm", "batch_ppm", "drift_ppm")
@@ -250,8 +273,8 @@ object Similarity {
       .select($"hb", nearest($"embedding", 1).getItem(0).as("cid"))
       .groupBy($"cid")
       .agg(
-        sum(when($"hb" < historyBuckets, 1L).otherwise(0L)).as("n_history"),
-        sum(when($"hb" >= historyBuckets, 1L).otherwise(0L)).as("n_batch"))
+        sum(when($"hb" < Sampling.HistoryBelow, 1L).otherwise(0L)).as("n_history"),
+        sum(when($"hb" >= Sampling.HistoryBelow, 1L).otherwise(0L)).as("n_batch"))
     val totals = counts
       .agg(sum($"n_history").as("th"), sum($"n_batch").as("tb"))
     counts.crossJoin(broadcast(totals))
@@ -264,39 +287,6 @@ object Similarity {
       .orderBy($"cid")
   }
 
-  /** IVF index LIFECYCLE — the composition [[ivfIncremental]]'s drift
-    * metric exists to trigger, closing the loop train → serve →
-    * detect drift → retrain → re-serve:
-    *
-    *  1. the SERVING index is k-means-trained on HISTORY only
-    *     (md5-bucket split shared with [[graft.operators.Dedup.incrementalDedup]]);
-    *  2. a DRIFTED ingest batch arrives — the fixture collapses batch
-    *     vectors toward a fixed direction (`0.2·x + e₀`), the
-    *     synthetic stand-in for a new data source whose embedding
-    *     distribution the index has never seen;
-    *  3. detect: per-list history-vs-batch ppm share drift under the
-    *     OLD centroids (exactly [[ivfIncremental]]'s metric, here
-    *     against trained lists), rolled up to max |drift| — a
-    *     ≤ nLists-row pull, the retrain-due signal;
-    *  4. decide: drift ≥ `driftThresholdPpm` → retrain on
-    *     history + batch ([[kmeansCentroids]] over the combined
-    *     corpus), else keep serving the old index;
-    *  5. re-serve and report both indexes' quality on the combined
-    *     corpus: FIT (mean cosine of every vector to its assigned
-    *     centroid, the k-means objective — what probe recall tracks
-    *     at scale) and probe RECALL vs exact brute force for the
-    *     probe set.
-    *
-    * All heavy work is the documented scale shapes: assignments are
-    * the map-side kernel, fit is one long-sum aggregate over
-    * `floor(cos·10⁶)` (order-independent integer sum — deterministic
-    * at any parallelism), recall joins the two bounded top-k frames.
-    * Driver pulls are bounded artifacts only (≤ nLists drift rows,
-    * 1-row fit scalars, numQueries·topK recall frames — the ccnet
-    * cutoff rule). Rows-only (k-means training is the documented
-    * trained-float-artifact no-go class); RecallSpec gates drift
-    * detection, the retrain decision, STRICT fit recovery and
-    * recall non-degradation, plus determinism. */
   /** The drifted-corpus fixture SHARED by the in-session lifecycle
     * (`pipe_ivf_retrain`) and the versioned-artifact lifecycle
     * (`pipe_ivf_reserve`): history = md5-bucket split below
@@ -372,28 +362,57 @@ object Similarity {
   // (fit/brute score the whole corpus through the codegen'd CosineSim —
   // unlike the KB-scale contraction loop, the lifecycle's actions DO
   // real vectorizable work per job). Keep both confs session-default.
-  def ivfLifecycle(s: SparkSession, dir: String, nLists: Int = 16,
-                   iters: Int = 5, nProbe: Int = 4,
-                   numQueries: Int = 10, topK: Int = 5,
-                   historyBuckets: Long = 3277,
-                   driftThresholdPpm: Long = 50000L): DataFrame = {
+  /** IVF index LIFECYCLE — the composition [[ivfIncremental]]'s drift
+    * metric exists to trigger, closing the loop train → serve →
+    * detect drift → retrain → re-serve:
+    *
+    *  1. the SERVING index is k-means-trained on HISTORY only
+    *     (md5-bucket split shared with [[graft.operators.Dedup.incrementalDedup]]);
+    *  2. a DRIFTED ingest batch arrives — the fixture collapses batch
+    *     vectors toward a fixed direction (`0.2·x + e₀`), the
+    *     synthetic stand-in for a new data source whose embedding
+    *     distribution the index has never seen;
+    *  3. detect: per-list history-vs-batch ppm share drift under the
+    *     OLD centroids (exactly [[ivfIncremental]]'s metric, here
+    *     against trained lists), rolled up to max |drift| — a
+    *     ≤ nLists-row pull, the retrain-due signal;
+    *  4. decide: drift ≥ `DriftThresholdPpm` → retrain on
+    *     history + batch ([[kmeansCentroids]] over the combined
+    *     corpus), else keep serving the old index;
+    *  5. re-serve and report both indexes' quality on the combined
+    *     corpus: FIT (mean cosine of every vector to its assigned
+    *     centroid, the k-means objective — what probe recall tracks
+    *     at scale) and probe RECALL vs exact brute force for the
+    *     probe set.
+    *
+    * All heavy work is the documented scale shapes: assignments are
+    * the map-side kernel, fit is one long-sum aggregate over
+    * `floor(cos·10⁶)` (order-independent integer sum — deterministic
+    * at any parallelism), recall joins the two bounded top-k frames.
+    * Driver pulls are bounded artifacts only (≤ nLists drift rows,
+    * 1-row fit scalars, numQueries·topK recall frames — the ccnet
+    * cutoff rule). Rows-only (k-means training is the documented
+    * trained-float-artifact no-go class); RecallSpec gates drift
+    * detection, the retrain decision, STRICT fit recovery and
+    * recall non-degradation, plus determinism. */
+  def ivfLifecycle(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tagged = driftedTagged(s, dir, historyBuckets)
+    val tagged = driftedTagged(s, dir, Sampling.HistoryBelow)
     val history = tagged.filter($"is_b" === 0L).select($"vec_id", $"embedding")
     if (history.isEmpty) {
       return Seq.empty[(String, Long)].toDF("metric", "value")
     }
     val combined = tagged.select($"vec_id", $"embedding")
-    val (oldIds, oldVecs) = kmeansCentroids(s, history, nLists, iters)
+    val (oldIds, oldVecs) = kmeansCentroids(s, history, NLists, Iters)
 
     // 3. detect: ivfIncremental's share-drift metric under OLD lists
     val nearestOld = centroidAssigner(s, oldIds, oldVecs, bcastCentroidThreshold)
     val maxDrift = maxShareDriftPpm(tagged, nearestOld)
 
     // 4. decide + retrain on history+batch
-    val retrained = maxDrift >= driftThresholdPpm
+    val retrained = maxDrift >= DriftThresholdPpm
     val (newIds, newVecs) =
-      if (retrained) kmeansCentroids(s, combined, nLists, iters)
+      if (retrained) kmeansCentroids(s, combined, NLists, Iters)
       else (oldIds, oldVecs)
 
     // 5a. fit: mean floor(cos·10⁶) of every combined vector to its
@@ -409,24 +428,24 @@ object Similarity {
       if (r.getLong(0) == 0L) 0L else Math.floorDiv(r.getLong(1), r.getLong(0))
     }
     // 5b. probe recall vs exact brute force over the combined corpus —
-    // the ≤ numQueries·topK truth frame materializes once and serves
+    // the ≤ NumQueries·TopK truth frame materializes once and serves
     // both the old-index and new-index recall joins plus its own count
     val brute = {
-      val queries = combined.filter($"vec_id" < numQueries)
+      val queries = combined.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("query_id"), $"embedding".as("q"))
       val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
       combined.join(broadcast(queries), $"vec_id" =!= $"query_id")
         .select($"query_id", $"vec_id", round(cosine($"q", $"embedding"), 6).as("cos_sim"))
         .withColumn("rk", row_number().over(w).cast("long"))
-        .filter($"rk" <= topK).select($"query_id", $"vec_id")
+        .filter($"rk" <= TopK).select($"query_id", $"vec_id")
         .localCheckpoint(false)
     }
     def recallPpm(cids: Seq[Long], cvecs: Seq[Seq[Double]]): Long = {
-      val got = ivfWithCentroids(s, combined, cids, cvecs, nProbe, numQueries, topK)
+      val got = ivfWithCentroids(s, combined, cids, cvecs, NProbe, NumQueries, TopK)
         .select($"query_id", $"vec_id", lit(1L).as("hit"))
       // hits AND total in ONE action (r22: the split semi-join count +
       // brute.count() was two driver round-trips per call over the same
-      // checkpointed ≤ numQueries·topK frame). got's (query_id, vec_id)
+      // checkpointed ≤ NumQueries·TopK frame). got's (query_id, vec_id)
       // pairs are unique by construction (ranked top-k), so the left
       // join preserves brute's cardinality and count(hit) equals the
       // old left-semi count.
@@ -454,14 +473,13 @@ object Similarity {
 
   /** IVF with k-means-TRAINED centroids ([[kmeansCentroids]]) instead of
     * seed vectors — same probe plumbing, data-adaptive lists. */
-  def ivfTrainedTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                     iters: Int = 5, nProbe: Int = 4,
-                     numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def ivfTrainedTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                     topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = kmeansCentroids(s, emb, nLists, iters)
-    ivfWithCentroids(s, emb, cids, cvecs, nProbe, numQueries, topK)
+    val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
+    ivfWithCentroids(s, emb, cids, cvecs, NProbe, numQueries, topK)
   }
 
   /** Session-scoped PERSISTED IVF index artifact — the
@@ -484,7 +502,7 @@ object Similarity {
     * every subsequent [[ivfServeTopK]] call reads the artifact with
     * ZERO training or corpus-assignment work in its plan (PlanSpec
     * pins exactly one embeddings scan — the probe side). */
-  private val ivfIndexDirs = new graft.Artifacts.Dirs[(String, Int, Int)]("graft-ivf-index")
+  private val ivfIndexDirs = new graft.Artifacts.Dirs[String]("graft-ivf-index")
 
   /** Train on `corpus` and write the index layout into `out` — the
     * ONE builder both artifact paths share ([[ivfIndexDir]] trains on
@@ -512,13 +530,12 @@ object Similarity {
       .write.mode("overwrite").partitionBy("cid").parquet(out + "/lists")
   }
 
-  def ivfIndexDir(s: SparkSession, dir: String, nLists: Int = 16,
-                  iters: Int = 5): String =
-    ivfIndexDirs.stage(s, (dir, nLists, iters)) { out =>
+  def ivfIndexDir(s: SparkSession, dir: String): String =
+    ivfIndexDirs.stage(s, dir) { out =>
       import s.implicits._
       buildIndexInto(s, out, Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding")),
-        nLists, iters)
+        NLists, Iters)
     }
 
   /** Read a persisted index's ≤ nLists centroid rows back (a bounded
@@ -578,11 +595,10 @@ object Similarity {
     * `lists/` table. No k-means job, no corpus assignment pass —
     * training cost lives in [[ivfIndexDir]], serving cost is the
     * probe-bounded scan (the decoupling the bench shows). */
-  def ivfServeTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                   iters: Int = 5, nProbe: Int = 4,
-                   numQueries: Int = 10, topK: Int = 5): DataFrame =
-    serveFromIndex(s, dir, ivfIndexDir(s, dir, nLists, iters),
-      nProbe, numQueries, topK)
+  def ivfServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                   topK: Int = TopK): DataFrame =
+    serveFromIndex(s, dir, ivfIndexDir(s, dir),
+      NProbe, numQueries, topK)
 
   /** APPEND-grown persisted index (`pipe_ivf_append`) — the ingest
     * verb of the artifact lifecycle: the index is built from the
@@ -599,24 +615,23 @@ object Similarity {
     * partition-pruned scan. Serving after append must equal an
     * in-session IVF over the combined corpus under the same frozen
     * centroids (parity-gated). */
-  private val ivfAppendDirs = new graft.Artifacts.Dirs[(String, Int, Int, Long)]("graft-ivf-append")
+  private val ivfAppendDirs = new graft.Artifacts.Dirs[String]("graft-ivf-append")
 
-  def ivfAppendIndexDir(s: SparkSession, dir: String, nLists: Int = 16,
-                        iters: Int = 5, historyBuckets: Long = 3277): String =
-    ivfAppendDirs.stage(s, (dir, nLists, iters, historyBuckets)) { out =>
+  def ivfAppendIndexDir(s: SparkSession, dir: String): String =
+    ivfAppendDirs.stage(s, dir) { out =>
       import s.implicits._
       val hb = Sampling.hashBucket($"vec_id")
       val emb = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"), hb.as("hb"))
-      val history = emb.filter($"hb" < historyBuckets).select($"vec_id", $"embedding")
+      val history = emb.filter($"hb" < Sampling.HistoryBelow).select($"vec_id", $"embedding")
       // phase 1 — BUILD from history only (the shared builder)
-      buildIndexInto(s, out, history, nLists, iters)
+      buildIndexInto(s, out, history, NLists, Iters)
       // phase 2 — INGEST the batch against the persisted artifact:
       // centroids come from the parquet just written (the ingest job
       // owns no training state), batch rows append as new files
       val (cids2, cvecs2) = readCentroids(s, out)
       val nearest2 = centroidAssigner(s, cids2, cvecs2, bcastCentroidThreshold)
-      emb.filter($"hb" >= historyBuckets)
+      emb.filter($"hb" >= Sampling.HistoryBelow)
         .select($"vec_id", $"embedding",
           nearest2($"embedding", 1).getItem(0).as("cid"))
         .write.mode("append").partitionBy("cid").parquet(out + "/lists")
@@ -624,13 +639,11 @@ object Similarity {
 
   /** Serve from the append-grown index — same plan as
     * [[ivfServeTopK]], different artifact. */
-  def ivfAppendServeTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                         iters: Int = 5, nProbe: Int = 4,
-                         numQueries: Int = 10, topK: Int = 5,
-                         historyBuckets: Long = 3277): DataFrame =
+  def ivfAppendServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                         topK: Int = TopK): DataFrame =
     serveFromIndex(s, dir,
-      ivfAppendIndexDir(s, dir, nLists, iters, historyBuckets),
-      nProbe, numQueries, topK)
+      ivfAppendIndexDir(s, dir),
+      NProbe, numQueries, topK)
 
   /** Persisted IVF×SQ8 index (`pipe_ivf_sq8_serve`) — the deployable
     * FAISS `IVF<n>,SQ8` recipe as a STORED artifact, not a session
@@ -646,11 +659,10 @@ object Similarity {
     * dequantize-on-the-fly codes) through the same partition-pruned
     * plan as the float artifact — parity-gated bit-for-bit against
     * the in-session [[ivfSq8TopK]]. */
-  private val ivfSq8Dirs = new graft.Artifacts.Dirs[(String, Int, Int)]("graft-ivf-sq8")
+  private val ivfSq8Dirs = new graft.Artifacts.Dirs[String]("graft-ivf-sq8")
 
-  def ivfSq8IndexDir(s: SparkSession, dir: String, nLists: Int = 16,
-                     iters: Int = 5): String =
-    ivfSq8Dirs.stage(s, (dir, nLists, iters)) { out =>
+  def ivfSq8IndexDir(s: SparkSession, dir: String): String =
+    ivfSq8Dirs.stage(s, dir) { out =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
@@ -661,21 +673,20 @@ object Similarity {
       // carry ONLY (vec_id, code, cid) — the float embedding is
       // dropped before the write, which is the whole footprint
       // argument
-      buildIndexInto(s, out, emb, nLists, iters, payload = "code",
+      buildIndexInto(s, out, emb, NLists, Iters, payload = "code",
         encode = e => VectorFunctions.quantizeSq8(e, los, his))
     }
 
   /** Serve from the persisted SQ8 artifact: bounds read back (a 1-row
     * driver pull), codes scored with [[graft.functions.CosineSq8Asym]]
     * through the shared [[serveFromIndex]] plan. */
-  def ivfSq8ServeTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                      iters: Int = 5, nProbe: Int = 4,
-                      numQueries: Int = 10, topK: Int = 5): DataFrame = {
-    val idx = ivfSq8IndexDir(s, dir, nLists, iters)
+  def ivfSq8ServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                      topK: Int = TopK): DataFrame = {
+    val idx = ivfSq8IndexDir(s, dir)
     val b = s.read.parquet(idx + "/bounds").collect()(0)
     val los = b.getSeq[Double](0)
     val his = b.getSeq[Double](1)
-    serveFromIndex(s, dir, idx, nProbe, numQueries, topK,
+    serveFromIndex(s, dir, idx, NProbe, numQueries, topK,
       payload = "code",
       scorer = (q, code) => VectorFunctions.cosineSq8Asym(q, code, los, his))
   }
@@ -714,7 +725,7 @@ object Similarity {
     * corpus into `v2` and commits the pointer. Phases are exposed
     * separately so RecallSpec can inventory v1's files between them. */
   private val ivfVersionedDirs =
-    new graft.Artifacts.Dirs[(String, Int, Int, Long, Long)]("graft-ivf-versioned")
+    new graft.Artifacts.Dirs[String]("graft-ivf-versioned")
 
   /** Manifest commit = APPENDING a one-row version record; readers
     * resolve the MAX committed version. Append lands as a brand-new
@@ -776,18 +787,17 @@ object Similarity {
     }
   }
 
-  def ivfVersionedDir(s: SparkSession, dir: String, nLists: Int = 16,
-                      iters: Int = 5, historyBuckets: Long = 3277,
-                      driftThresholdPpm: Long = 50000L): String =
-    ivfVersionedDirs.stage(s, (dir, nLists, iters, historyBuckets, driftThresholdPpm)) { root =>
+  def ivfVersionedDir(s: SparkSession, dir: String): String =
+    ivfVersionedDirs.stage(s, dir) { root =>
       // ONE checkpointed drifted frame shared by both phases — each
       // phase calling driftedTagged itself would materialize (and
       // leak, checkpoint blocks being non-recomputable) the corpus
       // TWICE per build (review r14). The phase functions keep their
       // self-building default for the spec's phase-isolated gates.
-      val tagged = Some(driftedTagged(s, dir, historyBuckets))
-      versionedBuildV1(s, root, dir, nLists, iters, historyBuckets, tagged)
-      versionedRetrainIfDrifted(s, root, dir, nLists, iters, historyBuckets, driftThresholdPpm, tagged)
+      val tagged = Some(driftedTagged(s, dir, Sampling.HistoryBelow))
+      versionedBuildV1(s, root, dir, NLists, Iters, Sampling.HistoryBelow, tagged)
+      versionedRetrainIfDrifted(s, root, dir, NLists, Iters, Sampling.HistoryBelow,
+        DriftThresholdPpm, tagged)
     }
 
   /** Serve THROUGH the manifest (`pipe_ivf_reserve`): resolve the
@@ -798,13 +808,10 @@ object Similarity {
     * combined corpus — the queries a post-drift deployment actually
     * receives — so served results are gated EXACTLY equal to an
     * in-session IVF under the retrained centroids (RecallSpec). */
-  def ivfReserveTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                     iters: Int = 5, nProbe: Int = 4,
-                     numQueries: Int = 10, topK: Int = 5,
-                     historyBuckets: Long = 3277,
-                     driftThresholdPpm: Long = 50000L): DataFrame = {
-    val root = ivfVersionedDir(s, dir, nLists, iters, historyBuckets, driftThresholdPpm)
-    serveThroughManifest(s, dir, root, nProbe, numQueries, topK, historyBuckets)
+  def ivfReserveTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                     topK: Int = TopK): DataFrame = {
+    val root = ivfVersionedDir(s, dir)
+    serveThroughManifest(s, dir, root, NProbe, numQueries, topK, Sampling.HistoryBelow)
   }
 
   /** The manifest-resolved serve shared by every versioned-root
@@ -859,7 +866,7 @@ object Similarity {
     retired
   }
 
-  private val ivfGcDirs = new graft.Artifacts.Dirs[(String, Int, Int, Long, Long)]("graft-ivf-gc")
+  private val ivfGcDirs = new graft.Artifacts.Dirs[String]("graft-ivf-gc")
 
   /** Full lifecycle WITH the GC verb (`pipe_ivf_gc`): v1 on history,
     * drift-triggered retrain to v2 + manifest swing, retention GC at
@@ -868,18 +875,16 @@ object Similarity {
     * so the served frame is gated row-identical to `pipe_ivf_reserve`
     * (RecallSpec) — the GC deleted a generation serving no longer
     * reads, and nothing else. */
-  def ivfGcServeTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                     iters: Int = 5, nProbe: Int = 4,
-                     numQueries: Int = 10, topK: Int = 5,
-                     historyBuckets: Long = 3277,
-                     driftThresholdPpm: Long = 50000L): DataFrame = {
-    val root = ivfGcDirs.stage(s, (dir, nLists, iters, historyBuckets, driftThresholdPpm)) { r =>
-      val tagged = Some(driftedTagged(s, dir, historyBuckets))
-      versionedBuildV1(s, r, dir, nLists, iters, historyBuckets, tagged)
-      versionedRetrainIfDrifted(s, r, dir, nLists, iters, historyBuckets, driftThresholdPpm, tagged)
+  def ivfGcServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                     topK: Int = TopK): DataFrame = {
+    val root = ivfGcDirs.stage(s, dir) { r =>
+      val tagged = Some(driftedTagged(s, dir, Sampling.HistoryBelow))
+      versionedBuildV1(s, r, dir, NLists, Iters, Sampling.HistoryBelow, tagged)
+      versionedRetrainIfDrifted(s, r, dir, NLists, Iters, Sampling.HistoryBelow,
+        DriftThresholdPpm, tagged)
       gcVersions(s, r, keep = 0)
     }
-    serveThroughManifest(s, dir, root, nProbe, numQueries, topK, historyBuckets)
+    serveThroughManifest(s, dir, root, NProbe, numQueries, topK, Sampling.HistoryBelow)
   }
 
   /** Stream-side scoring against a persisted index
@@ -1067,13 +1072,12 @@ object Similarity {
     * brute force (combined loss) and against the unquantized trained
     * IVF (added quantization loss must be ≈ zero, as the pure-SQ8
     * overlap of 1.000 predicts). Rows-only in the driver contract. */
-  def ivfSq8TopK(s: SparkSession, dir: String, nLists: Int = 16,
-                 iters: Int = 5, nProbe: Int = 4,
-                 numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def ivfSq8TopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                 topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = kmeansCentroids(s, emb, nLists, iters)
+    val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
     val (los, his) = sq8Bounds(emb)
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
     // the corpus carries ONLY (vec_id, cid, code) past this point —
@@ -1084,7 +1088,7 @@ object Similarity {
       VectorFunctions.quantizeSq8($"embedding", los, his).as("code"))
     val probes = emb.filter($"vec_id" < numQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
-        explode(nearest($"embedding", nProbe)).as("cid"))
+        explode(nearest($"embedding", NProbe)).as("cid"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     assigned.join(broadcast(probes), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
@@ -1117,10 +1121,11 @@ object Similarity {
     * so the r11-era "two-stage rank isn't robustly hash-comparable"
     * assumption was disproved by construction; the RecallSpec overlap
     * gate stays as belt-and-braces. */
-  def mrlTopK(s: SparkSession, dir: String, prefixDims: Int = 16,
-              shortlistK: Int = 40, numQueries: Int = 10,
-              topK: Int = 5): DataFrame = {
+  def mrlTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+              topK: Int = TopK): DataFrame = {
     import s.implicits._
+    val prefixDims = 16
+    val shortlistK = 40
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val pre = emb.select($"vec_id", slice($"embedding", 1, prefixDims).as("pre"))
@@ -1158,9 +1163,9 @@ object Similarity {
     * 100 TB you train on the same bounded sample — training cost does
     * not scale with the corpus, only encoding does (map-side).
     * Returns `codebooks(m)(j)` = centroid j of subspace m. */
-  private[graft] def pqTrain(s: SparkSession, emb: DataFrame, m: Int = 16,
-                             ksub: Int = 256, sampleN: Int = 2048,
-                             iters: Int = 10): Seq[Seq[Seq[Double]]] = {
+  private[graft] def pqTrain(s: SparkSession, emb: DataFrame, m: Int,
+                             ksub: Int, sampleN: Int = 2048,
+                             iters: Int = PqIters): Seq[Seq[Seq[Double]]] = {
     import s.implicits._
     // memoized like kmeansCentroids: the codebooks are the shipped
     // artifact; pqTopK and ivfPqTopK train on the identical sample
@@ -1191,9 +1196,8 @@ object Similarity {
     * tiebreak rule so training sees the residual distribution encoding
     * will actually produce. */
   private[graft] def pqTrainResidual(s: SparkSession, emb: DataFrame,
-                                     cvecs: Seq[Seq[Double]], m: Int = 16,
-                                     ksub: Int = 256, sampleN: Int = 2048,
-                                     iters: Int = 10): Seq[Seq[Seq[Double]]] = {
+                                     cvecs: Seq[Seq[Double]], m: Int,
+                                     ksub: Int, sampleN: Int = 2048): Seq[Seq[Seq[Double]]] = {
     import s.implicits._
     val sample = emb.orderBy($"vec_id").limit(sampleN)
       .select($"embedding").collect().map(_.getSeq[Double](0).toArray)
@@ -1223,7 +1227,7 @@ object Similarity {
     (0 until m).map { mi =>
       val sub = residuals.map(v =>
         java.util.Arrays.copyOfRange(v, mi * dsub, (mi + 1) * dsub))
-      kmeansLloydLocal(sub, ksub, iters).map(_.toSeq).toSeq
+      kmeansLloydLocal(sub, ksub, PqIters).map(_.toSeq).toSeq
     }
   }
 
@@ -1276,12 +1280,12 @@ object Similarity {
     * float brute force, so the RecallSpec gate isolates pure PQ
     * quantization loss. Rows-only in the driver contract (k-means
     * codebooks aren't ANSI-expressible). */
-  def pqTopK(s: SparkSession, dir: String, m: Int = 16, ksub: Int = 256,
-             numQueries: Int = 10, topK: Int = 5): DataFrame = {
+  def pqTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+             topK: Int = TopK): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val books = pqTrain(s, emb, m, ksub)
+    val books = pqTrain(s, emb, PqM, PqKsub)
     val (encode, score) = pqScorers(s, books)
     val coded = emb.select($"vec_id", encode($"embedding").as("code"))
     val queries = emb.filter($"vec_id" < numQueries)
@@ -1320,19 +1324,17 @@ object Similarity {
     * little structure, so re-centering only misaligns the shared
     * codebook. Both paths are gated so the trade-off stays measured,
     * not assumed. Rows-only in the driver contract. */
-  def ivfPqTopK(s: SparkSession, dir: String, nLists: Int = 16,
-                iters: Int = 5, m: Int = 16, ksub: Int = 256,
-                nProbe: Int = 4, numQueries: Int = 10,
-                topK: Int = 5, byResidual: Boolean = false): DataFrame = {
+  def ivfPqTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
+                topK: Int = TopK, byResidual: Boolean = false): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = kmeansCentroids(s, emb, nLists, iters)
+    val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     val probes = emb.filter($"vec_id" < numQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
-        explode(nearest($"embedding", nProbe)).as("cid"))
+        explode(nearest($"embedding", NProbe)).as("cid"))
     val scored =
       if (byResidual) {
         // FAISS by_residual: encode x − centroid(x) with codebooks
@@ -1340,7 +1342,7 @@ object Similarity {
         // kernel. cid binds in a LOWER projection and is referenced
         // twice above it, so CollapseProject cannot duplicate the
         // centroid-assignment kernel (the withQualityScore trick).
-        val books = pqTrainResidual(s, emb, cvecs, m, ksub)
+        val books = pqTrainResidual(s, emb, cvecs, PqM, PqKsub)
         val withCid = emb.select($"vec_id", $"embedding",
           nearest($"embedding", 1).getItem(0).as("cid"))
         val assigned = withCid.select($"vec_id", $"cid",
@@ -1353,7 +1355,7 @@ object Similarity {
             round(VectorFunctions.cosinePqResidual(
               $"q", $"cid", $"code", cvecs, books), 6).as("cos_sim"))
       } else {
-        val books = pqTrain(s, emb, m, ksub)
+        val books = pqTrain(s, emb, PqM, PqKsub)
         val (encode, score) = pqScorers(s, books)
         val assigned = emb.select($"vec_id",
           nearest($"embedding", 1).getItem(0).as("cid"),
@@ -1376,21 +1378,20 @@ object Similarity {
     * synthetic isotropic fixture (max pairwise cosine ≈ 0.5-0.6); a
     * real embedding corpus would use 0.9+ where the LSH collision
     * probability — and so recall — is far higher. */
-  def embeddingNearDup(s: SparkSession, dir: String, dim: Int = 64,
-                       bits: Int = 4, tables: Int = 4,
-                       threshold: Double = 0.4): DataFrame = {
+  def embeddingNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val banded = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
       .select($"vec_id", $"embedding",
-        posexplode(VectorFunctions.signLsh($"embedding", dim, bits, tables)).as(Seq("tbl", "bucket")))
+        posexplode(VectorFunctions.signLsh($"embedding", LshDim, LshBits, LshTables))
+        .as(Seq("tbl", "bucket")))
     val a = banded.select($"tbl", $"bucket", $"vec_id".as("id1"), $"embedding".as("e1"))
     val b = banded.select($"tbl", $"bucket", $"vec_id".as("id2"), $"embedding".as("e2"))
     // score + threshold-filter inside the bucket join, dedup the
     // surviving narrow rows (see lshTopK: wide-row dedup is the trap)
     a.join(b, Seq("tbl", "bucket")).where($"id1" < $"id2")
       .select($"id1", $"id2", round(cosine($"e1", $"e2"), 6).as("cos_sim"))
-      .filter($"cos_sim" >= threshold)
+      .filter($"cos_sim" >= 0.4)
       .dropDuplicates("id1", "id2")
       .orderBy($"id1", $"id2")
   }
@@ -1413,12 +1414,11 @@ object Similarity {
     * and pins precision at exactly 1 (every within-cluster hit is a
     * true pair). Rows-only in the driver contract: k-means isn't
     * ANSI-SQL-expressible. */
-  def semanticDedup(s: SparkSession, dir: String, k: Int = 16,
-                    iters: Int = 5, threshold: Double = 0.4): DataFrame = {
+  def semanticDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = kmeansCentroids(s, emb, k, iters)
+    val (cids, cvecs) = kmeansCentroids(s, emb, k = 16, iters = 5)
     val assigned = emb.select($"vec_id", $"embedding",
       VectorFunctions.nearestCentroids($"embedding", cids, cvecs, 1)
         .getItem(0).as("cid"))
@@ -1427,7 +1427,7 @@ object Similarity {
     // dominated = has a smaller-id partner in ITS cluster above the
     // threshold; narrow (vec_id) rows survive the bucket join
     val dominated = a.join(b, Seq("cid")).where($"id1" < $"id2")
-      .filter(cosine($"e1", $"e2") >= threshold)
+      .filter(cosine($"e1", $"e2") >= 0.4)
       .select($"id2".as("vec_id")).distinct()
     assigned
       .join(dominated.withColumn("dup", lit(1L)), Seq("vec_id"), "left")

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  def saltedWordCount(s: SparkSession, dir: String, buckets: Int = 8): DataFrame = {
+  def saltedWordCount(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val buckets = 8
     // Deterministic row-level salt (hash of doc_id × token position):
     // spreads a hot key over `buckets` reducers without the plan
     // penalties of nondeterministic spark_partition_id.

@@ -17,6 +17,22 @@ import org.apache.spark.sql.functions._
   */
 object TextAnalysis {
 
+  /** The retrieval probe set: `SearchQueries` against the corpus, each
+    * reporting its top `SearchTopK` documents. Hybrid retrieval fuses
+    * each ranker's top `RrfCandK` with reciprocal-rank constant `RrfK`. */
+  private[graft] final val SearchQueries: Seq[String] =
+    Seq("join merge sort", "window agg", "scan column order")
+  private[graft] final val SearchTopK = 10
+  private[graft] final val RrfCandK = 20
+  private[graft] final val RrfK = 60
+
+  /** DSIR's add-α smoothing of both hashed-unigram LMs. */
+  private[graft] final val DsirAlpha = 0.5
+
+  /** Tokens per training pack, and the terms TF-IDF keeps per doc. */
+  private[graft] final val PackBudget = 512L
+  private[graft] final val TfidfTopK = 3
+
   /** BPE-ish subword proxy: alphanumeric runs plus single non-space
     * symbols — a deterministic, RE2-safe (no lookaround) stand-in for a
     * real tokenizer's piece count. */
@@ -95,10 +111,11 @@ object TextAnalysis {
     * grid. Default queries use the synthetic corpus's own
     * vocabulary so matches are non-trivial at every SF. */
   def bm25(s: SparkSession, dir: String,
-           queries: Seq[String] = Seq("join merge sort", "window agg",
-             "scan column order"),
-           topK: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+           queries: Seq[String] = SearchQueries,
+           topK: Int = SearchTopK): DataFrame = {
     import s.implicits._
+    val k1 = 1.2
+    val b = 0.75
     // tokenize ONCE, materialized (r22): three consumers read this
     // frame — the corpus-stats aggregate, the tf leg, and dfreq's
     // partial-agg leg — and without materialization each planned its
@@ -177,11 +194,11 @@ object TextAnalysis {
 
   /** Hybrid lexical+dense retrieval with Reciprocal Rank Fusion
     * (Cormack et al. 2009, the fusion rule of every production RAG
-    * retriever): per query, take the top-`candK` BM25 candidates and
-    * the top-`candK` dense cosine candidates (query i's probe is
+    * retriever): per query, take the top-`RrfCandK` BM25 candidates and
+    * the top-`RrfCandK` dense cosine candidates (query i's probe is
     * embedding vec_id = i; vec_id ≡ doc_id in the corpus), then score
-    * each candidate `Σ 1/(rrfK + rank)` over the rankers that
-    * returned it and keep the fused top-`topK`. RRF needs only RANKS,
+    * each candidate `Σ 1/(RrfK + rank)` over the rankers that
+    * returned it and keep the fused top-`SearchTopK`. RRF needs only RANKS,
     * never comparable scores — which is exactly why it's the standard
     * way to merge BM25's unbounded scores with bounded cosines.
     *
@@ -189,47 +206,43 @@ object TextAnalysis {
     * per-query WindowGroupLimit); the dense arm broadcasts the
     * bounded probe set against the embeddings scan (the allowlisted
     * ann_brute_topk pattern — swap in any bucketed ANN arm at 100 TB);
-    * the fusion join touches only 2 × candK rows per query. Ranks
+    * the fusion join touches only 2 × RrfCandK rows per query. Ranks
     * fuse with exactly-rounded IEEE divisions (1/(60+r)), so the
     * fused score is bit-identical cross-engine and oracle-checkable;
     * ties break by doc_id. */
-  def hybridRrf(s: SparkSession, dir: String,
-                queries: Seq[String] = Seq("join merge sort", "window agg",
-                  "scan column order"),
-                candK: Int = 20, topK: Int = 10, rrfK: Int = 60): DataFrame = {
+  def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val lex = bm25(s, dir, queries, topK = candK)
+    val lex = bm25(s, dir, SearchQueries, topK = RrfCandK)
       .select($"query_id", $"doc_id", $"rk".as("rk_lex"))
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val probes = emb.filter($"vec_id" < queries.size)
+    val probes = emb.filter($"vec_id" < SearchQueries.size)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
     val wd = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     val dense = emb.crossJoin(broadcast(probes))
       .select($"query_id", $"vec_id",
         round(Similarity.cosine($"q", $"embedding"), 6).as("cos_sim"))
       .withColumn("rk_dense", row_number().over(wd).cast("long"))
-      .filter($"rk_dense" <= candK)
+      .filter($"rk_dense" <= RrfCandK)
       .select($"query_id", $"vec_id".as("doc_id"), $"rk_dense")
-    rrfFuse(lex, dense, topK, rrfK)
+    rrfFuse(lex, dense)
   }
 
   /** RRF fusion step shared by [[hybridRrf]] and [[hybridRrfAnn]]:
     * full-outer join of the two (query_id, doc_id, rank) arms, score
-    * `Σ 1/(rrfK + rank)` with exactly-rounded IEEE divisions so the
+    * `Σ 1/(RrfK + rank)` with exactly-rounded IEEE divisions so the
     * fused score is bit-identical cross-engine, ties by doc_id. The
-    * join touches only 2 × candK rows per query regardless of corpus
+    * join touches only 2 × RrfCandK rows per query regardless of corpus
     * size — fusion cost never scales with the data. */
-  private def rrfFuse(lex: DataFrame, dense: DataFrame,
-                      topK: Int, rrfK: Int): DataFrame = {
+  private def rrfFuse(lex: DataFrame, dense: DataFrame): DataFrame = {
     val wf = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     lex.join(dense, Seq("query_id", "doc_id"), "full_outer")
       .withColumn("rrf", floor(
-        (coalesce(lit(1.0) / (col("rk_lex") + rrfK), lit(0.0)) +
-          coalesce(lit(1.0) / (col("rk_dense") + rrfK), lit(0.0))) * 1000000.0) / 1000000.0)
+        (coalesce(lit(1.0) / (col("rk_lex") + RrfK), lit(0.0)) +
+          coalesce(lit(1.0) / (col("rk_dense") + RrfK), lit(0.0))) * 1000000.0) / 1000000.0)
       .withColumn("rk", row_number().over(wf).cast("long"))
-      .filter(col("rk") <= topK)
+      .filter(col("rk") <= SearchTopK)
       .select(col("query_id"), col("doc_id"), col("rrf"), col("rk"))
       .orderBy(col("query_id"), col("rk"))
   }
@@ -253,17 +266,15 @@ object TextAnalysis {
     * vectors for shortlistK ids per query via a broadcast join back
     * into the store — the corpus never shuffles, and both stages prune
     * through WindowGroupLimit like every ANN path here. */
-  def hybridRrfAnn(s: SparkSession, dir: String,
-                   queries: Seq[String] = Seq("join merge sort", "window agg",
-                     "scan column order"),
-                   candK: Int = 20, topK: Int = 10, rrfK: Int = 60,
-                   prefixDims: Int = 16, shortlistK: Int = 100): DataFrame = {
+  def hybridRrfAnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val lex = bm25(s, dir, queries, topK = candK)
+    val prefixDims = 16
+    val shortlistK = 100
+    val lex = bm25(s, dir, SearchQueries, topK = RrfCandK)
       .select($"query_id", $"doc_id", $"rk".as("rk_lex"))
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val qPre = emb.filter($"vec_id" < queries.size)
+    val qPre = emb.filter($"vec_id" < SearchQueries.size)
       .select($"vec_id".as("query_id"), slice($"embedding", 1, prefixDims).as("qpre"))
     val wS = Window.partitionBy($"query_id").orderBy($"pre_sim".desc, $"vec_id")
     // unlike mrlTopK the probe vector is NOT excluded from its own
@@ -277,8 +288,8 @@ object TextAnalysis {
         graft.functions.VectorFunctions.cosineSim($"qpre", $"pre").as("pre_sim"))
       .withColumn("rk", row_number().over(wS)).filter($"rk" <= shortlistK)
       .select($"query_id", $"vec_id")
-      .limit(queries.size * shortlistK)
-    val qFull = emb.filter($"vec_id" < queries.size)
+      .limit(SearchQueries.size * shortlistK)
+    val qFull = emb.filter($"vec_id" < SearchQueries.size)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
     val wd = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     val dense = emb.join(broadcast(short), Seq("vec_id"))
@@ -286,9 +297,9 @@ object TextAnalysis {
       .select($"query_id", $"vec_id",
         round(Similarity.cosine($"q", $"embedding"), 6).as("cos_sim"))
       .withColumn("rk_dense", row_number().over(wd).cast("long"))
-      .filter($"rk_dense" <= candK)
+      .filter($"rk_dense" <= RrfCandK)
       .select($"query_id", $"vec_id".as("doc_id"), $"rk_dense")
-    rrfFuse(lex, dense, topK, rrfK)
+    rrfFuse(lex, dense)
   }
 
   /** Full Gopher document-structure rule battery (Rae et al. 2021,
@@ -361,9 +372,9 @@ object TextAnalysis {
     * BpeSpec pins training on hand-computable dicts, kernel ≡ an
     * independent sequential-merge reference, and the compression
     * invariants. */
-  def bpeTokenCount(s: SparkSession, dir: String, numMerges: Int = 200,
-                    vocabWords: Int = 2000): DataFrame = {
+  def bpeTokenCount(s: SparkSession, dir: String, numMerges: Int = 200): DataFrame = {
     import s.implicits._
+    val vocabWords = 2000
     val wordCounts = Tables.documents(s, dir)
       .select(explode(TextFunctions.tokenNgrams(lower($"text"), 1)).as("word"))
       .groupBy($"word").agg(count(lit(1)).as("c"))
@@ -480,9 +491,10 @@ object TextAnalysis {
     * partition crosses the shuffle. capacity=64 exceeds this corpus's
     * vocabulary, so the sketch is exact here and the SQL oracle can
     * hash-check it; at 100 TB the same plan holds with bounded error. */
-  def heavyHitters(s: SparkSession, dir: String,
-                   capacity: Int = 64, topK: Int = 10): DataFrame = {
+  def heavyHitters(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val capacity = 64
+    val topK = 10
     val toks = WordCount.tokenize(Tables.documents(s, dir), "text")
     toks.agg(HeavyHitters.sketch($"word", capacity).as("sketch"))
       .select(explode($"sketch").as(Seq("word", "cnt")))
@@ -496,8 +508,9 @@ object TextAnalysis {
     * (the round-1 `transform(sequence, i -> element_at...)` HOF ran
     * interpreted and alone cost 10 s of the 36 s sf0.1 bench); counting
     * gets partial aggregation like the unigram path. */
-  def topBigrams(s: SparkSession, dir: String, topK: Int = 20): DataFrame = {
+  def topBigrams(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val topK = 20
     Tables.documents(s, dir)
       .select(explode(TextFunctions.tokenBigrams(lower($"text"))).as("bigram"))
       .groupBy($"bigram")
@@ -517,9 +530,9 @@ object TextAnalysis {
     * BEFORE the threshold compare (cross-engine round-half rule), and
     * the flag is emitted as BIGINT 0/1, not boolean, for driver dtype
     * parity. */
-  def repetition(s: SparkSession, dir: String,
-                 threshold: Double = 0.08): DataFrame = {
+  def repetition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val threshold = 0.08
     val bg = TextFunctions.tokenBigrams(lower($"text"))
     Tables.documents(s, dir)
       .select($"doc_id", bg.as("bg"))
@@ -553,9 +566,10 @@ object TextAnalysis {
     * equi-join consumes, and scalar columns ride any downstream
     * harness (an `array<long>` column crashed the driver's hash
     * compare in round 5). */
-  def rollingFingerprint(s: SparkSession, dir: String,
-                         window: Int = 16, k: Int = 8): DataFrame = {
+  def rollingFingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val window = 16
+    val k = 8
     Tables.documents(s, dir)
       .select($"doc_id",
         explode(graft.functions.SketchFunctions.rollingMinK(
@@ -578,12 +592,11 @@ object TextAnalysis {
     * the corpus never shuffles; only the HIT rows (rare) reach the
     * per-doc count aggregation. One [[graft.functions.TokenNgrams]]
     * kernel pass per side, no interpreted lambdas. */
-  def contamination(s: SparkSession, dir: String, n: Int = 4,
-                    benchFrom: Long = 3891, trainBelow: Long = 3686): DataFrame = {
+  def contamination(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"doc_id")
     val docs = Tables.documents(s, dir).select($"doc_id", hb.as("hb"),
-      TextFunctions.tokenNgrams(lower($"text"), n).as("grams"))
+      TextFunctions.tokenNgrams(lower($"text"), 4).as("grams"))
     // explode_outer, not explode: InferFiltersFromGenerate only fires
     // for INNER explodes, and the null/size guards it infers duplicate
     // the TokenNgrams call into the pushed-down Filter — 3 kernel
@@ -593,10 +606,10 @@ object TextAnalysis {
     // attribute is a cheap null check that restores inner-explode
     // semantics (real n-grams are never null), and the kernel runs once
     // per row in the lower Project.
-    val bench = docs.filter($"hb" >= benchFrom)
+    val bench = docs.filter($"hb" >= Sampling.HeldOutFrom)
       .select(explode_outer($"grams").as("gram"))
       .filter($"gram".isNotNull).distinct()
-    docs.filter($"hb" < trainBelow)
+    docs.filter($"hb" < Sampling.TrainBelow)
       .select($"doc_id", explode_outer($"grams").as("gram"))
       .filter($"gram".isNotNull)
       .join(bench, "gram")
@@ -612,7 +625,7 @@ object TextAnalysis {
     * log-likelihood ratio of its hashed-unigram features under a
     * target-domain LM vs a raw-source LM, then keep the high-ratio
     * band. Here the target domain is the md5-bucket split's tail
-    * (hb ≥ `targetFrom`, the same rule tx_contamination uses for its
+    * (hb ≥ `Sampling.HeldOutFrom`, the same rule tx_contamination uses for its
     * benchmark side) so the query is self-contained and
     * oracle-checkable; production passes any target corpus.
     *
@@ -624,7 +637,7 @@ object TextAnalysis {
     * broadcast into the scoring pass — the corpus side maps through
     * the join unshuffled and ships only per-doc partial sums, exactly
     * the [[lmScore]] envelope. Totals are two scalars (metadata-scale
-    * collect). Smoothing is add-α on both LMs (α = 0.5).
+    * collect). Smoothing is add-α on both LMs (α = `DsirAlpha`).
     *
     * `dsir_weight` is the doc's summed log-ratio, floor-truncated at 4
     * decimals (one rounding per output, [[lmScore]]'s ln-sum
@@ -640,8 +653,7 @@ object TextAnalysis {
     * streaming deployments so they cannot diverge (the
     * `historyBloomMightHit` discipline): returns the ≤4096-row
     * (bucket, tgt, src) frame and the (tgtTot, srcTot) scalars. */
-  private[graft] def dsirLm(s: SparkSession, dir: String,
-                            targetFrom: Long): (DataFrame, Double, Double) = {
+  private[graft] def dsirLm(s: SparkSession, dir: String): (DataFrame, Double, Double) = {
     import s.implicits._
     val hb = Sampling.hashBucket($"doc_id")
     val toks = Spread(Tables.documents(s, dir), $"doc_id")
@@ -661,8 +673,8 @@ object TextAnalysis {
     // bucket aggregation. The frame is ≤4096 rows by construction, a
     // bounded artifact at any corpus size.
     val lm = toks.groupBy($"bucket").agg(
-        sum(when($"hb" >= targetFrom, 1L).otherwise(0L)).as("tgt"),
-        sum(when($"hb" < targetFrom, 1L).otherwise(0L)).as("src"))
+        sum(when($"hb" >= Sampling.HeldOutFrom, 1L).otherwise(0L)).as("tgt"),
+        sum(when($"hb" < Sampling.HeldOutFrom, 1L).otherwise(0L)).as("src"))
       .limit(dsirBuckets)
       .localCheckpoint()
     // coalesce: an empty corpus must degrade to an empty result, not
@@ -689,35 +701,32 @@ object TextAnalysis {
     * fall back to the pure-smoothing ratio (a token never seen at
     * LM-build time — the streaming-ingestion case).
     *
-    * Memoized per (dir, targetFrom, alpha): the LM is a frozen
+    * Memoized per dir: the LM is a frozen
     * ARTIFACT — production builds it once and every consumer (batch
     * scoring, streaming ingestion, the selection pipeline) reuses it,
     * so rebuilding it per query would misstate the deployment cost.
     * Assumes corpus dirs are immutable for the session (true of a
     * lake snapshot and of every test fixture — temp dirs are unique
     * per run). */
-  private val llrTableCache = new graft.Artifacts.Memo[(String, Long, Double), Seq[Double]](cap = 8)
+  private val llrTableCache = new graft.Artifacts.Memo[String, Seq[Double]](cap = 8)
 
-  private[graft] def dsirLlrTable(s: SparkSession, dir: String,
-                                  targetFrom: Long = 3891,
-                                  alpha: Double = 0.5): Seq[Double] = {
-    llrTableCache(s, (dir, targetFrom, alpha)) {
-      val (lm, tgtTot, srcTot) = dsirLm(s, dir, targetFrom)
-      val denomT = tgtTot + alpha * dsirBuckets
-      val denomS = srcTot + alpha * dsirBuckets
+  private[graft] def dsirLlrTable(s: SparkSession, dir: String): Seq[Double] = {
+    llrTableCache(s, dir) {
+      val (lm, tgtTot, srcTot) = dsirLm(s, dir)
+      val denomT = tgtTot + DsirAlpha * dsirBuckets
+      val denomS = srcTot + DsirAlpha * dsirBuckets
       val table = Array.fill(dsirBuckets)(
-        math.log((alpha / denomT) / (alpha / denomS)))
+        math.log((DsirAlpha / denomT) / (DsirAlpha / denomS)))
       lm.collect().foreach { r =>
         table(r.getLong(0).toInt) =
-          math.log(((r.getLong(1).toDouble + alpha) / denomT) /
-                   ((r.getLong(2).toDouble + alpha) / denomS))
+          math.log(((r.getLong(1).toDouble + DsirAlpha) / denomT) /
+                   ((r.getLong(2).toDouble + DsirAlpha) / denomS))
       }
       table.toSeq
     }
   }
 
-  def dsir(s: SparkSession, dir: String, targetFrom: Long = 3891,
-           alpha: Double = 0.5): DataFrame = {
+  def dsir(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"doc_id")
     val toks = Spread(Tables.documents(s, dir), $"doc_id")
@@ -725,14 +734,14 @@ object TextAnalysis {
         explode(TextFunctions.tokenNgrams(lower($"text"), 1)).as("tok"))
       .withColumn("bucket",
         conv(substring(md5($"tok"), 1, 3), 16, 10).cast("long"))
-    val (lm, tgtTot, srcTot) = dsirLm(s, dir, targetFrom)
-    val denomT = tgtTot + alpha * dsirBuckets
-    val denomS = srcTot + alpha * dsirBuckets
-    val scored = toks.filter($"hb" < targetFrom)
+    val (lm, tgtTot, srcTot) = dsirLm(s, dir)
+    val denomT = tgtTot + DsirAlpha * dsirBuckets
+    val denomS = srcTot + DsirAlpha * dsirBuckets
+    val scored = toks.filter($"hb" < Sampling.HeldOutFrom)
       .join(broadcast(lm), Seq("bucket"))
       .withColumn("llr",
-        log((($"tgt".cast("double") + alpha) / denomT) /
-            (($"src".cast("double") + alpha) / denomS)))
+        log((($"tgt".cast("double") + DsirAlpha) / denomT) /
+            (($"src".cast("double") + DsirAlpha) / denomS)))
     scored.groupBy($"doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         (floor(sum($"llr") * 10000.0) / 10000.0).as("dsir_weight"))
@@ -758,12 +767,11 @@ object TextAnalysis {
     * the gate is a spec instead — PropertySpec recomputes the exact
     * top-k from [[dsir]]'s own output driver-side and requires set
     * equality, plus determinism across two runs. */
-  def dsirSample(s: SparkSession, dir: String, k: Int = 64,
-                 targetFrom: Long = 3891): DataFrame = {
+  def dsirSample(s: SparkSession, dir: String, k: Int = 64): DataFrame = {
     import s.implicits._
     val u = (conv(substring(md5($"doc_id".cast("string")), 29, 4), 16, 10)
       .cast("double") + lit(1.0)) / lit(65537.0)
-    dsir(s, dir, targetFrom)
+    dsir(s, dir)
       .withColumn("gumbel_key", $"dsir_weight" - log(-log(u)))
       .orderBy($"gumbel_key".desc, $"doc_id")
       .limit(k)
@@ -834,9 +842,9 @@ object TextAnalysis {
     * the driver contract (sketch cutoffs aren't ANSI-SQL);
     * PropertySpec gates band balance, boundary monotonicity and
     * determinism. */
-  def ccnetBuckets(s: SparkSession, dir: String,
-                   accuracy: Int = 10000): DataFrame = {
+  def ccnetBuckets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val accuracy = 10000
     val scored = lmScore(s, dir)
     // empty corpus: the sketch aggregates to a NULL array — degrade to
     // placeholder cutoffs (the frame is empty, so they band nothing)
@@ -860,11 +868,11 @@ object TextAnalysis {
     * Cross-engine determinism: tfidf is floor-truncated to 6 decimals
     * BEFORE ranking, and ties (identical (c, len, df) triples give
     * bit-identical doubles in both engines) break by term order. */
-  def tfidf(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
+  def tfidf(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     // corpus size for idf: at 100 TB this is table-metadata rowCount,
     // not a scan (same scalar-pull pattern as k-means centroids)
-    tfidfOver(s, docs, docs.count(), topK)
+    tfidfOver(s, docs, docs.count(), TfidfTopK)
   }
 
   /** [[tfidf]] over an arbitrary `(doc_id, text)` frame — the shared
@@ -947,8 +955,7 @@ object TextAnalysis {
     * the registry pins 8 to match its DuckDB oracle (`doc_id % 8`);
     * equivalence of the pinned and conf-derived paths at equal shard
     * count is spec-checked in PropertySpec. */
-  def sequencePack(s: SparkSession, dir: String, budget: Long = 512,
-                   shards: Int = 0): DataFrame = {
+  def sequencePack(s: SparkSession, dir: String, shards: Int = 0): DataFrame = {
     import s.implicits._
     val nShards =
       if (shards > 0) shards
@@ -965,7 +972,7 @@ object TextAnalysis {
     assignPacks(
       Tables.documents(s, dir).select($"doc_id",
         TextFunctions.textStatsCounts($"text").getItem(1).as("n_tokens")),
-      budget, nShards)
+      PackBudget, nShards)
       .select($"doc_id", $"shard", $"pack_id", $"n_tokens")
       .orderBy($"doc_id")
   }
@@ -1008,9 +1015,9 @@ object TextAnalysis {
     * driver-side collect. Weights round at 6 decimals: the only
     * cross-engine nondeterminism is summation order in Σ p^α, an ulp
     * (~1e-16) against a 1e-6 grid. */
-  def mixtureWeights(s: SparkSession, dir: String,
-                     temperature: Double = 0.5): DataFrame = {
+  def mixtureWeights(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val temperature = 0.5
     val per = Tables.documents(s, dir)
       .select($"source", TextFunctions.textStatsCounts($"text").getItem(1).as("nt"))
       .groupBy($"source")
@@ -1037,9 +1044,9 @@ object TextAnalysis {
     * deflate); the kernel is gated in PropertySpec against a direct
     * java.util.zip recompute and on ordering semantics (repetitive ≪
     * natural ≪ incompressible). */
-  def compressionRatio(s: SparkSession, dir: String,
-                       threshold: Double = 0.5): DataFrame = {
+  def compressionRatio(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val threshold = 0.5
     Tables.documents(s, dir)
       .select($"doc_id",
         octet_length($"text").cast("long").as("n_bytes"),

@@ -3,25 +3,6 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** WARC/WET ingestion — the web crawl's landing container, and the
-  * reference domain's real-world source shape: the Go engine word
-  * counts Gutenberg text files (`main.go:25,130`), a production
-  * crawl pipeline word counts WET extractions. WET is Common
-  * Crawl's extracted-text member of the WARC/1.0 family (ISO
-  * 28500): a `warcinfo` header record, then one `conversion` record
-  * per page whose body is the page's plain text — exactly the
-  * `documents` table in container form, which is why `src_warc`
-  * can share a FULL DuckDB oracle with it.
-  *
-  * Scale shape: a crawl lands as many shard files; the scan
-  * parallelizes ACROSS shards (binaryFile, one task per file), and
-  * record parsing is one linear pass per shard, map-side, no
-  * shuffle. The `.warc.gz` convention compresses EVERY RECORD AS
-  * ITS OWN GZIP MEMBER (Common Crawl's layout — the reason a cdx
-  * index entry's (offset, length) can be range-read and inflated
-  * without touching the rest of the file). [[srcWarcCdx]] records
-  * each member's (offset, length) and [[fetchByCdx]] range-reads and
-  * inflates single members from it. */
 /** The session's Hadoop `Configuration`, carried to executors.
   * `Configuration` is not `Serializable`, so task closures that open
   * a `FileSystem` (the crawl sink, the cdx range-read fetch) would
@@ -47,7 +28,29 @@ final class SerializableHadoopConf(
   }
 }
 
+/** WARC/WET ingestion — the web crawl's landing container, and the
+  * reference domain's real-world source shape: the Go engine word
+  * counts Gutenberg text files (`main.go:25,130`), a production
+  * crawl pipeline word counts WET extractions. WET is Common
+  * Crawl's extracted-text member of the WARC/1.0 family (ISO
+  * 28500): a `warcinfo` header record, then one `conversion` record
+  * per page whose body is the page's plain text — exactly the
+  * `documents` table in container form, which is why `src_warc`
+  * can share a FULL DuckDB oracle with it.
+  *
+  * Scale shape: a crawl lands as many shard files; the scan
+  * parallelizes ACROSS shards (binaryFile, one task per file), and
+  * record parsing is one linear pass per shard, map-side, no
+  * shuffle. The `.warc.gz` convention compresses EVERY RECORD AS
+  * ITS OWN GZIP MEMBER (Common Crawl's layout — the reason a cdx
+  * index entry's (offset, length) can be range-read and inflated
+  * without touching the rest of the file). [[srcWarcCdx]] records
+  * each member's (offset, length) and [[fetchByCdx]] range-reads and
+  * inflates single members from it. */
 object Warc {
+
+  /** Shard files per staged crawl lake. */
+  private[graft] final val LakeShards = 8
 
   /** One parsed record: WARC headers (original case-insensitive
     * names lower-cased) + raw body bytes. */
@@ -397,13 +400,12 @@ object Warc {
   /** Session-scoped staging of the documents table as a sharded WET
     * crawl via [[writeWetLake]]. Test scaffolding under the same
     * local-master guard as the media lake — a production crawl
-    * already sits in object storage. Cache key includes `nShards`
-    * so two callers asking for different layouts never share a
-    * lake. */
+    * already sits in object storage. Every staged lake is written in
+    * `LakeShards` shard files. */
   private val wetLakeDirs = new graft.Artifacts.Dirs[String]("graft-wet-lake")
 
-  def wetLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    wetLakeDirs.stage(s, s"$dir#$nShards") { out =>
+  def wetLakeDir(s: SparkSession, dir: String): String =
+    wetLakeDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "wetLakeDir stages fixture files and requires a local master; " +
           "production crawls are read directly via srcWarcDocs on their own paths")
@@ -418,7 +420,7 @@ object Warc {
       // ([[writeWetLake]] unchanged): their byte-identity gates
       // compare against encodeWet's exact output.
       writeCrawlLake(graft.Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        out, nShards, "wet",
+        out, LakeShards, "wet",
         docs => wetRecords(docs.map { case (id, text) => (id, docUri(id), text) }) ++
           docs.iterator.filter(_._1 % 9 == 4).map { case (id, _) =>
             Seq(
@@ -454,23 +456,6 @@ object Warc {
   def crawlPageText(id: Long, text: String): String =
     if (id % 2 == 0) text + "\n" + crawlAppendix else text
 
-  /** NON-200 capture records for the staged raw lake (r18, the r17
-    * verdict's #2): real crawls are ~15-25% non-200, and until this
-    * arm the fixture envelope was always `200 OK` — so the ingest's
-    * status filter and WAT's status column were exercised by exactly
-    * one value. Id-keyed: docs ≡ 3 (mod 10) also get a 404 re-fetch
-    * of the SAME target URI (a page that vanished between two crawl
-    * visits — body `gone`, text/plain), docs ≡ 8 (mod 10) a 301 with
-    * a Location and an empty body. Both are COUNTED by `src_warc_wat`
-    * (status finally polymorphic, rows closed-form in the id cycle)
-    * and EXCLUDED by the document ingests (the 2xx filter becomes
-    * oracle-visible: if it broke, src_warc_html would emit extra rows
-    * and hash-mismatch). Two more planted shapes are excluded by
-    * EVERY reader and therefore absence-visible through every crawl
-    * oracle: docs ≡ 5 (mod 10) a `WARC-Truncated` capture whose body
-    * is an envelope PREFIX (the header, not the stump, must drive the
-    * skip), and docs ≡ 0 (mod 10, nonzero) the paired `request`
-    * record real raw crawls store next to each response. */
   /** The windows-1252 envelope arm (r18, the r17 verdict's #3): docs
     * ≡ 1 (mod 4) whose page text is pure ASCII declare
     * `charset=windows-1252` and encode the page in it. The arm's
@@ -490,6 +475,23 @@ object Warc {
   def isWin1252Arm(id: Long, pageText: String): Boolean =
     id % 4 == 1 && pageText.forall(_ < 128)
 
+  /** NON-200 capture records for the staged raw lake (r18, the r17
+    * verdict's #2): real crawls are ~15-25% non-200, and until this
+    * arm the fixture envelope was always `200 OK` — so the ingest's
+    * status filter and WAT's status column were exercised by exactly
+    * one value. Id-keyed: docs ≡ 3 (mod 10) also get a 404 re-fetch
+    * of the SAME target URI (a page that vanished between two crawl
+    * visits — body `gone`, text/plain), docs ≡ 8 (mod 10) a 301 with
+    * a Location and an empty body. Both are COUNTED by `src_warc_wat`
+    * (status finally polymorphic, rows closed-form in the id cycle)
+    * and EXCLUDED by the document ingests (the 2xx filter becomes
+    * oracle-visible: if it broke, src_warc_html would emit extra rows
+    * and hash-mismatch). Two more planted shapes are excluded by
+    * EVERY reader and therefore absence-visible through every crawl
+    * oracle: docs ≡ 5 (mod 10) a `WARC-Truncated` capture whose body
+    * is an envelope PREFIX (the header, not the stump, must drive the
+    * skip), and docs ≡ 0 (mod 10, nonzero) the paired `request`
+    * record real raw crawls store next to each response. */
   private def non200Records(
       docs: Seq[(Long, String)]): Iterator[(Seq[(String, String)], Array[Byte])] =
     docs.iterator.flatMap { case (id, _) =>
@@ -1132,14 +1134,14 @@ object Warc {
   private val rawLakeDirs = new graft.Artifacts.Dirs[String]("graft-raw-lake")
 
   /** Raw-crawl staging twin of [[wetLakeDir]]: `response`-record
-    * `.warc.gz` shards under the same local-master guard. Cache key
-    * includes `nShards` (the wetLakeDir rule). */
-  def rawLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    rawLakeDirs.stage(s, s"$dir#$nShards") { out =>
+    * `.warc.gz` shards under the same local-master guard, in
+    * `LakeShards` shard files. */
+  def rawLakeDir(s: SparkSession, dir: String): String =
+    rawLakeDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "rawLakeDir stages fixture files and requires a local master")
       writeCrawlLake(graft.Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        out, nShards, "crawl",
+        out, LakeShards, "crawl",
         // the staged lake applies the two-paragraph page transform
         // ([[crawlPageText]]) — a FIXTURE-content rule, so it lives at
         // the staging layer, not inside the pure [[encodeRawWarc]]
@@ -1164,12 +1166,12 @@ object Warc {
     * join, the crawl-real shape. */
   private val revisitLakeDirs = new graft.Artifacts.Dirs[String]("graft-revisit-lake")
 
-  def revisitLakeDir(s: SparkSession, dir: String, nShards: Int = 8): String =
-    revisitLakeDirs.stage(s, s"$dir#$nShards") { out =>
+  def revisitLakeDir(s: SparkSession, dir: String): String =
+    revisitLakeDirs.stage(s, dir) { out =>
       require(s.sparkContext.isLocal,
         "revisitLakeDir stages fixture files and requires a local master")
       writeCrawlLake(graft.Tables.documents(s, dir).select(col("doc_id"), col("text")),
-        out, nShards, "crawl",
+        out, LakeShards, "crawl",
         docs => docs.iterator.map { case (id, text) =>
           if (id % 3 == 2)
             Seq(

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import graft.operators.{Dedup, Events, Sampling, Similarity}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import scala.collection.immutable.ArraySeq
 
 /** Structured Streaming surface (SURVEY.md §7.3 M3 stretch goal — the
   * reference is strictly batch, §2.2, so this is pure extension).
@@ -95,7 +97,7 @@ object StreamingOps {
     * the last TWO (event_type, epoch-second) steps (constant-size
     * state per user — the smallest stateful-streaming footprint in
     * this registry), and each arriving event emits the completed
-    * 3-step path iff both gaps close within `gapS`. Within a batch,
+    * 3-step path iff both gaps close within `Events.SessionGapS`. Within a batch,
     * rows sort by (ts, event_id) per user — the same total order the
     * batch window uses — so on the staged single-ingest fixture the
     * emitted path multiset is IDENTICAL to the batch lag-window's
@@ -145,10 +147,10 @@ object StreamingOps {
     * never being mistaken for poison one record at a time. Size
     * resetS to the worst clock skew the feed can ship, not to the
     * oldest replay it can carry. */
-  def pathHits(spark: SparkSession, events: Dataset[PathEvent],
-               gapS: Long = 1800L, resetS: Long = 7L * 86400L,
-               resetAfter: Int = 3): Dataset[PathHit] = {
+  def pathHits(spark: SparkSession, events: Dataset[PathEvent]): Dataset[PathHit] = {
     import spark.implicits._
+    val resetS = 7L * 86400L
+    val resetAfter = 3
     events.groupByKey(_.user_id)
       .flatMapGroupsWithState[PathState, PathHit](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
@@ -163,7 +165,8 @@ object StreamingOps {
             // would silently drop a new user's entire history when
             // epoch-seconds are negative (pre-1970 backfills)
             if (st.n == 0 || t0 >= st.t1) {
-              if (st.n >= 2 && st.t1 - st.t2 <= gapS && t0 - st.t1 <= gapS)
+              if (st.n >= 2 && st.t1 - st.t2 <= Events.SessionGapS &&
+                  t0 - st.t1 <= Events.SessionGapS)
                 out += PathHit(s"${st.e2}>${st.e1}>${e.event_type}")
               st = PathState(e.event_type, t0, st.e1, st.t1, math.min(st.n + 1, 2))
             } else if (t0 < st.t1 - resetS) {
@@ -282,19 +285,10 @@ object StreamingOps {
     * — keys older than the watermark are pruned; exactly the shape of
     * a continuous training-data ingest dedup). */
   def streamingDedup(events: DataFrame, keyCols: Seq[String],
-                     watermark: String = "30 minutes"): DataFrame =
+                     watermark: String): DataFrame =
     events.withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
-  /** Driver-visible streaming query (registry entry `ev_stream_tumbling`):
-    * stages the sf events table into a fresh ingest directory, runs the
-    * watermarked tumbling aggregation through a REAL
-    * readStream→aggregate→memory-sink pass, and reshapes the result to
-    * the `ev_tumbling` contract (epoch-second BIGINT window starts) so
-    * the same DuckDB oracle hash-checks an end-to-end Structured
-    * Streaming execution, not just its batch twin. Complete output mode:
-    * with a bounded fixture the watermark never advances past the final
-    * window, and complete mode emits every window exactly once drained. */
   /** Staged ingest dirs, one per source sf dir: staging is a test-fixture
     * step (production events would already land in a directory), so it is
     * paid once per session, not per query run. */
@@ -436,21 +430,6 @@ object StreamingOps {
     graft.sources.Warc.docsFromWarcFiles(s, out)
   }
 
-  /** Streaming crawl ingest (`src_stream_warc`) — the
-    * INGESTION-TIME twin of [[graft.sources.Warc.srcWarcDocs]]:
-    * `.warc.gz` shards arrive as a file-source `readStream` over the
-    * lake (binaryFile format — new shards appear, their documents
-    * append), and each micro-batch parses its shards map-side through
-    * the SAME record walk as the batch ingest
-    * ([[graft.sources.Warc.docRowsFromShardBytes]] — batch and
-    * streaming parse cannot diverge; digest quarantine and
-    * record-type filtering included). Stateless Append: every shard
-    * parses exactly once whatever the batching —
-    * `maxFilesPerTrigger=2` forces MULTIPLE micro-batches over the
-    * fixture lake, so incremental arrival is actually executed, not
-    * simulated — and the accumulated documents share `src_warc`'s
-    * closed-form oracle end-to-end (scan → gunzip → parse must
-    * reproduce `documents` exactly, now continuously). */
   /** A binaryFile file-source stream over a lake directory with the
     * format's FIXED schema passed explicitly — the format derives its
     * schema from nothing in the data, so spelling it out beats the
@@ -470,6 +449,21 @@ object StreamingOps {
       .load(lake)
   }
 
+  /** Streaming crawl ingest (`src_stream_warc`) — the
+    * INGESTION-TIME twin of [[graft.sources.Warc.srcWarcDocs]]:
+    * `.warc.gz` shards arrive as a file-source `readStream` over the
+    * lake (binaryFile format — new shards appear, their documents
+    * append), and each micro-batch parses its shards map-side through
+    * the SAME record walk as the batch ingest
+    * ([[graft.sources.Warc.docRowsFromShardBytes]] — batch and
+    * streaming parse cannot diverge; digest quarantine and
+    * record-type filtering included). Stateless Append: every shard
+    * parses exactly once whatever the batching —
+    * `maxFilesPerTrigger=2` forces MULTIPLE micro-batches over the
+    * fixture lake, so incremental arrival is actually executed, not
+    * simulated — and the accumulated documents share `src_warc`'s
+    * closed-form oracle end-to-end (scan → gunzip → parse must
+    * reproduce `documents` exactly, now continuously). */
   def warcIngestViaStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val lake = graft.sources.Warc.wetLakeDir(s, dir)
@@ -667,9 +661,9 @@ object StreamingOps {
     * re-folds the previous compaction. Serving is ROW-IDENTICAL
     * across the fold (spec-gated), a fold that would move nothing is
     * a no-op (idempotence: a second call with the same floor does
-    * not rewrite), and `compactPartitions` sizes the folded file
-    * count. Single-writer maintenance op, CRASH-SAFE (r19, closing
-    * the r18 scope note): the publish sequence is write-staging →
+    * not rewrite), and the fold writes one file. Single-writer
+    * maintenance op, CRASH-SAFE (r19, closing the r18 scope note): the
+    * publish sequence is write-staging →
     * stamp a `_FOLD_TARGET_<id>` marker inside the staging dir →
     * delete-folded → rename-staging. The marker is the commit point:
     * a staging dir WITHOUT it is an aborted write (sources intact —
@@ -682,8 +676,7 @@ object StreamingOps {
     * to parquet readers after the rename. A multi-writer version
     * would swing a manifest like `pipe_ivf_reserve` — still out of
     * scope for a single-owner sink directory. */
-  def compactBatchDirs(s: SparkSession, outDir: String, keepLast: Int,
-                       compactPartitions: Int = 1): Unit = {
+  def compactBatchDirs(s: SparkSession, outDir: String, keepLast: Int): Unit = {
     require(keepLast >= 1, s"keepLast must keep at least the newest batch, got $keepLast")
     val root = new org.apache.hadoop.fs.Path(outDir)
     val fs = org.apache.hadoop.fs.FileSystem.newInstance(
@@ -704,8 +697,8 @@ object StreamingOps {
       if (fold.length < 2) return
       val targetId = fold.map(_._1).max
       val target = new org.apache.hadoop.fs.Path(root, s"batch_id=$targetId")
-      s.read.parquet(fold.map(_._2.toString): _*)
-        .repartition(compactPartitions)
+      s.read.parquet(ArraySeq.unsafeWrapArray(fold.map(_._2.toString)): _*)
+        .repartition(1)
         .write.mode("overwrite").parquet(tmp.toString)
       // commit point: from here the fold in tmp is the authoritative
       // copy and a crash completes forward (recoverAbortedFold)
@@ -764,6 +757,42 @@ object StreamingOps {
       .orderBy(col("doc_id"))
   }
 
+  /** Streaming DSIR scoring (`tx_stream_dsir`) — the ingestion-time
+    * deployment of [[graft.operators.TextAnalysis.dsir]]: new
+    * documents arrive as a STREAM and are scored against a FROZEN
+    * hashed-unigram LM artifact built batch-side before the stream
+    * starts (the [[graft.operators.TextAnalysis.dsirLlrTable]] shared
+    * builder — batch and streaming weights cannot diverge). Scoring is
+    * the one-pass [[graft.functions.DsirLlr]] kernel: tokenize +
+    * md5-bucket + table lookup per document, NO explode, NO join, NO
+    * aggregation — stateless Append mode, which is exactly why
+    * map-side per-doc scoring is the shape that survives an unbounded
+    * ingestion stream (the batch form's explode + broadcast-join +
+    * groupBy would accumulate per-doc aggregation state forever).
+    * Tokens unseen at LM-build time fall back to the pure-smoothing
+    * ratio, the streaming analog of add-α backoff. Oracle-shared with
+    * `tx_dsir`'s DuckDB SQL: the streamed scores hash-match the batch
+    * computation end-to-end. */
+  def dsirViaStream(s: SparkSession, dir: String): DataFrame = {
+    import graft.operators.TextAnalysis
+    val staged = docsStagedDir(s, dir)
+    val table = TextAnalysis.dsirLlrTable(s, dir)
+    val hb = conv(substring(md5(col("doc_id").cast("string")), 1, 3), 16, 10)
+      .cast("long")
+    val scored = s.readStream
+      .schema(graft.Tables.documents(s, dir).schema)
+      .parquet(staged)
+      .withColumn("hb", hb).filter(col("hb") < Sampling.HeldOutFrom)
+      .select(col("doc_id"),
+        graft.functions.TextFunctions.dsirLlr(lower(col("text")), table).as("r"))
+      .select(col("doc_id"), col("r.n_tokens").as("n_tokens"),
+        (floor(col("r.llr") * 10000.0) / 10000.0).as("dsir_weight"))
+      .filter(col("n_tokens") > 0L)
+      .withColumn("keep", when(col("dsir_weight") > 0.0, 1L).otherwise(0L))
+    runToMemory(scored, "tx_stream_dsir_q", OutputMode.Append)
+      .orderBy(col("doc_id"))
+  }
+
   /** Streaming incremental exact dedup (`ev_stream_incr_dedup`) — the
     * landing-zone deployment of
     * [[graft.operators.Dedup.incrementalDedup]]: new documents arrive
@@ -781,45 +810,8 @@ object StreamingOps {
     * [[graft.operators.Dedup.incrementalDedup]]'s md5-bucket rule, so
     * the DuckDB oracle hash-checks the streamed survivors end-to-end.
     */
-  /** Streaming DSIR scoring (`tx_stream_dsir`) — the ingestion-time
-    * deployment of [[graft.operators.TextAnalysis.dsir]]: new
-    * documents arrive as a STREAM and are scored against a FROZEN
-    * hashed-unigram LM artifact built batch-side before the stream
-    * starts (the [[graft.operators.TextAnalysis.dsirLlrTable]] shared
-    * builder — batch and streaming weights cannot diverge). Scoring is
-    * the one-pass [[graft.functions.DsirLlr]] kernel: tokenize +
-    * md5-bucket + table lookup per document, NO explode, NO join, NO
-    * aggregation — stateless Append mode, which is exactly why
-    * map-side per-doc scoring is the shape that survives an unbounded
-    * ingestion stream (the batch form's explode + broadcast-join +
-    * groupBy would accumulate per-doc aggregation state forever).
-    * Tokens unseen at LM-build time fall back to the pure-smoothing
-    * ratio, the streaming analog of add-α backoff. Oracle-shared with
-    * `tx_dsir`'s DuckDB SQL: the streamed scores hash-match the batch
-    * computation end-to-end. */
-  def dsirViaStream(s: SparkSession, dir: String,
-                    targetFrom: Long = 3891): DataFrame = {
-    import graft.operators.TextAnalysis
-    val staged = docsStagedDir(s, dir)
-    val table = TextAnalysis.dsirLlrTable(s, dir, targetFrom)
-    val hb = conv(substring(md5(col("doc_id").cast("string")), 1, 3), 16, 10)
-      .cast("long")
-    val scored = s.readStream
-      .schema(graft.Tables.documents(s, dir).schema)
-      .parquet(staged)
-      .withColumn("hb", hb).filter(col("hb") < targetFrom)
-      .select(col("doc_id"),
-        graft.functions.TextFunctions.dsirLlr(lower(col("text")), table).as("r"))
-      .select(col("doc_id"), col("r.n_tokens").as("n_tokens"),
-        (floor(col("r.llr") * 10000.0) / 10000.0).as("dsir_weight"))
-      .filter(col("n_tokens") > 0L)
-      .withColumn("keep", when(col("dsir_weight") > 0.0, 1L).otherwise(0L))
-    runToMemory(scored, "tx_stream_dsir_q", OutputMode.Append)
-      .orderBy(col("doc_id"))
-  }
-
   def incrDedupViaStream(s: SparkSession, dir: String,
-                         historyBuckets: Long = 3277): DataFrame = {
+                         historyBuckets: Long = Sampling.HistoryBelow): DataFrame = {
     val staged = docsStagedDir(s, dir)
     val hb = conv(substring(md5(col("doc_id").cast("string")), 1, 3), 16, 10)
       .cast("long")
@@ -852,21 +844,20 @@ object StreamingOps {
     * bounded by marked positions (the duplicated fraction of the
     * batch), mirroring how the retention/paths twins aggregate
     * post-sink. Shares `dd_spans_incremental`'s oracle verbatim. */
-  def spansViaStream(s: SparkSession, dir: String, n: Int = 4,
-                     historyBuckets: Long = 3277): DataFrame = {
+  def spansViaStream(s: SparkSession, dir: String): DataFrame = {
     val staged = docsStagedDir(s, dir)
     val hb = conv(substring(md5(col("doc_id").cast("string")), 1, 3), 16, 10)
       .cast("long")
     val tf = graft.functions.TextFunctions
     val historyGrams = graft.Tables.documents(s, dir)
-      .withColumn("hb", hb).filter(col("hb") < historyBuckets)
-      .select(explode_outer(tf.tokenNgrams(lower(col("text")), n)).as("gram"))
+      .withColumn("hb", hb).filter(col("hb") < Sampling.HistoryBelow)
+      .select(explode_outer(tf.tokenNgrams(lower(col("text")), Dedup.SpanN)).as("gram"))
       .filter(col("gram").isNotNull).distinct()
     val batch = s.readStream
       .schema(graft.Tables.documents(s, dir).schema)
       .parquet(staged)
-      .withColumn("hb", hb).filter(col("hb") >= historyBuckets)
-      .select(col("doc_id"), tf.tokenNgrams(lower(col("text")), n).as("grams"))
+      .withColumn("hb", hb).filter(col("hb") >= Sampling.HistoryBelow)
+      .select(col("doc_id"), tf.tokenNgrams(lower(col("text")), Dedup.SpanN).as("grams"))
       .select(col("doc_id"), size(col("grams")).cast("long").as("n_grams"),
         posexplode_outer(col("grams")).as(Seq("pos", "gram")))
       .filter(col("gram").isNotNull)
@@ -877,19 +868,28 @@ object StreamingOps {
     val byPos = w.partitionBy(col("doc_id")).orderBy(col("pos"))
     mem
       .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(byPos) <= n, 0L).otherwise(1L))
+        when(col("pos") - lag(col("pos"), 1).over(byPos) <= Dedup.SpanN, 0L).otherwise(1L))
       .withColumn("island", sum(col("brk")).over(byPos.rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
       .groupBy(col("doc_id"), col("island"))
       .agg(min(col("pos")).cast("long").as("start_tok"),
-        (max(col("pos")) + (n - 1)).cast("long").as("end_tok"),
+        (max(col("pos")) + (Dedup.SpanN - 1)).cast("long").as("end_tok"),
         count(lit(1)).as("n_windows"),
-        (first(col("n_grams")) + (n - 1)).cast("long").as("doc_tokens"))
+        (first(col("n_grams")) + (Dedup.SpanN - 1)).cast("long").as("doc_tokens"))
       .select(col("doc_id"), col("start_tok"), col("end_tok"),
         col("n_windows"), col("doc_tokens"))
       .orderBy(col("doc_id"), col("start_tok"))
   }
 
+  /** Driver-visible streaming query (registry entry `ev_stream_tumbling`):
+    * stages the sf events table into a fresh ingest directory, runs the
+    * watermarked tumbling aggregation through a REAL
+    * readStream→aggregate→memory-sink pass, and reshapes the result to
+    * the `ev_tumbling` contract (epoch-second BIGINT window starts) so
+    * the same DuckDB oracle hash-checks an end-to-end Structured
+    * Streaming execution, not just its batch twin. Complete output mode:
+    * with a bounded fixture the watermark never advances past the final
+    * window, and complete mode emits every window exactly once drained. */
   def tumblingViaStream(s: SparkSession, dir: String): DataFrame = {
     val staged = stagedDir(s, dir)
     val mem = runToMemory(tumblingCounts(eventsStream(s, staged)),
@@ -1028,7 +1028,7 @@ object StreamingOps {
   private val probesStagedDirs = new graft.Artifacts.Dirs[(String, Int)]("graft-stream-probes")
 
   private def probesStagedDir(s: SparkSession, dir: String,
-                              numQueries: Int = 10): String =
+                              numQueries: Int = Similarity.NumQueries): String =
     // keyed by (dir, numQueries): a cache keyed on dir alone would
     // silently serve the FIRST call's staged traffic to a later call
     // with a different probe count (review r14)
@@ -1049,19 +1049,20 @@ object StreamingOps {
     * the artifact layout and cannot drift. The stream-static join is
     * stateless Append (no watermark state to size: the artifact is
     * static, each probe's matches emit once); rank/top-k runs
-    * post-sink over the bounded match set (numQueries × nProbe
+    * post-sink over the bounded match set (numQueries × NProbe
     * lists), the dd_stream_spans discipline. Result contract is
     * `pipe_ivf_serve`'s exactly — RecallSpec gates streamed ≡ batch
     * serve row-for-row, proving the artifact serves incremental
     * traffic, not just batch sweeps. */
-  def annServeViaStream(s: SparkSession, dir: String, nProbe: Int = 4,
-                        numQueries: Int = 10, topK: Int = 5): DataFrame = {
-    val idx = graft.operators.Similarity.ivfIndexDir(s, dir)
+  def annServeViaStream(s: SparkSession, dir: String,
+                        numQueries: Int = Similarity.NumQueries,
+                        topK: Int = Similarity.TopK): DataFrame = {
+    val idx = Similarity.ivfIndexDir(s, dir)
     val staged = probesStagedDir(s, dir, numQueries)
     val probeStream = s.readStream
       .schema(s.read.parquet(staged).schema)
       .parquet(staged)
-    val scored = graft.operators.Similarity.serveStreamScored(s, idx, probeStream, nProbe)
+    val scored = Similarity.serveStreamScored(s, idx, probeStream, Similarity.NProbe)
     val mem = runToMemory(scored, "ann_stream_serve_q", OutputMode.Append)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
@@ -1103,6 +1104,17 @@ object StreamingOps {
   private[graft] def shufflePartitionsFor(inputBytes: Long, advisoryBytes: Long,
                                           cap: Int): Int =
     math.min(cap.toLong, math.max(2L, (inputBytes - 1) / advisoryBytes + 1)).toInt
+
+  /** The state partitions [[runToMemory]] runs `df` with: its file
+    * sources' bytes over Spark's advisory partition size, between 2
+    * and the session's shuffle partitions. */
+  private[graft] def streamShufflePartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.internal.SQLConf
+    val conf = df.sparkSession.sessionState.conf
+    shufflePartitionsFor(fileSourceBytes(df),
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.getConf(SQLConf.SHUFFLE_PARTITIONS))
+  }
 
   /** Bytes of the files under a stream's file sources: every
     * file-format `StreamingRelation` in its analyzed plan, its path
@@ -1157,13 +1169,9 @@ object StreamingOps {
   def runToMemory(df: DataFrame, name: String,
                   outputMode: OutputMode = OutputMode.Append,
                   extraConfs: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.internal.SQLConf
     val spark = df.sparkSession
-    val conf = spark.sessionState.conf
-    val partitions = shufflePartitionsFor(fileSourceBytes(df),
-      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
-      conf.getConf(SQLConf.SHUFFLE_PARTITIONS))
-    val confs = ("spark.sql.shuffle.partitions" -> partitions.toString) +: extraConfs.toSeq
+    val confs =
+      ("spark.sql.shuffle.partitions" -> streamShufflePartitions(df).toString) +: extraConfs.toSeq
     graft.GraftSession.withConfs(spark, confs: _*) {
       val q = df.writeStream
         .format("memory").queryName(name)

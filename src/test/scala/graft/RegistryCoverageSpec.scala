@@ -280,10 +280,12 @@ class RegistryCoverageSpec extends AnyFunSuite {
     "Warc.encodeRawWarc" -> "fixture encoder specs build raw WARC inputs with",
   )
 
+  private def classDir(c: Class[_]) =
+    java.nio.file.Paths.get(c.getProtectionDomain.getCodeSource.getLocation.toURI)
+
   test("every public main method is reachable from a registry, CLI or extension root") {
     val t0 = System.nanoTime()
-    val dir = java.nio.file.Paths.get(
-      SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val dir = classDir(SparkEntry.getClass)
     val walk = new MainReachability(dir, getClass.getClassLoader)
     assert(walk.classes.size >= 200,
       s"walked ${walk.classes.size} classes under $dir; expected main's full build")
@@ -338,5 +340,42 @@ class RegistryCoverageSpec extends AnyFunSuite {
       banned.findAllMatchIn(l).map(m => s"$path:${i + 1}: ${m.matched}")
     }
     assert(offenders.isEmpty, s"Probe builds its own plan: $offenders")
+  }
+
+  test("every defaulted main parameter has a caller that sets it and a caller that takes it") {
+    // A default no caller overrides is a constant in disguise, and one no
+    // caller leaves out is a required parameter: both widen a signature
+    // for nothing. Perfbench, outside this build, calls its roots with
+    // every flag set, so their parameters are its to judge.
+    val params = new DefaultedParams(classDir(SparkEntry.getClass), classDir(getClass)).params
+    val external = reachabilityRoots.collect {
+      case (c, m, why) if why.startsWith("perfbench") => s"${MainReachability.display(c)}.$m"
+    }.toSet
+    val checked = params.filterNot(p => external(s"${p.owner}.${p.method}"))
+    info(s"${params.size} defaulted parameters in main, " +
+      s"${params.size - checked.size} of them on perfbench roots")
+    val neverSet = checked.filter(_.set == 0)
+    val neverTaken = checked.filter(_.taken == 0)
+    if (neverSet.nonEmpty || neverTaken.nonEmpty) fail(
+      s"${neverSet.size} defaults no caller sets (make each a constant):\n${neverSet.mkString("\n")}\n" +
+        s"${neverTaken.size} defaults no caller takes (make each required):\n${neverTaken.mkString("\n")}")
+  }
+
+  test("every scaladoc block documents the definition below it") {
+    // A doc comment directly followed by another documents nothing: the
+    // definition it was written for moved or went away.
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList.sorted
+    finally walk.close()
+    val orphans = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.map(_.trim).toIndexedSeq
+      lines.indices.filter(i => lines(i).startsWith("/**")).flatMap { start =>
+        val end = lines.indexWhere(_.contains("*/"), start)
+        val next = lines.indexWhere(_.nonEmpty, end + 1)
+        Option.when(end >= 0 && next >= 0 && lines(next).startsWith("/**"))(s"$p:${start + 1}")
+      }
+    }
+    if (orphans.nonEmpty)
+      fail(s"${orphans.size} scaladoc blocks document nothing:\n${orphans.mkString("\n")}")
   }
 }
