@@ -791,29 +791,26 @@ object GopherCounts {
 /** Content-defined chunking (CDC) — the alignment-independent span
   * primitive of dedup storage (rsync/LBFS-style) and exact-substring
   * corpus dedup: chunk boundaries are chosen where the polynomial
-  * rolling hash of the last `window` bytes masks to zero, so a shared
+  * rolling hash of the last `Window` bytes masks to zero, so a shared
   * passage produces the SAME interior chunks in every document that
   * contains it, at ANY byte offset. (Fixed-stride windows — the
   * tumbling-segment family — only match when two documents happen to
   * align on the stride; content-defined cuts are what make cross-doc
   * span detection offset-proof.) Emits the FNV-1a 64 hash of each
   * chunk's bytes as `array<long>`; chunk lengths are clamped to
-  * [minLen, maxLen] (cut-rule hits inside minLen are skipped, maxLen
+  * [MinLen, MaxLen] (cut-rule hits inside MinLen are skipped, MaxLen
   * forces a cut), the standard CDC bound that keeps both the explode
   * factor and the chunk-size distribution predictable. One pass, no
   * allocation beyond the output array. Mask 0x3F ⟹ expected chunk
-  * ≈ 64 bytes + minLen. */
-case class CdcChunks(child: Expression, window: Int = 16,
-                     mask: Long = 0x3fL, minLen: Int = 32, maxLen: Int = 256)
-    extends UnaryExpression with CodegenFallback {
-  require(window >= 1 && minLen >= window && maxLen > minLen,
-    s"need window >= 1 <= minLen < maxLen, got $window/$minLen/$maxLen")
+  * ≈ 64 bytes + MinLen. */
+case class CdcChunks(child: Expression) extends UnaryExpression with CodegenFallback {
+  import CdcChunks._
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_cdc_chunks"
 
   override protected def nullSafeEval(v: Any): Any = {
     val bytes = v.asInstanceOf[UTF8String].getBytes
-    val bounds = CdcChunks.boundaries(bytes, window, mask, minLen, maxLen)
+    val bounds = boundaries(bytes, Window, Mask, MinLen, MaxLen)
     val out = new Array[Any](bounds.length - 1)
     var i = 0
     while (i < bounds.length - 1) {
@@ -827,6 +824,11 @@ case class CdcChunks(child: Expression, window: Int = 16,
 }
 
 object CdcChunks {
+  private final val Window = 16
+  private final val Mask = 0x3fL
+  private final val MinLen = 32
+  private final val MaxLen = 256
+
   /** Chunk boundary offsets for `bytes` — always starts with 0 and
     * ends with `bytes.length` (empty input ⟹ Array(0) ⟹ zero
     * chunks). Exposed for the spec's partition/cut-rule property
