@@ -113,7 +113,7 @@ object Probe {
     * parquet write) vs N timed serves off the artifact. The ratio is
     * the amortization argument in SCALING.md — at production list
     * counts the gap only widens (build scans the corpus; serve scans
-    * nProbe partitions). */
+    * `NProbe` partitions). */
   private def ivfServe(spark: SparkSession, dir: String): Unit = {
     def time[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -204,11 +204,11 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = seedCentroids(emb, NLists)
-    ivfWithCentroids(s, emb, cids, cvecs, NProbe, numQueries, topK)
+    val (cids, cvecs) = seedCentroids(emb)
+    ivfWithCentroids(s, emb, cids, cvecs, numQueries, topK)
   }
 
-  /** Frozen seed centroids: the first `nLists` corpus vectors,
+  /** Frozen seed centroids: the first `NLists` corpus vectors,
     * collected once at plan build. Centroids live on the driver, as
     * in any k-means pipeline; assignment is then a pure map-side
     * argmax inside the NearestCentroids kernel — round 1's
@@ -217,10 +217,9 @@ object Similarity {
     * Shared by the query path ([[ivfTopK]]) and the maintenance path
     * ([[ivfIncremental]]) so the serving index and its ingest twin
     * can never disagree on the seed rule. */
-  private def seedCentroids(emb: DataFrame,
-                            nLists: Int): (Seq[Long], Seq[Seq[Double]]) = {
+  private def seedCentroids(emb: DataFrame): (Seq[Long], Seq[Seq[Double]]) = {
     import emb.sparkSession.implicits._
-    val rows = emb.filter($"vec_id" < nLists)
+    val rows = emb.filter($"vec_id" < NLists)
       .select($"vec_id", $"embedding").collect()
     (rows.map(_.getLong(0)).toSeq, rows.map(_.getSeq[Double](1)).toSeq)
   }
@@ -239,7 +238,7 @@ object Similarity {
     * before query metrics degrade.
     *
     * Scale shape: assignment is map-side; the corpus scans ONCE — the
-    * only shuffle is the ≤ nLists-row (cid) partial-agged count
+    * only shuffle is the ≤ NLists-row (cid) partial-agged count
     * rollup, and the two global totals are that rollup's own sums,
     * re-read off the reused exchange and attached as a broadcast
     * 1-row cross join (a GLOBAL aggregate is one row by construction
@@ -263,7 +262,7 @@ object Similarity {
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"),
         hb.as("hb"))
-    val (cids, cvecs) = seedCentroids(emb, NLists)
+    val (cids, cvecs) = seedCentroids(emb)
     if (cids.isEmpty) {
       return Seq.empty[(Long, Long, Long, Long, Long, Long)]
         .toDF("cid", "n_history", "n_batch", "hist_ppm", "batch_ppm", "drift_ppm")
@@ -290,7 +289,7 @@ object Similarity {
   /** The drifted-corpus fixture SHARED by the in-session lifecycle
     * (`pipe_ivf_retrain`) and the versioned-artifact lifecycle
     * (`pipe_ivf_reserve`): history = md5-bucket split below
-    * `historyBuckets`; the batch is the rest, pushed through a fixed
+    * `Sampling.HistoryBelow`; the batch is the rest, pushed through a fixed
     * affine drift (a tight cluster the history-trained index has no
     * centroid near — what makes the retrain decision fire BY
     * CONSTRUCTION). Materialized once per call: the lifecycle runs
@@ -304,7 +303,6 @@ object Similarity {
     * arithmetic is IDENTICAL either way, so a bounded frame is
     * row-equal to filtering the full one. */
   private[graft] def driftedTagged(s: SparkSession, dir: String,
-                                   historyBuckets: Long,
                                    idBound: Option[Long] = None): DataFrame = {
     import s.implicits._
     val hb = Sampling.hashBucket($"vec_id")
@@ -317,10 +315,10 @@ object Similarity {
     // reads for the fixture build, and the bounded probe frame plans
     // as exactly ONE pushdown-filtered embeddings scan (review r14)
     val tagged = base.select($"vec_id",
-      when($"hb" < historyBuckets, $"embedding").otherwise(expr(
+      when($"hb" < Sampling.HistoryBelow, $"embedding").otherwise(expr(
         "transform(embedding, (x, i) -> CASE WHEN i = 0 THEN x * 0.2D + 1.0D ELSE x * 0.2D END)"))
         .as("embedding"),
-      when($"hb" < historyBuckets, lit(0L)).otherwise(lit(1L)).as("is_b"))
+      when($"hb" < Sampling.HistoryBelow, lit(0L)).otherwise(lit(1L)).as("is_b"))
     if (idBound.isDefined) tagged else tagged.localCheckpoint(false)
   }
 
@@ -334,7 +332,7 @@ object Similarity {
     import tagged.sparkSession.implicits._
     // localCheckpoint: counts feeds both the crossJoin probe side and
     // its own global-totals aggregate — without materializing these
-    // ≤ nLists rows, the full-corpus assignment job runs twice
+    // ≤ NLists rows, the full-corpus assignment job runs twice
     // (max-effort review, r12)
     val counts = tagged
       .select($"is_b", nearest($"embedding", 1).getItem(0).as("cid"))
@@ -375,7 +373,7 @@ object Similarity {
     *  3. detect: per-list history-vs-batch ppm share drift under the
     *     OLD centroids (exactly [[ivfIncremental]]'s metric, here
     *     against trained lists), rolled up to max |drift| — a
-    *     ≤ nLists-row pull, the retrain-due signal;
+    *     ≤ NLists-row pull, the retrain-due signal;
     *  4. decide: drift ≥ `DriftThresholdPpm` → retrain on
     *     history + batch ([[kmeansCentroids]] over the combined
     *     corpus), else keep serving the old index;
@@ -389,15 +387,15 @@ object Similarity {
     * the map-side kernel, fit is one long-sum aggregate over
     * `floor(cos·10⁶)` (order-independent integer sum — deterministic
     * at any parallelism), recall joins the two bounded top-k frames.
-    * Driver pulls are bounded artifacts only (≤ nLists drift rows,
-    * 1-row fit scalars, numQueries·topK recall frames — the ccnet
+    * Driver pulls are bounded artifacts only (≤ NLists drift rows,
+    * 1-row fit scalars, NumQueries·TopK recall frames — the ccnet
     * cutoff rule). Rows-only (k-means training is the documented
     * trained-float-artifact no-go class); RecallSpec gates drift
     * detection, the retrain decision, STRICT fit recovery and
     * recall non-degradation, plus determinism. */
   def ivfLifecycle(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tagged = driftedTagged(s, dir, Sampling.HistoryBelow)
+    val tagged = driftedTagged(s, dir)
     val history = tagged.filter($"is_b" === 0L).select($"vec_id", $"embedding")
     if (history.isEmpty) {
       return Seq.empty[(String, Long)].toDF("metric", "value")
@@ -441,7 +439,7 @@ object Similarity {
         .localCheckpoint(false)
     }
     def recallPpm(cids: Seq[Long], cvecs: Seq[Seq[Double]]): Long = {
-      val got = ivfWithCentroids(s, combined, cids, cvecs, NProbe, NumQueries, TopK)
+      val got = ivfWithCentroids(s, combined, cids, cvecs, NumQueries, TopK)
         .select($"query_id", $"vec_id", lit(1L).as("hit"))
       // hits AND total in ONE action (r22: the split semi-join count +
       // brute.count() was two driver round-trips per call over the same
@@ -473,28 +471,27 @@ object Similarity {
 
   /** IVF with k-means-TRAINED centroids ([[kmeansCentroids]]) instead of
     * seed vectors — same probe plumbing, data-adaptive lists. */
-  def ivfTrainedTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                     topK: Int = TopK): DataFrame = {
+  def ivfTrainedTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
-    ivfWithCentroids(s, emb, cids, cvecs, NProbe, numQueries, topK)
+    ivfWithCentroids(s, emb, cids, cvecs, NumQueries, TopK)
   }
 
   /** Session-scoped PERSISTED IVF index artifact — the
     * train-once/serve-many shape production actually deploys (the
     * dd_spans_incremental gram-index discipline applied to ANN):
-    * k-means runs ONCE per (corpus, nLists, iters) and the index is
+    * k-means runs ONCE per corpus and the index is
     * WRITTEN as two parquet tables under a fresh artifact dir:
     *
-    *  - `centroids/`: (cid, cvec) — ≤ nLists rows, the probe-routing
+    *  - `centroids/`: (cid, cvec) — ≤ NLists rows, the probe-routing
     *    table every serving query collects (a bounded driver
     *    artifact, the frozen-LM rule);
     *  - `lists/`: (vec_id, embedding) PARTITIONED BY cid — the
     *    inverted lists as a real storage layout, so a serving query's
     *    scan prunes to its probed lists at the FILE level (at 100 TB
-    *    with 10⁴-10⁵ lists, a nProbe=4 query touches 4 directories,
+    *    with 10⁴-10⁵ lists, an NProbe=4 query touches 4 directories,
     *    not the corpus; this is what in-session assignment can never
     *    give you).
     *
@@ -512,12 +509,11 @@ object Similarity {
     * the serve side was factored for exactly this reason, the build
     * side had been duplicated). */
   private def buildIndexInto(s: SparkSession, out: String, corpus: DataFrame,
-                             nLists: Int, iters: Int,
                              payload: String = "embedding",
                              encode: Column => Column = identity): Unit = {
     import s.implicits._
-    val (cids, cvecs) = kmeansCentroids(s, corpus, nLists, iters)
-    // ≤ nLists rows: one file, not 32 near-empty shuffle outputs
+    val (cids, cvecs) = kmeansCentroids(s, corpus, NLists, Iters)
+    // ≤ NLists rows: one file, not 32 near-empty shuffle outputs
     cids.zip(cvecs).toDF("cid", "cvec").coalesce(1)
       .write.mode("overwrite").parquet(out + "/centroids")
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
@@ -534,11 +530,10 @@ object Similarity {
     ivfIndexDirs.stage(s, dir) { out =>
       import s.implicits._
       buildIndexInto(s, out, Tables.embeddings(s, dir)
-        .select($"vec_id", $"embedding".cast("array<double>").as("embedding")),
-        NLists, Iters)
+        .select($"vec_id", $"embedding".cast("array<double>").as("embedding")))
     }
 
-  /** Read a persisted index's ≤ nLists centroid rows back (a bounded
+  /** Read a persisted index's ≤ NLists centroid rows back (a bounded
     * driver pull; parquet round-trips doubles bit-exactly). */
   private def readCentroids(s: SparkSession, idx: String): (Seq[Long], Seq[Seq[Double]]) = {
     val cent = s.read.parquet(idx + "/centroids").orderBy("cid").collect()
@@ -556,7 +551,6 @@ object Similarity {
     * encoding adds (float column + exact cosine vs SQ8 codes +
     * asymmetric distance). */
   private def serveFromIndex(s: SparkSession, dir: String, idx: String,
-                             nProbe: Int, numQueries: Int, topK: Int,
                              payload: String = "embedding",
                              scorer: (Column, Column) => Column = cosine,
                              probeSource: Option[DataFrame] = None): DataFrame = {
@@ -573,32 +567,30 @@ object Similarity {
     // bounded id prefix (pushdown-provable for the broadcast guard).
     val probes = probeSource.getOrElse(
         Tables.embeddings(s, dir)
-          .filter($"vec_id" < numQueries)
+          .filter($"vec_id" < NumQueries)
           .select($"vec_id".as("query_id"), $"embedding".cast("array<double>").as("q")))
-      .select($"query_id", $"q", explode(nearest($"q", nProbe)).as("cid"))
+      .select($"query_id", $"q", explode(nearest($"q", NProbe)).as("cid"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     lists.join(broadcast(probes), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", round(scorer($"q", col(payload)), 6).as("cos_sim"))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
 
   /** IVF serving from the PERSISTED index (`pipe_ivf_serve`): read
-    * the ≤ nLists centroid rows back from the artifact (parquet
+    * the ≤ NLists centroid rows back from the artifact (parquet
     * round-trips doubles bit-exactly, so served results are IDENTICAL
     * to [[ivfTrainedTopK]]'s — RecallSpec pins the parity), route
-    * each probe to its nProbe lists with the same assignment kernel,
+    * each probe to its NProbe lists with the same assignment kernel,
     * and rescore ONLY inside the probed list partitions of the
     * `lists/` table. No k-means job, no corpus assignment pass —
     * training cost lives in [[ivfIndexDir]], serving cost is the
     * probe-bounded scan (the decoupling the bench shows). */
-  def ivfServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                   topK: Int = TopK): DataFrame =
-    serveFromIndex(s, dir, ivfIndexDir(s, dir),
-      NProbe, numQueries, topK)
+  def ivfServeTopK(s: SparkSession, dir: String): DataFrame =
+    serveFromIndex(s, dir, ivfIndexDir(s, dir))
 
   /** APPEND-grown persisted index (`pipe_ivf_append`) — the ingest
     * verb of the artifact lifecycle: the index is built from the
@@ -625,7 +617,7 @@ object Similarity {
         .select($"vec_id", $"embedding".cast("array<double>").as("embedding"), hb.as("hb"))
       val history = emb.filter($"hb" < Sampling.HistoryBelow).select($"vec_id", $"embedding")
       // phase 1 — BUILD from history only (the shared builder)
-      buildIndexInto(s, out, history, NLists, Iters)
+      buildIndexInto(s, out, history)
       // phase 2 — INGEST the batch against the persisted artifact:
       // centroids come from the parquet just written (the ingest job
       // owns no training state), batch rows append as new files
@@ -639,11 +631,8 @@ object Similarity {
 
   /** Serve from the append-grown index — same plan as
     * [[ivfServeTopK]], different artifact. */
-  def ivfAppendServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                         topK: Int = TopK): DataFrame =
-    serveFromIndex(s, dir,
-      ivfAppendIndexDir(s, dir),
-      NProbe, numQueries, topK)
+  def ivfAppendServeTopK(s: SparkSession, dir: String): DataFrame =
+    serveFromIndex(s, dir, ivfAppendIndexDir(s, dir))
 
   /** Persisted IVF×SQ8 index (`pipe_ivf_sq8_serve`) — the deployable
     * FAISS `IVF<n>,SQ8` recipe as a STORED artifact, not a session
@@ -673,21 +662,19 @@ object Similarity {
       // carry ONLY (vec_id, code, cid) — the float embedding is
       // dropped before the write, which is the whole footprint
       // argument
-      buildIndexInto(s, out, emb, NLists, Iters, payload = "code",
+      buildIndexInto(s, out, emb, payload = "code",
         encode = e => VectorFunctions.quantizeSq8(e, los, his))
     }
 
   /** Serve from the persisted SQ8 artifact: bounds read back (a 1-row
     * driver pull), codes scored with [[graft.functions.CosineSq8Asym]]
     * through the shared [[serveFromIndex]] plan. */
-  def ivfSq8ServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                      topK: Int = TopK): DataFrame = {
+  def ivfSq8ServeTopK(s: SparkSession, dir: String): DataFrame = {
     val idx = ivfSq8IndexDir(s, dir)
     val b = s.read.parquet(idx + "/bounds").collect()(0)
     val los = b.getSeq[Double](0)
     val his = b.getSeq[Double](1)
-    serveFromIndex(s, dir, idx, NProbe, numQueries, topK,
-      payload = "code",
+    serveFromIndex(s, dir, idx, payload = "code",
       scorer = (q, code) => VectorFunctions.cosineSq8Asym(q, code, los, his))
   }
 
@@ -752,13 +739,11 @@ object Similarity {
 
   /** Lifecycle phase 1: v1 trained on the HISTORY split, manifest → 1. */
   private[graft] def versionedBuildV1(s: SparkSession, root: String, dir: String,
-                                      nLists: Int, iters: Int,
-                                      historyBuckets: Long,
                                       tagged0: Option[DataFrame] = None): Unit = {
     import s.implicits._
-    val history = tagged0.getOrElse(driftedTagged(s, dir, historyBuckets))
+    val history = tagged0.getOrElse(driftedTagged(s, dir))
       .filter($"is_b" === 0L).select($"vec_id", $"embedding")
-    buildIndexInto(s, root + "/v1", history, nLists, iters)
+    buildIndexInto(s, root + "/v1", history)
     commitManifest(s, root, 1L)
   }
 
@@ -769,19 +754,15 @@ object Similarity {
     * directories are never written to — only a fresh sibling and the
     * appended manifest record. */
   private[graft] def versionedRetrainIfDrifted(s: SparkSession, root: String, dir: String,
-                                               nLists: Int, iters: Int,
-                                               historyBuckets: Long,
-                                               driftThresholdPpm: Long,
                                                tagged0: Option[DataFrame] = None): Boolean = {
     import s.implicits._
-    val tagged = tagged0.getOrElse(driftedTagged(s, dir, historyBuckets))
+    val tagged = tagged0.getOrElse(driftedTagged(s, dir))
     val ver = manifestVersion(s, root)
     val (cids, cvecs) = readCentroids(s, s"$root/v$ver")
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
-    if (maxShareDriftPpm(tagged, nearest) < driftThresholdPpm) false
+    if (maxShareDriftPpm(tagged, nearest) < DriftThresholdPpm) false
     else {
-      buildIndexInto(s, s"$root/v${ver + 1}", tagged.select($"vec_id", $"embedding"),
-        nLists, iters)
+      buildIndexInto(s, s"$root/v${ver + 1}", tagged.select($"vec_id", $"embedding"))
       commitManifest(s, root, ver + 1)
       true
     }
@@ -794,10 +775,9 @@ object Similarity {
       // leak, checkpoint blocks being non-recomputable) the corpus
       // TWICE per build (review r14). The phase functions keep their
       // self-building default for the spec's phase-isolated gates.
-      val tagged = Some(driftedTagged(s, dir, Sampling.HistoryBelow))
-      versionedBuildV1(s, root, dir, NLists, Iters, Sampling.HistoryBelow, tagged)
-      versionedRetrainIfDrifted(s, root, dir, NLists, Iters, Sampling.HistoryBelow,
-        DriftThresholdPpm, tagged)
+      val tagged = Some(driftedTagged(s, dir))
+      versionedBuildV1(s, root, dir, tagged)
+      versionedRetrainIfDrifted(s, root, dir, tagged)
     }
 
   /** Serve THROUGH the manifest (`pipe_ivf_reserve`): resolve the
@@ -808,28 +788,24 @@ object Similarity {
     * combined corpus — the queries a post-drift deployment actually
     * receives — so served results are gated EXACTLY equal to an
     * in-session IVF under the retrained centroids (RecallSpec). */
-  def ivfReserveTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                     topK: Int = TopK): DataFrame = {
+  def ivfReserveTopK(s: SparkSession, dir: String): DataFrame = {
     val root = ivfVersionedDir(s, dir)
-    serveThroughManifest(s, dir, root, NProbe, numQueries, topK, Sampling.HistoryBelow)
+    serveThroughManifest(s, dir, root)
   }
 
   /** The manifest-resolved serve shared by every versioned-root
     * consumer (`pipe_ivf_reserve`, `pipe_ivf_gc`): pointer pull, then
     * the common [[serveFromIndex]] plan over `v<manifest>/`. */
-  private[graft] def serveThroughManifest(s: SparkSession, dir: String, root: String,
-                                          nProbe: Int, numQueries: Int, topK: Int,
-                                          historyBuckets: Long): DataFrame = {
+  private[graft] def serveThroughManifest(s: SparkSession, dir: String, root: String): DataFrame = {
     import s.implicits._
     val ver = manifestVersion(s, root)
     // bounded probe frame: the vec_id filter pushes to the embeddings
     // scan BELOW the drift transform (no corpus scan, no checkpoint —
     // review r14), with per-row arithmetic identical to the full
     // tagged frame's, so served rows are unchanged
-    val probes = driftedTagged(s, dir, historyBuckets, idBound = Some(numQueries.toLong))
+    val probes = driftedTagged(s, dir, idBound = Some(NumQueries.toLong))
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
-    serveFromIndex(s, dir, s"$root/v$ver", nProbe, numQueries, topK,
-      probeSource = Some(probes))
+    serveFromIndex(s, dir, s"$root/v$ver", probeSource = Some(probes))
   }
 
   /** Retention GC over a versioned index root (`pipe_ivf_gc`) — the
@@ -875,21 +851,19 @@ object Similarity {
     * so the served frame is gated row-identical to `pipe_ivf_reserve`
     * (RecallSpec) — the GC deleted a generation serving no longer
     * reads, and nothing else. */
-  def ivfGcServeTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                     topK: Int = TopK): DataFrame = {
+  def ivfGcServeTopK(s: SparkSession, dir: String): DataFrame = {
     val root = ivfGcDirs.stage(s, dir) { r =>
-      val tagged = Some(driftedTagged(s, dir, Sampling.HistoryBelow))
-      versionedBuildV1(s, r, dir, NLists, Iters, Sampling.HistoryBelow, tagged)
-      versionedRetrainIfDrifted(s, r, dir, NLists, Iters, Sampling.HistoryBelow,
-        DriftThresholdPpm, tagged)
+      val tagged = Some(driftedTagged(s, dir))
+      versionedBuildV1(s, r, dir, tagged)
+      versionedRetrainIfDrifted(s, r, dir, tagged)
       gcVersions(s, r, keep = 0)
     }
-    serveThroughManifest(s, dir, root, NProbe, numQueries, topK, Sampling.HistoryBelow)
+    serveThroughManifest(s, dir, root)
   }
 
   /** Stream-side scoring against a persisted index
     * (`ann_stream_serve`'s corpus-sized work): a PROBE STREAM's rows
-    * route to their nProbe lists with the same assignment kernel
+    * route to their `NProbe` lists with the same assignment kernel
     * (map-side — centroids are a bounded driver pull made BEFORE the
     * stream starts, the frozen-LM rule), then stream-static equi-join
     * the cid-partitioned `lists/` table per micro-batch. Stateless
@@ -900,15 +874,14 @@ object Similarity {
     * is bounded post-sink work (the dd_stream_spans discipline),
     * keeping the stream free of unsupported streaming windows. */
   private[graft] def serveStreamScored(s: SparkSession, idx: String,
-                                       probeStream: DataFrame,
-                                       nProbe: Int): DataFrame = {
+                                       probeStream: DataFrame): DataFrame = {
     import s.implicits._
     val (cids, cvecs) = readCentroids(s, idx)
     val lists = s.read.parquet(idx + "/lists")
       .select($"vec_id", $"embedding", $"cid".cast("long").as("cid"))
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
     probeStream
-      .select($"query_id", $"q", explode(nearest($"q", nProbe)).as("cid"))
+      .select($"query_id", $"q", explode(nearest($"q", NProbe)).as("cid"))
       .join(lists, Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id", round(cosine($"q", $"embedding"), 6).as("cos_sim"))
@@ -977,7 +950,7 @@ object Similarity {
   private[graft] val bcastCentroidThreshold = 256
 
   /** Centroid broadcasts memoized per (context, centroid set): repeated
-    * plan builds over the same centroids (an nProbe sweep, per-batch
+    * plan builds over the same centroids (repeated serves, per-batch
     * re-planning) reuse ONE TorrentBroadcast instead of allocating a
     * fresh multi-megabyte broadcast per call — blocks are reclaimed by
     * the ContextCleaner only once the Broadcast object is unreachable,
@@ -1035,18 +1008,18 @@ object Similarity {
 
   private[graft] def ivfWithCentroids(s: SparkSession, emb: DataFrame,
                                       cids: Seq[Long], cvecs: Seq[Seq[Double]],
-                                      nProbe: Int, numQueries: Int, topK: Int,
+                                      numQueries: Int, topK: Int,
                                       bcastThreshold: Int = bcastCentroidThreshold): DataFrame = {
     import s.implicits._
     val nearest = centroidAssigner(s, cids, cvecs, bcastThreshold)
     val assigned = emb.select($"vec_id", $"embedding",
       nearest($"embedding", 1).getItem(0).as("cid"))
-    // queries probe their nProbe nearest lists — same kernel, k = nProbe
+    // queries probe their NProbe nearest lists — same kernel, k = NProbe
     val probes = emb.filter($"vec_id" < numQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
-        explode(nearest($"embedding", nProbe)).as("cid"))
+        explode(nearest($"embedding", NProbe)).as("cid"))
     // rescore exactly within probed lists only; probes is numQueries ×
-    // nProbe rows — always broadcast, so the corpus never shuffles
+    // NProbe rows — always broadcast, so the corpus never shuffles
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     assigned.join(broadcast(probes), Seq("cid"))
       .filter($"vec_id" =!= $"query_id")
@@ -1060,7 +1033,7 @@ object Similarity {
   /** IVF × SQ8 composed ANN — the two scale levers of the preceding
     * paths in one index (the FAISS `IVF<n>,SQ8` recipe, the deployable
     * 100 TB shape): k-means-trained inverted lists bound the
-    * comparison set to nProbe/nLists of the corpus, and inside the
+    * comparison set to NProbe/NLists of the corpus, and inside the
     * lists the corpus is held as 1 byte/dim SQ8 codes (8× smaller —
     * list partitions that fit in executor memory) scored with
     * asymmetric distance ([[graft.functions.CosineSq8Asym]]: queries
@@ -1072,8 +1045,7 @@ object Similarity {
     * brute force (combined loss) and against the unquantized trained
     * IVF (added quantization loss must be ≈ zero, as the pure-SQ8
     * overlap of 1.000 predicts). Rows-only in the driver contract. */
-  def ivfSq8TopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                 topK: Int = TopK): DataFrame = {
+  def ivfSq8TopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
@@ -1086,7 +1058,7 @@ object Similarity {
     val assigned = emb.select($"vec_id",
       nearest($"embedding", 1).getItem(0).as("cid"),
       VectorFunctions.quantizeSq8($"embedding", los, his).as("code"))
-    val probes = emb.filter($"vec_id" < numQueries)
+    val probes = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
         explode(nearest($"embedding", NProbe)).as("cid"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
@@ -1096,7 +1068,7 @@ object Similarity {
         round(VectorFunctions.cosineSq8Asym($"q", $"code", los, his), 6)
           .as("cos_sim"))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
@@ -1121,19 +1093,18 @@ object Similarity {
     * so the r11-era "two-stage rank isn't robustly hash-comparable"
     * assumption was disproved by construction; the RecallSpec overlap
     * gate stays as belt-and-braces. */
-  def mrlTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-              topK: Int = TopK): DataFrame = {
+  def mrlTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val prefixDims = 16
     val shortlistK = 40
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val pre = emb.select($"vec_id", slice($"embedding", 1, prefixDims).as("pre"))
-    val qPre = emb.filter($"vec_id" < numQueries)
+    val qPre = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), slice($"embedding", 1, prefixDims).as("qpre"))
     val wS = Window.partitionBy($"query_id").orderBy($"pre_sim".desc, $"vec_id")
     // the limit is a SEMANTIC NO-OP (rank ≤ shortlistK per query ×
-    // numQueries queries caps the set at exactly this many rows) that
+    // NumQueries queries caps the set at exactly this many rows) that
     // makes the shortlist's bound structural, so the registry-wide
     // broadcast guard can PROVE the stage-2 hint safe
     val short = pre.join(broadcast(qPre), $"vec_id" =!= $"query_id")
@@ -1141,8 +1112,8 @@ object Similarity {
         VectorFunctions.cosineSim($"qpre", $"pre").as("pre_sim"))
       .withColumn("rk", row_number().over(wS)).filter($"rk" <= shortlistK)
       .select($"query_id", $"vec_id")
-      .limit(numQueries * shortlistK)
-    val qFull = emb.filter($"vec_id" < numQueries)
+      .limit(NumQueries * shortlistK)
+    val qFull = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     emb.join(broadcast(short), Seq("vec_id"))
@@ -1150,7 +1121,7 @@ object Similarity {
       .select($"query_id", $"vec_id",
         round(VectorFunctions.cosineSim($"q", $"embedding"), 6).as("cos_sim"))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
@@ -1280,29 +1251,28 @@ object Similarity {
     * float brute force, so the RecallSpec gate isolates pure PQ
     * quantization loss. Rows-only in the driver contract (k-means
     * codebooks aren't ANSI-expressible). */
-  def pqTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-             topK: Int = TopK): DataFrame = {
+  def pqTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val books = pqTrain(s, emb, PqM, PqKsub)
     val (encode, score) = pqScorers(s, books)
     val coded = emb.select($"vec_id", encode($"embedding").as("code"))
-    val queries = emb.filter($"vec_id" < numQueries)
+    val queries = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"))
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
     coded.join(broadcast(queries), $"vec_id" =!= $"query_id")
       .select($"query_id", $"vec_id",
         round(score($"q", $"code"), 6).as("cos_sim"))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
 
   /** IVF × PQ composed ANN — the FAISS `IVF<n>,PQ<m>` recipe, the
     * standard web-scale deployable: k-means-trained inverted lists
-    * bound the comparison set to nProbe/nLists of the corpus, and
+    * bound the comparison set to NProbe/NLists of the corpus, and
     * inside the lists the corpus is M code bytes per vector. The
     * corpus carries only (vec_id, cid, code) past the scan — at 100 TB
     * of embeddings this is the shape that actually fits an in-memory
@@ -1324,15 +1294,14 @@ object Similarity {
     * little structure, so re-centering only misaligns the shared
     * codebook. Both paths are gated so the trade-off stays measured,
     * not assumed. Rows-only in the driver contract. */
-  def ivfPqTopK(s: SparkSession, dir: String, numQueries: Int = NumQueries,
-                topK: Int = TopK, byResidual: Boolean = false): DataFrame = {
+  def ivfPqTopK(s: SparkSession, dir: String, byResidual: Boolean = false): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
     val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
     val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
-    val probes = emb.filter($"vec_id" < numQueries)
+    val probes = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
         explode(nearest($"embedding", NProbe)).as("cid"))
     val scored =
@@ -1367,7 +1336,7 @@ object Similarity {
       }
     scored
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter($"rk" <= topK)
+      .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")
       .orderBy($"query_id", $"rk")
   }
@@ -1418,7 +1387,9 @@ object Similarity {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
-    val (cids, cvecs) = kmeansCentroids(s, emb, k = 16, iters = 5)
+    // the IVF shape's k-means: the same clusters an IVF index lists, so
+    // the pairs compared here are those an IVF probe would rescore
+    val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
     val assigned = emb.select($"vec_id", $"embedding",
       VectorFunctions.nearestCentroids($"embedding", cids, cvecs, 1)
         .getItem(0).as("cid"))

@@ -41,8 +41,9 @@ object Skew {
     * bucket = fnv1a32(word) & 0x7fffffff % nReduce, bit-exact with
     * `worker.go:154,170-174` — a user can reproduce which `mr-out-N`
     * file any word landed in. */
-  def wordCountWithPartition(s: SparkSession, dir: String, nReduce: Int = 5): DataFrame = {
+  def wordCountWithPartition(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val nReduce = 5 // the reference CLI's reduce-task count
     WordCount.wordCount(Tables.documents(s, dir))
       .withColumn("bucket",
         HashFunctions.referencePartition($"word", nReduce).cast("long"))

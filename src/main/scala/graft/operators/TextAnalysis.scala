@@ -108,10 +108,9 @@ object TextAnalysis {
     * oracle agrees through ties (post-floor ties break on doc_id);
     * summation order across a query's ≤3 terms is the only
     * cross-engine nondeterminism, ulps (~1e-16) against the 1e-4
-    * grid. Default queries use the synthetic corpus's own
+    * grid. The `SearchQueries` use the synthetic corpus's own
     * vocabulary so matches are non-trivial at every SF. */
   def bm25(s: SparkSession, dir: String,
-           queries: Seq[String] = SearchQueries,
            topK: Int = SearchTopK): DataFrame = {
     import s.implicits._
     val k1 = 1.2
@@ -140,7 +139,7 @@ object TextAnalysis {
     // explode: InferFiltersFromGenerate's inferred guards would inline
     // the tokenizer kernel into the pushed-down Filter (3 evals/row —
     // same fix as contamination; PlanSpec pins one eval per scan)
-    val qpairs = queries.zipWithIndex.flatMap { case (q, i) =>
+    val qpairs = SearchQueries.zipWithIndex.flatMap { case (q, i) =>
       q.toLowerCase.split("\\s+").filter(_.nonEmpty).distinct
         .map(t => (i.toLong, t))
     }
@@ -212,7 +211,7 @@ object TextAnalysis {
     * ties break by doc_id. */
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val lex = bm25(s, dir, SearchQueries, topK = RrfCandK)
+    val lex = bm25(s, dir, topK = RrfCandK)
       .select($"query_id", $"doc_id", $"rk".as("rk_lex"))
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
@@ -270,7 +269,7 @@ object TextAnalysis {
     import s.implicits._
     val prefixDims = 16
     val shortlistK = 100
-    val lex = bm25(s, dir, SearchQueries, topK = RrfCandK)
+    val lex = bm25(s, dir, topK = RrfCandK)
       .select($"query_id", $"doc_id", $"rk".as("rk_lex"))
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))

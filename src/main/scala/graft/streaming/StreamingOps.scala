@@ -1025,15 +1025,11 @@ object StreamingOps {
   /** Staged ANN probe-traffic dir: the embeddings table's bounded id
     * prefix written once per source dir — the ingest directory an
     * online query stream would land in. */
-  private val probesStagedDirs = new graft.Artifacts.Dirs[(String, Int)]("graft-stream-probes")
+  private val probesStagedDirs = new graft.Artifacts.Dirs[String]("graft-stream-probes")
 
-  private def probesStagedDir(s: SparkSession, dir: String,
-                              numQueries: Int = Similarity.NumQueries): String =
-    // keyed by (dir, numQueries): a cache keyed on dir alone would
-    // silently serve the FIRST call's staged traffic to a later call
-    // with a different probe count (review r14)
-    probesStagedDirs.stage(s, (dir, numQueries)) { out =>
-      graft.Tables.embeddings(s, dir).filter(col("vec_id") < numQueries)
+  private def probesStagedDir(s: SparkSession, dir: String): String =
+    probesStagedDirs.stage(s, dir) { out =>
+      graft.Tables.embeddings(s, dir).filter(col("vec_id") < Similarity.NumQueries)
         .select(col("vec_id").as("query_id"),
           col("embedding").cast("array<double>").as("q"))
         .write.mode("overwrite").parquet(out)
@@ -1049,25 +1045,23 @@ object StreamingOps {
     * the artifact layout and cannot drift. The stream-static join is
     * stateless Append (no watermark state to size: the artifact is
     * static, each probe's matches emit once); rank/top-k runs
-    * post-sink over the bounded match set (numQueries × NProbe
+    * post-sink over the bounded match set (`NumQueries` × `NProbe`
     * lists), the dd_stream_spans discipline. Result contract is
     * `pipe_ivf_serve`'s exactly — RecallSpec gates streamed ≡ batch
     * serve row-for-row, proving the artifact serves incremental
     * traffic, not just batch sweeps. */
-  def annServeViaStream(s: SparkSession, dir: String,
-                        numQueries: Int = Similarity.NumQueries,
-                        topK: Int = Similarity.TopK): DataFrame = {
+  def annServeViaStream(s: SparkSession, dir: String): DataFrame = {
     val idx = Similarity.ivfIndexDir(s, dir)
-    val staged = probesStagedDir(s, dir, numQueries)
+    val staged = probesStagedDir(s, dir)
     val probeStream = s.readStream
       .schema(s.read.parquet(staged).schema)
       .parquet(staged)
-    val scored = Similarity.serveStreamScored(s, idx, probeStream, Similarity.NProbe)
+    val scored = Similarity.serveStreamScored(s, idx, probeStream)
     val mem = runToMemory(scored, "ann_stream_serve_q", OutputMode.Append)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id"))
     mem.withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= topK)
+      .filter(col("rk") <= Similarity.TopK)
       .select(col("query_id"), col("vec_id"), col("cos_sim"), col("rk"))
       .orderBy(col("query_id"), col("rk"))
   }

@@ -21,7 +21,7 @@ class ArtifactsSpec extends SparkSpec {
       .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
     val rows = emb.filter($"vec_id" < 16).orderBy($"vec_id").collect()
     def ivf() = Similarity.ivfWithCentroids(spark, emb, rows.map(_.getLong(0)).toSeq,
-      rows.map(_.getSeq[Double](1)).toSeq, nProbe = 4, numQueries = 10, topK = 5,
+      rows.map(_.getSeq[Double](1)).toSeq, numQueries = 10, topK = 5,
       bcastThreshold = 1)
     val iv = ivf()
     // eviction unpersists; a destroyed broadcast would fail these plans

@@ -137,7 +137,7 @@ class HashSpec extends SparkSpec {
     // (fnv1a32(word) & 0x7fffffff) % nReduce — worker.go:154,170-174 —
     // recomputed here against the pinned-vector FNV kernel. Counts are
     // already oracle-checked via wc_wordcount (same tokenization).
-    val rows = graft.operators.Skew.wordCountWithPartition(spark, sfDir, nReduce = 5)
+    val rows = graft.operators.Skew.wordCountWithPartition(spark, sfDir)
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>

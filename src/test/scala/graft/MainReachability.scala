@@ -24,7 +24,15 @@ import scala.jdk.CollectionConverters._
 final class MainReachability(classDir: Path, loader: ClassLoader) {
   import MainReachability._
 
-  val classes: Map[String, ClassNode] = load(classDir)
+  val classes: Map[String, ClassNode] = {
+    val walk = Files.walk(classDir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".class")).map { p =>
+      val node = new ClassNode
+      new ClassReader(Files.readAllBytes(p)).accept(node, ClassReader.SKIP_FRAMES)
+      node.name -> node
+    }.toMap
+    finally walk.close()
+  }
 
   private def methodsOf(c: String): Seq[MethodNode] =
     classes.get(c).fold(Seq.empty[MethodNode])(_.methods.asScala.toSeq)
@@ -171,17 +179,6 @@ final class MainReachability(classDir: Path, loader: ClassLoader) {
 }
 
 object MainReachability {
-  /** Every class under `classDir`, by internal name. */
-  def load(classDir: Path): Map[String, ClassNode] = {
-    val walk = Files.walk(classDir)
-    try walk.iterator().asScala.filter(_.toString.endsWith(".class")).map { p =>
-      val node = new ClassNode
-      new ClassReader(Files.readAllBytes(p)).accept(node, ClassReader.SKIP_FRAMES)
-      node.name -> node
-    }.toMap
-    finally walk.close()
-  }
-
   final case class Ref(owner: String, name: String, desc: String)
 
   final case class Unreached(file: String, line: Int, name: String) {

@@ -50,7 +50,7 @@ class RecallSpec extends SparkSpec {
 
   test("k-means-trained IVF top-k recall vs exact brute force") {
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val got = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir))
     val recall = (got & truth).size.toDouble / truth.size
     // measured 0.860: k-means balances list sizes on isotropic data, so
     // probing 4/16 lists covers slightly fewer true neighbors than the
@@ -181,8 +181,8 @@ class RecallSpec extends SparkSpec {
 
   test("IVF×SQ8 composed: recall vs brute force; quantization adds ≈no loss over trained IVF") {
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val ivf = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.ivfSq8TopK(spark, sfDir, numQueries = 10, topK = 5))
+    val ivf = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir))
+    val got = topkPairs(Similarity.ivfSq8TopK(spark, sfDir))
     val recall = (got & truth).size.toDouble / truth.size
     val vsIvf = (got & ivf).size.toDouble / ivf.size
     info(f"ivf×sq8 recall@5 vs brute = $recall%.3f, vs trained ivf = $vsIvf%.3f")
@@ -203,7 +203,7 @@ class RecallSpec extends SparkSpec {
     // bulk). Round 7's untested 4-bit config (ksub=16) measured 0.20;
     // this gate makes that class of regression unshippable.
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.pqTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val got = topkPairs(Similarity.pqTopK(spark, sfDir))
     val recall = (got & truth).size.toDouble / truth.size
     info(f"pq recall@5 = $recall%.3f (${(got & truth).size}/${truth.size})")
     assert(recall >= 0.75, f"PQ recall collapsed: $recall%.3f")
@@ -211,8 +211,8 @@ class RecallSpec extends SparkSpec {
 
   test("IVF×PQ composed: recall vs brute force and vs the unquantized trained IVF") {
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val ivf = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.ivfPqTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val ivf = topkPairs(Similarity.ivfTrainedTopK(spark, sfDir))
+    val got = topkPairs(Similarity.ivfPqTopK(spark, sfDir))
     val recall = (got & truth).size.toDouble / truth.size
     val vsIvf = (got & ivf).size.toDouble / ivf.size
     info(f"ivf×pq recall@5 vs brute = $recall%.3f, vs trained ivf = $vsIvf%.3f")
@@ -234,8 +234,7 @@ class RecallSpec extends SparkSpec {
     // strength of this measurement; the gate keeps the alternative
     // path honest (it must stay a working ANN, not rot).
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.ivfPqTopK(spark, sfDir, numQueries = 10,
-      topK = 5, byResidual = true))
+    val got = topkPairs(Similarity.ivfPqTopK(spark, sfDir, byResidual = true))
     val recall = (got & truth).size.toDouble / truth.size
     info(f"ivf×pq by-residual recall@5 vs brute = $recall%.3f")
     assert(recall >= 0.65, f"residual IVF×PQ recall collapsed: $recall%.3f")
@@ -250,7 +249,7 @@ class RecallSpec extends SparkSpec {
     // shortlistK = 4×topK, 0.520 at the 8×topK default — the funnel
     // width is the recall knob, paid in stage-2 fetches only.
     val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = Similarity.mrlTopK(spark, sfDir, numQueries = 10, topK = 5)
+    val got = Similarity.mrlTopK(spark, sfDir)
     val gotPairs = topkPairs(got)
     val recall = (gotPairs & truth).size.toDouble / truth.size
     info(f"mrl recall@5 = $recall%.3f (${(gotPairs & truth).size}/${truth.size})")
@@ -393,8 +392,8 @@ class RecallSpec extends SparkSpec {
     // — while the serving plan does no training or corpus-assignment
     // work (PlanSpec pins that shape). A mismatch here means the
     // artifact write/read mangled the index.
-    val served = servedRows(Similarity.ivfServeTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val trained = servedRows(Similarity.ivfTrainedTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val served = servedRows(Similarity.ivfServeTopK(spark, sfDir))
+    val trained = servedRows(Similarity.ivfTrainedTopK(spark, sfDir))
     assert(served == trained,
       "serving from the persisted artifact must equal the in-session trained index")
     // recall vs exact brute force — same measured floor as trained IVF
@@ -404,7 +403,7 @@ class RecallSpec extends SparkSpec {
     info(f"served-ivf recall@5 = $recall%.3f")
     assert(recall >= 0.40, f"served recall collapsed: $recall%.3f")
     // deterministic: a second serve reads the same artifact
-    val again = servedRows(Similarity.ivfServeTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val again = servedRows(Similarity.ivfServeTopK(spark, sfDir))
     assert(again == served)
   }
 
@@ -418,7 +417,7 @@ class RecallSpec extends SparkSpec {
     //     parquet data file in lists/ holds both a history row and a
     //     batch row. At 100 TB this is the difference between a daily
     //     ingest writing the batch and rewriting the index.
-    val served = servedRows(Similarity.ivfAppendServeTopK(spark, sfDir, numQueries = 10, topK = 5))
+    val served = servedRows(Similarity.ivfAppendServeTopK(spark, sfDir))
     val hbExpr = graft.operators.Sampling.hashBucket(col("vec_id"))
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"),
@@ -427,7 +426,7 @@ class RecallSpec extends SparkSpec {
     val (cids, cvecs) = Similarity.kmeansCentroids(spark, history, 16, 5)
     val expected = servedRows(Similarity.ivfWithCentroids(spark,
       emb.select("vec_id", "embedding"), cids, cvecs,
-      nProbe = 4, numQueries = 10, topK = 5))
+      numQueries = 10, topK = 5))
     assert(served == expected,
       "append-grown artifact must serve exactly the frozen-centroid combined-corpus result")
     // batch members must actually be servable (the append is visible)
@@ -452,8 +451,8 @@ class RecallSpec extends SparkSpec {
     // and codes round-trip parquet exactly (doubles and bytes), so
     // serving the stored artifact must reproduce the in-session
     // composition bit-for-bit.
-    val served = servedRows(Similarity.ivfSq8ServeTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val inSession = servedRows(Similarity.ivfSq8TopK(spark, sfDir, numQueries = 10, topK = 5))
+    val served = servedRows(Similarity.ivfSq8ServeTopK(spark, sfDir))
+    val inSession = servedRows(Similarity.ivfSq8TopK(spark, sfDir))
     assert(served == inSession,
       "stored SQ8 artifact must serve exactly the in-session IVF×SQ8 result")
     // the footprint claim, MEASURED on the actual artifacts: the SQ8
@@ -473,7 +472,7 @@ class RecallSpec extends SparkSpec {
     assert(sq8Bytes > 0 && floatBytes / sq8Bytes >= 3,
       s"SQ8 artifact should be several times smaller on disk: $sq8Bytes vs $floatBytes")
     // deterministic: a second serve reads the same artifact
-    assert(servedRows(Similarity.ivfSq8ServeTopK(spark, sfDir, numQueries = 10, topK = 5)) == served)
+    assert(servedRows(Similarity.ivfSq8ServeTopK(spark, sfDir)) == served)
   }
 
   test("streaming serve ≡ batch serve from the same persisted index, row for row") {
@@ -483,8 +482,8 @@ class RecallSpec extends SparkSpec {
     // artifact, same routing kernel, same scorer, so any divergence
     // is a bug in the streaming deployment, not approximation.
     val streamed = servedRows(
-      graft.streaming.StreamingOps.annServeViaStream(spark, sfDir, numQueries = 10, topK = 5))
-    val batch = servedRows(Similarity.ivfServeTopK(spark, sfDir, numQueries = 10, topK = 5))
+      graft.streaming.StreamingOps.annServeViaStream(spark, sfDir))
+    val batch = servedRows(Similarity.ivfServeTopK(spark, sfDir))
     assert(streamed == batch,
       "streamed serve must equal the batch serve from the same artifact row-for-row")
     assert(streamed.nonEmpty, "the streamed serve must actually produce matches")
@@ -497,7 +496,7 @@ class RecallSpec extends SparkSpec {
     // only a new v2/ directory and append one manifest record.
     import scala.jdk.CollectionConverters._
     val root = tempDir("graft-ivf-ver-spec")
-    Similarity.versionedBuildV1(spark, root, sfDir, 16, 5, 3277L)
+    Similarity.versionedBuildV1(spark, root, sfDir)
     assert(Similarity.manifestVersion(spark, root) == 1L, "build must commit manifest -> v1")
     def inventory(dir: String): Map[String, String] = {
       val p = java.nio.file.Paths.get(dir)
@@ -511,7 +510,7 @@ class RecallSpec extends SparkSpec {
     }
     val before = inventory(root + "/v1")
     assert(before.nonEmpty, "v1 must contain data files")
-    val retrained = Similarity.versionedRetrainIfDrifted(spark, root, sfDir, 16, 5, 3277L, 50000L)
+    val retrained = Similarity.versionedRetrainIfDrifted(spark, root, sfDir)
     assert(retrained, "the drifted fixture must trigger the retrain")
     assert(Similarity.manifestVersion(spark, root) == 2L, "retrain must swing the manifest to v2")
     assert(inventory(root + "/v1") == before,
@@ -522,18 +521,18 @@ class RecallSpec extends SparkSpec {
     // indirection changed storage, not semantics. The retrain is
     // deterministic in-session (frozen split, seeded k-means), so the
     // spec recomputes the v2 centroids directly.
-    val served = servedRows(Similarity.ivfReserveTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val combined = Similarity.driftedTagged(spark, sfDir, 3277L)
+    val served = servedRows(Similarity.ivfReserveTopK(spark, sfDir))
+    val combined = Similarity.driftedTagged(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val (cids2, cvecs2) = Similarity.kmeansCentroids(spark, combined, 16, 5)
     val expected = servedRows(Similarity.ivfWithCentroids(spark, combined, cids2, cvecs2,
-      nProbe = 4, numQueries = 10, topK = 5))
+      numQueries = 10, topK = 5))
     assert(served == expected,
       "serving through the manifest must equal the in-session retrained IVF exactly")
     // the registry root's manifest also points at v2, and a second
     // serve is deterministic
     assert(Similarity.manifestVersion(spark, Similarity.ivfVersionedDir(spark, sfDir)) == 2L)
-    assert(servedRows(Similarity.ivfReserveTopK(spark, sfDir, numQueries = 10, topK = 5)) == served)
+    assert(servedRows(Similarity.ivfReserveTopK(spark, sfDir)) == served)
   }
 
   test("version GC: retires only below the retention floor; serving and survivors byte-unaffected") {
@@ -545,8 +544,8 @@ class RecallSpec extends SparkSpec {
     // the GC.
     import scala.jdk.CollectionConverters._
     val root = tempDir("graft-ivf-gc-spec")
-    Similarity.versionedBuildV1(spark, root, sfDir, 16, 5, 3277L)
-    assert(Similarity.versionedRetrainIfDrifted(spark, root, sfDir, 16, 5, 3277L, 50000L),
+    Similarity.versionedBuildV1(spark, root, sfDir)
+    assert(Similarity.versionedRetrainIfDrifted(spark, root, sfDir),
       "the drifted fixture must trigger the retrain")
     def inventory(): Map[String, String] = {
       val p = java.nio.file.Paths.get(root)
@@ -558,8 +557,7 @@ class RecallSpec extends SparkSpec {
       }.toMap
       finally walk.close()
     }
-    def serve() = servedRows(Similarity.serveThroughManifest(
-      spark, sfDir, root, nProbe = 4, numQueries = 10, topK = 5, historyBuckets = 3277L))
+    def serve() = servedRows(Similarity.serveThroughManifest(spark, sfDir, root))
     val pre = inventory()
     assert(pre.keySet.exists(_.startsWith("v1/")) && pre.keySet.exists(_.startsWith("v2/")),
       "both generations must exist before the GC")
@@ -584,8 +582,8 @@ class RecallSpec extends SparkSpec {
     // the registry arm runs the same deterministic lifecycle on its
     // own root WITH the GC applied — its output must therefore equal
     // pipe_ivf_reserve's exactly (the GC changed storage, not serving)
-    assert(servedRows(Similarity.ivfGcServeTopK(spark, sfDir, numQueries = 10, topK = 5)) ==
-      servedRows(Similarity.ivfReserveTopK(spark, sfDir, numQueries = 10, topK = 5)),
+    assert(servedRows(Similarity.ivfGcServeTopK(spark, sfDir)) ==
+      servedRows(Similarity.ivfReserveTopK(spark, sfDir)),
       "pipe_ivf_gc must serve row-identical to pipe_ivf_reserve")
   }
 }

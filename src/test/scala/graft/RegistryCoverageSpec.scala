@@ -268,6 +268,10 @@ class RegistryCoverageSpec extends AnyFunSuite {
     ("graft/streaming/StreamingOps$", "preStage", "perfbench's registry set-up"),
   )
 
+  // Roots perfbench, outside this build, calls with every flag set: the
+  // defaults guard leaves their parameters to it.
+  private val externalDefaults = Set(("graft/streaming/StreamingOps$", "preStage"))
+
   // Classes Spark loads by name (spark.sql.extensions=graft.GraftExtensions).
   private val reachabilityClassRoots = Seq("graft/GraftExtensions", "graft/GraftExtensions$")
 
@@ -343,18 +347,19 @@ class RegistryCoverageSpec extends AnyFunSuite {
   }
 
   test("every defaulted main parameter has a caller that sets it and a caller that takes it") {
-    // A default no caller overrides is a constant in disguise, and one no
-    // caller leaves out is a required parameter: both widen a signature
-    // for nothing. Perfbench, outside this build, calls its roots with
-    // every flag set, so their parameters are its to judge.
+    // A default no caller overrides is a constant in disguise (a caller
+    // that passes the default's own constant overrides nothing), and one
+    // no caller leaves out is a required parameter: both widen a
+    // signature for nothing.
+    val roots = reachabilityRoots.map { case (c, m, _) => (c, m) }.toSet
+    assert(externalDefaults.subsetOf(roots), s"${externalDefaults -- roots} are not reachability roots")
+    val external = externalDefaults.map { case (c, m) => s"${MainReachability.display(c)}.$m" }
     val params = new DefaultedParams(classDir(SparkEntry.getClass), classDir(getClass)).params
-    val external = reachabilityRoots.collect {
-      case (c, m, why) if why.startsWith("perfbench") => s"${MainReachability.display(c)}.$m"
-    }.toSet
     val checked = params.filterNot(p => external(s"${p.owner}.${p.method}"))
     info(s"${params.size} defaulted parameters in main, " +
       s"${params.size - checked.size} of them on perfbench roots")
-    val neverSet = checked.filter(_.set == 0)
+    val neverSet = checked.filter(_.set == 0).map(p =>
+      if (p.echoed == 0) p.toString else s"$p (${p.echoed} calls pass its own default)")
     val neverTaken = checked.filter(_.taken == 0)
     if (neverSet.nonEmpty || neverTaken.nonEmpty) fail(
       s"${neverSet.size} defaults no caller sets (make each a constant):\n${neverSet.mkString("\n")}\n" +

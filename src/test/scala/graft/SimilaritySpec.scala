@@ -122,9 +122,9 @@ class SimilaritySpec extends SparkSpec {
     val cids = rows.map(_.getLong(0)).toSeq
     val cvecs = rows.map(_.getSeq[Double](1)).toSeq
     val lit = Similarity.ivfWithCentroids(spark, emb, cids, cvecs,
-      nProbe = 4, numQueries = 10, topK = 5, bcastThreshold = Int.MaxValue)
+      numQueries = 10, topK = 5, bcastThreshold = Int.MaxValue)
     val bc = Similarity.ivfWithCentroids(spark, emb, cids, cvecs,
-      nProbe = 4, numQueries = 10, topK = 5, bcastThreshold = 1)
+      numQueries = 10, topK = 5, bcastThreshold = 1)
     assert(bc.collect().toSeq == lit.collect().toSeq)
     val litPlan = lit.queryExecution.executedPlan.toString
     val bcPlan = bc.queryExecution.executedPlan.toString
