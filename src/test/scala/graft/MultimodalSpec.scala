@@ -595,7 +595,7 @@ class MultimodalSpec extends SparkSpec {
       // declared chunk size near 2^31: pos+8+size wraps Int, and the
       // data branch would allocate a ~2 GB Array[Short] (OOM Error,
       // uncatchable by design) — must reject via the LONG bounds
-      "RIFF   WAVEdata".getBytes("ISO-8859-1") ++
+      "RIFF\u0010\u0000\u0000\u0000WAVEdata".getBytes("ISO-8859-1") ++
         Array[Byte](0xf0.toByte, 0xff.toByte, 0xff.toByte, 0x7f.toByte),
       // BMP header declaring a raster past Int range
       MediaCodec.encodeBmp(4, 2, Array.tabulate[Byte](24)(_.toByte))
