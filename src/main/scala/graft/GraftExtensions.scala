@@ -22,8 +22,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  // usage only: arguments, examples, note, group, since, deprecated
+  // and source stay empty
   private def info(name: String, usage: String) =
-    new ExpressionInfo("graft", null, name, usage, "")
+    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "")
 
   val builders: Map[String, (ExpressionInfo, Seq[Expression] => Expression)] = Map(
     "graft_fnv1a32" -> ((info("graft_fnv1a32",

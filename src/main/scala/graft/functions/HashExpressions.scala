@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * bit-exact Spark twin (so a user can reproduce the reference's
   * partition assignment), and [[Fnv1a64]] is the 64-bit variant
   * (SQL `graft_fnv1a64`; the dedup kernels hash shingles with the same
-  * [[HashFunctions.fnv1a64Bytes]]). Both implement `doGenCode`,
-  * so they stay inside whole-stage codegen — no UDF boxing in the
-  * scan→project hot path.
+  * [[HashFunctions.fnv1a64Bytes]]). Both implement `doGenCode` as a
+  * static call of the kernel eval runs, so they stay inside whole-stage
+  * codegen — no UDF boxing in the scan→project hot path.
   */
 object HashFunctions {
   /** FNV-1a 64 over UTF-8 bytes — public-domain constants. */
@@ -73,16 +73,13 @@ case class Fnv1a64(child: Expression) extends UnaryExpression {
     HashFunctions.fnv1a64Bytes(s, 0, s.length)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
+    nullSafeCodeGen(ctx, ev, c => {
+      val b = ctx.freshName("graftFnvB")
       s"""
-         |byte[] graftFnvB = $c.getBytes();
-         |long graftFnvH = 0xcbf29ce484222325L;
-         |for (int graftFnvI = 0; graftFnvI < graftFnvB.length; graftFnvI++) {
-         |  graftFnvH ^= (graftFnvB[graftFnvI] & 0xffL);
-         |  graftFnvH *= 0x100000001b3L;
-         |}
-         |${ev.value} = graftFnvH;
-       """.stripMargin)
+         |byte[] $b = $c.getBytes();
+         |${ev.value} = graft.functions.HashFunctions.fnv1a64Bytes($b, 0, $b.length);
+       """.stripMargin
+    })
   override protected def withNewChildInternal(c: Expression): Fnv1a64 = copy(child = c)
 }
 
@@ -94,15 +91,12 @@ case class Fnv1a32(child: Expression) extends UnaryExpression {
     HashFunctions.fnv1a32Bytes(s, 0, s.length)
   }
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
+    nullSafeCodeGen(ctx, ev, c => {
+      val b = ctx.freshName("graftFnvB")
       s"""
-         |byte[] graftFnvB = $c.getBytes();
-         |int graftFnvH = 0x811c9dc5;
-         |for (int graftFnvI = 0; graftFnvI < graftFnvB.length; graftFnvI++) {
-         |  graftFnvH ^= (graftFnvB[graftFnvI] & 0xff);
-         |  graftFnvH *= 0x01000193;
-         |}
-         |${ev.value} = graftFnvH;
-       """.stripMargin)
+         |byte[] $b = $c.getBytes();
+         |${ev.value} = graft.functions.HashFunctions.fnv1a32Bytes($b, 0, $b.length);
+       """.stripMargin
+    })
   override protected def withNewChildInternal(c: Expression): Fnv1a32 = copy(child = c)
 }

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
@@ -28,11 +28,6 @@ object VectorFunctions {
   def nearestCentroids(v: Column, ids: Seq[Long], vecs: Seq[Seq[Double]], k: Int): Column =
     ColumnBridge.column(NearestCentroids(ColumnBridge.expression(v), ids, vecs, k))
 
-  def nearestCentroidsBcast(v: Column,
-      bc: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])],
-      k: Int): Column =
-    ColumnBridge.column(NearestCentroidsBcast(ColumnBridge.expression(v), bc, k))
-
   def quantizeSq8(v: Column, los: Seq[Double], his: Seq[Double]): Column =
     ColumnBridge.column(QuantizeSq8(ColumnBridge.expression(v), los, his))
 
@@ -41,63 +36,79 @@ object VectorFunctions {
     ColumnBridge.column(CosineSq8Asym(
       ColumnBridge.expression(q), ColumnBridge.expression(code), los, his))
 
-  def pqEncode(v: Column, codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ColumnBridge.column(PqEncode(ColumnBridge.expression(v), codebooks))
-
   def pqEncodeBcast(v: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]]): Column =
     ColumnBridge.column(PqEncodeBcast(ColumnBridge.expression(v), bc))
-
-  def cosinePqAsym(q: Column, code: Column,
-                   codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ColumnBridge.column(CosinePqAsym(
-      ColumnBridge.expression(q), ColumnBridge.expression(code), codebooks))
 
   def cosinePqAsymBcast(q: Column, code: Column,
       bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]]): Column =
     ColumnBridge.column(CosinePqAsymBcast(
       ColumnBridge.expression(q), ColumnBridge.expression(code), bc))
 
-  def residualVec(v: Column, cid: Column,
-                  centroids: Seq[Seq[Double]]): Column =
-    ColumnBridge.column(ResidualVec(
-      ColumnBridge.expression(v), ColumnBridge.expression(cid), centroids))
+  /** The dot product kernel behind [[DotProduct]]'s eval and generated
+    * code: Σaᵢbᵢ over the shorter array's length. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
+    acc
+  }
 
-  def cosinePqResidual(q: Column, cid: Column, code: Column,
-                       centroids: Seq[Seq[Double]],
-                       codebooks: Seq[Seq[Seq[Double]]]): Column =
-    ColumnBridge.column(CosinePqResidual(
-      ColumnBridge.expression(q), ColumnBridge.expression(cid),
-      ColumnBridge.expression(code), centroids, codebooks))
+  /** The cosine kernel behind [[CosineSim]]'s eval and generated code:
+    * Σaᵢbᵢ / (√Σaᵢ² · √Σbᵢ²), one fused pass over the shorter array's
+    * length. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a.getDouble(i)
+      val y = b.getDouble(i)
+      dot += x * y; na += x * x; nb += y * y
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }
 
-/** The large-centroid-table twin of [[NearestCentroids]]: the table
-  * rides a TorrentBroadcast instead of plan literals, so a 10⁴-10⁵-list
-  * IVF doesn't serialize megabytes into every task's plan (broadcast
-  * blocks ship once per executor and are shared). Same eval, same
-  * ordering contract; equivalence pinned in SimilaritySpec. */
-case class NearestCentroidsBcast(child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[(Array[Long], Array[Array[Double]])],
-    k: Int)
+/** The `k` nearest centroid ids by cosine similarity (ties broken by
+  * smaller id), computed map-side against driver-collected centroids —
+  * the IVF assignment/probe step.
+  *
+  * Why an expression and not a join: the round-1 formulation
+  * (cross-join 16 broadcast centroids then `Window.partitionBy(vec_id)`
+  * argmax) shuffled the ENTIRE corpus — embeddings included — keyed by
+  * vec_id just to take a per-row argmax over 16 candidates. At 100 TB
+  * that is a full-corpus exchange for a map-side decision. Centroid sets
+  * are small by construction (they live on the driver in any k-means
+  * pipeline), so they belong in the expression, and assignment becomes
+  * embarrassingly parallel with zero Exchange (asserted in PlanSpec).
+  * Cosine math matches [[CosineSim]] exactly (same accumulation order).
+  *
+  * Sizing note: expression-embedded centroids serialize with the plan —
+  * fine for nLists ≤ a few hundred (≤ ~1 MB at dim 64). Every IVF path
+  * trains `Similarity.NLists` = 16 lists (8 KB of doubles at dim 64), so
+  * the table always rides as plan literals. A 10⁴-list IVF would want
+  * the table shipped as a TorrentBroadcast instead, as the PQ codebooks
+  * are ([[PqEncodeBcast]]).
+  */
+case class NearestCentroids(child: Expression, ids: Seq[Long],
+                            vecs: Seq[Seq[Double]], k: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with CodegenFallback {
-  require(k > 0)
+  require(ids.length == vecs.length && k > 0)
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false)
-  override def prettyName: String = "graft_nearest_centroids_bcast"
+  override def prettyName: String = "graft_nearest_centroids"
+
+  @transient private lazy val cvecs: Array[Array[Double]] = vecs.map(_.toArray).toArray
+  @transient private lazy val cids: Array[Long] = ids.toArray
 
   override protected def nullSafeEval(v: Any): Any = {
-    val (cids, cvecs) = bc.value
-    NearestCentroidKernel.topK(v.asInstanceOf[ArrayData], cids, cvecs, k)
-  }
-  override protected def withNewChildInternal(c: Expression): NearestCentroidsBcast =
-    copy(child = c)
-}
-
-/** Shared eval loop for the two centroid-assignment expressions. */
-private[functions] object NearestCentroidKernel {
-  def topK(a: ArrayData, cids: Array[Long], cvecs: Array[Array[Double]],
-           k: Int): Any = {
+    val a = v.asInstanceOf[ArrayData]
     val nc = cvecs.length
     val sims = new Array[Double](nc)
     var c = 0
@@ -132,43 +143,6 @@ private[functions] object NearestCentroidKernel {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(chosen)
   }
-}
-
-/** The `k` nearest centroid ids by cosine similarity (ties broken by
-  * smaller id), computed map-side against driver-collected centroids —
-  * the IVF assignment/probe step.
-  *
-  * Why an expression and not a join: the round-1 formulation
-  * (cross-join 16 broadcast centroids then `Window.partitionBy(vec_id)`
-  * argmax) shuffled the ENTIRE corpus — embeddings included — keyed by
-  * vec_id just to take a per-row argmax over 16 candidates. At 100 TB
-  * that is a full-corpus exchange for a map-side decision. Centroid sets
-  * are small by construction (they live on the driver in any k-means
-  * pipeline), so they belong in the expression, and assignment becomes
-  * embarrassingly parallel with zero Exchange (asserted in PlanSpec).
-  * Cosine math matches [[CosineSim]] exactly (same accumulation order).
-  *
-  * Sizing note: expression-embedded centroids serialize with the plan —
-  * fine for nLists ≤ a few hundred (≤ ~1 MB at dim 64). Above
-  * `Similarity.bcastCentroidThreshold` lists, `ivfWithCentroids`
-  * switches to [[NearestCentroidsBcast]] (same eval loop, same
-  * zero-Exchange plan) so the table ships as a TorrentBroadcast rather
-  * than plan literals.
-  */
-case class NearestCentroids(child: Expression, ids: Seq[Long],
-                            vecs: Seq[Seq[Double]], k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with CodegenFallback {
-  require(ids.length == vecs.length && k > 0)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, false)
-  override def prettyName: String = "graft_nearest_centroids"
-
-  @transient private lazy val cvecs: Array[Array[Double]] = vecs.map(_.toArray).toArray
-  @transient private lazy val cids: Array[Long] = ids.toArray
-
-  override protected def nullSafeEval(v: Any): Any =
-    NearestCentroidKernel.topK(v.asInstanceOf[ArrayData], cids, cvecs, k)
   override protected def withNewChildInternal(c: Expression): NearestCentroids =
     copy(child = c)
 }
@@ -232,89 +206,32 @@ case class SignLshBuckets(child: Expression, dim: Int, bits: Int, tables: Int)
   * score projection stays INSIDE whole-stage codegen — the
   * CodegenFallback boundary would otherwise materialize an InternalRow
   * and box through `eval` for every candidate pair, the hottest loop
-  * of the ANN/near-dup queries. Generated loop == compiled eval loop;
-  * parity is pinned in SimilaritySpec's driver-side goldens and the
-  * ann_brute_topk oracle. */
+  * of the ANN/near-dup queries. Generated code calls the same static
+  * kernel eval runs ([[VectorFunctions.dot]]); parity is pinned in
+  * SimilaritySpec's driver-side goldens and the ann_brute_topk
+  * oracle. */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) { acc += a.getDouble(i) * b.getDouble(i); i += 1 }
-    acc
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += $a.getDouble($i) * $b.getDouble($i);
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    VectorFunctions.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorFunctions.dot($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): DotProduct =
     copy(left = l, right = r)
 }
 
-/** cos(a,b) = Σaᵢbᵢ / (√Σaᵢ² · √Σbᵢ²), one fused pass per pair. */
+/** cos(a,b) through [[VectorFunctions.cosine]], in eval and in
+  * generated code alike. */
 case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_cosine"
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val x = a.getDouble(i)
-      val y = b.getDouble(i)
-      dot += x * y; na += x * x; nb += y * y
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $n = Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |double $na = 0.0;
-         |double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = $b.getDouble($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |${ev.value} = $dot / (Math.sqrt($na) * Math.sqrt($nb));
-       """.stripMargin
-    })
+  override protected def nullSafeEval(l: Any, r: Any): Any =
+    VectorFunctions.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.VectorFunctions.cosine($a, $b)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineSim =
     copy(left = l, right = r)
 }
@@ -324,8 +241,8 @@ case class CosineSim(left: Expression, right: Expression)
   * using corpus-level per-dimension [lo, hi] bounds, cutting the
   * resident corpus 8× vs array<double> (64 bytes vs 512 at dim 64).
   * Values outside the trained bounds clamp. Bounds ride as literals —
-  * 2×dim doubles, far under the broadcast-threshold sizes that matter
-  * for centroid tables. */
+  * 2×dim doubles, far under the ~128 KB PQ codebook table that rides a
+  * broadcast ([[PqEncodeBcast]]). */
 case class QuantizeSq8(child: Expression, los: Seq[Double], his: Seq[Double])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with CodegenFallback {
@@ -386,10 +303,7 @@ case class CosineSq8Asym(left: Expression, right: Expression,
     copy(left = l, right = r)
 }
 
-/** Shared eval loops for the PQ expressions — ONE kernel behind both
-  * the plan-literal and broadcast-wired variants (the
-  * NearestCentroidKernel discipline), so serialization strategy can
-  * never drift the arithmetic. */
+/** Eval loops and the codebook contract of the two PQ expressions. */
 private[functions] object PqKernel {
   /** The codebook contract every PQ expression checks at plan build:
     * at least one non-empty subspace, and ksub ≤ 256 so a code fits one
@@ -471,39 +385,21 @@ private[functions] object PqKernel {
 
 /** Product-quantization encode (Jégou et al. 2011, "Product
   * Quantization for Nearest Neighbor Search"): the vector is split
-  * into `M = codebooks.length` contiguous subspaces; each subvector is
+  * into M contiguous subspaces, one codebook each; each subvector is
   * replaced by the index of its nearest (L2) centroid in that
   * subspace's codebook. Output is M bytes — at dim 64 / M 8 that is a
   * 64× smaller resident corpus than array<double> (8 bytes vs 512),
   * the difference between an in-memory index and none at 100 TB of
-  * embeddings. `codebooks(m)(j)` is centroid j of subspace m; ksub ≤
+  * embeddings. `bc.value(m)(j)` is centroid j of subspace m; ksub ≤
   * 256 so a code fits one byte. Ties break toward the lower centroid
-  * index (deterministic). */
-case class PqEncode(child: Expression, codebooks: Seq[Seq[Seq[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with CodegenFallback {
-  PqKernel.requireBooks(codebooks.map(_.length))
-  override def dataType: DataType = org.apache.spark.sql.types.BinaryType
-  override def prettyName: String = "graft_pq_encode"
-
-  @transient private lazy val books: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val dsub = books(0)(0).length
-
-  override protected def nullSafeEval(v: Any): Any =
-    PqKernel.encode(v.asInstanceOf[ArrayData], books, dsub)
-  override protected def withNewChildInternal(c: Expression): PqEncode =
-    copy(child = c)
-}
-
-/** The broadcast-wired twin of [[PqEncode]] — the codebook table rides
-  * a TorrentBroadcast instead of plan literals (the
-  * [[NearestCentroidsBcast]] precedent): the m16×k256 default is
-  * ~128 KB of doubles, which as literals is re-copied through every
-  * plan transform, re-canonicalized and re-shipped with every task on
-  * every plan build — measured as ~0.5-0.7 s of per-repetition driver
-  * gap on ann_pq_topk/ann_ivf_pq. Same eval loop ([[PqKernel]]), same
-  * tie-break; equivalence pinned in SimilaritySpec. */
+  * index (deterministic).
+  *
+  * The codebook table rides a TorrentBroadcast instead of plan
+  * literals: the m16×k256 default is ~128 KB of doubles, which as
+  * literals was re-copied through every plan transform,
+  * re-canonicalized and re-shipped with every task on every plan
+  * build — measured as ~0.5-0.7 s of per-repetition driver gap on
+  * ann_pq_topk/ann_ivf_pq. */
 case class PqEncodeBcast(child: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
@@ -527,32 +423,8 @@ case class PqEncodeBcast(child: Expression,
   * reconstructed corpus norm is a table lookup (per-centroid squared
   * norms precomputed once per executor), so scoring touches only the
   * M code bytes plus the query floats. Queries stay exact; only the
-  * corpus is quantized. */
-case class CosinePqAsym(left: Expression, right: Expression,
-                        codebooks: Seq[Seq[Seq[Double]]])
-    extends BinaryExpression with CodegenFallback {
-  require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine_pq"
-
-  @transient private lazy val books: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val dsub = books(0)(0).length
-  @transient private lazy val norm2: Array[Array[Double]] =
-    PqKernel.norm2Of(books)
-
-  override protected def nullSafeEval(l: Any, r: Any): Any =
-    PqKernel.cosineAsym(l.asInstanceOf[ArrayData], r.asInstanceOf[Array[Byte]],
-      books, norm2, dsub)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosinePqAsym =
-    copy(left = l, right = r)
-}
-
-/** The broadcast-wired twin of [[CosinePqAsym]] (see [[PqEncodeBcast]]
-  * for why): codebooks arrive via TorrentBroadcast, the per-centroid
-  * reconstructed-norm table is still precomputed once per executor.
-  * Same eval loop ([[PqKernel]]); equivalence pinned in
-  * SimilaritySpec. */
+  * corpus is quantized. Codebooks arrive via TorrentBroadcast, as for
+  * [[PqEncodeBcast]]. */
 case class CosinePqAsymBcast(left: Expression, right: Expression,
     bc: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]])
     extends BinaryExpression with CodegenFallback {
@@ -570,116 +442,4 @@ case class CosinePqAsymBcast(left: Expression, right: Expression,
       books, norm2, dsub)
   override protected def withNewChildrenInternal(l: Expression, r: Expression): CosinePqAsymBcast =
     copy(left = l, right = r)
-}
-
-/** Residual vector for IVF-residual encoding (the FAISS
-  * `by_residual=true` default): `v − centroid(cid)`. Inverted-list
-  * residuals concentrate around zero regardless of where the list
-  * centroid sits, so a SHARED product-quantizer codebook spends its
-  * resolution on the within-list geometry instead of re-encoding the
-  * coarse structure the IVF already captured — the standard composition
-  * (Jégou et al. 2011 §IV). Centroid ids are LIST POSITIONS (the
-  * `kmeansCentroids` contract), so lookup is a bounds-checked index. */
-case class ResidualVec(left: Expression, right: Expression,
-                       centroids: Seq[Seq[Double]])
-    extends BinaryExpression with CodegenFallback {
-  require(centroids.nonEmpty)
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_residual_vec"
-
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-
-  override protected def nullSafeEval(v: Any, cidAny: Any): Any = {
-    val a = v.asInstanceOf[ArrayData]
-    val cid = cidAny.asInstanceOf[Long]
-    require(cid >= 0 && cid < cents.length,
-      s"graft_residual_vec: cid $cid outside [0, ${cents.length})")
-    val c = cents(cid.toInt)
-    val n = a.numElements()
-    require(n == c.length,
-      s"graft_residual_vec: vector dim $n != centroid dim ${c.length}")
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) { out(i) = a.getDouble(i) - c(i); i += 1 }
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
-  }
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): ResidualVec =
-    copy(left = l, right = r)
-}
-
-/** Asymmetric cosine against an IVF-RESIDUAL PQ code: the corpus
-  * reconstruction is `centroid(cid) + decode(code)`, so the dot
-  * product runs the float query against centroid-plus-codeword slices
-  * per subspace, and the reconstructed norm is a table lookup keyed by
-  * (cid, subspace, codeword) — precomputed once per executor
-  * (nLists × M × ksub doubles; 16×16×256 = 512 KB at the defaults).
-  * Scoring still touches only the M code bytes + the cid. Strict
-  * contracts match [[CosinePqAsym]]: malformed dims fail the task. */
-case class CosinePqResidual(first: Expression, second: Expression,
-                            third: Expression,
-                            centroids: Seq[Seq[Double]],
-                            codebooks: Seq[Seq[Seq[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
-    with CodegenFallback {
-  require(centroids.nonEmpty && codebooks.nonEmpty && codebooks.forall(_.nonEmpty))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_cosine_pq_residual"
-
-  @transient private lazy val cents: Array[Array[Double]] =
-    centroids.map(_.toArray).toArray
-  @transient private lazy val books: Array[Array[Array[Double]]] =
-    codebooks.map(_.map(_.toArray).toArray).toArray
-  @transient private lazy val dsub = books(0)(0).length
-  // norm2Table(cid)(m)(j) = Σ_t (centroid(cid)(m·dsub+t) + books(m)(j)(t))²
-  @transient private lazy val norm2Table: Array[Array[Array[Double]]] =
-    cents.map { c =>
-      books.zipWithIndex.map { case (sub, mi) =>
-        sub.map { cw =>
-          var s = 0.0
-          var t = 0
-          while (t < cw.length) {
-            val x = c(mi * dsub + t) + cw(t); s += x * x; t += 1
-          }
-          s
-        }
-      }
-    }
-
-  override protected def nullSafeEval(qAny: Any, cidAny: Any, codeAny: Any): Any = {
-    val q = qAny.asInstanceOf[ArrayData]
-    val cid = cidAny.asInstanceOf[Long]
-    val code = codeAny.asInstanceOf[Array[Byte]]
-    require(cid >= 0 && cid < cents.length,
-      s"graft_cosine_pq_residual: cid $cid outside [0, ${cents.length})")
-    require(q.numElements() == books.length * dsub,
-      s"graft_cosine_pq_residual: query dim ${q.numElements()} != ${books.length}×$dsub")
-    require(code.length == books.length,
-      s"graft_cosine_pq_residual: code has ${code.length} bytes, expected ${books.length}")
-    val c = cents(cid.toInt)
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var mi = 0
-    while (mi < books.length) {
-      val j = code(mi) & 0xff
-      val cw = books(mi)(j)
-      nb += norm2Table(cid.toInt)(mi)(j)
-      val base = mi * dsub
-      var t = 0
-      while (t < dsub) {
-        val x = q.getDouble(base + t)
-        dot += x * (c(base + t) + cw(t))
-        na += x * x
-        t += 1
-      }
-      mi += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) 0.0 else dot / denom
-  }
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-                                                 t: Expression): CosinePqResidual =
-    copy(first = f, second = s, third = t)
 }

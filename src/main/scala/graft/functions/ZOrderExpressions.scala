@@ -53,28 +53,7 @@ case class ZValue(left: Expression, right: Expression)
     ZOrder.interleave(a.asInstanceOf[Long], b.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      // ctx.freshName, not fixed names: two ZValue expressions in one
-      // codegen scope (non-nullable inputs emit resultCode unbraced)
-      // would otherwise declare duplicate locals and fail janino,
-      // silently dropping the plan out of whole-stage codegen.
-      val za = ctx.freshName("graftZa")
-      val zb = ctx.freshName("graftZb")
-      def spreadJava(in: String, out: String): String =
-        s"""
-           |long $out = $in & 0xffffffffL;
-           |$out = ($out | ($out << 16)) & 0x0000ffff0000ffffL;
-           |$out = ($out | ($out << 8))  & 0x00ff00ff00ff00ffL;
-           |$out = ($out | ($out << 4))  & 0x0f0f0f0f0f0f0f0fL;
-           |$out = ($out | ($out << 2))  & 0x3333333333333333L;
-           |$out = ($out | ($out << 1))  & 0x5555555555555555L;
-         """.stripMargin
-      s"""
-         |${spreadJava(a, za)}
-         |${spreadJava(b, zb)}
-         |${ev.value} = $za | ($zb << 1);
-       """.stripMargin
-    })
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.ZOrder.interleave($a, $b)")
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): ZValue =
     copy(left = l, right = r)

@@ -808,8 +808,9 @@ object Dedup {
     * instead of a plan literal: a literal is re-shipped inside every
     * task's serialized plan (and dumped into every explain string),
     * which is fine at the KB scale of a small history but not for the
-    * ~1.2 GB filter a 10⁹-digest history needs. Same crossover logic
-    * as [[Similarity.bcastCentroidThreshold]]. */
+    * ~1.2 GB filter a 10⁹-digest history needs. The filter grows with
+    * the history's row count, so which side runs is decided by the
+    * input, not by a constant. */
   private[graft] val bloomLiteralMaxBytes = 1 << 16
 
   /** The bloom might-contain column for `digest` against the `digest`

@@ -417,7 +417,7 @@ object Events {
     import s.implicits._
     val ev = Tables.events(s, dir)
     val sec = unix_timestamp($"ts")
-    val maxTs = ev.agg(max(sec)).head.getLong(0)
+    val maxTs = ev.agg(max(sec)).head().getLong(0)
     val u = ev.groupBy($"user_id").agg(
       count(lit(1)).as("f"),
       sum(round($"value" * 100.0).cast("long")).as("m_cents"),

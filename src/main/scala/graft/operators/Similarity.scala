@@ -267,7 +267,7 @@ object Similarity {
       return Seq.empty[(Long, Long, Long, Long, Long, Long)]
         .toDF("cid", "n_history", "n_batch", "hist_ppm", "batch_ppm", "drift_ppm")
     }
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     val counts = emb
       .select($"hb", nearest($"embedding", 1).getItem(0).as("cid"))
       .groupBy($"cid")
@@ -404,7 +404,7 @@ object Similarity {
     val (oldIds, oldVecs) = kmeansCentroids(s, history, NLists, Iters)
 
     // 3. detect: ivfIncremental's share-drift metric under OLD lists
-    val nearestOld = centroidAssigner(s, oldIds, oldVecs, bcastCentroidThreshold)
+    val nearestOld = centroidAssigner(oldIds, oldVecs)
     val maxDrift = maxShareDriftPpm(tagged, nearestOld)
 
     // 4. decide + retrain on history+batch
@@ -416,7 +416,7 @@ object Similarity {
     // 5a. fit: mean floor(cos·10⁶) of every combined vector to its
     // assigned centroid — integer sum, order-independent
     def fitPpm(cids: Seq[Long], cvecs: Seq[Seq[Double]]): Long = {
-      val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+      val nearest = centroidAssigner(cids, cvecs)
       val cents = cids.zip(cvecs).toDF("cid", "cvec")
       val r = combined
         .select($"embedding", nearest($"embedding", 1).getItem(0).as("cid"))
@@ -516,7 +516,7 @@ object Similarity {
     // ≤ NLists rows: one file, not 32 near-empty shuffle outputs
     cids.zip(cvecs).toDF("cid", "cvec").coalesce(1)
       .write.mode("overwrite").parquet(out + "/centroids")
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     // `encode`/`payload` are the storage-encoding hook (identity
     // float column, or SQ8 codes) — the ONE layout writer, so an
     // encoding can never fork the artifact layout from what
@@ -560,7 +560,7 @@ object Similarity {
     // partition column — cast restores the long join type)
     val lists = s.read.parquet(idx + "/lists")
       .select($"vec_id", col(payload), $"cid".cast("long").as("cid"))
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     // probeSource: an explicit (query_id, q) traffic frame — the
     // versioned lifecycle's probes live in its drifted combined
     // corpus, not the raw embeddings table. Default is the table's
@@ -622,7 +622,7 @@ object Similarity {
       // centroids come from the parquet just written (the ingest job
       // owns no training state), batch rows append as new files
       val (cids2, cvecs2) = readCentroids(s, out)
-      val nearest2 = centroidAssigner(s, cids2, cvecs2, bcastCentroidThreshold)
+      val nearest2 = centroidAssigner(cids2, cvecs2)
       emb.filter($"hb" >= Sampling.HistoryBelow)
         .select($"vec_id", $"embedding",
           nearest2($"embedding", 1).getItem(0).as("cid"))
@@ -759,7 +759,7 @@ object Similarity {
     val tagged = tagged0.getOrElse(driftedTagged(s, dir))
     val ver = manifestVersion(s, root)
     val (cids, cvecs) = readCentroids(s, s"$root/v$ver")
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     if (maxShareDriftPpm(tagged, nearest) < DriftThresholdPpm) false
     else {
       buildIndexInto(s, s"$root/v${ver + 1}", tagged.select($"vec_id", $"embedding"))
@@ -879,7 +879,7 @@ object Similarity {
     val (cids, cvecs) = readCentroids(s, idx)
     val lists = s.read.parquet(idx + "/lists")
       .select($"vec_id", $"embedding", $"cid".cast("long").as("cid"))
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     probeStream
       .select($"query_id", $"q", explode(nearest($"q", NProbe)).as("cid"))
       .join(lists, Seq("cid"))
@@ -940,78 +940,39 @@ object Similarity {
   private val pqCodebookCache =
     new graft.Artifacts.Memo[(String, Int, Int, Int, Int), Seq[Seq[Seq[Double]]]](cap = 8)
 
-  /** Above this many lists the centroid table rides a TorrentBroadcast
-    * ([[graft.functions.NearestCentroidsBcast]]) instead of plan
-    * literals: a 10⁴-10⁵-list IVF would otherwise serialize megabytes of
-    * centroid matrix into every task's plan (and every explain string).
-    * 256 lists at dim 64 ≈ 128 KB of literals — the crossover where the
-    * broadcast's one-time per-executor fetch beats re-shipping the
-    * table with each task. */
-  private[graft] val bcastCentroidThreshold = 256
-
-  /** Centroid broadcasts memoized per (context, centroid set): repeated
-    * plan builds over the same centroids (repeated serves, per-batch
-    * re-planning) reuse ONE TorrentBroadcast instead of allocating a
-    * fresh multi-megabyte broadcast per call — blocks are reclaimed by
-    * the ContextCleaner only once the Broadcast object is unreachable,
-    * so an un-memoized sweep accumulates them for the session's
-    * lifetime. Eviction unpersists (see [[graft.Artifacts]]). */
-  private[graft] val centroidBcastCache = graft.Artifacts.broadcasts[
-    (Seq[Long], Seq[Seq[Double]]), (Array[Long], Array[Array[Double]])](cap = 8)
-
-  /** PQ codebook broadcasts memoized per (context, codebooks) — the
-    * centroidBcastCache rule applied to the PQ kernels: the m16×k256
-    * default is 16×256×4 doubles ≈ 128 KB, which as plan LITERALS was
-    * re-copied through every optimizer transform and re-shipped with
-    * every task on EVERY plan build — `Probe jobs` measured
-    * ann_pq_topk at wall 1.01 s / job-sum 0.41 s (r22): ~0.6 s of pure
-    * per-repetition plan-build gap. Broadcast blocks ship once per
-    * executor and the expression carries only the broadcast handle.
-    * Evicted like centroidBcastCache. */
+  /** PQ codebook broadcasts memoized per (context, codebooks): the
+    * m16×k256 default is 16×256×4 doubles ≈ 128 KB, which as plan
+    * LITERALS was re-copied through every optimizer transform and
+    * re-shipped with every task on EVERY plan build — `Probe jobs`
+    * measured ann_pq_topk at wall 1.01 s / job-sum 0.41 s (r22): ~0.6 s
+    * of pure per-repetition plan-build gap. Broadcast blocks ship once
+    * per executor and the expression carries only the broadcast
+    * handle. Repeated plan builds over the same codebooks reuse ONE
+    * TorrentBroadcast; eviction unpersists (see [[graft.Artifacts]]). */
   private[graft] val pqBooksBcastCache =
     graft.Artifacts.broadcasts[Seq[Seq[Seq[Double]]], Array[Array[Array[Double]]]](cap = 8)
 
-  /** PQ kernel selection shared by the PQ-scoring paths — the
-    * [[centroidAssigner]] twin: below the size threshold the codebooks
-    * ride as plan literals, above it as ONE memoized TorrentBroadcast.
-    * Both variants share one eval loop ([[graft.functions.PqKernel]]),
-    * so the choice is purely a serialization strategy — equivalence is
-    * pinned in SimilaritySpec ("broadcast-wired PQ ≡ literal PQ").
-    * Thresholded on total centroid count (m × ksub), the same scale
-    * the centroid table thresholds on. */
+  /** The PQ encode and score kernels over one memoized codebook
+    * broadcast, shared by the PQ-scoring paths. */
   private def pqScorers(s: SparkSession, books: Seq[Seq[Seq[Double]]])
-      : (Column => Column, (Column, Column) => Column) =
-    if (books.length * books.head.length >= bcastCentroidThreshold) {
-      val bc = pqBooksBcastCache(s, books)(
-        s.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray))
-      (v => VectorFunctions.pqEncodeBcast(v, bc),
-        (q, code) => VectorFunctions.cosinePqAsymBcast(q, code, bc))
-    } else {
-      (v => VectorFunctions.pqEncode(v, books),
-        (q, code) => VectorFunctions.cosinePqAsym(q, code, books))
-    }
+      : (Column => Column, (Column, Column) => Column) = {
+    val bc = pqBooksBcastCache(s, books)(
+      s.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray))
+    (v => VectorFunctions.pqEncodeBcast(v, bc),
+      (q, code) => VectorFunctions.cosinePqAsymBcast(q, code, bc))
+  }
 
-  /** Assignment-kernel selection shared by every IVF-shaped path:
-    * both kernels share one eval loop (NearestCentroidKernel), so the
-    * choice is purely a serialization strategy — equivalence is pinned
-    * in SimilaritySpec ("broadcast-wired IVF ≡ literal IVF"). */
-  private def centroidAssigner(s: SparkSession, cids: Seq[Long],
-                               cvecs: Seq[Seq[Double]],
-                               bcastThreshold: Int): (Column, Int) => Column =
-    if (cids.length >= bcastThreshold) {
-      val bc = centroidBcastCache(s, (cids, cvecs))(
-        s.sparkContext.broadcast((cids.toArray, cvecs.map(_.toArray).toArray)))
-      (v, k) => VectorFunctions.nearestCentroidsBcast(v, bc, k)
-    } else {
-      (v, k) => VectorFunctions.nearestCentroids(v, cids, cvecs, k)
-    }
+  /** The IVF assignment kernel over one centroid set, as `nearest(v, k)`:
+    * the `k` nearest list ids of `v` ([[graft.functions.NearestCentroids]]). */
+  private def centroidAssigner(cids: Seq[Long],
+                               cvecs: Seq[Seq[Double]]): (Column, Int) => Column =
+    VectorFunctions.nearestCentroids(_, cids, cvecs, _)
 
   private[graft] def ivfWithCentroids(s: SparkSession, emb: DataFrame,
                                       cids: Seq[Long], cvecs: Seq[Seq[Double]],
-                                      numQueries: Int, topK: Int,
-                                      bcastThreshold: Int = bcastCentroidThreshold): DataFrame = {
+                                      numQueries: Int, topK: Int): DataFrame = {
     import s.implicits._
-    val nearest = centroidAssigner(s, cids, cvecs, bcastThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     val assigned = emb.select($"vec_id", $"embedding",
       nearest($"embedding", 1).getItem(0).as("cid"))
     // queries probe their NProbe nearest lists — same kernel, k = NProbe
@@ -1051,7 +1012,7 @@ object Similarity {
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
     val (los, his) = sq8Bounds(emb)
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
+    val nearest = centroidAssigner(cids, cvecs)
     // the corpus carries ONLY (vec_id, cid, code) past this point —
     // the float embedding is dropped at the scan, which is the whole
     // memory argument
@@ -1157,51 +1118,6 @@ object Similarity {
     }
   }
 
-  /** PQ codebooks trained on IVF RESIDUALS (x − centroid(x)) — the
-    * FAISS `by_residual=true` default for IVF×PQ: residuals
-    * concentrate around zero whichever list a vector landed in, so one
-    * SHARED codebook spends its bits on within-list geometry instead
-    * of re-encoding the coarse structure the IVF already captured.
-    * Same bounded-sample/driver-side split as [[pqTrain]]; the
-    * sample's assignments replicate the kernel's cosine-with-low-id-
-    * tiebreak rule so training sees the residual distribution encoding
-    * will actually produce. */
-  private[graft] def pqTrainResidual(s: SparkSession, emb: DataFrame,
-                                     cvecs: Seq[Seq[Double]], m: Int,
-                                     ksub: Int, sampleN: Int = 2048): Seq[Seq[Seq[Double]]] = {
-    import s.implicits._
-    val sample = emb.orderBy($"vec_id").limit(sampleN)
-      .select($"embedding").collect().map(_.getSeq[Double](0).toArray)
-    require(sample.nonEmpty, "pqTrainResidual: empty embedding corpus")
-    val cents = cvecs.map(_.toArray).toArray
-    def cos(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val residuals = sample.map { v =>
-      var best = 0; var bestS = Double.MinValue
-      var c = 0
-      while (c < cents.length) {
-        val sim = cos(v, cents(c))
-        if (sim > bestS) { bestS = sim; best = c }
-        c += 1
-      }
-      val r = new Array[Double](v.length)
-      var i = 0
-      while (i < v.length) { r(i) = v(i) - cents(best)(i); i += 1 }
-      r
-    }
-    val dim = residuals.head.length
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    (0 until m).map { mi =>
-      val sub = residuals.map(v =>
-        java.util.Arrays.copyOfRange(v, mi * dsub, (mi + 1) * dsub))
-      kmeansLloydLocal(sub, ksub, PqIters).map(_.toSeq).toSeq
-    }
-  }
-
   /** Plain driver-side Lloyd's over a (bounded, sample-sized) array —
     * the subspace trainer behind [[pqTrain]]. Deterministic: seeds are
     * the first k points, L2 assignment ties break toward the lower
@@ -1239,15 +1155,15 @@ object Similarity {
     * ([[bruteForceTopK]]) and SQ8 ([[sq8TopK]]): the corpus is held as
     * M = 16 CODE BYTES per vector (32× smaller than array<double> at
     * dim 64; 4× smaller than SQ8), scored with asymmetric cosine
-    * ([[graft.functions.CosinePqAsym]]: the dot product decomposes
+    * ([[graft.functions.CosinePqAsymBcast]]: the dot product decomposes
     * across subspaces, reconstructed norms are table lookups).
     * Defaults are the published PQ shape — 8 BITS per subquantizer
     * (ksub = 256, the FAISS `PQ16` default); round 7 shipped ksub = 16
     * (4-bit) and measured recall 0.20 vs brute force, which the
     * RecallSpec gate now makes unshippable (m16×k256 measures 0.84 on
     * the isotropic fixture; gate ≥ 0.75). Codebooks train on a bounded
-    * sample ([[pqTrain]]) and ride the expressions (M × ksub × dsub
-    * doubles = 128 KB — plan-literal scale). Same scan shape as the
+    * sample ([[pqTrain]]) and ride one memoized broadcast (M × ksub ×
+    * dsub doubles = 128 KB, see [[pqBooksBcastCache]]). Same scan shape as the
     * float brute force, so the RecallSpec gate isolates pure PQ
     * quantization loss. Rows-only in the driver contract (k-means
     * codebooks aren't ANSI-expressible). */
@@ -1283,58 +1199,33 @@ object Similarity {
     * composition against both (combined loss vs brute force; added PQ
     * loss vs the unquantized trained IVF).
     *
-    * `byResidual` selects FAISS's `by_residual=true` composition
-    * (encode x − centroid(x) with residual-trained codebooks, score
-    * via [[graft.functions.CosinePqResidual]]'s (cid, code)-keyed norm
-    * table). MEASURED DECISION — it is NOT the default here: on this
-    * isotropic cosine fixture it recalls 0.74 vs plain PQ's 0.78
-    * (RecallSpec records both). Residuals win when coarse centroids
-    * absorb real cluster structure (the clustered-corpus case FAISS
-    * optimizes for, under L2); on an isotropic corpus the lists carry
-    * little structure, so re-centering only misaligns the shared
-    * codebook. Both paths are gated so the trade-off stays measured,
-    * not assumed. Rows-only in the driver contract. */
-  def ivfPqTopK(s: SparkSession, dir: String, byResidual: Boolean = false): DataFrame = {
+    * Codes are of the raw vectors, not of FAISS's `by_residual=true`
+    * residuals x − centroid(x): on this isotropic cosine fixture the
+    * residual composition measured recall 0.740 vs brute force against
+    * this path's 0.780. Residuals win when coarse centroids absorb real
+    * cluster structure (the clustered-corpus case FAISS optimizes for,
+    * under L2); on an isotropic corpus the lists carry little
+    * structure, so re-centering only misaligns the shared codebook.
+    * Rows-only in the driver contract. */
+  def ivfPqTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
       .select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
     val (cids, cvecs) = kmeansCentroids(s, emb, NLists, Iters)
-    val nearest = centroidAssigner(s, cids, cvecs, bcastCentroidThreshold)
-    val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
+    val nearest = centroidAssigner(cids, cvecs)
+    val books = pqTrain(s, emb, PqM, PqKsub)
+    val (encode, score) = pqScorers(s, books)
+    val assigned = emb.select($"vec_id",
+      nearest($"embedding", 1).getItem(0).as("cid"),
+      encode($"embedding").as("code"))
     val probes = emb.filter($"vec_id" < NumQueries)
       .select($"vec_id".as("query_id"), $"embedding".as("q"),
         explode(nearest($"embedding", NProbe)).as("cid"))
-    val scored =
-      if (byResidual) {
-        // FAISS by_residual: encode x − centroid(x) with codebooks
-        // trained on residuals; score via the (cid, code)-aware ADC
-        // kernel. cid binds in a LOWER projection and is referenced
-        // twice above it, so CollapseProject cannot duplicate the
-        // centroid-assignment kernel (the withQualityScore trick).
-        val books = pqTrainResidual(s, emb, cvecs, PqM, PqKsub)
-        val withCid = emb.select($"vec_id", $"embedding",
-          nearest($"embedding", 1).getItem(0).as("cid"))
-        val assigned = withCid.select($"vec_id", $"cid",
-          VectorFunctions.pqEncode(
-            VectorFunctions.residualVec($"embedding", $"cid", cvecs),
-            books).as("code"))
-        assigned.join(broadcast(probes), Seq("cid"))
-          .filter($"vec_id" =!= $"query_id")
-          .select($"query_id", $"vec_id",
-            round(VectorFunctions.cosinePqResidual(
-              $"q", $"cid", $"code", cvecs, books), 6).as("cos_sim"))
-      } else {
-        val books = pqTrain(s, emb, PqM, PqKsub)
-        val (encode, score) = pqScorers(s, books)
-        val assigned = emb.select($"vec_id",
-          nearest($"embedding", 1).getItem(0).as("cid"),
-          encode($"embedding").as("code"))
-        assigned.join(broadcast(probes), Seq("cid"))
-          .filter($"vec_id" =!= $"query_id")
-          .select($"query_id", $"vec_id",
-            round(score($"q", $"code"), 6).as("cos_sim"))
-      }
-    scored
+    val w = Window.partitionBy($"query_id").orderBy($"cos_sim".desc, $"vec_id")
+    assigned.join(broadcast(probes), Seq("cid"))
+      .filter($"vec_id" =!= $"query_id")
+      .select($"query_id", $"vec_id",
+        round(score($"q", $"code"), 6).as("cos_sim"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter($"rk" <= TopK)
       .select($"query_id", $"vec_id", $"cos_sim", $"rk")

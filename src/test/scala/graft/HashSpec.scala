@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.HashFunctions
-import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.functions.{col, element_at, expr, typedLit}
 
 /** FNV-1a pinned against published test vectors (public-domain FNV
   * reference constants) — guarantees bit-parity with the reference's
@@ -21,6 +21,15 @@ class HashSpec extends SparkSpec {
     "a" -> 0xaf63dc4c8601ec8cL,
     "foobar" -> 0x85944171f73967e8L)
 
+  /** `values` as a one-column frame whose projections reach generated
+    * code: rows are picked from the literal by a `spark.range` index,
+    * so the optimizer cannot fold them into a local relation and
+    * evaluate the kernels interpreted. */
+  private def codegenRows[T: scala.reflect.runtime.universe.TypeTag](values: Seq[T],
+                                                                     name: String) =
+    spark.range(values.length)
+      .select(element_at(typedLit(values), ($"id" + 1).cast("int")).as(name))
+
   test("fnv1a32 matches published vectors (scala kernel)") {
     vectors32.foreach { case (s, h) =>
       val b = s.getBytes("UTF-8")
@@ -37,11 +46,13 @@ class HashSpec extends SparkSpec {
 
   test("fnv expressions agree with kernel through codegen") {
     GraftExtensions.register(spark)
-    val df = (vectors32.map(_._1) ++ Seq("hello", "Spark", "züricher"))
-      .toDF("s")
-    val rows = df.select(col("s"),
-      HashFunctions.fnv1a32(col("s")).as("h32"),
-      expr("graft_fnv1a64(s)").as("h64")).collect()
+    val words = vectors32.map(_._1) ++ Seq("hello", "Spark", "züricher")
+    val rows = withConf("spark.sql.codegen.fallback", "false") {
+      codegenRows(words, "s").select(col("s"),
+        HashFunctions.fnv1a32(col("s")).as("h32"),
+        expr("graft_fnv1a64(s)").as("h64")).collect()
+    }
+    assert(rows.length == words.length)
     rows.foreach { r =>
       val b = r.getString(0).getBytes("UTF-8")
       assert(r.getInt(1) == HashFunctions.fnv1a32Bytes(b, 0, b.length))
@@ -72,8 +83,14 @@ class HashSpec extends SparkSpec {
     }
     val full = Seq(0L, 1L, 2L, 100L, 65535L, 65536L, 0xffffffffL)
     // codegen path agrees with the scala kernel (full 32-bit domain)
-    val df = (for (a <- full; b <- full) yield (a, b)).toDF("a", "b")
-    df.select($"a", $"b", expr("graft_zvalue(a, b)").as("z")).collect().foreach { r =>
+    val pairs = for (a <- full; b <- full) yield Seq(a, b)
+    val rows = withConf("spark.sql.codegen.fallback", "false") {
+      codegenRows(pairs, "p")
+        .select($"p"(0).as("a"), $"p"(1).as("b"))
+        .select($"a", $"b", expr("graft_zvalue(a, b)").as("z")).collect()
+    }
+    assert(rows.length == pairs.length)
+    rows.foreach { r =>
       assert(r.getLong(2) == ZOrder.interleave(r.getLong(0), r.getLong(1)))
     }
   }
@@ -87,10 +104,7 @@ class HashSpec extends SparkSpec {
     // codegen. fallback=false turns that silent degradation into a
     // test failure.
     GraftExtensions.register(spark)
-    val key = "spark.sql.codegen.fallback"
-    val prev = spark.conf.getAll.get(key)
-    spark.conf.set(key, "false")
-    try {
+    withConf("spark.sql.codegen.fallback", "false") {
       // spark.range, not Seq.toDF: ConvertToLocalRelation folds a
       // literal frame in the optimizer (interpreted eval — the test
       // would never reach codegen). id=0 → (1,2), id=1 → (5,3);
@@ -103,9 +117,6 @@ class HashSpec extends SparkSpec {
       assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSet ==
         Set((ZOrder.interleave(1L, 2L), ZOrder.interleave(2L, 1L)),
             (ZOrder.interleave(5L, 3L), ZOrder.interleave(3L, 5L))))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
     }
   }
 

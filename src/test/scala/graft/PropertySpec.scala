@@ -88,14 +88,6 @@ class PropertySpec extends SparkSpec {
 
     def perDoc(rows: Array[Row]): Map[Long, Seq[String]] =
       rows.toSeq.groupBy(_.getLong(0)).map { case (id, rs) => id -> rs.map(_.getString(1)) }
-    def withConf[A](key: String, value: String)(body: => A): A = {
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, value)
-      try body finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None    => spark.conf.unset(key)
-      }
-    }
     // the per-doc tokens, and whether the kernel's Generate ran fused
     def kernelTokens(): (Map[Long, Seq[String]], Boolean) = {
       val q = df.select($"id", explode(TextFunctions.wordTokens($"text")).as("word"))

@@ -225,21 +225,6 @@ class RecallSpec extends SparkSpec {
       f"PQ inside IVF lists lost more recall than measured headroom: $vsIvf%.3f")
   }
 
-  test("IVF×PQ by-residual path: gated, and the default-choice measurement stays on record") {
-    // FAISS's by_residual=true composition, implemented and measured:
-    // 0.740 vs brute on this isotropic cosine fixture — BELOW plain
-    // PQ's 0.780, because near-uniform centroids carry no structure
-    // for residuals to exploit (the clustered-L2 case is where
-    // residuals win). byResidual stays false by default on the
-    // strength of this measurement; the gate keeps the alternative
-    // path honest (it must stay a working ANN, not rot).
-    val truth = topkPairs(Similarity.bruteForceTopK(spark, sfDir, numQueries = 10, topK = 5))
-    val got = topkPairs(Similarity.ivfPqTopK(spark, sfDir, byResidual = true))
-    val recall = (got & truth).size.toDouble / truth.size
-    info(f"ivf×pq by-residual recall@5 vs brute = $recall%.3f")
-    assert(recall >= 0.65, f"residual IVF×PQ recall collapsed: $recall%.3f")
-  }
-
   test("MRL funnel: recall vs brute force; rerank scores are exact full-dim cosines") {
     // isotropic embeddings are truncation's worst case (the 16-dim
     // prefix cosine is a noisy quarter-sample estimate of the full

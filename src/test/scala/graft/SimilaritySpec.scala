@@ -15,6 +15,14 @@ class SimilaritySpec extends SparkSpec {
     dot / (na * nb)
   }
 
+  /** Runs `body` over `books` shipped as the PQ kernels' codebook
+    * broadcast, destroyed afterwards. */
+  private def withBooks[A](books: Seq[Seq[Seq[Double]]])(
+      body: org.apache.spark.broadcast.Broadcast[Array[Array[Array[Double]]]] => A): A = {
+    val bc = spark.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray)
+    try body(bc) finally bc.destroy()
+  }
+
   test("brute-force top-k matches driver-side exact computation") {
     val emb = Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "cast(embedding as array<double>) as e")
@@ -99,43 +107,6 @@ class SimilaritySpec extends SparkSpec {
     assert(p1 eq p2, "identical PQ training must hit the cache")
   }
 
-  test("broadcast-centroid kernel ≡ literal-centroid kernel") {
-    import graft.functions.VectorFunctions
-    val emb = Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
-    val rows = emb.filter($"vec_id" < 16).orderBy($"vec_id").collect()
-    val cids = rows.map(_.getLong(0)).toSeq
-    val cvecs = rows.map(_.getSeq[Double](1)).toSeq
-    val bc = spark.sparkContext.broadcast(
-      (cids.toArray, cvecs.map(_.toArray).toArray))
-    val both = emb.select($"vec_id",
-        VectorFunctions.nearestCentroids($"embedding", cids, cvecs, 4).as("lit"),
-        VectorFunctions.nearestCentroidsBcast($"embedding", bc, 4).as("bcast"))
-      .collect()
-    both.foreach(r => assert(r.getSeq[Long](1) == r.getSeq[Long](2), s"vec ${r.getLong(0)}"))
-  }
-
-  test("broadcast-wired IVF ≡ literal IVF, and its plan carries no centroid literals") {
-    val emb = Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
-    val rows = emb.filter($"vec_id" < 16).orderBy($"vec_id").collect()
-    val cids = rows.map(_.getLong(0)).toSeq
-    val cvecs = rows.map(_.getSeq[Double](1)).toSeq
-    val lit = Similarity.ivfWithCentroids(spark, emb, cids, cvecs,
-      numQueries = 10, topK = 5, bcastThreshold = Int.MaxValue)
-    val bc = Similarity.ivfWithCentroids(spark, emb, cids, cvecs,
-      numQueries = 10, topK = 5, bcastThreshold = 1)
-    assert(bc.collect().toSeq == lit.collect().toSeq)
-    val litPlan = lit.queryExecution.executedPlan.toString
-    val bcPlan = bc.queryExecution.executedPlan.toString
-    assert(bcPlan.contains("graft_nearest_centroids_bcast"), bcPlan.take(500))
-    // the literal path serializes 16×64 doubles into every task's plan
-    // (visible as a megastring here); the broadcast path must not —
-    // that is the point of the wiring at 10⁴⁺ lists
-    assert(bcPlan.length * 4 < litPlan.length,
-      s"bcast plan ${bcPlan.length} chars vs literal ${litPlan.length}")
-  }
-
   test("PqEncode kernel ≡ driver-side nearest-centroid assignment per subspace") {
     val emb = Tables.embeddings(spark, sfDir)
       .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
@@ -143,9 +114,9 @@ class SimilaritySpec extends SparkSpec {
     // the kernel contract (per-subspace L2 argmin, low-index ties) is
     // config-independent
     val books = Similarity.pqTrain(spark, emb, m = 8, ksub = 16, sampleN = 64)
-    val got = emb.select($"vec_id",
-      graft.functions.VectorFunctions.pqEncode($"embedding", books).as("code"))
-      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap
+    val got = withBooks(books)(bc => emb.select($"vec_id",
+      VectorFunctions.pqEncodeBcast($"embedding", bc).as("code"))
+      .collect().map(r => r.getLong(0) -> r.getAs[Array[Byte]](1)).toMap)
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val dsub = books.head.head.length
     vecs.foreach { case (id, v) =>
@@ -159,38 +130,10 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("broadcast-wired PQ ≡ literal PQ, and its plan carries no codebook literals") {
-    val emb = Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
-    val books = Similarity.pqTrain(spark, emb, m = 8, ksub = 16, sampleN = 64)
-    val bc = spark.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray)
-    val q = emb.filter($"vec_id" === 0L).select($"embedding").head().getSeq[Double](0)
-    def scored(enc: org.apache.spark.sql.Column,
-               sim: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
-      emb.select($"vec_id", enc.as("code")).select($"vec_id", sim($"code").as("sim"))
-    val lit = scored(graft.functions.VectorFunctions.pqEncode($"embedding", books),
-      c => graft.functions.VectorFunctions.cosinePqAsym(typedLit(q), c, books))
-    val bcd = scored(graft.functions.VectorFunctions.pqEncodeBcast($"embedding", bc),
-      c => graft.functions.VectorFunctions.cosinePqAsymBcast(typedLit(q), c, bc))
-    // bit-identical: the two variants share ONE eval loop (PqKernel) —
-    // serialization strategy must never drift the arithmetic
-    assert(bcd.collect().toSeq == lit.collect().toSeq)
-    val litPlan = lit.queryExecution.executedPlan.toString
-    val bcPlan = bcd.queryExecution.executedPlan.toString
-    assert(bcPlan.contains("graft_pq_encode_bcast") &&
-      bcPlan.contains("graft_cosine_pq_bcast"), bcPlan.take(500))
-    // the literal path serializes m×ksub×dsub doubles into every task's
-    // plan; the broadcast path must not — that is the point of the
-    // wiring (the registry defaults put ~128 KB of doubles per
-    // expression occurrence)
-    assert(bcPlan.length * 4 < litPlan.length,
-      s"bcast plan ${bcPlan.length} chars vs literal ${litPlan.length}")
-  }
-
   test("broadcast-wired PQ kernels enforce the literal kernel's codebook contract (ksub = 257 fails loudly)") {
-    // a 257th centroid's index does not fit the code byte: the literal
-    // PqEncode has always refused it, and the broadcast twins must too,
-    // or the nearest-centroid index 256 silently wraps to code 0
+    // a 257th centroid's index does not fit the code byte: both
+    // kernels must refuse it, or the nearest-centroid index 256
+    // silently wraps to code 0
     val books = Seq.fill(2)(Seq.tabulate(257)(j => Seq(j.toDouble, 1.0)))
     val bc = spark.sparkContext.broadcast(books.map(_.map(_.toArray).toArray).toArray)
     val v = Seq(Tuple1(Seq(256.0, 1.0, 256.0, 1.0))).toDF("v")
@@ -201,7 +144,6 @@ class SimilaritySpec extends SparkSpec {
     val sim = intercept[IllegalArgumentException](
       v.select(VectorFunctions.cosinePqAsymBcast($"v", typedLit(Array[Byte](0, 0)), bc)).collect())
     assert(sim.getMessage.contains("ksub must fit one byte"), sim.getMessage)
-    intercept[IllegalArgumentException](VectorFunctions.pqEncode($"v", books))
     val empty = spark.sparkContext.broadcast(Array.empty[Array[Array[Double]]])
     intercept[IllegalArgumentException](VectorFunctions.pqEncodeBcast($"v", empty))
     intercept[IllegalArgumentException](
@@ -211,9 +153,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("registry PQ queries ride the broadcast-wired kernels (no codebook plan literals)") {
-    // the registry defaults (m16×k256 = 4096 centroids) sit far above
-    // the broadcast threshold, so ann_pq_topk / ann_ivf_pq must plan
-    // the bcast expressions — the r22 optimization this pin guards
+    // ann_pq_topk / ann_ivf_pq must plan the bcast expressions: as
+    // literals the m16×k256 codebooks re-ship ~128 KB of doubles with
+    // every task — the r22 optimization this pin guards
     val pq = Similarity.pqTopK(spark, sfDir).queryExecution.executedPlan.toString
     assert(pq.contains("graft_pq_encode_bcast") && pq.contains("graft_cosine_pq_bcast"),
       pq.take(500))
@@ -229,12 +171,10 @@ class SimilaritySpec extends SparkSpec {
     val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val dsub = books.head.head.length
     val q = vecs(0L)
-    val got = emb.select($"vec_id",
-      graft.functions.VectorFunctions.cosinePqAsym(
-        typedLit(q),
-        graft.functions.VectorFunctions.pqEncode($"embedding", books),
-        books).as("sim"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val got = withBooks(books)(bc => emb.select($"vec_id",
+      VectorFunctions.cosinePqAsymBcast(
+        typedLit(q), VectorFunctions.pqEncodeBcast($"embedding", bc), bc).as("sim"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap)
     vecs.foreach { case (id, v) =>
       // driver-side: encode, decode to the centroid reconstruction,
       // then exact cosine(query, reconstruction) — the ADC identity
@@ -246,64 +186,24 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
-  test("ResidualVec kernel ≡ driver-side subtraction; CosinePqResidual ≡ centroid-plus-decode cosine") {
-    val emb = Tables.embeddings(spark, sfDir)
-      .selectExpr("vec_id", "cast(embedding as array<double>) as embedding")
-    val vecs = emb.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    val (_, cvecs) = Similarity.kmeansCentroids(spark, emb, 4, 2)
-    val books = Similarity.pqTrainResidual(spark, emb, cvecs, m = 8, ksub = 16, sampleN = 64)
-    val dsub = books.head.head.length
-    // fixed assignment column keeps the pin independent of the
-    // assignment kernel (tested elsewhere): cid = vec_id % 4
-    val withCid = emb.select($"vec_id", $"embedding",
-      ($"vec_id" % 4).cast("long").as("cid"))
-    val gotRes = withCid.select($"vec_id",
-      graft.functions.VectorFunctions.residualVec($"embedding", $"cid", cvecs).as("r"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    vecs.foreach { case (id, v) =>
-      val c = cvecs((id % 4).toInt)
-      val expected = v.zip(c).map { case (x, y) => x - y }
-      assert(gotRes(id) == expected, s"residual vec $id")
-    }
-    val q = vecs(0L)
-    val gotSim = withCid.select($"vec_id", $"cid",
-      graft.functions.VectorFunctions.cosinePqResidual(typedLit(q), $"cid",
-        graft.functions.VectorFunctions.pqEncode(
-          graft.functions.VectorFunctions.residualVec($"embedding", $"cid", cvecs),
-          books),
-        cvecs, books).as("sim"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
-    vecs.foreach { case (id, v) =>
-      val c = cvecs((id % 4).toInt)
-      val resid = v.zip(c).map { case (x, y) => x - y }
-      // driver-side: encode the residual, decode to its centroid
-      // reconstruction, add the coarse centroid back, exact cosine
-      val recon = books.indices.flatMap { mi =>
-        val sub = resid.slice(mi * dsub, (mi + 1) * dsub)
-        books(mi).minBy(cw => sub.zip(cw).map { case (x, y) => (x - y) * (x - y) }.sum)
-      }
-      val full = recon.zip(c).map { case (r, y) => r + y }
-      assert(math.abs(gotSim(id) - cos(q, full)) < 1e-9, s"vec $id")
-    }
-  }
-
   test("PQ kernels reject malformed inputs loudly (dim and code-length contracts)") {
     val books: Seq[Seq[Seq[Double]]] =
       Seq(Seq(Seq(0.0, 0.0), Seq(1.0, 1.0)), Seq(Seq(0.0, 0.0), Seq(1.0, 1.0)))
     // dim 3 != 2 subspaces × dsub 2 → the task must fail, not truncate
-    val bad = Seq((1L, Seq(0.1, 0.2, 0.3))).toDF("vec_id", "embedding")
-    val e = intercept[Exception] {
-      bad.select(graft.functions.VectorFunctions.pqEncode($"embedding", books)).collect()
+    withBooks(books) { bc =>
+      val bad = Seq((1L, Seq(0.1, 0.2, 0.3))).toDF("vec_id", "embedding")
+      val e = intercept[Exception] {
+        bad.select(VectorFunctions.pqEncodeBcast($"embedding", bc)).collect()
+      }
+      assert(e.getMessage != null)
+      val badQ = intercept[Exception] {
+        Seq((1L, Seq(0.1, 0.2, 0.3, 0.4))).toDF("vec_id", "embedding")
+          .select(VectorFunctions.cosinePqAsymBcast(
+            typedLit(Seq(0.1, 0.2, 0.3)),
+            VectorFunctions.pqEncodeBcast($"embedding", bc), bc)).collect()
+      }
+      assert(badQ.getMessage != null)
     }
-    assert(e.getMessage != null)
-    val badQ = intercept[Exception] {
-      Seq((1L, Seq(0.1, 0.2, 0.3, 0.4))).toDF("vec_id", "embedding")
-        .select(graft.functions.VectorFunctions.cosinePqAsym(
-          typedLit(Seq(0.1, 0.2, 0.3)),
-          graft.functions.VectorFunctions.pqEncode($"embedding", books),
-          books)).collect()
-    }
-    assert(badQ.getMessage != null)
   }
 
   test("lsh top-k candidates are true cosine scores (subset of brute force domain)") {
@@ -316,6 +216,50 @@ class SimilaritySpec extends SparkSpec {
       val expected = BigDecimal(cos(emb(q), emb(id)))
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(math.abs(sim - expected) < 1e-9, s"($q,$id)")
+    }
+  }
+
+  test("graft_dot / graft_cosine: generated code ≡ interpreted eval ≡ the Scala kernel, fused with their input") {
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.execution.{ProjectExec, RangeExec}
+    import org.apache.spark.sql.functions.{array, expr, lit, sin, slice}
+    GraftExtensions.register(spark)
+    // spark.range, not Seq.toDF: a literal frame folds to a local
+    // relation in the optimizer and never reaches codegen. Lengths 1-4
+    // against 2-4 make most pairs unequal.
+    val elems = (1 to 4).map(i => sin($"id" * i) + i)
+    val vecs = spark.range(24).select(
+      slice(array(elems: _*), lit(1), ($"id" % 4 + 1).cast("int")).as("a"),
+      slice(array(elems.reverse: _*), lit(1), ($"id" % 3 + 2).cast("int")).as("b"))
+    // the rows, and whether the kernels' projection shares a codegen
+    // stage with the range scan feeding it
+    def run(): (Seq[(Seq[Double], Seq[Double], Double, Double)], Boolean) = {
+      val q = vecs.select($"a", $"b", expr("graft_dot(a, b)"), expr("graft_cosine(a, b)"))
+      val rows = q.collect().toSeq.map(r =>
+        (r.getSeq[Double](0), r.getSeq[Double](1), r.getDouble(2), r.getDouble(3)))
+      val stages = codegenStages(q.queryExecution.executedPlan)
+      val kernelStage = stages.collectFirst {
+        case (p: ProjectExec, id) if p.projectList.exists(_.toString.contains("graft_dot")) => id
+      }
+      (rows, kernelStage.exists(id => stages.exists {
+        case (_: RangeExec, i) => i == id
+        case _                 => false
+      }))
+    }
+    // generated code (a compile error fails instead of falling back),
+    // then the interpreted eval: without whole-stage codegen a project
+    // still compiles its expressions unless the factory mode forbids it
+    val (generated, genFused) = withConf("spark.sql.codegen.fallback", "false")(run())
+    assert(genFused, "graft_dot/graft_cosine must run inside the scan's codegen stage")
+    val (interpreted, intFused) = withConf("spark.sql.codegen.wholeStage", "false")(
+      withConf("spark.sql.codegen.factoryMode", "NO_CODEGEN")(run()))
+    assert(!intFused)
+    assert(generated == interpreted)
+    assert(generated.exists { case (a, b, _, _) => a.length != b.length })
+    generated.foreach { case (a, b, dot, cos) =>
+      val (ad, bd) = (ArrayData.toArrayData(a.toArray), ArrayData.toArrayData(b.toArray))
+      assert(dot == VectorFunctions.dot(ad, bd), s"dot $a · $b")
+      assert(cos == VectorFunctions.cosine(ad, bd), s"cosine $a · $b")
     }
   }
 }

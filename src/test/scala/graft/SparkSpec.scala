@@ -29,6 +29,17 @@ trait SparkSpec extends AnyFunSuite {
       }.toMap
   }
 
+  /** Runs `body` with the session conf `key` set to `value`, then
+    * restores the key's previous setting. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
   /** Every node of a physical plan, descending into AQE wrappers.
     * `AdaptiveSparkPlanExec` (and post-execution `QueryStageExec`) are
     * LeafExecNodes, so a plain `plan.collect` stops at the wrapper and
