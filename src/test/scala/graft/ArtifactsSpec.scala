@@ -9,8 +9,6 @@ import scala.jdk.CollectionConverters._
   * breaks a plan built before it, and a context's staged dirs go only
   * with its root — when the context stops, or at JVM exit. */
 class ArtifactsSpec extends SparkSpec {
-  import spark.implicits._
-
   private def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
